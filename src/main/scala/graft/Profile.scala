@@ -103,6 +103,9 @@ object Profile {
       val q = Queries.all(name)
       var best = Double.MaxValue
       for (rep <- 1 to reps) {
+        // deliver every event of the previous rep (and its hygiene)
+        // before the logs reset, so none lands in this rep's view
+        if (jobs) org.apache.spark.ListenerBusDrain(spark.sparkContext)
         jobLog.clear()
         execLog.clear()
         stageLog.clear()
@@ -114,6 +117,8 @@ object Profile {
         best = math.min(best, t1)
         println(f"[profile] $name%-26s rep=$rep total=$t1%7.2f s  build=$built%7.2f s  rows=$n")
         if (jobs && rep == reps) {
+          // every job, stage and execution event of this rep delivered
+          org.apache.spark.ListenerBusDrain(spark.sparkContext)
           // aggregate by callsite: the writer phases show up as sites
           val bySite = jobLog.toArray(Array.empty[JobRec]).groupBy(_.site)
             .map { case (s, rs) => (s, rs.map(_.sec).sum, rs.length, rs.map(_.tasks).sum) }
@@ -128,9 +133,7 @@ object Profile {
             println(f"    [job] #${j.id}%-4d ${j.sec}%7.2f s tasks=${j.tasks}%-5d ${j.site}")
           }
           println(f"    [jobs] job-sum=${jobLog.toArray(Array.empty[JobRec]).map(_.sec).sum}%7.2f s of $t1%7.2f s")
-          // give async listener events a beat to drain, then print the
-          // per-execution view (wall time incl. driver-side work)
-          Thread.sleep(300)
+          // the per-execution view (wall time incl. driver-side work)
           val byExec = execLog.toArray(Array.empty[ExecRec]).groupBy(_.what)
             .map { case (w, rs) => (w, rs.map(_.sec).sum, rs.length) }
             .toSeq.sortBy(-_._2)

@@ -383,8 +383,6 @@ object Bpe {
             }.toMap
             boundCut(prefix, bounds)
           }
-        if (sys.props.contains("graft.bpe.debug"))
-          println(s"BPEPASS prefix=${prefix.length} batch=${batch.length}")
         batch.foreach { case (l, r, n) =>
           rank += 1
           merges += ((rank, l, r, n))

@@ -1483,11 +1483,19 @@ object DeltaTableWriter {
     * set; a merge rewriting more than that should rewrite files).
     * Returns the committed version.
     */
-  def upsert(df: DataFrame, tablePath: String, keys: Seq[String],
+  def upsert(df: DataFrame, path: String, keys: Seq[String],
       checkpointInterval: Int = DefaultCheckpointInterval,
       maxDriverRows: Int = MaxDeleteRowsDriver,
       maxBroadcastKeys: Long = MaxBroadcastUpsertKeys): Long = {
     val spark = df.sparkSession
+    // matched rows come back as the scan's ABSOLUTE file paths; the
+    // active set resolves its table-relative paths against this root,
+    // so a relative root is qualified against the working directory
+    val tablePath = {
+      val p = new Path(path)
+      if (p.isAbsolute) path
+      else p.getFileSystem(spark.sparkContext.hadoopConfiguration).makeQualified(p).toString
+    }
     require(keys.nonEmpty, s"$tablePath: upsert needs at least one key column")
     val (state, keyed) = DeltaTableReader.snapshotWithKeys(spark, tablePath)
     refuseWriterUnsupported(state, tablePath, allowColumnMapping = true)

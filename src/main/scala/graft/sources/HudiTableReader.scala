@@ -390,53 +390,57 @@ object HudiTableReader {
   private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, String, Int), Option[org.apache.spark.sql.types.StructType]]()
 
-  /** The scan schema for base files once the table evolved: declared
-    * data columns (old files null-fill the new ones deterministically
-    * — footer inference would depend on which file Spark samples)
-    * followed by the meta columns the FILES themselves carry. The
-    * meta set comes from a sample footer, not the table's key/
-    * partition declarations — real Hudi writers stamp the full meta
-    * quintet (`_hoodie_commit_seqno`, `_hoodie_file_name`, …) and a
-    * fixed declared list would silently drop them from external
-    * snapshots. `samplePath` should be the NEWEST slice (the most
-    * complete meta set); None keeps the declaration-derived fallback
-    * for callers with no file at hand.
+  /** The schema `spark.read.parquet(path)` infers, read from the one
+    * footer on the driver: the same converter settings (binary as
+    * string, INT96, NTZ inference, nanos as long) and the Spark row
+    * metadata when the file carries it, nullable as every file scan
+    * serves it. Spark's own inference without schema merging samples
+    * the first file too, but through a one-task Spark job; this is one
+    * footer read, cheap enough that nothing caches it.
     */
-  private[sources] def scanSchemaOf(spark: SparkSession, tablePath: String,
-      samplePath: Option[String] = None): Option[org.apache.spark.sql.types.StructType] =
-    declaredDataSchema(spark, tablePath).map { data =>
-      import org.apache.spark.sql.types.{StringType, StructField, StructType}
-      val meta: Seq[StructField] = samplePath match {
-        case Some(p) =>
-          metaFieldsMemo.computeIfAbsent(p, { _ =>
-            spark.read.parquet(p).schema.fields.toIndexedSeq
-              .filter(_.name.startsWith("_hoodie_"))
-          })
-        case None =>
-          val props = HudiTableWriter.tableProperties(spark, tablePath)
-          Seq(StructField("_hoodie_commit_time", StringType)) ++
-            (if (props.get("hoodie.table.recordkey.fields").exists(_.trim.nonEmpty))
-               Seq(StructField("_hoodie_record_key", StringType)) else Nil) ++
-            (if (props.get("hoodie.table.partition.fields").exists(_.trim.nonEmpty))
-               Seq(StructField("_hoodie_partition_path", StringType)) else Nil)
-      }
-      val dataFields = data.fields.filterNot(_.name.startsWith("_hoodie_"))
-      StructType(dataFields ++ meta)
-    }
+  private[sources] def footerSchema(spark: SparkSession,
+      path: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetToSparkSchemaConverter}
+    val p = new Path(path)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
+        spark.sparkContext.hadoopConfiguration))
+    val footer = try reader.getFooter finally reader.close()
+    org.apache.spark.sql.GraftBridge.asNullable(ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(p, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf)))
+  }
 
-  // immutable files key their own meta set — one footer read per
-  // sampled file per session, not per scan
-  private val metaFieldsMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.types.StructField]]()
-
-  private def readPaths(spark: SparkSession, tablePath: String, slices: Seq[SliceWrite]): DataFrame = {
-    val paths = slices.map(s => s"$tablePath/${s.path}")
+  /** The schema a scan of `slices` serves, resolved on the driver
+    * without a Spark job. A never-evolved table takes the first
+    * slice's footer — the file Spark's own inference samples. Once the
+    * table evolved: the declared data columns (old files null-fill the
+    * new ones deterministically — footer inference would depend on
+    * which file Spark samples) followed by the meta columns the FILES
+    * themselves carry, from the NEWEST slice's footer (the most
+    * complete meta set). The meta set comes from a footer, not the
+    * table's key/partition declarations — real Hudi writers stamp the
+    * full meta quintet (`_hoodie_commit_seqno`, `_hoodie_file_name`, …)
+    * and a fixed declared list would silently drop them from external
+    * snapshots.
+    */
+  private[sources] def scanSchema(spark: SparkSession, tablePath: String,
+      slices: Seq[SliceWrite]): org.apache.spark.sql.types.StructType = {
     val newest = slices.maxBy(_.instant)
-    scanSchemaOf(spark, tablePath, Some(s"$tablePath/${newest.path}")) match {
-      case Some(declared) => spark.read.schema(declared).parquet(paths: _*)
-      case None => spark.read.parquet(paths: _*)
+    declaredDataSchema(spark, tablePath) match {
+      case Some(data) =>
+        org.apache.spark.sql.types.StructType(
+          data.fields.filterNot(_.name.startsWith("_hoodie_")) ++
+            footerSchema(spark, s"$tablePath/${newest.path}").fields
+              .filter(_.name.startsWith("_hoodie_")))
+      case None => footerSchema(spark, s"$tablePath/${slices.head.path}")
     }
   }
+
+  private def readPaths(spark: SparkSession, tablePath: String, slices: Seq[SliceWrite]): DataFrame =
+    spark.read.schema(scanSchema(spark, tablePath, slices))
+      .parquet(slices.map(s => s"$tablePath/${s.path}"): _*)
 
   /** The TIMELINE as a DataFrame (Hudi's own `show commits`
     * inspection surface): one row per completed instant — instant,
@@ -716,16 +720,11 @@ object HudiTableReader {
   private[sources] def morSchema(spark: SparkSession, tablePath: String,
       groups: Seq[GroupSlices]): org.apache.spark.sql.types.StructType = {
     val bases = groups.flatMap(_.base)
-    val basePaths = bases.map(b => s"$tablePath/${b.path}")
-    if (basePaths.nonEmpty) {
+    if (bases.nonEmpty) {
       // an EVOLVED table resolves the declared commit-schema authority
       // (old bases and old log blocks null-fill the added columns);
       // never-evolved tables keep exact footer inference
-      scanSchemaOf(spark, tablePath,
-          Some(s"$tablePath/${bases.maxBy(_.instant).path}")) match {
-        case Some(declared) => declared
-        case None => spark.read.parquet(basePaths: _*).schema
-      }
+      scanSchema(spark, tablePath, bases)
     } else {
       val firstLog = groups.flatMap(g => g.logs.headOption.map(l => s"$tablePath/${l._2}"))
         .headOption.getOrElse(throw new IllegalArgumentException(

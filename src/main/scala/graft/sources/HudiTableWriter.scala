@@ -121,11 +121,14 @@ object HudiTableWriter {
     }
   }
 
+  /** A comma-separated field list property (empty when absent). */
+  private def listProperty(props: Map[String, String], key: String): Seq[String] =
+    props.get(key).map(_.split(',').toIndexedSeq.map(_.trim).filter(_.nonEmpty))
+      .getOrElse(Nil)
+
   /** The record-key fields the TABLE declares (empty = keyless). */
   def declaredRecordKeys(spark: SparkSession, tablePath: String): Seq[String] =
-    tableProperties(spark, tablePath).get("hoodie.table.recordkey.fields")
-      .map(_.split(',').toIndexedSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Nil)
+    listProperty(tableProperties(spark, tablePath), "hoodie.table.recordkey.fields")
 
   /** Stamp the Hudi meta columns an external reader expects. */
   private def stamped(df: DataFrame, instant: String, recordKeys: Seq[String],
@@ -144,9 +147,7 @@ object HudiTableWriter {
 
   /** The partition fields the TABLE declares (empty = unpartitioned). */
   def declaredPartitionFields(spark: SparkSession, tablePath: String): Seq[String] =
-    tableProperties(spark, tablePath).get("hoodie.table.partition.fields")
-      .map(_.split(',').toIndexedSeq.map(_.trim).filter(_.nonEmpty))
-      .getOrElse(Nil)
+    listProperty(tableProperties(spark, tablePath), "hoodie.table.partition.fields")
 
   /** Land `df` (already stamped) as NEW file groups under `instant`:
     * stage write (hive dirs from duplicated `_p_<c>` columns — Hudi
@@ -299,8 +300,7 @@ object HudiTableWriter {
       s"$tablePath: append asserts record keys ${recordKeys.mkString(",")} but the table " +
         s"declares hoodie.table.recordkey.fields=${declared.mkString(",")} — the table " +
         "property wins; drop the argument or fix the expectation")
-    val existing = HudiTableReader.snapshot(spark, tablePath)
-    val evolved = evolutionOf(df, tablePath, existing)
+    val evolved = evolutionOf(df, tablePath, HudiTableReader.snapshot(spark, tablePath).schema)
     // MOR inserts land under deltacommits (Hudi's MOR write path —
     // an ordinary commit on a MOR timeline means compaction); the
     // partitioning comes from the TABLE's declaration, like the keys
@@ -324,8 +324,8 @@ object HudiTableWriter {
     * authority serves old bases, old logs and new writes alike.
     */
   private def evolutionOf(df: DataFrame, tablePath: String,
-      existing: DataFrame): Option[String] = {
-    val dataFields = existing.schema.fields.filterNot(_.name.startsWith("_hoodie_"))
+      existing: org.apache.spark.sql.types.StructType): Option[String] = {
+    val dataFields = existing.fields.filterNot(_.name.startsWith("_hoodie_"))
     val dataCols = dataFields.map(_.name).toSet
     val missing = dataCols -- df.columns
     require(missing.isEmpty,
@@ -410,6 +410,24 @@ object HudiTableWriter {
     if (ids.isEmpty) None else Some(ids.max)
   }
 
+  /** The deferred duplicate-key gate: distinct-key cardinality as ONE
+    * aggregation over the already-persisted routing frame (`tagged` /
+    * `routed`), compared against its row count (in hand from the
+    * routing counts). The routing join is 1:1 with the batch — base
+    * keys are unique per well-formed table — so the check equals the
+    * old eager batch-side gate without re-evaluating the batch plan.
+    * Runs BEFORE any file lands.
+    */
+  private def dupGateCheck(frame: DataFrame, tablePath: String, keys: Seq[String],
+      nRows: Long): Unit = {
+    val nKeys = frame
+      .agg(count_distinct(struct(keys.map(col): _*)).as("k")).head().getLong(0)
+    require(nRows == nKeys,
+      s"$tablePath: upsert batch carries ${nRows - nKeys} duplicate key row(s) and " +
+        "the table declares no precombine field — the replacement row per key would " +
+        "be ambiguous; pre-combine the batch first")
+  }
+
   /** UPSERT into a Hudi COPY-ON-WRITE table — the operation the
     * reference's own generator runs (generate_hudi_table.py:97-115,
     * `hoodie.datasource.write.operation=upsert`): each batch row
@@ -433,48 +451,29 @@ object HudiTableWriter {
     * base groups for unseen keys, one deltacommit, nothing rewritten.
     *
     * Scale shape: one scan of the CURRENT base files (the COW
-    * contract — an upsert rewrites matched groups), one shuffle of
-    * (carried ∪ replacement) rows to their group's write task, new
-    * groups via the ordinary staged write; driver state is
+    * contract — an upsert rewrites matched groups), its schema
+    * resolved on the driver from the declaration or one footer; the
+    * batch evaluated ONCE into a persisted key-tagged frame that every
+    * later step reads (counts, gates, CDC images, the carried-rows
+    * anti join); ONE write, a shuffle of (carried ∪ batch) rows to
+    * their group's task, lands rewritten and new groups alike, with
+    * one staging walk, rename pass and footer pass. Driver state is
     * |touched groups| commit metadata, never row data. Returns the
     * commit instant. Single-writer: a lost instant race throws.
     */
-  /** The deferred duplicate-key gate: distinct-key cardinality as ONE
-    * aggregation over the already-persisted routing frame (`tagged` /
-    * `routed`), compared against its row count (in hand from the
-    * routing counts). The routing join is 1:1 with the batch — base
-    * keys are unique per well-formed table — so the check equals the
-    * old eager batch-side gate without re-evaluating the batch plan.
-    * Runs BEFORE any file lands.
-    */
-  private def dupGateCheck(frame: DataFrame, tablePath: String, keys: Seq[String],
-      nRows: Long): Unit = {
-    val nKeys = frame
-      .agg(count_distinct(struct(keys.map(col): _*)).as("k")).head().getLong(0)
-    require(nRows == nKeys,
-      s"$tablePath: upsert batch carries ${nRows - nKeys} duplicate key row(s) and " +
-        "the table declares no precombine field — the replacement row per key would " +
-        "be ambiguous; pre-combine the batch first")
-  }
-
   def upsert(df: DataFrame, tablePath: String,
       maxBroadcastKeys: Long = MaxBroadcastUpsertKeys): String = {
     val spark = df.sparkSession
-    val keys = declaredRecordKeys(spark, tablePath)
+    val props = tableProperties(spark, tablePath)
+    val keys = listProperty(props, "hoodie.table.recordkey.fields")
     require(keys.nonEmpty,
       s"$tablePath: upsert routes by record key — the table declares none " +
         "(hoodie.table.recordkey.fields)")
-    val partitionBy = declaredPartitionFields(spark, tablePath)
-    val precombine = tableProperties(spark, tablePath).get("hoodie.table.precombine.field")
-    val existing = HudiTableReader.snapshot(spark, tablePath)
-    val dataCols = existing.columns.filterNot(_.startsWith("_hoodie_")).toSeq
-    // additive evolution: a batch ADDING columns commits the evolved
-    // schema; carried rows null-fill below. Drops/retypes/MOR refuse.
-    val evolvedJson = evolutionOf(df, tablePath, existing)
-    val newFields = df.schema.fields.filterNot(f => dataCols.contains(f.name)).toSeq
+    val partitionBy = listProperty(props, "hoodie.table.partition.fields")
+    val precombine = props.get("hoodie.table.precombine.field")
     // in-batch combine: latest-wins on the declared precombine field,
     // or loudly require key-uniqueness when the table declares none
-    val deduped = precombine match {
+    def combined(): DataFrame = precombine match {
       case Some(pc) =>
         require(df.columns.contains(pc),
           s"$tablePath: declared precombine field $pc is not in the batch")
@@ -496,9 +495,13 @@ object HudiTableWriter {
     // MERGE_ON_READ: the upsert is MOR's OWN write shape — one
     // deltacommit carrying log blocks for matched keys and new base
     // files for unseen keys (no base rewritten)
-    if (HudiTableReader.isMor(spark, tablePath))
-      return morUpsert(deduped, tablePath, keys, partitionBy, evolvedJson,
+    if (HudiTableReader.isMor(spark, tablePath)) {
+      // additive evolution against the real-time view's columns
+      val evolvedJson = evolutionOf(df, tablePath,
+        HudiTableReader.snapshot(spark, tablePath).schema)
+      return morUpsert(combined(), tablePath, keys, partitionBy, evolvedJson,
         dupGate = dupGate)
+    }
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val instant = instantNow(0L)
     // BLOOM-INDEX PRUNE: groups whose per-file filter proves every
@@ -506,12 +509,13 @@ object HudiTableWriter {
     // only carry — untouched groups don't rewrite). Probe BOTH key
     // forms: graft's `field:value` stamp and the raw single-key form
     // real SimpleKeyGenerator tables carry — a bucket superset only
-    // widens the scan, never misses an update.
-    val graftKeyProbe = deduped.select(concat_ws(",",
+    // widens the scan, never misses an update. The combine keeps the
+    // key set, so the probes read the batch as given.
+    val graftKeyProbe = df.select(concat_ws(",",
       keys.map(k => concat(lit(s"$k:"), col(k).cast("string"))): _*).as("_g_probe"))
     val probes =
       if (keys.size == 1)
-        graftKeyProbe.unionAll(deduped.select(col(keys.head).cast("string").as("_g_probe")))
+        graftKeyProbe.unionAll(df.select(col(keys.head).cast("string").as("_g_probe")))
       else graftKeyProbe
     // the timeline head this upsert is PLANNED against — captured
     // BEFORE the slice listing so every instant that lands after
@@ -521,25 +525,26 @@ object HudiTableWriter {
     val slices = bloomPruneSlices(spark, tablePath,
       HudiTableReader.activeSlices(spark, tablePath), probes)
     val sliceByFid = slices.map(s => s.fileId -> s).toMap
-    // base rows with their file-group id, via the one metadata column
-    // scan + a broadcast path→fid map (bounded by |file groups|)
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    val fidRows = slices.map(s => org.apache.spark.sql.Row(
-      ScanPaths.normalizeDriver(s"$tablePath/${s.path}"), s.fileId))
-    val fidDf = spark.createDataFrame(fidRows.asJava, StructType(Seq(
-      StructField("_g_file", StringType), StructField("_g_fid", StringType))))
-    // a previously-evolved table scans with its DECLARED schema (old
-    // base files null-fill), exactly as the reader does
-    val baseRead = HudiTableReader.scanSchemaOf(spark, tablePath,
-        Some(s"$tablePath/${slices.maxBy(_.instant).path}")) match {
-      case Some(declared) => spark.read.schema(declared)
-      case None => spark.read
+    // the ONE base scan: its schema resolves on the driver (declared
+    // once the table evolved — old base files null-fill — else a
+    // footer) and is also the table schema the evolution gate checks
+    val scanSchema = HudiTableReader.scanSchema(spark, tablePath, slices)
+    // additive evolution: a batch ADDING columns commits the evolved
+    // schema; carried rows null-fill below. Drops/retypes refuse.
+    val evolvedJson = evolutionOf(df, tablePath, scanSchema)
+    val dataCols = scanSchema.fieldNames.filterNot(_.startsWith("_hoodie_")).toSet
+    val newFields = df.schema.fields.filterNot(f => dataCols.contains(f.name)).toSeq
+    val deduped = combined()
+    // each base row's file-group id is its file name's first field:
+    // Hudi names base files `<fileId>_<writeToken>_<instant>.parquet`
+    slices.find(s => s.fileId.contains('_') ||
+        !s.path.split('/').last.startsWith(s.fileId + "_")).foreach { s =>
+      throw new IllegalStateException(s"$tablePath: base file ${s.path} of file group " +
+        s"${s.fileId} is not named <fileId>_<writeToken>_<instant>.parquet")
     }
-    val base = baseRead.parquet(slices.map(s => s"$tablePath/${s.path}"): _*)
-      .withColumn("_g_file", ScanPaths.normalizeScan(col("_metadata.file_path")))
-      .join(broadcast(fidDf), Seq("_g_file"))
-      .drop("_g_file")
+    val base = spark.read.schema(scanSchema)
+      .parquet(slices.map(s => s"$tablePath/${s.path}"): _*)
+      .withColumn("_g_fid", substring_index(col("_metadata.file_name"), "_", 1))
     val sliceCols = base.columns.filterNot(_ == "_g_fid").toSeq
     // evolved output: the base columns verbatim, new batch columns
     // after; base-sourced rows take deterministic nulls there
@@ -550,33 +555,44 @@ object HudiTableWriter {
     val joinCols = (partitionBy ++ keys).distinct
     val keyFid = base.select(joinCols.map(col) :+ col("_g_fid"): _*)
     val batchStamped = stamped(deduped, instant, keys, partitionBy)
+    // the batch is evaluated ONCE, here: every later consumer (counts,
+    // gate, CDC images, carried-rows anti join, the write) reads the
+    // persisted frame, never the batch plan or its combine window
     val tagged = batchStamped.join(keyFid, joinCols, "left")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
-      // ONE grouped count (also warms the cache) answers both the
-      // batch-key cardinality (broadcast-vs-shuffle decision for the
-      // carried-rows join) and the per-touched-group update counts —
-      // was two jobs: tagged.count() + updates.groupBy.count. Null
-      // fid = insert rows; |groups|+1 rows of driver metadata.
-      val fidCounts = tagged.groupBy(col("_g_fid")).count().collect()
-        .map(r => (if (r.isNullAt(0)) None else Some(r.getString(0))) -> r.getLong(1))
-        .toMap
+      // ONE grouped count (after the job that fills the cache) answers
+      // both the batch-key cardinality (broadcast-vs-shuffle decision
+      // for the carried-rows join) and the per-touched-group update
+      // counts. None = insert rows; |groups|+1 entries of driver
+      // metadata. The RDD count runs its shuffle inside one job, where
+      // a DataFrame aggregation takes two.
+      val fidCounts = tagged.select(col("_g_fid")).rdd
+        .map(r => Option(r.getString(0))).countByValue().toMap
       val nBatchKeys = fidCounts.values.sum
+      if (nBatchKeys == 0L) throw new IllegalArgumentException(
+        s"$tablePath: empty upsert batch — nothing to write")
       // deferred duplicate-key gate: one aggregation over the
       // now-cached tagged frame (reads memory, never the batch plan),
       // before any file lands
       if (dupGate) dupGateCheck(tagged, tablePath, keys, nBatchKeys)
       val updates = tagged.where(col("_g_fid").isNotNull)
-      val inserts = tagged.where(col("_g_fid").isNull).drop("_g_fid")
+      val inserts = tagged.where(col("_g_fid").isNull)
+      // the keys that match a base row — the only ones that can
+      // replace (anti join) or pre-image (CDC) one. SIZE-GATED:
+      // CDC-sized batches broadcast their key set (no shuffle of the
+      // base rows); past the gate a backfill-scale batch would blow
+      // the 8 GiB broadcast cap, so it degrades to a shuffle join
+      val matchedKeys = {
+        val k = updates.select(joinCols.map(col): _*)
+        if (nBatchKeys <= maxBroadcastKeys) broadcast(k) else k
+      }
       // hoodie.table.cdc.enabled obligation: land this instant's
       // pre/post images BEFORE any data file moves (the base scan
       // below still sees the pre-write state) — one distributed
       // parquet write under .hoodie/cdc/<instant>/
-      if (cdcEnabledOf(spark, tablePath)) {
-        val batchKeySet = deduped.select(joinCols.map(col): _*)
-        val pre = nullFillNew(base
-          .join(if (nBatchKeys <= maxBroadcastKeys) broadcast(batchKeySet) else batchKeySet,
-            joinCols, "left_semi"))
+      if (props.get("hoodie.table.cdc.enabled").contains("true")) {
+        val pre = nullFillNew(base.join(matchedKeys, joinCols, "left_semi"))
           .select(outCols.map(col): _*)
           .withColumn("_change_type", lit("update_preimage"))
         val post = updates.select(outCols.map(col): _*)
@@ -588,83 +604,65 @@ object HudiTableWriter {
       // per-touched-group update counts — |groups| driver metadata,
       // already in hand from the grouped count above
       val updCounts = fidCounts.collect { case (Some(fid), n) => fid -> n }
-      val updateStats = Seq.newBuilder[(String, String, String, Long, Long, Long)]
-      if (updCounts.nonEmpty) {
-        val updFidDf = spark.createDataFrame(
-          updCounts.keys.toSeq.map(org.apache.spark.sql.Row(_)).asJava,
-          StructType(Seq(StructField("_g_fid", StringType))))
-        val batchKeys = deduped.select(joinCols.map(col): _*)
-        // SIZE-GATED anti join: CDC-sized batches broadcast their key
-        // set (no shuffle of the carried base rows); past the gate a
-        // backfill-scale batch would blow the 8 GiB broadcast cap, so
-        // it degrades to a shuffle anti join instead of failing
-        val carried = base.join(broadcast(updFidDf), Seq("_g_fid"))
-          .join(if (nBatchKeys <= maxBroadcastKeys) broadcast(batchKeys)
-                else batchKeys,
-            joinCols, "left_anti")
-        val newSlices = nullFillNew(carried).select(outCols.map(col) :+ col("_g_fid"): _*)
-          .unionByName(updates.select(outCols.map(col) :+ col("_g_fid"): _*))
-        // one rewritten base file per touched group: each fid lives in
-        // exactly one task after the repartition, partitionBy splits
-        // the task's rows into one file per fid dir. Explicit count:
-        // without one AQE coalesces a small commit to ONE task that
-        // writes every group's file serially.
-        val stage = new Path(tablePath, s".graft-upsert-${java.util.UUID.randomUUID()}")
-        newSlices.repartition(spark.sessionState.conf.numShufflePartitions, col("_g_fid"))
-          .write.partitionBy("_g_fid")
-          .parquet(stage.toString)
-        // land + footer-count in PARALLEL: one rename + one footer
-        // read per touched group is metadata-level work, but serially
-        // it is O(|touched groups|) driver round-trips — thousands of
-        // groups would mean minutes of driver wall-time
-        import scala.collection.parallel.CollectionConverters._
-        val landed = fs.listStatus(stage).filter(_.isDirectory).toSeq.par.map { d =>
-          val name = d.getPath.getName
-          require(name.startsWith("_g_fid="), s"$tablePath: unexpected stage dir $name")
-          val fid = name.substring("_g_fid=".length)
-          val parts = fs.listStatus(d.getPath).map(_.getPath)
-            .filter(_.getName.endsWith(".parquet"))
-          require(parts.length == 1,
-            s"$tablePath: group $fid staged ${parts.length} files — expected exactly one")
-          val old = sliceByFid.getOrElse(fid, throw new IllegalStateException(
-            s"$tablePath: staged group $fid is not an active slice — racing writer?"))
-          val partition = old.partition
-          val rel =
-            if (partition.isEmpty) s"${fid}_0-0-0_$instant.parquet"
-            else s"$partition/${fid}_0-0-0_$instant.parquet"
-          val dst = new Path(tablePath, rel)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(parts.head, dst))
-            throw new IllegalStateException(s"$tablePath: failed to land new slice $rel")
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dst,
-            spark.sparkContext.hadoopConfiguration)
-          val pr = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          val n = try pr.getRecordCount finally pr.close()
-          (partition, fid, rel, n, updCounts(fid), fs.getFileStatus(dst).getLen)
-        }.seq
-        updateStats ++= landed
-        fs.delete(stage, true)
+      // each group's write task follows from the batch, never from its
+      // random id, so one batch fills the same number of tasks on every
+      // run (the commit's filesystem calls repeat) and the groups
+      // spread evenly: the k touched groups take tasks 0..k-1 round
+      // robin, new groups the tasks after them by bucket and partition
+      val nBuckets = spark.sessionState.conf.numShufflePartitions
+      val rewrittenTask = map(updCounts.keys.toSeq.sorted.zipWithIndex
+        .flatMap { case (fid, i) => Seq(lit(fid), lit(i % nBuckets)) }: _*)
+      // carried rows: the touched groups' base rows no batch key replaces
+      val carried =
+        if (updCounts.isEmpty) Nil
+        else Seq(nullFillNew(base.where(col("_g_fid").isin(updCounts.keys.toSeq: _*))
+          .join(matchedKeys, joinCols, "left_anti"))
+          .select(outCols.map(col) :+ col("_g_fid") :+
+            element_at(rewrittenTask, col("_g_fid")).as("_g_task"): _*))
+      // insert rows take their NEW group's id before the write: one
+      // group per (key-hash bucket, table partition), with at most
+      // numShufflePartitions buckets, so a batch's inserts land in a
+      // bounded number of new groups. The id is a UUID-shaped md5 of
+      // (per-commit salt, bucket, partition path).
+      val bucket = pmod(hash(keys.map(col): _*), lit(nBuckets))
+      val partPath = if (partitionBy.isEmpty) None else Some(col("_hoodie_partition_path"))
+      val hex = md5(concat_ws("/", (lit(java.util.UUID.randomUUID().toString) +:
+        bucket.cast("string") +: partPath.toSeq): _*))
+      val newFid = concat_ws("-", Seq((1, 8), (9, 4), (13, 4), (17, 4), (21, 12))
+        .map { case (pos, len) => substring(hex, pos, len) }: _*)
+      val newTask = pmod(lit(updCounts.size) + bucket +
+        partPath.map(p => pmod(hash(p), lit(nBuckets))).getOrElse(lit(0)), lit(nBuckets))
+      val batchTask =
+        if (updCounts.isEmpty) newTask
+        else when(col("_g_fid").isNull, newTask)
+          .otherwise(element_at(rewrittenTask, col("_g_fid")))
+      val batchRows = tagged.select(outCols.map(col) :+
+        coalesce(col("_g_fid"), newFid).as("_g_fid") :+ batchTask.as("_g_task"): _*)
+      val rows = (carried :+ batchRows).reduce(_.unionByName(_))
+      // ONE write lands every group — rewritten and new: each fid
+      // lives in exactly one task after the repartition (its task is a
+      // function of the fid), partitionBy splits the task's rows into
+      // one file per fid dir (under hive `_p_<c>` dirs on partitioned
+      // tables, which name a new group's partition). Explicit count:
+      // without one AQE coalesces a small commit to ONE task that
+      // writes every group's file serially.
+      val stage = new Path(tablePath, s".graft-upsert-${java.util.UUID.randomUUID()}")
+      partitionBy.foldLeft(rows)((acc, c) => acc.withColumn(s"_p_$c", col(c)))
+        .repartition(nBuckets,
+          element_at(array(taskKeys(nBuckets).map(lit): _*), col("_g_task") + 1))
+        .drop("_g_task")
+        .write.partitionBy(partitionBy.map(c => s"_p_$c") :+ "_g_fid": _*)
+        .parquet(stage.toString)
+      val landed = landStaged(spark, tablePath, stage, instant,
+        fid => sliceByFid.get(fid).map(_.partition))
+      val allStats = landed.map { case (part, fid, rel, n, len) =>
+        val (nUpd, prev) = sliceByFid.get(fid) match {
+          case Some(old) => (updCounts(fid), old.instant)
+          case None => (0L, "null")
+        }
+        (part, s"""{"fileId":"$fid","path":"$rel","numWrites":$n,""" +
+          s""""numUpdateWrites":$nUpd,"totalWriteBytes":$len,"prevCommit":"$prev"}""")
       }
-      val insertFiles = landNewGroups(inserts.select(outCols.map(col): _*),
-        tablePath, instant, partitionBy)
-      val allStats = {
-        import scala.collection.parallel.CollectionConverters._
-        updateStats.result().map { case (part, fid, rel, n, nUpd, len) =>
-          (part, s"""{"fileId":"$fid","path":"$rel","numWrites":$n,""" +
-            s""""numUpdateWrites":$nUpd,""" +
-            s""""totalWriteBytes":$len,""" +
-            s""""prevCommit":"${sliceByFid(fid).instant}"}""")
-        } ++ insertFiles.par.map { case (part, fid, rel) =>
-          // footer + status reads in parallel, as everywhere else
-          (part, s"""{"fileId":"$fid","path":"$rel",""" +
-            s""""numWrites":${footerRowCount(spark, tablePath, rel)},""" +
-            s""""numUpdateWrites":0,""" +
-            s""""totalWriteBytes":${fs.getFileStatus(new Path(tablePath, rel)).getLen},""" +
-            s""""prevCommit":"null"}""")
-        }.seq
-      }
-      if (allStats.isEmpty) throw new IllegalArgumentException(
-        s"$tablePath: empty upsert batch — nothing to write")
       val statsJson = allStats.groupBy(_._1).map { case (part, ws) =>
         s""""$part":[${ws.map(_._2).mkString(",")}]"""
       }.mkString(",")
@@ -692,6 +690,66 @@ object HudiTableWriter {
           "single-writer per instant; the landed files must be rolled back manually")
       instant
     } finally tagged.unpersist()
+  }
+
+  /** For each of `n` shuffle partitions, an int key that
+    * `repartition(n, key)` sends there — asked of Spark's own hash
+    * partitioning, on the driver — so rows can be steered to a chosen
+    * write task (hashing small ints directly would crowd them into a
+    * few tasks). */
+  private def taskKeys(n: Int): IndexedSeq[Int] = {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    val keyOf = scala.collection.mutable.Map.empty[Int, Int]
+    Iterator.from(0).takeWhile(_ => keyOf.size < n).foreach { i =>
+      keyOf.getOrElseUpdate(
+        HashPartitioning(Seq(Literal(i)), n).partitionIdExpression.eval().asInstanceOf[Int], i)
+    }
+    (0 until n).map(keyOf)
+  }
+
+  /** Land a staged `partitionBy(_p_<c>…, _g_fid)` write as base files
+    * of `instant`: each `_g_fid=<fid>` dir must hold exactly one
+    * parquet, renamed to `<partition>/<fid>_0-0-0_<instant>.parquet`.
+    * A rewritten group keeps its slice's partition (`partitionOf`); a
+    * new one takes the hive `_p_` dirs above it. The partition dirs
+    * are made once each, serially; the per-group list + rename + footer
+    * count then run in parallel (serially they would be
+    * O(|groups|) driver round-trips). Returns (partition, fileId,
+    * relPath, footer row count, bytes) per group.
+    */
+  private def landStaged(spark: SparkSession, tablePath: String, stage: Path,
+      instant: String, partitionOf: String => Option[String])
+      : Seq[(String, String, String, Long, Long)] = {
+    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val groups = Seq.newBuilder[(String, String, Path)] // (partition, fid, dir)
+    def walk(dir: Path, partSegs: Seq[String]): Unit =
+      fs.listStatus(dir).filter(_.isDirectory).foreach { st =>
+        val name = st.getPath.getName
+        if (name.startsWith("_g_fid=")) {
+          val fid = name.substring("_g_fid=".length)
+          groups += ((partitionOf(fid).getOrElse(partSegs.mkString("/")), fid, st.getPath))
+        } else if (name.startsWith("_p_") && name.contains('='))
+          walk(st.getPath, partSegs :+ name.substring(3))
+      }
+    walk(stage, Nil)
+    val staged = groups.result()
+    staged.map(_._1).distinct.filter(_.nonEmpty)
+      .foreach(part => fs.mkdirs(new Path(tablePath, part)))
+    import scala.collection.parallel.CollectionConverters._
+    val landed = staged.par.map { case (partition, fid, dir) =>
+      val parts = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
+      require(parts.length == 1,
+        s"$tablePath: group $fid staged ${parts.length} files — expected exactly one")
+      val rel =
+        if (partition.isEmpty) s"${fid}_0-0-0_$instant.parquet"
+        else s"$partition/${fid}_0-0-0_$instant.parquet"
+      if (!fs.rename(parts.head.getPath, new Path(tablePath, rel)))
+        throw new IllegalStateException(s"$tablePath: failed to land base file $rel")
+      (partition, fid, rel, footerRowCount(spark, tablePath, rel), parts.head.getLen)
+    }.seq
+    fs.delete(stage, true)
+    landed
   }
 
   // ----------------------------------------------------------------

@@ -48,6 +48,21 @@ class DeltaTableWriterSpec extends SparkSpec {
     assert(e2.getMessage.contains("already"))
   }
 
+  test("upsert through a RELATIVE table path: matched rows resolve against the active set") {
+    val abs = java.nio.file.Paths.get(tmpDir("dwr-relative"), "t")
+    val table = java.nio.file.Paths.get("").toAbsolutePath.relativize(abs).toString
+    assert(!table.startsWith("/"))
+    DeltaTableWriter.create(df(1 to 40), table): Unit
+    val s = spark
+    import s.implicits._
+    val batch = Seq((5L, "g1", 500L), (41L, "g1", 82L)).toDF("id", "grp", "v")
+    val v = DeltaTableWriter.upsert(batch, table, Seq("id"))
+    assert(v == 1L)
+    val snap = DeltaTableReader.snapshot(spark, abs.toString)
+    assert(snap.count() == 41L)
+    assert(snap.where(col("id") === 5L).select("v").as[Long].collect().toSeq == Seq(500L))
+  }
+
   test("partitioned create: hive dirs land, partition values ride the log, reader re-attaches them") {
     val table = tmpDir("dwr-part") + "/t"
     DeltaTableWriter.create(df(1 to 80), table, partitionBy = Seq("grp")): Unit

@@ -285,4 +285,25 @@ class HudiTableReaderSpec extends SparkSpec {
     assert(snap.where(col("day") === "2024-01-02").count() == 50L,
       "partition columns ride the data files in Hudi COW — no reconstruction needed")
   }
+
+  test("driver footer schema equals Spark's inference: graft-written, nested, TIMESTAMP(NANOS)") {
+    val table = tmpDir("hrd-footer") + "/t"
+    val s = spark
+    import s.implicits._
+    HudiTableWriter.create(Seq((1L, "a", 2.5)).toDF("id", "k", "x"), table,
+      recordKeys = Seq("id")): Unit
+    val base = HudiTableReader.activeSlices(spark, table).map(sl => s"$table/${sl.path}").head
+    assert(HudiTableReader.footerSchema(spark, base) == spark.read.parquet(base).schema)
+    // non-null nested fields come back nullable at every depth, as a scan serves them
+    val nested = tmpDir("hrd-nested") + "/n"
+    spark.range(3).select(struct(col("id"), lit("s").as("s")).as("st"),
+        array(col("id")).as("arr"), map(lit("k"), col("id")).as("m"))
+      .coalesce(1).write.parquet(nested)
+    val file = new java.io.File(nested).listFiles().map(_.getPath).filter(_.endsWith(".parquet")).head
+    assert(HudiTableReader.footerSchema(spark, file) == spark.read.parquet(file).schema)
+    // TIMESTAMP(NANOS) converts under the session's nanosAsLong, as inference does
+    assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+    val events = s"$sfDir/events.parquet"
+    assert(HudiTableReader.footerSchema(spark, events) == spark.read.parquet(events).schema)
+  }
 }
