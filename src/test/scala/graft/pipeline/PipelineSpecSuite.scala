@@ -53,6 +53,121 @@ class PipelineSpecSuite extends SparkSpec {
     intercept[IllegalArgumentException] { writer.write(df, format = "xml") }
   }
 
+  /** Every column shape a report carries: text needing quotes
+    * (commas, quotes, newlines), nulls, empty strings, decimals,
+    * doubles, dates, timestamps with and without a zone, booleans —
+    * over 3 partitions, so the file is stitched from several chunks.
+    */
+  private def awkwardFrame() = spark.range(0, 40, 1, 3).selectExpr(
+    "id",
+    """CASE id % 5 WHEN 0 THEN 'a,b' WHEN 1 THEN 'say "hi"' WHEN 2 THEN 'two\nlines'
+      |  WHEN 3 THEN '' ELSE NULL END AS s""".stripMargin,
+    "CAST(id * 1.25 AS DECIMAL(12, 3)) AS dec",
+    "IF(id % 7 = 0, NULL, id / 3.0D) AS dbl",
+    "date_add(DATE'2026-03-01', CAST(id AS INT)) AS d",
+    "timestamp_micros(1772704800123456L + id * 3601000001L) AS ts",
+    "CAST(timestamp_micros(1772704800654321L - id * 86399999999L) AS TIMESTAMP_NTZ) AS ntz",
+    "IF(id % 3 = 0, NULL, id % 2 = 0) AS b")
+
+  /** The part file Spark's own sink writes for `df` in one task. */
+  private def sparkSinkBytes(df: org.apache.spark.sql.DataFrame, format: String): Array[Byte] = {
+    val dir = tmpDir("graft-report-ref-") + "/out"
+    val w = df.coalesce(1).write
+    if (format == "csv") w.option("header", "true").csv(dir) else w.json(dir)
+    val parts = new java.io.File(dir).listFiles().filter(_.getName.startsWith("part-"))
+    assert(parts.length == 1)
+    java.nio.file.Files.readAllBytes(parts.head.toPath)
+  }
+
+  private def fileBytes(path: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path))
+
+  test("ReportWriter: CSV and JSON bytes equal Spark's own sink, empty results included") {
+    val writer = new ReportWriter(tmpDir("graft-report-bytes-"))
+    val df = awkwardFrame()
+    // `id < 0` keeps 3 empty partitions; `limit(0)` plans an empty
+    // relation with none, where Spark's sink still writes one file
+    for (format <- Seq("csv", "json"); frame <- Seq(df, df.where("id < 0"), df.limit(0))) {
+      val got = fileBytes(writer.write(frame, format = format).path)
+      assert(got.sameElements(sparkSinkBytes(frame, format)),
+        s"$format bytes differ from Spark's sink:\n${new String(got, "UTF-8")}")
+    }
+    val empty = fileBytes(writer.write(df.limit(0)).path)
+    assert(new String(empty, "UTF-8") == "id,s,dec,dbl,d,ts,ntz,b\n", "an empty CSV is its header")
+  }
+
+  test("ReportWriter: an ORDER BY over several partitions keeps its order") {
+    val key = "spark.sql.adaptive.coalescePartitions.enabled"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "false") // keep the sort's 4 output partitions apart
+    try {
+      val df = spark.range(0, 300, 1, 4).selectExpr("id", "(id * 7919) % 300 AS k").orderBy(desc("k"))
+      val handle = new ReportWriter(tmpDir("graft-report-order-")).write(df)
+      assert(df.queryExecution.toRdd.getNumPartitions >= 3)
+      val ks = scala.io.Source.fromFile(handle.path, "UTF-8").getLines().drop(1).map(_.split(',')(1).toInt).toSeq
+      assert(ks == (299 to 0 by -1))
+    } finally spark.conf.set(key, before)
+  }
+
+  test("ReportWriter: every format lands one file per report and leaves no staging debris") {
+    val fixed = Instant.parse("2026-03-05T10:00:00Z")
+    val root = tmpDir("graft-report-debris-")
+    val writer = new ReportWriter(root, clock = () => fixed)
+    val names = Seq("csv", "json", "orc", "parquet")
+      .map(f => new java.io.File(writer.write(awkwardFrame(), format = f).path).getName)
+    val left = new java.io.File(s"$root/reports/year=2026/month=3/day=5").list().toSet
+    // the local file system keeps a hidden checksum beside each file
+    assert(left == names.flatMap(n => Seq(n, s".$n.crc")).toSet, s"left in the day directory: $left")
+  }
+
+  test("ReportWriter: a query that fails in a task leaves nothing at the target key") {
+    val fixed = Instant.parse("2026-03-05T10:00:00Z")
+    val root = tmpDir("graft-report-fail-")
+    val writer = new ReportWriter(root, clock = () => fixed)
+    val failing = spark.range(0, 30, 1, 3)
+      .selectExpr("id", "IF(id = 17, raise_error('boom'), CAST(id AS STRING)) AS s")
+    for (format <- Seq("csv", "parquet")) {
+      val e = intercept[Exception](writer.write(failing, format = format))
+      assert(e.getMessage.contains("boom"))
+    }
+    val day = new java.io.File(s"$root/reports/year=2026/month=3/day=5")
+    assert(!day.exists() || day.list().isEmpty, s"left behind: ${Option(day.list()).map(_.toSeq)}")
+  }
+
+  test("ReportWriter: schemas Spark's sink refuses are still refused") {
+    val writer = new ReportWriter(tmpDir("graft-report-refuse-"))
+    val nested = spark.range(3).selectExpr("id", "named_struct('a', id) AS st")
+    val e = intercept[org.apache.spark.sql.AnalysisException](writer.write(nested))
+    assert(e.getMessage.contains("CSV") && e.getMessage.contains("st"))
+    writer.write(nested, format = "json") // JSON carries nested columns
+  }
+
+  test("job budget: the flagship report over a 4-file table runs at most 2 Spark jobs, its scan in parallel") {
+    val dir = tmpDir("graft-report-jobs-")
+    spark.read.parquet(s"$sfDir/orders.parquet").repartition(4).write.parquet(s"$dir/orders.parquet")
+    spark.read.parquet(s"$sfDir/customer.parquet").write.parquet(s"$dir/customer.parquet")
+    assert(new java.io.File(s"$dir/orders.parquet").list().count(_.endsWith(".parquet")) >= 4)
+    val df = graft.Queries.qReportUrgent.run(spark, dir)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        stageTasks.add(e.stageInfo.numTasks): Unit
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      new ReportWriter(tmpDir("graft-report-jobs-out-")).write(df)
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    assert(jobs.get() <= 2, s"${jobs.get()} Spark jobs for one report")
+    assert(stageTasks.asScala.max > 1, s"stage task counts ${stageTasks.asScala.toSeq}: the scan ran in one task")
+  }
+
   test("email template renders the reference card with the download link") {
     val html = DownloadReportEmailTemplate("file:///tmp/r.csv").render()
     assert(html.contains("""<a href="file:///tmp/r.csv""""))
