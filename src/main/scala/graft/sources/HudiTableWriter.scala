@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** APPEND-ONLY writer for Apache Hudi COPY-ON-WRITE tables readable
@@ -12,8 +12,9 @@ import org.apache.spark.sql.functions._
   * against:
   *
   *  - data lands as immutable base parquet files named
-  *    `<fileId>_<writeToken>_<instant>.parquet`, one NEW file group
-  *    per file (insert commits — no group is ever rewritten);
+  *    `<fileId>_<writeToken>_<instant>.parquet`; an insert makes one
+  *    NEW file group per (write task, table partition) — the files a
+  *    plain parquet write gives — and rewrites none;
   *  - rows carry the `_hoodie_commit_time` meta column stamped with
   *    the commit instant (what makes incremental pull a per-row
   *    filter) and, when record keys are declared,
@@ -24,10 +25,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: the data write is an ordinary distributed parquet
   * write; the commit is driver metadata bounded by |files this
-  * commit|. Instant collision (two writers in the same millisecond)
-  * is resolved by the exclusive-create of the `.commit` file — the
-  * loser bumps to the next instant and retries, the same
-  * instant-uniqueness Hudi's own timeline service enforces.
+  * commit|. Every write — insert, upsert, clustering, compaction —
+  * lands its base files through one staged write (`landStaged`) and
+  * publishes through one exclusive create (`publish`). Instant
+  * collision (two writers in the same millisecond) is resolved by
+  * that exclusive create — an insert that loses bumps to the next
+  * instant and retries, the same instant-uniqueness Hudi's own
+  * timeline service enforces.
   *
   * Beyond inserts: [[upsert]] is the reference's own write operation
   * (COW file-group rewrite, carried rows keeping their stamps), and
@@ -138,67 +142,132 @@ object HudiTableWriter {
       if (recordKeys.isEmpty) withTime
       else withTime.withColumn("_hoodie_record_key",
         concat_ws(",", recordKeys.map(k => concat(lit(s"$k:"), col(k).cast("string"))): _*))
-    if (partitionBy.isEmpty) withKey
-    else withKey.withColumn("_hoodie_partition_path",
-      concat_ws("/", partitionBy.map(c =>
-        concat(lit(s"$c="), coalesce(col(c).cast("string"),
-          lit("__HIVE_DEFAULT_PARTITION__")))): _*))
+    partitionPathOf(partitionBy)
+      .fold(withKey)(withKey.withColumn("_hoodie_partition_path", _))
   }
+
+  /** A row's hive partition path `c1=v1/c2=v2` — what
+    * `_hoodie_partition_path` carries (None when unpartitioned). */
+  private def partitionPathOf(partitionBy: Seq[String]): Option[Column] =
+    if (partitionBy.isEmpty) None
+    else Some(concat_ws("/", partitionBy.map(c =>
+      concat(lit(s"$c="), coalesce(col(c).cast("string"),
+        lit("__HIVE_DEFAULT_PARTITION__")))): _*))
 
   /** The partition fields the TABLE declares (empty = unpartitioned). */
   def declaredPartitionFields(spark: SparkSession, tablePath: String): Seq[String] =
     listProperty(tableProperties(spark, tablePath), "hoodie.table.partition.fields")
 
-  /** Land `df` (already stamped) as NEW file groups under `instant`:
-    * stage write (hive dirs from duplicated `_p_<c>` columns — Hudi
-    * keeps partition columns IN the data files), then rename each
-    * staged parquet to the base-file naming convention under a fresh
-    * fileId. Returns (partition, fileId, relPath) per landed file.
+  /** One written file's entry in a commit's `partitionToWriteStats`. */
+  private final case class WriteStat(partition: String, fileId: String, path: String,
+      numWrites: Long, numUpdateWrites: Long, totalWriteBytes: Long, prevCommit: String)
+
+  /** `partitionToWriteStats` as JSON: the stats grouped by partition. */
+  private def writeStatsJson(stats: Seq[WriteStat]): String =
+    stats.groupBy(_.partition).map { case (part, ws) =>
+      s""""$part":[""" + ws.map(w =>
+        s"""{"fileId":"${w.fileId}","path":"${w.path}","numWrites":${w.numWrites},""" +
+          s""""numUpdateWrites":${w.numUpdateWrites},"totalWriteBytes":${w.totalWriteBytes},""" +
+          s""""prevCommit":"${w.prevCommit}"}""").mkString(",") + "]"
+    }.mkString("{", ",", "}")
+
+  /** Publish `instant` as `.hoodie/<instant>.<kind>` naming the files
+    * in `stats` (and, for a clustering, the `replaced` group ids per
+    * partition). The exclusive create is the instant-uniqueness CAS:
+    * false means another writer already holds the instant, and the
+    * caller's policy decides the fate of the files it landed.
     */
-  private def landNewGroups(staged0: DataFrame, tablePath: String, instant: String,
-      partitionBy: Seq[String]): Seq[(String, String, String)] = {
-    val spark = staged0.sparkSession
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new Path(tablePath, s".graft-stage-${java.util.UUID.randomUUID()}")
-    val staged = partitionBy.foldLeft(staged0)((acc, c) => acc.withColumn(s"_p_$c", col(c)))
-    val writer =
-      if (partitionBy.isEmpty) staged.write
-      else staged.write.partitionBy(partitionBy.map(c => s"_p_$c"): _*)
-    writer.parquet(stage.toString)
-    val writes = Seq.newBuilder[(String, String, String)] // (partition, fileId, path)
-    def walk(dir: Path, partSegs: Seq[String]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          val segs =
-            if (name.startsWith("_p_") && name.contains('='))
-              partSegs :+ name.substring(3)
-            else partSegs
-          walk(st.getPath, segs)
-        } else if (name.endsWith(".parquet")) {
-          val partition = partSegs.mkString("/")
-          val fileId = java.util.UUID.randomUUID().toString
-          val rel =
-            if (partition.isEmpty) s"${fileId}_0-0-0_$instant.parquet"
-            else s"$partition/${fileId}_0-0-0_$instant.parquet"
-          val dst = new Path(tablePath, rel)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(st.getPath, dst))
-            throw new IllegalStateException(s"$tablePath: failed to land base file $rel")
-          writes += ((partition, fileId, rel))
-        }
-      }
-    walk(stage, Nil)
-    fs.delete(stage, true)
-    writes.result()
+  private def publish(spark: SparkSession, tablePath: String, instant: String, kind: String,
+      operationType: String, stats: Seq[WriteStat],
+      extraMetadata: Map[String, String] = Map.empty,
+      replaced: Map[String, Seq[String]] = Map.empty): Boolean = {
+    val replacedJson =
+      if (replaced.isEmpty) ""
+      else ""","partitionToReplaceFileIds":""" + replaced.map { case (part, ids) =>
+        s""""$part":[${ids.map(id => s""""$id"""").mkString(",")}]"""
+      }.mkString("{", ",", "}")
+    val json = s"""{"partitionToWriteStats":${writeStatsJson(stats)}$replacedJson""" +
+      s""","operationType":"$operationType"""" + extraMetadataJson(extraMetadata) + "}\n"
+    val p = new Path(hoodieDir(tablePath), s"$instant.$kind")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    try {
+      val out = fs.create(p, false)
+      try out.write(json.getBytes("UTF-8")) finally out.close()
+      true
+    } catch { case _: java.io.IOException => false }
   }
 
-  /** Write one insert commit: every staged parquet file becomes a NEW
-    * file group named per the Hudi base-file convention, and the
-    * `.commit` (or, on MOR tables, `.deltacommit`) meta file publishes
-    * them — with the sink's `extraMetadata` when given. Returns the
-    * commit instant.
+  /** A base file's path in the table:
+    * `<partition>/<fileId>_0-0-0_<instant>.parquet`. */
+  private def baseFilePath(partition: String, fid: String, instant: String): String = {
+    val name = s"${fid}_0-0-0_$instant.parquet"
+    if (partition.isEmpty) name else s"$partition/$name"
+  }
+
+  /** Each row's NEW file-group id: a UUID-shaped md5 of (a random salt
+    * drawn per call, `bucket`, the row's partition path) — one id per
+    * (bucket, table partition) within a write; the salt keeps the ids
+    * of different writes apart. */
+  private def newGroupId(bucket: Column, partitionPath: Option[Column]): Column = {
+    val hex = md5(concat_ws("/", (lit(java.util.UUID.randomUUID().toString) +:
+      bucket.cast("string") +: partitionPath.toSeq): _*))
+    concat_ws("-", Seq((1, 8), (9, 4), (13, 4), (17, 4), (21, 12))
+      .map { case (pos, len) => substring(hex, pos, len) }: _*)
+  }
+
+  /** Land `rows` as NEW file groups, one per (write task, table
+    * partition): the files a plain parquet write of `rows` gives, with
+    * no added shuffle. `rows` must not be a projection of a local
+    * relation: the optimizer evaluates those on the driver, where
+    * `spark_partition_id()` is 0 for every row (see
+    * [[onWriteTasks]]). With no rows, a partitioned table lands nothing
+    * and an unpartitioned one lands one schema-only group, as Spark
+    * writes a schema-only part file for an empty unpartitioned write.
     */
+  private def landTaskGroups(rows: DataFrame, tablePath: String, instant: String,
+      partitionBy: Seq[String]): Seq[WriteStat] = {
+    val landed = landStaged(
+      rows.withColumn("_g_fid", newGroupId(spark_partition_id(), partitionPathOf(partitionBy))),
+      tablePath, instant, partitionBy)
+    if (landed.nonEmpty || partitionBy.nonEmpty) landed
+    else {
+      val s = rows.sparkSession
+      import s.implicits._
+      // one id, from a one-row local relation the optimizer folds on the driver
+      val fid = Seq(0).toDF("b").select(newGroupId(col("b"), None)).head().getString(0)
+      Seq(landEmptyBase(s, rows.schema, tablePath, "", fid, instant))
+    }
+  }
+
+  /** Land a schema-only base file as group `fid` — what a write of no
+    * rows commits. */
+  private def landEmptyBase(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+      tablePath: String, partition: String, fid: String, instant: String): WriteStat = {
+    val rel = baseFilePath(partition, fid, instant)
+    val dst = new Path(tablePath, rel)
+    landSingleFile(spark.createDataFrame(
+      new java.util.ArrayList[org.apache.spark.sql.Row](), schema), tablePath, dst,
+      "empty base file")
+    val len = dst.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(dst).getLen
+    WriteStat(partition, fid, rel, 0L, 0L, len, "null")
+  }
+
+  /** Land `df` as ONE parquet file at `dst`, replacing any file there:
+    * a `coalesce(1)` write staged beside the table, its part file
+    * renamed into place. */
+  private def landSingleFile(df: DataFrame, tablePath: String, dst: Path, what: String): Unit = {
+    val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
+    val stage = new Path(tablePath, s".graft-single-${java.util.UUID.randomUUID()}")
+    df.coalesce(1).write.parquet(stage.toString)
+    val part = fs.listStatus(stage).map(_.getPath)
+      .find(_.getName.endsWith(".parquet"))
+      .getOrElse(throw new IllegalStateException(s"$tablePath: $what staged nothing"))
+    fs.delete(dst, false)
+    if (!fs.rename(part, dst)) throw new IllegalStateException(
+      s"$tablePath: failed to land $what $dst")
+    fs.delete(stage, true)
+  }
+
   /** Footer record count of one landed base file — the per-file
     * `numWrites` real Hudi write stats carry. */
   private def footerRowCount(spark: SparkSession, tablePath: String, rel: String): Long = {
@@ -208,51 +277,42 @@ object HudiTableWriter {
     try r.getRecordCount finally r.close()
   }
 
+  /** `df`, with its projections kept on the write tasks: a local
+    * relation (driver-side rows) gets a coalesce to no fewer
+    * partitions than its local scan makes — no shuffle, the same
+    * tasks — which stops the optimizer from folding later projections
+    * into it on the driver. */
+  private def onWriteTasks(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
+    case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+      df.coalesce(math.max(l.data.length, 1))
+    case _ => df
+  }
+
+  /** Write one insert commit: `df` lands as NEW file groups, one per
+    * (write task, table partition), named per the Hudi base-file
+    * convention, and the `.commit` (or, on MOR tables, `.deltacommit`)
+    * meta file publishes them — with the sink's `extraMetadata` when
+    * given. Returns the commit instant.
+    */
   private def insertCommit(df: DataFrame, tablePath: String,
       recordKeys: Seq[String], kind: String = "commit",
       partitionBy: Seq[String] = Nil,
       extraMetadata: Map[String, String] = Map.empty): String = {
     val spark = df.sparkSession
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val input = onWriteTasks(df)
     var attempt = 0
     while (true) {
       val instant = instantNow(attempt.toLong)
-      val toWrite = stamped(df, instant, recordKeys, partitionBy)
-      val files = landNewGroups(toWrite, tablePath, instant, partitionBy)
-      if (files.isEmpty) throw new IllegalArgumentException(
+      val stats = landTaskGroups(stamped(input, instant, recordKeys, partitionBy),
+        tablePath, instant, partitionBy)
+      if (stats.isEmpty) throw new IllegalArgumentException(
         s"$tablePath: the DataFrame wrote no data files (empty input?)")
-      // real per-file row counts from the footers (what Hudi's own
-      // write stats carry) — |files| parallel metadata reads
-      val statsByPartition = {
-        import scala.collection.parallel.CollectionConverters._
-        files.par.map { case (part, fid, path) =>
-          (part,
-            s"""{"fileId":"$fid","path":"$path",""" +
-              s""""numWrites":${footerRowCount(spark, tablePath, path)},""" +
-              s""""numUpdateWrites":0,""" +
-              s""""totalWriteBytes":${fs.getFileStatus(new Path(tablePath, path)).getLen},""" +
-              s""""prevCommit":"null"}""")
-        }.seq.groupBy(_._1).map { case (part, ws) =>
-          s""""$part":[${ws.map(_._2).mkString(",")}]"""
-        }.mkString(",")
-      }
-      val commitPath = new Path(hoodieDir(tablePath), s"$instant.$kind")
-      fs.mkdirs(hoodieDir(tablePath))
-      // exclusive create = the instant-uniqueness CAS; a same-instant
-      // racer loses here, abandons its files as uncommitted debris
-      // (invisible to readers — the timeline is the source of truth)
-      // and retries at the next instant
-      val created = try {
-        val out = fs.create(commitPath, false)
-        try out.write(
-          (s"""{"partitionToWriteStats":{$statsByPartition},"operationType":"INSERT"""" +
-            extraMetadataJson(extraMetadata) + "}\n")
-            .getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-      if (created) return instant
-      files.foreach { case (_, _, path) => fs.delete(new Path(tablePath, path), false) }
+      // a same-instant racer loses the exclusive create, abandons its
+      // files as uncommitted debris (invisible to readers — the
+      // timeline is the source of truth) and retries at the next instant
+      if (publish(spark, tablePath, instant, kind, "INSERT", stats, extraMetadata)) return instant
+      stats.foreach(w => fs.delete(new Path(tablePath, w.path), false))
       attempt += 1
       if (attempt >= MaxCommitAttempts) throw new IllegalStateException(
         s"$tablePath: lost the instant race $MaxCommitAttempts times")
@@ -502,7 +562,6 @@ object HudiTableWriter {
       return morUpsert(combined(), tablePath, keys, partitionBy, evolvedJson,
         dupGate = dupGate)
     }
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val instant = instantNow(0L)
     // BLOOM-INDEX PRUNE: groups whose per-file filter proves every
     // batch key absent never join the key-matching scan (they can
@@ -622,14 +681,9 @@ object HudiTableWriter {
       // insert rows take their NEW group's id before the write: one
       // group per (key-hash bucket, table partition), with at most
       // numShufflePartitions buckets, so a batch's inserts land in a
-      // bounded number of new groups. The id is a UUID-shaped md5 of
-      // (per-commit salt, bucket, partition path).
+      // bounded number of new groups
       val bucket = pmod(hash(keys.map(col): _*), lit(nBuckets))
-      val partPath = if (partitionBy.isEmpty) None else Some(col("_hoodie_partition_path"))
-      val hex = md5(concat_ws("/", (lit(java.util.UUID.randomUUID().toString) +:
-        bucket.cast("string") +: partPath.toSeq): _*))
-      val newFid = concat_ws("-", Seq((1, 8), (9, 4), (13, 4), (17, 4), (21, 12))
-        .map { case (pos, len) => substring(hex, pos, len) }: _*)
+      val partPath = partitionPathOf(partitionBy)
       val newTask = pmod(lit(updCounts.size) + bucket +
         partPath.map(p => pmod(hash(p), lit(nBuckets))).getOrElse(lit(0)), lit(nBuckets))
       val batchTask =
@@ -637,35 +691,21 @@ object HudiTableWriter {
         else when(col("_g_fid").isNull, newTask)
           .otherwise(element_at(rewrittenTask, col("_g_fid")))
       val batchRows = tagged.select(outCols.map(col) :+
-        coalesce(col("_g_fid"), newFid).as("_g_fid") :+ batchTask.as("_g_task"): _*)
+        coalesce(col("_g_fid"), newGroupId(bucket, partPath)).as("_g_fid") :+
+        batchTask.as("_g_task"): _*)
       val rows = (carried :+ batchRows).reduce(_.unionByName(_))
       // ONE write lands every group — rewritten and new: each fid
       // lives in exactly one task after the repartition (its task is a
-      // function of the fid), partitionBy splits the task's rows into
-      // one file per fid dir (under hive `_p_<c>` dirs on partitioned
-      // tables, which name a new group's partition). Explicit count:
-      // without one AQE coalesces a small commit to ONE task that
-      // writes every group's file serially.
-      val stage = new Path(tablePath, s".graft-upsert-${java.util.UUID.randomUUID()}")
-      partitionBy.foldLeft(rows)((acc, c) => acc.withColumn(s"_p_$c", col(c)))
-        .repartition(nBuckets,
+      // function of the fid), so each fid dir of the staged write holds
+      // one file. Explicit count: without one AQE coalesces a small
+      // commit to ONE task that writes every group's file serially.
+      val landed = landStaged(
+        rows.repartition(nBuckets,
           element_at(array(taskKeys(nBuckets).map(lit): _*), col("_g_task") + 1))
-        .drop("_g_task")
-        .write.partitionBy(partitionBy.map(c => s"_p_$c") :+ "_g_fid": _*)
-        .parquet(stage.toString)
-      val landed = landStaged(spark, tablePath, stage, instant,
-        fid => sliceByFid.get(fid).map(_.partition))
-      val allStats = landed.map { case (part, fid, rel, n, len) =>
-        val (nUpd, prev) = sliceByFid.get(fid) match {
-          case Some(old) => (updCounts(fid), old.instant)
-          case None => (0L, "null")
-        }
-        (part, s"""{"fileId":"$fid","path":"$rel","numWrites":$n,""" +
-          s""""numUpdateWrites":$nUpd,"totalWriteBytes":$len,"prevCommit":"$prev"}""")
-      }
-      val statsJson = allStats.groupBy(_._1).map { case (part, ws) =>
-        s""""$part":[${ws.map(_._2).mkString(",")}]"""
-      }.mkString(",")
+          .drop("_g_task"),
+        tablePath, instant, partitionBy, fid => sliceByFid.get(fid).map(_.partition))
+        .map(w => sliceByFid.get(w.fileId).fold(w)(old =>
+          w.copy(numUpdateWrites = updCounts(w.fileId), prevCommit = old.instant)))
       // OPTIMISTIC CONCURRENCY: commits that landed while this upsert
       // computed may have rewritten the very groups whose slices fed
       // the carried-rows merge. A DISJOINT interleave (appends, or
@@ -675,17 +715,8 @@ object HudiTableWriter {
       // stay as uncommitted debris — invisible to readers, vacuumed
       // later (the timeline is the source of truth).
       validateNoConcurrentOverlap(spark, tablePath, plannedHead, updCounts.keySet)
-      val commitPath = new Path(hoodieDir(tablePath), s"$instant.commit")
-      val created = try {
-        val out = fs.create(commitPath, false)
-        try out.write(
-          (s"""{"partitionToWriteStats":{$statsJson},"operationType":"UPSERT"""" +
-            extraMetadataJson(evolvedJson.map("schema" -> _).toMap) + "}\n")
-            .getBytes("UTF-8"))
-        finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-      if (!created) throw new IllegalStateException(
+      if (!publish(spark, tablePath, instant, "commit", "UPSERT", landed,
+          evolvedJson.map("schema" -> _).toMap)) throw new IllegalStateException(
         s"$tablePath: instant $instant already committed by another writer — upserts are " +
           "single-writer per instant; the landed files must be rolled back manually")
       instant
@@ -708,19 +739,31 @@ object HudiTableWriter {
     (0 until n).map(keyOf)
   }
 
-  /** Land a staged `partitionBy(_p_<c>…, _g_fid)` write as base files
-    * of `instant`: each `_g_fid=<fid>` dir must hold exactly one
-    * parquet, renamed to `<partition>/<fid>_0-0-0_<instant>.parquet`.
-    * A rewritten group keeps its slice's partition (`partitionOf`); a
-    * new one takes the hive `_p_` dirs above it. The partition dirs
-    * are made once each, serially; the per-group list + rename + footer
-    * count then run in parallel (serially they would be
-    * O(|groups|) driver round-trips). Returns (partition, fileId,
-    * relPath, footer row count, bytes) per group.
+  /** Land `rows` as base files of `instant` from ONE write — the way
+    * every base file with rows enters the table (a write of no rows
+    * lands a schema-only one, [[landEmptyBase]]). Each row names its
+    * file group in `_g_fid`; the write stages `partitionBy(_p_<c>…,
+    * _g_fid)` (hive dirs from copies of the partition columns — Hudi
+    * keeps them IN the data files), and each `_g_fid=<fid>` dir must
+    * hold exactly one parquet — the caller puts each group in one write
+    * task — which is renamed to
+    * `<partition>/<fid>_0-0-0_<instant>.parquet`. A group
+    * `partitionOf` places (a rewritten or compacted group: its slice's
+    * partition) lands there; a new one takes the `_p_` dirs above it.
+    * The partition dirs are made once each, serially; the per-group
+    * list + rename + footer count then run in parallel (serially they
+    * would be O(|groups|) driver round-trips). Returns one stat per
+    * group — footer row count and bytes — as a new group's: no update
+    * writes, no previous commit.
     */
-  private def landStaged(spark: SparkSession, tablePath: String, stage: Path,
-      instant: String, partitionOf: String => Option[String])
-      : Seq[(String, String, String, Long, Long)] = {
+  private def landStaged(rows: DataFrame, tablePath: String, instant: String,
+      partitionBy: Seq[String], partitionOf: String => Option[String] = _ => None)
+      : Seq[WriteStat] = {
+    val spark = rows.sparkSession
+    val stage = new Path(tablePath, s".graft-stage-${java.util.UUID.randomUUID()}")
+    partitionBy.foldLeft(rows)((acc, c) => acc.withColumn(s"_p_$c", col(c)))
+      .write.partitionBy(partitionBy.map(c => s"_p_$c") :+ "_g_fid": _*)
+      .parquet(stage.toString)
     val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val groups = Seq.newBuilder[(String, String, Path)] // (partition, fid, dir)
     def walk(dir: Path, partSegs: Seq[String]): Unit =
@@ -741,12 +784,11 @@ object HudiTableWriter {
       val parts = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
       require(parts.length == 1,
         s"$tablePath: group $fid staged ${parts.length} files — expected exactly one")
-      val rel =
-        if (partition.isEmpty) s"${fid}_0-0-0_$instant.parquet"
-        else s"$partition/${fid}_0-0-0_$instant.parquet"
+      val rel = baseFilePath(partition, fid, instant)
       if (!fs.rename(parts.head.getPath, new Path(tablePath, rel)))
         throw new IllegalStateException(s"$tablePath: failed to land base file $rel")
-      (partition, fid, rel, footerRowCount(spark, tablePath, rel), parts.head.getLen)
+      WriteStat(partition, fid, rel, footerRowCount(spark, tablePath, rel),
+        0L, parts.head.getLen, "null")
     }.seq
     fs.delete(stage, true)
     landed
@@ -794,7 +836,8 @@ object HudiTableWriter {
     * is rewritten). The real-time view serves the merge immediately;
     * compaction folds later. Scale shape: one base-key scan +
     * broadcast group map to split the batch, one log shuffle bounded
-    * by |touched groups|, one staged write for inserts.
+    * by |touched groups|; inserts land as new groups, one per (write
+    * task, table partition), from one write with no added shuffle.
     */
   private def morUpsert(deduped: DataFrame, tablePath: String, keys: Seq[String],
       partitionBy: Seq[String], evolvedJson: Option[String] = None,
@@ -848,12 +891,12 @@ object HudiTableWriter {
         if (routedCounts.getOrElse(false, 0L) == 0L) Nil
         else writeLogFiles(updates, tablePath, instant, recSchema.json, avroJson,
           meta, isDelete = false)
-      val insertFiles =
+      val insertStats =
         if (routedCounts.getOrElse(true, 0L) == 0L) Nil
-        else landNewGroups(inserts, tablePath, instant, partitionBy)
-      if (logStats.isEmpty && insertFiles.isEmpty) throw new IllegalArgumentException(
+        else landTaskGroups(inserts, tablePath, instant, partitionBy)
+      if (logStats.isEmpty && insertStats.isEmpty) throw new IllegalArgumentException(
         s"$tablePath: empty upsert batch — nothing to write")
-      publishDeltacommit(spark, tablePath, instant, logStats, insertFiles,
+      publishDeltacommit(spark, tablePath, instant, logStats ++ insertStats,
         extraMetadata = evolvedJson.map("schema" -> _).toMap)
       instant
     } finally routed.unpersist()
@@ -906,51 +949,16 @@ object HudiTableWriter {
         g.logs.size + 1, partition))
     }.toMap
 
-  /** Publish a `.deltacommit` naming the log files written. The
-    * exclusive create is the instant-uniqueness CAS; a lost race
-    * throws (the log files already carry version numbers — a silent
-    * retry could double-apply them).
+  /** Publish a `.deltacommit` naming the files written. A lost
+    * instant race throws (the log files already carry version numbers
+    * — a silent retry could double-apply them).
     */
   private def publishDeltacommit(spark: SparkSession, tablePath: String, instant: String,
-      stats: Seq[(String, String, Long)], // (fileId, relPath, n) — log writes
-      insertFiles: Seq[(String, String, String)] = Nil, // (partition, fileId, rel)
-      extraMetadata: Map[String, String] = Map.empty): Unit = {
-    val fs = hoodieDir(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // per-file stats in PARALLEL (footer + status reads are driver
-    // round-trips — serially O(|files|) wall time, same fix the
-    // staged-landing paths already carry)
-    import scala.collection.parallel.CollectionConverters._
-    val logEntries = stats.par.map { case (fid, rel, n) =>
-      (rel.split('/').dropRight(1).mkString("/"),
-        s"""{"fileId":"$fid","path":"$rel","numWrites":$n,"numUpdateWrites":$n,""" +
-          s""""totalWriteBytes":${fs.getFileStatus(new Path(tablePath, rel)).getLen},""" +
-          s""""prevCommit":"$instant"}""")
-    }.seq
-    val insertEntries = insertFiles.par.map { case (part, fid, rel) =>
-      (part,
-        s"""{"fileId":"$fid","path":"$rel",""" +
-          s""""numWrites":${footerRowCount(spark, tablePath, rel)},""" +
-          s""""numUpdateWrites":0,""" +
-          s""""totalWriteBytes":${fs.getFileStatus(new Path(tablePath, rel)).getLen},""" +
-          s""""prevCommit":"null"}""")
-    }.seq
-    val statsJson = (logEntries ++ insertEntries).groupBy(_._1).map { case (part, ws) =>
-      s""""$part":[${ws.map(_._2).mkString(",")}]"""
-    }.mkString(",")
-    val p = new Path(hoodieDir(tablePath), s"$instant.deltacommit")
-    val created = try {
-      val out = fs.create(p, false)
-      try out.write(
-        (s"""{"partitionToWriteStats":{$statsJson},"operationType":"UPSERT"""" +
-          extraMetadataJson(extraMetadata) + "}\n")
-          .getBytes("UTF-8"))
-      finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
-    if (!created) throw new IllegalStateException(
-      s"$tablePath: instant $instant already committed by another writer — log appends " +
-        "are single-writer; the landed log files must be rolled back manually")
-  }
+      stats: Seq[WriteStat], extraMetadata: Map[String, String] = Map.empty): Unit =
+    if (!publish(spark, tablePath, instant, "deltacommit", "UPSERT", stats, extraMetadata))
+      throw new IllegalStateException(
+        s"$tablePath: instant $instant already committed by another writer — log appends " +
+          "are single-writer; the landed log files must be rolled back manually")
 
   /** UPDATE existing records: `df` (full data rows, record-key fields
     * included) lands as Avro data blocks appended to each key's file
@@ -1016,12 +1024,13 @@ object HudiTableWriter {
 
   /** Shuffle rows to their file group and write ONE log file per
     * group (a data block of the partition's records, or a delete
-    * block of its keys). Returns (fileId, relPath, count) per file —
-    * bounded by |groups touched|.
+    * block of its keys). Returns one stat per file — records written
+    * and bytes, each file's size read in parallel — bounded by |groups
+    * touched|.
     */
   private def writeLogFiles(routed: DataFrame, tablePath: String, instant: String,
       schemaJson: String, avroJson: String, meta: Map[String, (String, Int, String)],
-      isDelete: Boolean): Seq[(String, String, Long)] = {
+      isDelete: Boolean): Seq[WriteStat] = {
     import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
     val spark = routed.sparkSession
     val bcConf = spark.sparkContext.broadcast(
@@ -1032,7 +1041,7 @@ object HudiTableWriter {
     val table = tablePath
     // explicit count: an unsized keyed repartition AQE-coalesces a
     // small batch to one task, serializing the per-group log writes
-    routed.repartition(spark.sessionState.conf.numShufflePartitions, col("_g_fid"))
+    val written = routed.repartition(spark.sessionState.conf.numShufflePartitions, col("_g_fid"))
       .mapPartitions { it =>
         val schema =
           if (isDelete) null
@@ -1063,15 +1072,22 @@ object HudiTableWriter {
         }
       }(org.apache.spark.sql.Encoders.row(outSchema))
       .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      .toIndexedSeq
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    import scala.collection.parallel.CollectionConverters._
+    written.toIndexedSeq.par.map { r =>
+      val (fid, rel, n) = (r.getString(0), r.getString(1), r.getLong(2))
+      WriteStat(rel.split('/').dropRight(1).mkString("/"), fid, rel, n, n,
+        fs.getFileStatus(new Path(tablePath, rel)).getLen, instant)
+    }.seq
   }
 
   /** CLUSTERING (Hudi's replacecommit service): rewrite the COW
-    * table's active file slices into `targetGroups` new file groups,
-    * published as a `.replacecommit` whose `partitionToReplaceFileIds`
-    * drops every input group — the shape the reader's replay is
-    * spec-locked against. Row stamps (`_hoodie_commit_time`) are
+    * table's active file slices into at most `targetGroups` new file
+    * groups per partition, published as a `.replacecommit` whose
+    * `partitionToReplaceFileIds` drops every input group — the shape
+    * the reader's replay is spec-locked against. One shuffle
+    * re-buckets the rows and its write lands one group per (write
+    * task, table partition). Row stamps (`_hoodie_commit_time`) are
     * PRESERVED verbatim, which is what keeps incremental pulls exact
     * across the clustering (carried rows keep their old stamps and
     * drop out of any later pull). MOR tables with pending logs
@@ -1085,83 +1101,32 @@ object HudiTableWriter {
       s"$tablePath: file groups carry pending log files — compact before clustering")
     val slices = groups.flatMap(_.base)
     require(slices.nonEmpty, s"$tablePath: nothing to cluster")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val instant = instantNow(0L)
     // stamps preserved: read the slices AS THEY ARE and re-bucket —
     // PER PARTITION on partitioned tables (Hudi's own clustering
     // plans per partition): a (partition, bucket) shuffle key gives
-    // at most targetGroups files per partition dir, one shuffle total
+    // at most targetGroups write tasks per partition, one shuffle total
     val raw = spark.read.parquet(slices.map(s0 => s"$tablePath/${s0.path}"): _*)
-    val stage = new Path(tablePath, s".graft-cluster-${java.util.UUID.randomUUID()}")
-    if (partitionBy.isEmpty) {
-      raw.repartition(targetGroups).write.parquet(stage.toString)
-    } else {
-      val bucketCol =
-        if (raw.columns.contains("_hoodie_record_key"))
-          pmod(xxhash64(col("_hoodie_record_key")), lit(targetGroups))
-        else pmod(xxhash64(raw.columns.map(col).toIndexedSeq: _*), lit(targetGroups))
-      val bucketed = partitionBy.foldLeft(raw.withColumn("_g_bucket", bucketCol))(
-        (acc, c) => acc.withColumn(s"_p_$c", col(c)))
-      bucketed
-        .repartition(spark.sessionState.conf.numShufflePartitions,
-          (partitionBy.map(c => col(s"_p_$c")) :+ col("_g_bucket")): _*)
-        .drop("_g_bucket")
-        .write.partitionBy(partitionBy.map(c => s"_p_$c"): _*)
-        .parquet(stage.toString)
-    }
-    // land staged files under their partition dirs with fresh fileIds
-    val writes = Seq.newBuilder[(String, String, String)] // (partition, fileId, rel)
-    def walk(dir: Path, partSegs: Seq[String]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          val segs =
-            if (name.startsWith("_p_") && name.contains('='))
-              partSegs :+ name.substring(3)
-            else partSegs
-          walk(st.getPath, segs)
-        } else if (name.endsWith(".parquet")) {
-          val partition = partSegs.mkString("/")
-          val fileId = java.util.UUID.randomUUID().toString
-          val rel =
-            if (partition.isEmpty) s"${fileId}_0-0-0_$instant.parquet"
-            else s"$partition/${fileId}_0-0-0_$instant.parquet"
-          val dst = new Path(tablePath, rel)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(st.getPath, dst))
-            throw new IllegalStateException(s"$tablePath: failed to land clustered file $rel")
-          writes += ((partition, fileId, rel))
-        }
+    val bucketed =
+      if (partitionBy.isEmpty) raw.repartition(targetGroups)
+      else {
+        val bucketCol =
+          if (raw.columns.contains("_hoodie_record_key"))
+            pmod(xxhash64(col("_hoodie_record_key")), lit(targetGroups))
+          else pmod(xxhash64(raw.columns.map(col).toIndexedSeq: _*), lit(targetGroups))
+        raw.withColumn("_g_bucket", bucketCol)
+          .repartition(spark.sessionState.conf.numShufflePartitions,
+            (partitionBy.map(col) :+ col("_g_bucket")): _*)
+          .drop("_g_bucket")
       }
-    walk(stage, Nil)
-    fs.delete(stage, true)
-    val files = writes.result()
+    val files = landTaskGroups(bucketed, tablePath, instant, partitionBy)
     require(files.nonEmpty, s"$tablePath: clustering staged no files")
-    val statsByPartition = files.groupBy(_._1).map { case (part, ws) =>
-      val stats = ws.map { case (_, fid, rel) =>
-        s"""{"fileId":"$fid","path":"$rel","numWrites":1,"numUpdateWrites":0,""" +
-          s""""totalWriteBytes":${fs.getFileStatus(new Path(tablePath, rel)).getLen},""" +
-          s""""prevCommit":"null"}"""
-      }.mkString(",")
-      s""""$part":[$stats]"""
-    }.mkString(",")
     // replaced groups keyed by THEIR partition (the reader drops by
     // id; Hudi's own meta keys the replacement per partition)
-    val replacedByPartition = groups.groupBy(_.base.map(_.partition).getOrElse(""))
-      .map { case (part, gs) =>
-        s""""$part":[${gs.map(g => s""""${g.fileId}"""").mkString(",")}]"""
-      }.mkString(",")
-    val p = new Path(hoodieDir(tablePath), s"$instant.replacecommit")
-    val created = try {
-      val out = fs.create(p, false)
-      try out.write(
-        (s"""{"partitionToWriteStats":{$statsByPartition},""" +
-          s""""partitionToReplaceFileIds":{$replacedByPartition},""" +
-          s""""operationType":"CLUSTER"}""" + "\n").getBytes("UTF-8"))
-      finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
-    if (!created) throw new IllegalStateException(
+    val replaced = groups.groupBy(_.base.map(_.partition).getOrElse(""))
+      .map { case (part, gs) => part -> gs.map(_.fileId) }
+    if (!publish(spark, tablePath, instant, "replacecommit", "CLUSTER", files,
+        replaced = replaced)) throw new IllegalStateException(
       s"$tablePath: clustering instant $instant already taken — single-writer contract")
     instant
   }
@@ -1268,16 +1233,8 @@ object HudiTableWriter {
       .map(HudiSchema.toAvroJson(_)).getOrElse("none")
     val sidecar = fs.create(new Path(dir, s"$head.schema"), true)
     try sidecar.write((sidecarBody + "\n").getBytes("UTF-8")) finally sidecar.close()
-    val stage = new Path(tablePath, s".graft-fidx-${java.util.UUID.randomUUID()}")
-    spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"$tablePath: files index staged nothing"))
-    val dst = new Path(dir, s"$head.parquet")
-    fs.delete(dst, false)
-    if (!fs.rename(part, dst)) throw new IllegalStateException(
-      s"$tablePath: failed to land files index $dst")
-    fs.delete(stage, true)
+    landSingleFile(spark.createDataFrame(rows.asJava, schema), tablePath,
+      new Path(dir, s"$head.parquet"), "files index")
     head
   }
 
@@ -1398,16 +1355,7 @@ object HudiTableWriter {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(hoodieDir(tablePath), "metadata/col_stats")
     fs.mkdirs(dir)
-    val stage = new Path(tablePath, s".graft-cstats-${java.util.UUID.randomUUID()}")
-    stats.coalesce(1).write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"$tablePath: col-stats staged nothing"))
-    val dst = new Path(dir, s"$head.parquet")
-    fs.delete(dst, false)
-    if (!fs.rename(part, dst)) throw new IllegalStateException(
-      s"$tablePath: failed to land col-stats index $dst")
-    fs.delete(stage, true)
+    landSingleFile(stats, tablePath, new Path(dir, s"$head.parquet"), "col-stats index")
   }
 
   /** INCREMENTAL col-stats maintenance (hudi.apache.org: the metadata
@@ -1583,16 +1531,7 @@ object HudiTableWriter {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(hoodieDir(tablePath), "metadata/bloom_filters")
     fs.mkdirs(dir)
-    val stage = new Path(tablePath, s".graft-bloom-${java.util.UUID.randomUUID()}")
-    rows.coalesce(1).write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"$tablePath: bloom index staged nothing"))
-    val dst = new Path(dir, s"$head.parquet")
-    fs.delete(dst, false)
-    if (!fs.rename(part, dst)) throw new IllegalStateException(
-      s"$tablePath: failed to land bloom index $dst")
-    fs.delete(stage, true)
+    landSingleFile(rows, tablePath, new Path(dir, s"$head.parquet"), "bloom index")
   }
 
   /** The slices an UPSERT's key-matching scan must read, through the
@@ -1933,64 +1872,24 @@ object HudiTableWriter {
     val merged = HudiTableReader.mergeDirtyGroups(spark, tablePath, dirty, schema,
       keepFileId = true)
     val instant = instantNow(0L)
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new Path(tablePath, s".graft-compact-${java.util.UUID.randomUUID()}")
-    // repartition by group THEN partitionBy: each group lands in one
-    // task, so exactly one file per group directory. Explicit count:
-    // without one AQE coalesces a small compaction to one task that
-    // merges and writes every group serially.
-    merged.repartition(spark.sessionState.conf.numShufflePartitions, col("_g_fid"))
-      .write.partitionBy("_g_fid").parquet(stage.toString)
-    val stats = dirty.map { g =>
-      val partition = g.base
-        .map(_.path.split('/').dropRight(1).mkString("/")).getOrElse("")
-      val name = s"${g.fileId}_0-0-0_$instant.parquet"
-      val rel = if (partition.isEmpty) name else s"$partition/$name"
-      fs.mkdirs(new Path(tablePath, rel).getParent)
-      val dirPath = new Path(stage, s"_g_fid=${g.fileId}")
-      if (fs.exists(dirPath)) {
-        val part = fs.listStatus(dirPath).map(_.getPath)
-          .find(_.getName.endsWith(".parquet"))
-          .getOrElse(throw new IllegalStateException(
-            s"$tablePath: compaction stage for ${g.fileId} wrote no parquet"))
-        if (!fs.rename(part, new Path(tablePath, rel))) throw new IllegalStateException(
-          s"$tablePath: failed to land compacted base $rel")
-      } else {
-        // every record tombstoned: an explicit EMPTY base still
-        // repoints the slice and clears the group's logs
-        val emptyStage = new Path(tablePath, s".graft-compact-empty-${g.fileId}")
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-          .coalesce(1).write.parquet(emptyStage.toString)
-        val part = fs.listStatus(emptyStage).map(_.getPath)
-          .find(_.getName.endsWith(".parquet")).get
-        if (!fs.rename(part, new Path(tablePath, rel))) throw new IllegalStateException(
-          s"$tablePath: failed to land empty compacted base $rel")
-        fs.delete(emptyStage, true): Unit
-      }
-      (g.fileId, rel)
-    }
-    fs.delete(stage, true)
-    val statsJson = stats.groupBy { case (_, rel) =>
-      rel.split('/').dropRight(1).mkString("/") }.map { case (part, ws) =>
-      val inner = ws.map { case (fid, rel) =>
-        s"""{"fileId":"$fid","path":"$rel","numWrites":1,"numUpdateWrites":0,""" +
-          s""""totalWriteBytes":${fs.getFileStatus(new Path(tablePath, rel)).getLen},""" +
-          s""""prevCommit":"null"}"""
-      }.mkString(",")
-      s""""$part":[$inner]"""
-    }.mkString(",")
-    val p = new Path(hoodieDir(tablePath), s"$instant.commit")
-    val created = try {
-      val out = fs.create(p, false)
-      try out.write(
-        (s"""{"partitionToWriteStats":{$statsJson},"operationType":"COMPACT"}""" + "\n")
-          .getBytes("UTF-8"))
-      finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
-    if (!created) throw new IllegalStateException(
-      s"$tablePath: compaction instant $instant already taken — single-writer contract")
+    // each group's new base lands beside its old one
+    val partitionOf = dirty.map(g => g.fileId ->
+      g.base.map(_.path.split('/').dropRight(1).mkString("/")).getOrElse("")).toMap
+    // repartition by group: each group lands in one task, so exactly
+    // one file per group. Explicit count: without one AQE coalesces a
+    // small compaction to one task that merges and writes every group
+    // serially.
+    val landed = landStaged(
+      merged.repartition(spark.sessionState.conf.numShufflePartitions, col("_g_fid")),
+      tablePath, instant, Nil, partitionOf.get)
+    // every record tombstoned: an explicit EMPTY base still repoints
+    // the slice and clears the group's logs
+    val landedIds = landed.map(_.fileId).toSet
+    val empties = dirty.filterNot(g => landedIds(g.fileId)).map(g =>
+      landEmptyBase(spark, schema, tablePath, partitionOf(g.fileId), g.fileId, instant))
+    if (!publish(spark, tablePath, instant, "commit", "COMPACT", landed ++ empties))
+      throw new IllegalStateException(
+        s"$tablePath: compaction instant $instant already taken — single-writer contract")
     instant
   }
 }
