@@ -1,8 +1,19 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.spark.{Partitioner, TaskContext}
+import org.apache.spark.rdd.{RDD, ShuffledRDD}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** APPEND-ONLY writer for Apache Hudi COPY-ON-WRITE tables readable
   * by external engines — the graft counterpart of the reference's
@@ -23,11 +34,14 @@ import org.apache.spark.sql.functions._
   *    `partitionToWriteStats` lists the file groups written;
   *    `hoodie.properties` declares COPY_ON_WRITE.
   *
-  * Scale shape: the data write is an ordinary distributed parquet
-  * write; the commit is driver metadata bounded by |files this
-  * commit|. Every write — insert, upsert, clustering, compaction —
-  * lands its base files through one staged write (`landStaged`) and
-  * publishes through one exclusive create (`publish`). Instant
+  * Scale shape: the data write is distributed; the commit is driver
+  * metadata bounded by |files this commit|. Every write — insert,
+  * upsert, clustering, compaction — lands its base files through one
+  * task-side writer (`landGroups`): each write task creates its
+  * groups' files at their final paths through Spark's own parquet
+  * `OutputWriterFactory` and counts rows and bytes as it writes them,
+  * so there is no staging directory, rename or footer pass. Every
+  * write publishes through one exclusive create (`publish`). Instant
   * collision (two writers in the same millisecond) is resolved by
   * that exclusive create — an insert that loses bumps to the next
   * instant and retries, the same instant-uniqueness Hudi's own
@@ -42,8 +56,8 @@ object HudiTableWriter {
 
   val MaxCommitAttempts: Int = 20
 
-  /** Crossover between BROADCASTING the upsert batch's key set into
-    * the carried-rows anti join and a plain SHUFFLE anti join — same
+  /** Crossover between BROADCASTING the upsert batch's matched key set
+    * into the CDC pre-image semi join and a plain SHUFFLE join — same
     * gate as [[DeltaTableWriter.MaxBroadcastUpsertKeys]]: CDC-sized
     * batches broadcast (zero base-row shuffle); a backfill-scale key
     * set past the gate degrades to a shuffle join rather than hitting
@@ -159,7 +173,7 @@ object HudiTableWriter {
     listProperty(tableProperties(spark, tablePath), "hoodie.table.partition.fields")
 
   /** One written file's entry in a commit's `partitionToWriteStats`. */
-  private final case class WriteStat(partition: String, fileId: String, path: String,
+  private[sources] final case class WriteStat(partition: String, fileId: String, path: String,
       numWrites: Long, numUpdateWrites: Long, totalWriteBytes: Long, prevCommit: String)
 
   /** `partitionToWriteStats` as JSON: the stats grouped by partition. */
@@ -226,9 +240,14 @@ object HudiTableWriter {
     */
   private def landTaskGroups(rows: DataFrame, tablePath: String, instant: String,
       partitionBy: Seq[String]): Seq[WriteStat] = {
-    val landed = landStaged(
-      rows.withColumn("_g_fid", newGroupId(spark_partition_id(), partitionPathOf(partitionBy))),
-      tablePath, instant, partitionBy)
+    val grouped = rows
+      .withColumn("_g_fid", newGroupId(spark_partition_id(), partitionPathOf(partitionBy)))
+      .withColumn("_g_part", partitionDirOf(partitionBy))
+    // a task's rows may span table partitions: each group's rows are
+    // put together, as Spark's own partitioned write sorts them
+    val landed = landGroups(
+      if (partitionBy.isEmpty) grouped else grouped.sortWithinPartitions("_g_fid"),
+      tablePath, instant)
     if (landed.nonEmpty || partitionBy.nonEmpty) landed
     else {
       val s = rows.sparkSession
@@ -241,20 +260,27 @@ object HudiTableWriter {
 
   /** Land a schema-only base file as group `fid` — what a write of no
     * rows commits. */
-  private def landEmptyBase(spark: SparkSession, schema: org.apache.spark.sql.types.StructType,
+  private def landEmptyBase(spark: SparkSession, schema: StructType,
       tablePath: String, partition: String, fid: String, instant: String): WriteStat = {
     val rel = baseFilePath(partition, fid, instant)
-    val dst = new Path(tablePath, rel)
-    landSingleFile(spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema), tablePath, dst,
-      "empty base file")
-    val len = dst.getFileSystem(spark.sparkContext.hadoopConfiguration).getFileStatus(dst).getLen
-    WriteStat(partition, fid, rel, 0L, 0L, len, "null")
+    val (_, bytes) = BaseFileWriter(spark, schema)
+      .write(s"$tablePath/$rel", Iterator.empty, new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
+    WriteStat(partition, fid, rel, 0L, 0L, bytes, "null")
   }
+
+  /** A row's hive partition directory `c1=v1/c2=v2`, escaped the way
+    * Spark's partitioned write names it (null and empty values take
+    * `__HIVE_DEFAULT_PARTITION__`); "" when unpartitioned. */
+  private def partitionDirOf(partitionBy: Seq[String]): Column =
+    if (partitionBy.isEmpty) lit("")
+    else concat_ws("/", partitionBy.map { c =>
+      val dir = udf((v: String) => ExternalCatalogUtils.getPartitionPathString(c, v))
+      dir(col(c).cast("string"))
+    }: _*)
 
   /** Land `df` as ONE parquet file at `dst`, replacing any file there:
     * a `coalesce(1)` write staged beside the table, its part file
-    * renamed into place. */
+    * renamed into place. Used for the metadata-table index files. */
   private def landSingleFile(df: DataFrame, tablePath: String, dst: Path, what: String): Unit = {
     val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
     val stage = new Path(tablePath, s".graft-single-${java.util.UUID.randomUUID()}")
@@ -266,15 +292,6 @@ object HudiTableWriter {
     if (!fs.rename(part, dst)) throw new IllegalStateException(
       s"$tablePath: failed to land $what $dst")
     fs.delete(stage, true)
-  }
-
-  /** Footer record count of one landed base file — the per-file
-    * `numWrites` real Hudi write stats carry. */
-  private def footerRowCount(spark: SparkSession, tablePath: String, rel: String): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new Path(tablePath, rel), spark.sparkContext.hadoopConfiguration)
-    val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try r.getRecordCount finally r.close()
   }
 
   /** `df`, with its projections kept on the write tasks: a local
@@ -510,16 +527,20 @@ object HudiTableWriter {
     * the format's OWN upsert shape: log blocks for matched keys, new
     * base groups for unseen keys, one deltacommit, nothing rewritten.
     *
-    * Scale shape: one scan of the CURRENT base files (the COW
-    * contract — an upsert rewrites matched groups), its schema
-    * resolved on the driver from the declaration or one footer; the
-    * batch evaluated ONCE into a persisted key-tagged frame that every
-    * later step reads (counts, gates, CDC images, the carried-rows
-    * anti join); ONE write, a shuffle of (carried ∪ batch) rows to
-    * their group's task, lands rewritten and new groups alike, with
-    * one staging walk, rename pass and footer pass. Driver state is
-    * |touched groups| commit metadata, never row data. Returns the
-    * commit instant. Single-writer: a lost instant race throws.
+    * Scale shape: one scan of the CURRENT base files' keys tags the
+    * batch (the COW contract — an upsert rewrites matched groups), its
+    * schema resolved on the driver from the declaration or one
+    * footer; the batch is evaluated ONCE into a persisted key-tagged
+    * frame that every later step reads (counts, gates, CDC images, the
+    * write). Then only the BATCH rows shuffle, each to its group's
+    * write task, and each task merges its groups (`landGroups`): a
+    * touched group's task streams the group's current slice through
+    * Spark's own parquet reader, drops the rows the batch replaces,
+    * and writes the new slice at its final path, batch rows included;
+    * a new group's task writes its batch rows. Carried rows never
+    * leave the task that reads them. Driver state is |touched groups|
+    * commit metadata, never row data. Returns the commit instant.
+    * Single-writer: a lost instant race throws.
     */
   def upsert(df: DataFrame, tablePath: String,
       maxBroadcastKeys: Long = MaxBroadcastUpsertKeys): String = {
@@ -604,25 +625,23 @@ object HudiTableWriter {
     val base = spark.read.schema(scanSchema)
       .parquet(slices.map(s => s"$tablePath/${s.path}"): _*)
       .withColumn("_g_fid", substring_index(col("_metadata.file_name"), "_", 1))
-    val sliceCols = base.columns.filterNot(_ == "_g_fid").toSeq
+    val sliceCols = scanSchema.fieldNames.toSeq
     // evolved output: the base columns verbatim, new batch columns
     // after; base-sourced rows take deterministic nulls there
     val outCols = sliceCols ++ newFields.map(_.name)
-    def nullFillNew(d: DataFrame): DataFrame =
-      newFields.foldLeft(d)((acc, f) => acc.withColumn(f.name, lit(null).cast(f.dataType)))
     // partition-scoped key: record keys + partition values together
     val joinCols = (partitionBy ++ keys).distinct
     val keyFid = base.select(joinCols.map(col) :+ col("_g_fid"): _*)
     val batchStamped = stamped(deduped, instant, keys, partitionBy)
     // the batch is evaluated ONCE, here: every later consumer (counts,
-    // gate, CDC images, carried-rows anti join, the write) reads the
-    // persisted frame, never the batch plan or its combine window
+    // gate, CDC images, the write) reads the persisted frame, never the
+    // batch plan or its combine window
     val tagged = batchStamped.join(keyFid, joinCols, "left")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // ONE grouped count (after the job that fills the cache) answers
       // both the batch-key cardinality (broadcast-vs-shuffle decision
-      // for the carried-rows join) and the per-touched-group update
+      // for the CDC pre-image join) and the per-touched-group update
       // counts. None = insert rows; |groups|+1 entries of driver
       // metadata. The RDD count runs its shuffle inside one job, where
       // a DataFrame aggregation takes two.
@@ -635,28 +654,27 @@ object HudiTableWriter {
       // now-cached tagged frame (reads memory, never the batch plan),
       // before any file lands
       if (dupGate) dupGateCheck(tagged, tablePath, keys, nBatchKeys)
-      val updates = tagged.where(col("_g_fid").isNotNull)
-      val inserts = tagged.where(col("_g_fid").isNull)
-      // the keys that match a base row — the only ones that can
-      // replace (anti join) or pre-image (CDC) one. SIZE-GATED:
-      // CDC-sized batches broadcast their key set (no shuffle of the
-      // base rows); past the gate a backfill-scale batch would blow
-      // the 8 GiB broadcast cap, so it degrades to a shuffle join
-      val matchedKeys = {
-        val k = updates.select(joinCols.map(col): _*)
-        if (nBatchKeys <= maxBroadcastKeys) broadcast(k) else k
-      }
       // hoodie.table.cdc.enabled obligation: land this instant's
-      // pre/post images BEFORE any data file moves (the base scan
-      // below still sees the pre-write state) — one distributed
-      // parquet write under .hoodie/cdc/<instant>/
+      // pre/post images BEFORE any data file lands — one distributed
+      // parquet write under .hoodie/cdc/<instant>/. The pre-images are
+      // the base rows whose keys match; SIZE-GATED: CDC-sized batches
+      // broadcast their matched key set (no shuffle of the base rows),
+      // past the gate a backfill-scale batch would blow the 8 GiB
+      // broadcast cap, so it degrades to a shuffle join
       if (props.get("hoodie.table.cdc.enabled").contains("true")) {
-        val pre = nullFillNew(base.join(matchedKeys, joinCols, "left_semi"))
+        val updates = tagged.where(col("_g_fid").isNotNull)
+        val matchedKeys = {
+          val k = updates.select(joinCols.map(col): _*)
+          if (nBatchKeys <= maxBroadcastKeys) broadcast(k) else k
+        }
+        val pre = newFields
+          .foldLeft(base.join(matchedKeys, joinCols, "left_semi"))((acc, f) =>
+            acc.withColumn(f.name, lit(null).cast(f.dataType)))
           .select(outCols.map(col): _*)
           .withColumn("_change_type", lit("update_preimage"))
         val post = updates.select(outCols.map(col): _*)
           .withColumn("_change_type", lit("update_postimage"))
-        val ins = inserts.select(outCols.map(col): _*)
+        val ins = tagged.where(col("_g_fid").isNull).select(outCols.map(col): _*)
           .withColumn("_change_type", lit("insert"))
         writeCdcImages(pre.unionByName(post).unionByName(ins), tablePath, instant)
       }
@@ -669,15 +687,9 @@ object HudiTableWriter {
       // spread evenly: the k touched groups take tasks 0..k-1 round
       // robin, new groups the tasks after them by bucket and partition
       val nBuckets = spark.sessionState.conf.numShufflePartitions
-      val rewrittenTask = map(updCounts.keys.toSeq.sorted.zipWithIndex
-        .flatMap { case (fid, i) => Seq(lit(fid), lit(i % nBuckets)) }: _*)
-      // carried rows: the touched groups' base rows no batch key replaces
-      val carried =
-        if (updCounts.isEmpty) Nil
-        else Seq(nullFillNew(base.where(col("_g_fid").isin(updCounts.keys.toSeq: _*))
-          .join(matchedKeys, joinCols, "left_anti"))
-          .select(outCols.map(col) :+ col("_g_fid") :+
-            element_at(rewrittenTask, col("_g_fid")).as("_g_task"): _*))
+      val touchedTask = typedLit(updCounts.keys.toSeq.sorted.zipWithIndex
+        .map { case (fid, i) => fid -> i % nBuckets }.toMap)
+      val touchedDir = typedLit(updCounts.keys.map(fid => fid -> sliceByFid(fid).partition).toMap)
       // insert rows take their NEW group's id before the write: one
       // group per (key-hash bucket, table partition), with at most
       // numShufflePartitions buckets, so a batch's inserts land in a
@@ -686,34 +698,32 @@ object HudiTableWriter {
       val partPath = partitionPathOf(partitionBy)
       val newTask = pmod(lit(updCounts.size) + bucket +
         partPath.map(p => pmod(hash(p), lit(nBuckets))).getOrElse(lit(0)), lit(nBuckets))
-      val batchTask =
-        if (updCounts.isEmpty) newTask
-        else when(col("_g_fid").isNull, newTask)
-          .otherwise(element_at(rewrittenTask, col("_g_fid")))
+      val touched = col("_g_fid").isNotNull
       val batchRows = tagged.select(outCols.map(col) :+
         coalesce(col("_g_fid"), newGroupId(bucket, partPath)).as("_g_fid") :+
-        batchTask.as("_g_task"): _*)
-      val rows = (carried :+ batchRows).reduce(_.unionByName(_))
-      // ONE write lands every group — rewritten and new: each fid
-      // lives in exactly one task after the repartition (its task is a
-      // function of the fid), so each fid dir of the staged write holds
-      // one file. Explicit count: without one AQE coalesces a small
-      // commit to ONE task that writes every group's file serially.
-      val landed = landStaged(
-        rows.repartition(nBuckets,
-          element_at(array(taskKeys(nBuckets).map(lit): _*), col("_g_task") + 1))
-          .drop("_g_task"),
-        tablePath, instant, partitionBy, fid => sliceByFid.get(fid).map(_.partition))
+        when(touched, element_at(touchedDir, col("_g_fid")))
+          .otherwise(partitionDirOf(partitionBy)).as("_g_part") :+
+        when(touched, element_at(touchedTask, col("_g_fid"))).otherwise(newTask).as("_g_task"): _*)
+      // a rewritten slice unions the carried rows a file scan serves
+      // (nullable throughout; added columns null-filled) with the batch
+      // rows: the commit's files take that union's schema. An
+      // insert-only upsert writes the batch rows as they are.
+      val rewrite =
+        if (updCounts.isEmpty) None
+        else Some(GroupRewrite(spark, tablePath, updCounts.keys.map(sliceByFid).toSeq,
+          scanSchema, joinCols, StructType(GraftBridge.asNullable(scanSchema).fields ++
+            newFields.map(_.copy(nullable = true)))))
+      val landed = landGroups(batchRows, tablePath, instant, rewrite, steerTo = nBuckets)
         .map(w => sliceByFid.get(w.fileId).fold(w)(old =>
           w.copy(numUpdateWrites = updCounts(w.fileId), prevCommit = old.instant)))
       // OPTIMISTIC CONCURRENCY: commits that landed while this upsert
       // computed may have rewritten the very groups whose slices fed
-      // the carried-rows merge. A DISJOINT interleave (appends, or
-      // upserts of other groups) is safe — untouched groups never
-      // move; an overlap or a clustering replacecommit would be
-      // silently clobbered, so it refuses loudly. The staged slices
-      // stay as uncommitted debris — invisible to readers, vacuumed
-      // later (the timeline is the source of truth).
+      // the merge. A DISJOINT interleave (appends, or upserts of other
+      // groups) is safe — untouched groups never move; an overlap or a
+      // clustering replacecommit would be silently clobbered, so it
+      // refuses loudly. The landed slices stay as uncommitted debris —
+      // invisible to readers, vacuumed later (the timeline is the
+      // source of truth).
       validateNoConcurrentOverlap(spark, tablePath, plannedHead, updCounts.keySet)
       if (!publish(spark, tablePath, instant, "commit", "UPSERT", landed,
           evolvedJson.map("schema" -> _).toMap)) throw new IllegalStateException(
@@ -723,75 +733,178 @@ object HudiTableWriter {
     } finally tagged.unpersist()
   }
 
-  /** For each of `n` shuffle partitions, an int key that
-    * `repartition(n, key)` sends there — asked of Spark's own hash
-    * partitioning, on the driver — so rows can be steered to a chosen
-    * write task (hashing small ints directly would crowd them into a
-    * few tasks). */
-  private def taskKeys(n: Int): IndexedSeq[Int] = {
-    import org.apache.spark.sql.catalyst.expressions.Literal
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-    val keyOf = scala.collection.mutable.Map.empty[Int, Int]
-    Iterator.from(0).takeWhile(_ => keyOf.size < n).foreach { i =>
-      keyOf.getOrElseUpdate(
-        HashPartitioning(Seq(Literal(i)), n).partitionIdExpression.eval().asInstanceOf[Int], i)
-    }
-    (0 until n).map(keyOf)
+  /** What a write task needs to rewrite a touched file group: each
+    * group's current slice (absolute path), a reader of it — Spark's
+    * own parquet reader, built on the driver — the schema the new
+    * slices are written with (the slice's columns first, then the
+    * columns the batch adds), and the ordinals of the partition-scoped
+    * key columns in the slice rows and in the landed rows. */
+  private[sources] final case class GroupRewrite(slices: Map[String, String],
+      read: PartitionedFile => Iterator[InternalRow], sliceSchema: StructType,
+      schema: StructType, sliceKeys: Seq[Int], rowKeys: Seq[Int])
+
+  private[sources] object GroupRewrite {
+    def apply(spark: SparkSession, tablePath: String, slices: Seq[HudiTableReader.SliceWrite],
+        sliceSchema: StructType, keys: Seq[String], schema: StructType): GroupRewrite =
+      GroupRewrite(slices.map(s => s.fileId -> s"$tablePath/${s.path}").toMap,
+        new ParquetFileFormat().buildReaderWithPartitionValues(spark, sliceSchema,
+          new StructType(), sliceSchema, Nil, Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+          spark.sessionState.newHadoopConf()),
+        sliceSchema, schema, keys.map(sliceSchema.fieldIndex), keys.map(schema.fieldIndex))
   }
 
-  /** Land `rows` as base files of `instant` from ONE write — the way
-    * every base file with rows enters the table (a write of no rows
-    * lands a schema-only one, [[landEmptyBase]]). Each row names its
-    * file group in `_g_fid`; the write stages `partitionBy(_p_<c>…,
-    * _g_fid)` (hive dirs from copies of the partition columns — Hudi
-    * keeps them IN the data files), and each `_g_fid=<fid>` dir must
-    * hold exactly one parquet — the caller puts each group in one write
-    * task — which is renamed to
-    * `<partition>/<fid>_0-0-0_<instant>.parquet`. A group
-    * `partitionOf` places (a rewritten or compacted group: its slice's
-    * partition) lands there; a new one takes the `_p_` dirs above it.
-    * The partition dirs are made once each, serially; the per-group
-    * list + rename + footer count then run in parallel (serially they
-    * would be O(|groups|) driver round-trips). Returns one stat per
-    * group — footer row count and bytes — as a new group's: no update
+  /** Sends each row to the write task its key's first field names. */
+  private final case class TaskPartitioner(numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key.asInstanceOf[(Int, String)]._1
+  }
+
+  /** Writes base files through Spark's own parquet `OutputWriterFactory`
+    * — what `df.write.parquet` writes through, so a landed file has the
+    * footer Spark's own write of the same rows would give — set up once
+    * on the driver and shipped to the write tasks. */
+  private final class BaseFileWriter(factory: OutputWriterFactory,
+      conf: org.apache.spark.broadcast.Broadcast[DeltaDv.SerializableHadoopConf],
+      schema: StructType) extends Serializable {
+
+    def hadoopConf: org.apache.hadoop.conf.Configuration = conf.value.value
+
+    /** Write `rows` (of `schema`) as the file at `path`, created
+      * exclusively: a file already there fails the write and is left
+      * as it is. A write that fails after the create deletes its
+      * half-written file before it rethrows. Returns (rows, bytes). */
+    def write(path: String, rows: Iterator[InternalRow], attempt: TaskAttemptID): (Long, Long) = {
+      val p = new Path(path)
+      val fs = p.getFileSystem(hadoopConf)
+      val out = factory.newInstance(path, schema, new TaskAttemptContextImpl(hadoopConf, attempt))
+      var n = 0L
+      try {
+        rows.foreach { r => out.write(r); n += 1 }
+        out.close()
+      } catch {
+        case e: Throwable =>
+          try out.close() catch { case _: Throwable => }
+          fs.delete(p, false)
+          throw e
+      }
+      (n, fs.getFileStatus(p).getLen)
+    }
+  }
+
+  private object BaseFileWriter {
+    def apply(spark: SparkSession, schema: StructType): BaseFileWriter = {
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
+      new BaseFileWriter(factory, spark.sparkContext.broadcast(
+        new DeltaDv.SerializableHadoopConf(job.getConfiguration)), schema)
+    }
+  }
+
+  /** Land `rows` as base files of `instant` — the way every base file
+    * with rows enters the table (a write of no rows lands a
+    * schema-only one, [[landEmptyBase]]). Each row carries its data
+    * columns, then its file group in `_g_fid` and the group's
+    * partition directory in `_g_part`; each group becomes one file,
+    * `<_g_part>/<fid>_0-0-0_<instant>.parquet`, written by one write
+    * task straight at that path through [[BaseFileWriter]], its rows
+    * and bytes counted as it is written.
+    *
+    * Placement: by default each group's rows must already sit
+    * together in one task of `rows` (the callers' repartitions and
+    * local sorts); with `steerTo` = n, `rows` also carries `_g_task`
+    * and only its rows shuffle, to that task of n, each task's rows
+    * sorted by group. A group that `rewrite` names is
+    * MERGED in its task: its rows (the batch) are written, then the
+    * group's current slice streams through, minus the rows whose
+    * partition-scoped key a batch row carries, null-filling the
+    * columns the slice lacks; every file is then written with the
+    * rewrite's schema, else with the data columns' own.
+    *
+    * Files are created exclusively, so a second writer on the same
+    * instant fails instead of overwriting; a failed task deletes its
+    * half-written file, and files of other tasks stay as uncommitted
+    * debris the timeline never names. Every attempt of a task writes
+    * the same paths (the write token is fixed), so a retry after an
+    * attempt that died without cleaning up fails the write. Returns
+    * one stat per group — rows and bytes — as a new group's: no update
     * writes, no previous commit.
     */
-  private def landStaged(rows: DataFrame, tablePath: String, instant: String,
-      partitionBy: Seq[String], partitionOf: String => Option[String] = _ => None)
-      : Seq[WriteStat] = {
+  private[sources] def landGroups(rows: DataFrame, tablePath: String, instant: String,
+      rewrite: Option[GroupRewrite] = None, steerTo: Int = 0): Seq[WriteStat] = {
     val spark = rows.sparkSession
-    val stage = new Path(tablePath, s".graft-stage-${java.util.UUID.randomUUID()}")
-    partitionBy.foldLeft(rows)((acc, c) => acc.withColumn(s"_p_$c", col(c)))
-      .write.partitionBy(partitionBy.map(c => s"_p_$c") :+ "_g_fid": _*)
-      .parquet(stage.toString)
-    val fs = stage.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val groups = Seq.newBuilder[(String, String, Path)] // (partition, fid, dir)
-    def walk(dir: Path, partSegs: Seq[String]): Unit =
-      fs.listStatus(dir).filter(_.isDirectory).foreach { st =>
-        val name = st.getPath.getName
-        if (name.startsWith("_g_fid=")) {
-          val fid = name.substring("_g_fid=".length)
-          groups += ((partitionOf(fid).getOrElse(partSegs.mkString("/")), fid, st.getPath))
-        } else if (name.startsWith("_p_") && name.contains('='))
-          walk(st.getPath, partSegs :+ name.substring(3))
-      }
-    walk(stage, Nil)
-    val staged = groups.result()
-    staged.map(_._1).distinct.filter(_.nonEmpty)
-      .foreach(part => fs.mkdirs(new Path(tablePath, part)))
-    import scala.collection.parallel.CollectionConverters._
-    val landed = staged.par.map { case (partition, fid, dir) =>
-      val parts = fs.listStatus(dir).filter(_.getPath.getName.endsWith(".parquet"))
-      require(parts.length == 1,
-        s"$tablePath: group $fid staged ${parts.length} files — expected exactly one")
-      val rel = baseFilePath(partition, fid, instant)
-      if (!fs.rename(parts.head.getPath, new Path(tablePath, rel)))
-        throw new IllegalStateException(s"$tablePath: failed to land base file $rel")
-      WriteStat(partition, fid, rel, footerRowCount(spark, tablePath, rel),
-        0L, parts.head.getLen, "null")
-    }.seq
-    fs.delete(stage, true)
-    landed
+    val internal = Set("_g_fid", "_g_part", "_g_task")
+    val dataCols = rows.columns.filterNot(internal).toSeq
+    val placed = rows.select(dataCols.map(col) ++ Seq(col("_g_fid"), col("_g_part")) ++
+      (if (steerTo > 0) Seq(col("_g_task")) else Nil): _*)
+    val schema = rewrite.fold(StructType(placed.schema.fields.take(dataCols.size)))(_.schema)
+    val nData = dataCols.size
+    val writer = BaseFileWriter(spark, schema)
+    val qe = placed.queryExecution
+    val written = SQLExecution.withNewExecutionId(qe, Some(s"land Hudi base files $instant")) {
+      val input: RDD[InternalRow] =
+        if (steerTo == 0) qe.toRdd
+        else new ShuffledRDD[(Int, String), InternalRow, InternalRow](
+            qe.toRdd.map(r => ((r.getInt(nData + 2), r.getUTF8String(nData).toString), r.copy())),
+            TaskPartitioner(steerTo))
+          .setKeyOrdering(Ordering.by[(Int, String), String](_._2))
+          .values
+      spark.sparkContext.runJob(input, (ctx: TaskContext, it: Iterator[InternalRow]) => {
+        val attempt = new TaskAttemptID("graft", ctx.stageId(), TaskType.MAP,
+          ctx.partitionId(), ctx.attemptNumber())
+        val toData = UnsafeProjection.create(schema.fields.toIndexedSeq.zipWithIndex.map {
+          case (f, i) => BoundReference(i, f.dataType, nullable = true) })
+        val landed = Seq.newBuilder[(String, String, String, Long, Long)]
+        val rowsIn = it.buffered
+        while (rowsIn.hasNext) {
+          val fid = rowsIn.head.getUTF8String(nData).clone()
+          val part = rowsIn.head.getUTF8String(nData + 1).toString
+          val group = new Iterator[InternalRow] {
+            def hasNext: Boolean = rowsIn.hasNext && rowsIn.head.getUTF8String(nData) == fid
+            def next(): InternalRow = rowsIn.next()
+          }
+          val rel = baseFilePath(part, fid.toString, instant)
+          val path = s"$tablePath/$rel"
+          val (n, bytes) = rewrite.flatMap(rw => rw.slices.get(fid.toString).map(rw -> _)) match {
+            case None => writer.write(path, group.map(toData), attempt)
+            case Some((rw, slice)) => GraftBridge.countingTaskInput(writer.write(path,
+              mergedSlice(rw, slice, group, toData, writer.hadoopConf), attempt))
+          }
+          landed += ((part, fid.toString, rel, n, bytes))
+        }
+        landed.result()
+      })
+    }
+    written.toSeq.flatten.map { case (part, fid, rel, n, bytes) =>
+      WriteStat(part, fid, rel, n, 0L, bytes, "null")
+    }
+  }
+
+  /** A touched group's new slice, in its write task: the group's batch
+    * rows, then its current slice (`slice`) minus the rows whose
+    * partition-scoped key a batch row carries, with the columns the
+    * slice lacks null-filled. Keys compare as a join on them does
+    * (floating-point zeros and NaNs normalized). */
+  private def mergedSlice(rw: GroupRewrite, slice: String, batch: Iterator[InternalRow],
+      toData: UnsafeProjection, conf: org.apache.hadoop.conf.Configuration): Iterator[InternalRow] = {
+    def keyOf(s: StructType, ordinals: Seq[Int]) = UnsafeProjection.create(ordinals.map(i =>
+      GraftBridge.normalizeFloats(BoundReference(i, s(i).dataType, nullable = true))))
+    val rowKey = keyOf(rw.schema, rw.rowKeys)
+    val sliceKey = keyOf(rw.sliceSchema, rw.sliceKeys)
+    val fill = UnsafeProjection.create(
+      rw.sliceSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
+        BoundReference(i, f.dataType, nullable = true) } ++
+      rw.schema.fields.toIndexedSeq.drop(rw.sliceSchema.size).map(f => Literal(null, f.dataType)))
+    // the batch rows of a touched group matched a slice row in the
+    // tagging join, so none carries a null key
+    val replaced = new java.util.HashSet[UnsafeRow]()
+    batch.map { r => replaced.add(rowKey(r).copy()); toData(r) } ++ {
+      // opened once the batch rows are written and their keys known
+      val path = new Path(slice)
+      val len = path.getFileSystem(conf).getFileStatus(path).getLen
+      rw.read(PartitionedFile(InternalRow.empty, org.apache.spark.paths.SparkPath.fromPath(path),
+          0L, len, Array.empty[String], 0L, len, Map.empty))
+        .filterNot(r => replaced.contains(sliceKey(r)))
+        .map(fill)
+    }
   }
 
   // ----------------------------------------------------------------
@@ -1106,7 +1219,8 @@ object HudiTableWriter {
     // PER PARTITION on partitioned tables (Hudi's own clustering
     // plans per partition): a (partition, bucket) shuffle key gives
     // at most targetGroups write tasks per partition, one shuffle total
-    val raw = spark.read.parquet(slices.map(s0 => s"$tablePath/${s0.path}"): _*)
+    val raw = spark.read.schema(HudiTableReader.scanSchema(spark, tablePath, slices))
+      .parquet(slices.map(s0 => s"$tablePath/${s0.path}"): _*)
     val bucketed =
       if (partitionBy.isEmpty) raw.repartition(targetGroups)
       else {
@@ -1120,7 +1234,7 @@ object HudiTableWriter {
           .drop("_g_bucket")
       }
     val files = landTaskGroups(bucketed, tablePath, instant, partitionBy)
-    require(files.nonEmpty, s"$tablePath: clustering staged no files")
+    require(files.nonEmpty, s"$tablePath: clustering landed no files")
     // replaced groups keyed by THEIR partition (the reader drops by
     // id; Hudi's own meta keys the replacement per partition)
     val replaced = groups.groupBy(_.base.map(_.partition).getOrElse(""))
@@ -1875,19 +1989,24 @@ object HudiTableWriter {
     // each group's new base lands beside its old one
     val partitionOf = dirty.map(g => g.fileId ->
       g.base.map(_.path.split('/').dropRight(1).mkString("/")).getOrElse("")).toMap
-    // repartition by group: each group lands in one task, so exactly
-    // one file per group. Explicit count: without one AQE coalesces a
-    // small compaction to one task that merges and writes every group
-    // serially.
-    val landed = landStaged(
-      merged.repartition(spark.sessionState.conf.numShufflePartitions, col("_g_fid")),
-      tablePath, instant, Nil, partitionOf.get)
+    // each stat names the slice it compacts: the group's base instant
+    val prevOf = dirty.map(g => g.fileId -> g.base.fold("null")(_.instant)).toMap
+    // repartition by group and sort each task's rows by it: each group
+    // lands from one task, in one file. Explicit count: without one
+    // AQE coalesces a small compaction to one task that merges and
+    // writes every group serially.
+    val landed = landGroups(
+      merged.withColumn("_g_part", element_at(typedLit(partitionOf), col("_g_fid")))
+        .repartition(spark.sessionState.conf.numShufflePartitions, col("_g_fid"))
+        .sortWithinPartitions("_g_fid"),
+      tablePath, instant)
     // every record tombstoned: an explicit EMPTY base still repoints
     // the slice and clears the group's logs
     val landedIds = landed.map(_.fileId).toSet
     val empties = dirty.filterNot(g => landedIds(g.fileId)).map(g =>
       landEmptyBase(spark, schema, tablePath, partitionOf(g.fileId), g.fileId, instant))
-    if (!publish(spark, tablePath, instant, "commit", "COMPACT", landed ++ empties))
+    val stats = (landed ++ empties).map(w => w.copy(prevCommit = prevOf(w.fileId)))
+    if (!publish(spark, tablePath, instant, "commit", "COMPACT", stats))
       throw new IllegalStateException(
         s"$tablePath: compaction instant $instant already taken — single-writer contract")
     instant

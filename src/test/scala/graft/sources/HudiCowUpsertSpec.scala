@@ -181,7 +181,7 @@ class HudiCowUpsertSpec extends SparkSpec {
     assert(e.getMessage.contains("is not named"))
   }
 
-  test("job budget: a small COW upsert runs at most 7 Spark jobs") {
+  test("job budget: a small COW upsert runs at most 5 Spark jobs") {
     val table = tmpDir("hcow-jobs") + "/t"
     created(table, partitioned = false)
     val batch = batchDf(batchRows) // its schema inference is not the upsert's
@@ -197,6 +197,6 @@ class HudiCowUpsertSpec extends SparkSpec {
       HudiTableWriter.upsert(batch, table)
       org.apache.spark.ListenerBusDrain(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get() <= 7, s"${jobs.get()} Spark jobs for one small upsert")
+    assert(jobs.get() <= 5, s"${jobs.get()} Spark jobs for one small upsert")
   }
 }
