@@ -15,17 +15,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * the data files — exactly what `partitionBy` parquet writes
   * produce).
   *
-  * Scale shape: the data write is an ordinary distributed parquet
-  * write (file sizing, partitioning and parallelism are Spark's); the
-  * commit is DRIVER-SIDE METADATA bounded by |files written this
-  * commit| — never a rewrite of previous versions, never a listing of
-  * the table. Commit publication is an atomic-rename
-  * compare-and-swap: the version JSON is staged and renamed into
-  * place, and a concurrent writer that got there first makes the
-  * rename fail, upon which the next version number is retried — the
-  * same optimistic protocol Delta itself uses (object stores without
-  * atomic rename need a coordination layer there too; stated, not
-  * hidden).
+  * Scale shape: the data write is distributed — one file per (write
+  * task, partition value), the files Spark's own partitioned write
+  * gives — and lands through the task-side landing every format
+  * shares ([[FileLanding]]): each write task creates its files at
+  * their final paths and reads each footer it just wrote for the
+  * file's `add.stats`, so no file is staged, renamed or reopened on
+  * the driver. The commit is DRIVER-SIDE METADATA bounded by |files
+  * written this commit| — never a rewrite of previous versions, never
+  * a listing of the table. A failed write's landed files are debris
+  * no version names, which [[vacuum]] reclaims past retention. Commit
+  * publication is an atomic-rename compare-and-swap: the version JSON
+  * is staged and renamed into place, and a concurrent writer that got
+  * there first makes the rename fail, upon which the next version
+  * number is retried — the same optimistic protocol Delta itself uses
+  * (object stores without atomic rename need a coordination layer
+  * there too; stated, not hidden).
   *
   * Beyond appends: [[delete]] masks rows with deletion vectors (no
   * file rewrite; driver-built sidecars for small matches, DISTRIBUTED
@@ -177,6 +182,13 @@ object DeltaTableWriter {
       case c => c.toString
     } + "\""
 
+  /** `partitionValues` JSON from a file's hive dirs. */
+  private def partitionValuesJson(dirs: Seq[String], partitionColumns: Seq[String]): String = {
+    val values = dirs.flatMap(partitionValueOf).toMap
+    partitionColumns.map(c => s"${jsonStr(c)}:${values.get(c).flatten.fold("null")(jsonStr)}")
+      .mkString(",")
+  }
+
   /** One `add` action line for a data file at `rel` (relative,
     * un-encoded), with partition values parsed from its hive dirs.
     */
@@ -184,13 +196,7 @@ object DeltaTableWriter {
       partitionColumns: Seq[String], stats: Option[String] = None,
       dataChange: Boolean = true,
       rowId: Option[(Long, Long)] = None): String = {
-    val values = rel.split('/').dropRight(1).flatMap(partitionValueOf).toMap
-    val pvJson = partitionColumns.map { c =>
-      values.get(c).flatten match {
-        case Some(v) => s"${jsonStr(c)}:${jsonStr(v)}"
-        case None => s"${jsonStr(c)}:null"
-      }
-    }.mkString(",")
+    val pvJson = partitionValuesJson(rel.split('/').dropRight(1).toSeq, partitionColumns)
     val statsJson = stats.map(st => s""","stats":${jsonStr(st)}""").getOrElse("")
     // rowTracking: (baseRowId, defaultRowCommitVersion)
     val rowIdJson = rowId.map { case (b, v) =>
@@ -200,63 +206,46 @@ object DeltaTableWriter {
       s"""$statsJson$rowIdJson}}"""
   }
 
-  /** Stage-write `df` as parquet and move the part files into the
-    * table dir (hive partition dirs preserved); returns the relative
-    * paths + sizes + mtimes of the landed files.
+  /** Land `df` as data files, one per (write task, partition value)
+    * — the files Spark's own partitioned write gives: the partition
+    * columns move out of the rows into hive dirs, each file is named
+    * the way Delta's own writer names it, and each write task reads
+    * the footer it just wrote for the file's `add.stats`
+    * ([[FileLanding]]). Field ids the columns carry land as parquet
+    * field ids.
     */
   private def writeDataFiles(df: DataFrame, tablePath: String,
-      partitionBy: Seq[String],
-      stampFieldIds: Boolean = false): Seq[(String, Long, Long, Option[String])] = {
-    val spark = df.sparkSession
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val stage = new Path(tablePath, s".graft-stage-${java.util.UUID.randomUUID()}")
-    val writer = if (partitionBy.nonEmpty) df.write.partitionBy(partitionBy: _*) else df.write
-    if (stampFieldIds) {
-      // column-mapped tables: the landed parquet must carry field ids
-      // (the columns' `parquet.field.id` metadata). Session-scoped
-      // config, saved and restored — later writes must not inherit it
-      val key = "spark.sql.parquet.fieldId.write.enabled"
-      val prior = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try writer.parquet(stage.toString)
-      finally prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    } else writer.parquet(stage.toString)
-    val landed = Seq.newBuilder[(String, Long, Long, Option[String])]
-    def walk(dir: Path, relPrefix: String): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) walk(st.getPath, s"$relPrefix$name/")
-        else if (name.endsWith(".parquet")) {
-          val rel = s"$relPrefix$name"
-          val dst = new Path(tablePath, rel)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(st.getPath, dst)) throw new IllegalStateException(
-            s"$tablePath: failed to move staged data file to $rel")
-          val dstStat = fs.getFileStatus(dst)
-          landed += ((rel, dstStat.getLen, dstStat.getModificationTime,
-            statsJsonOf(conf, dst)))
-        }
-      }
-    walk(stage, "")
-    fs.delete(stage, true)
-    val files = landed.result()
+      partitionBy: Seq[String]): Seq[FileLanding.Landed[Option[String]]] = {
+    val files = FileLanding.landPerTask(
+      FileLanding.onWriteTasks(df).withColumn("_g_part", FileLanding.partitionDirOf(
+        partitionBy.map(c => c -> org.apache.spark.sql.functions.col(c)))).drop(partitionBy: _*),
+      tablePath, partitionBy.nonEmpty,
+      (part, _, ext) => underDir(part,
+        f"part-${org.apache.spark.TaskContext.getPartitionId()}%05d-${java.util.UUID.randomUUID()}.c000$ext"),
+      Some((conf: org.apache.hadoop.conf.Configuration, p: Path) => statsJsonOf(conf, p)))
     if (files.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: the DataFrame wrote no data files (empty input?)")
     files
   }
 
-  /** Per-file `add.stats` JSON from the landed parquet FOOTER —
+  /** `name` under the hive dirs `part` ("" = the table root). */
+  private def underDir(part: String, name: String): String =
+    if (part.isEmpty) name else s"$part/$name"
+
+  /** The `add` line of a landed data file. */
+  private def addLineOf(f: FileLanding.Landed[Option[String]], partitionColumns: Seq[String],
+      dataChange: Boolean = true, rowId: Option[(Long, Long)] = None): String =
+    addLine(f.rel, f.bytes, f.modTime, partitionColumns, f.stats.flatten, dataChange, rowId)
+
+  /** Per-file `add.stats` JSON from the landed parquet FOOTER, read
+    * by the write task that landed the file —
     * numRecords plus minValues/maxValues/nullCount for the top-level
     * primitive columns whose row-group statistics are present. This
     * is what makes stats-based FILE SKIPPING work for every engine
     * that reads the table (Delta's own readers included); columns
     * with unusable stats are simply omitted (readers keep the file).
     */
-  private def statsJsonOf(conf: org.apache.hadoop.conf.Configuration,
+  private[sources] def statsJsonOf(conf: org.apache.hadoop.conf.Configuration,
       file: Path): Option[String] = scala.util.Try {
     import scala.jdk.CollectionConverters._
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(file, conf)
@@ -523,60 +512,19 @@ object DeltaTableWriter {
     */
   private def writeCdcFiles(rows: DataFrame, tablePath: String,
       partitionColumns: Seq[String] = Nil): Seq[String] = {
-    val spark = rows.sparkSession
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new Path(tablePath, s".graft-cdc-${java.util.UUID.randomUUID()}")
     // data-file convention: partition columns move OUT of the rows
-    // and into the hive dirs / the cdc action's partitionValues
-    val staged = partitionColumns.foldLeft(rows)((acc, c) =>
-      acc.withColumn(s"_p_$c", org.apache.spark.sql.functions.col(c)).drop(c))
-    val writer =
-      if (partitionColumns.isEmpty) staged.write
-      else staged.write.partitionBy(partitionColumns.map(c => s"_p_$c"): _*)
-    // id-mode change data: the projection stamped parquet.field.id on
-    // the data columns; the landed files must carry them (same
-    // save/restore discipline as writeDataFiles)
-    if (rows.schema.fields.exists(_.metadata.contains("parquet.field.id"))) {
-      val key = "spark.sql.parquet.fieldId.write.enabled"
-      val prior = spark.conf.getOption(key)
-      spark.conf.set(key, "true")
-      try writer.parquet(stage.toString)
-      finally prior match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    } else writer.parquet(stage.toString)
-    val lines = Seq.newBuilder[String]
-    def walk(dir: Path, segs: Seq[String]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          val next =
-            if (name.startsWith("_p_") && name.contains('=')) segs :+ name.substring(3)
-            else segs
-          walk(st.getPath, next)
-        } else if (name.endsWith(".parquet")) {
-          val dirPart = if (segs.isEmpty) "" else segs.mkString("", "/", "/")
-          val rel = s"_change_data/${dirPart}cdc-${java.util.UUID.randomUUID()}.parquet"
-          val dst = new Path(tablePath, rel)
-          fs.mkdirs(dst.getParent)
-          if (!fs.rename(st.getPath, dst)) throw new IllegalStateException(
-            s"$tablePath: failed to land change-data file $rel")
-          val values = segs.flatMap(partitionValueOf).toMap
-          val pvJson = partitionColumns.map { c =>
-            values.get(c).flatten match {
-              case Some(v) => s"${jsonStr(c)}:${jsonStr(v)}"
-              case None => s"${jsonStr(c)}:null"
-            }
-          }.mkString(",")
-          lines += (s"""{"cdc":{"path":${jsonStr(encodePath(rel))},""" +
-            s""""partitionValues":{$pvJson},""" +
-            s""""size":${fs.getFileStatus(dst).getLen},"dataChange":false}}""")
-        }
-      }
-    walk(stage, Nil)
-    fs.delete(stage, true)
-    lines.result()
+    // and into the hive dirs / the cdc action's partitionValues; id-mode
+    // change data keeps the field ids the projection stamped
+    val landed = FileLanding.landPerTask(
+      rows.withColumn("_g_part", FileLanding.partitionDirOf(
+        partitionColumns.map(c => c -> org.apache.spark.sql.functions.col(c))))
+        .drop(partitionColumns: _*),
+      tablePath, partitionColumns.nonEmpty,
+      (part, _, _) => underDir(s"_change_data${if (part.isEmpty) "" else "/" + part}",
+        s"cdc-${java.util.UUID.randomUUID()}.parquet"))
+    landed.map(f => s"""{"cdc":{"path":${jsonStr(encodePath(f.rel))},""" +
+      s""""partitionValues":{${partitionValuesJson(f.part.split('/').toSeq, partitionColumns)}},""" +
+      s""""size":${f.bytes},"dataChange":false}}""")
   }
 
   /** Create a NEW Delta table at `tablePath` from `df` — version 0
@@ -652,9 +600,8 @@ object DeltaTableWriter {
     var rowIdNext = 0L
     val rowIds: Map[String, (Long, Long)] =
       if (!enableRowTracking) Map.empty
-      else files.map { case (rel, _, _, st) =>
-        val n = numRecordsOf(tablePath, rel, st)
-        val b = rowIdNext; rowIdNext += n; rel -> ((b, 0L))
+      else files.map { f =>
+        val b = rowIdNext; rowIdNext += f.rows; f.rel -> ((b, 0L))
       }.toMap
     val domainLines =
       (if (clusterBy.isEmpty) Nil else Seq(clusteringDomainLine(clusterBy))) ++
@@ -662,19 +609,9 @@ object DeltaTableWriter {
          else Seq(rowTrackingDomainLine(rowIdNext - 1)))
     commit(spark, tablePath, 0L,
       protocol +: metaData +: (domainLines ++ transaction.map(txnLine).toSeq ++
-        files.map { case (rel, size, mtime, st) =>
-          addLine(rel, size, mtime, partitionBy, st, rowId = rowIds.get(rel)) }),
+        files.map(f => addLineOf(f, partitionBy, rowId = rowIds.get(f.rel)))),
       rebaseSafe = false)
   }
-
-  /** `add.stats` numRecords — what row-id assignment sizes each
-    * file's range by; a file without it cannot take row ids. */
-  private def numRecordsOf(tablePath: String, rel: String, st: Option[String]): Long =
-    st.flatMap(s0 => scala.util.Try(
-      mapper.readTree(s0).get("numRecords").asLong()).toOption)
-      .getOrElse(throw new IllegalStateException(
-        s"$tablePath: cannot assign row ids — footer stats with numRecords missing " +
-          s"for $rel"))
 
   /** OPTIMIZE on a row-tracked table (PROTOCOL.md Row Tracking,
     * rewrite obligation): every row's id and commit version are
@@ -707,10 +644,7 @@ object DeltaTableWriter {
       }
     val files = writeDataFiles(reshaped, tablePath, state.partitionColumns)
     var next = rowIdWatermarkOf(state, tablePath) + 1
-    val baseOf = files.map { case (rel, _, _, st) =>
-      val n = numRecordsOf(tablePath, rel, st)
-      val b = next; next += n; rel -> b
-    }.toMap
+    val baseOf = files.map { f => val b = next; next += f.rows; f.rel -> b }.toMap
     val now = System.currentTimeMillis()
     commit(spark, tablePath, state.version + 1, Nil,
       ictNeeded = ictNeededOf(state),
@@ -721,9 +655,8 @@ object DeltaTableWriter {
           s"""{"remove":{"path":${jsonStr(f.path)},"deletionTimestamp":$now,""" +
             s""""dataChange":false}}""") ++
           Seq(rowTrackingDomainLine(next - 1)) ++
-          files.map { case (rel, size, mtime, st) =>
-            addLine(rel, size, mtime, state.partitionColumns, st,
-              dataChange = false, rowId = Some((baseOf(rel), ver))) }))
+          files.map(f => addLineOf(f, state.partitionColumns,
+            dataChange = false, rowId = Some((baseOf(f.rel), ver))))))
   }
 
   /** The declared high watermark — missing on a feature-declaring
@@ -901,18 +834,8 @@ object DeltaTableWriter {
       if (proto.writerFeatures.nonEmpty) proto.writerFeatures else null))
     import scala.jdk.CollectionConverters._
     val dir = logDir(tablePath)
-    def landPart(rows0: Seq[Row], sch: StructType, dst: Path): Unit = {
-      val stage = new Path(tablePath, s".graft-ckpt-${java.util.UUID.randomUUID()}")
-      spark.createDataFrame(rows0.asJava, sch).coalesce(1).write.parquet(stage.toString)
-      val part = fs.listStatus(stage).map(_.getPath)
-        .find(_.getName.endsWith(".parquet"))
-        .getOrElse(throw new IllegalStateException(
-          s"$tablePath: checkpoint stage wrote nothing"))
-      fs.delete(dst, false)
-      if (!fs.rename(part, dst)) throw new IllegalStateException(
-        s"$tablePath: failed to land checkpoint $dst")
-      fs.delete(stage, true): Unit
-    }
+    def landPart(rows0: Seq[Row], sch: StructType, dst: Path): Long =
+      FileLanding.landFile(spark.createDataFrame(rows0.asJava, sch), dst)
     val allRows = Seq(protoRow, metaRow) ++ domainRows ++ txnRows ++ addRows
     // a protocol declaring the v2Checkpoint feature expects its
     // checkpoints in the v2 layout regardless of size
@@ -935,8 +858,7 @@ object DeltaTableWriter {
       fs.mkdirs(sidecarDir)
       val sidecarRows = addRows.grouped(math.max(1, partRows)).map { rows0 =>
         val nm = s"${java.util.UUID.randomUUID()}.parquet"
-        landPart(rows0, schema, new Path(sidecarDir, nm))
-        val len = fs.getFileStatus(new Path(sidecarDir, nm)).getLen
+        val len = landPart(rows0, schema, new Path(sidecarDir, nm))
         Row(null, null, null, null, null, null, Row(nm, len))
       }.toIndexedSeq
       val manifestRows =
@@ -944,7 +866,7 @@ object DeltaTableWriter {
           (Seq(protoRow, metaRow) ++ domainRows ++ txnRows).map(mrow) ++: sidecarRows
       landPart(manifestRows, manifestSchema,
         new Path(dir,
-          f"${state.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet"))
+          f"${state.version}%020d.checkpoint.${java.util.UUID.randomUUID()}.parquet")): Unit
     } else {
       val slices: Seq[Seq[Row]] =
         if (allRows.size <= partRows) Seq(allRows)
@@ -952,10 +874,10 @@ object DeltaTableWriter {
       val n = slices.size
       if (n == 1)
         landPart(slices.head, schema,
-          new Path(dir, f"${state.version}%020d.checkpoint.parquet"))
+          new Path(dir, f"${state.version}%020d.checkpoint.parquet")): Unit
       else slices.zipWithIndex.foreach { case (rows0, i) =>
         landPart(rows0, schema,
-          new Path(dir, f"${state.version}%020d.checkpoint.${i + 1}%010d.$n%010d.parquet"))
+          new Path(dir, f"${state.version}%020d.checkpoint.${i + 1}%010d.$n%010d.parquet")): Unit
       }
     }
     val partsField =
@@ -1064,17 +986,14 @@ object DeltaTableWriter {
         val cs = clusterCols.map(org.apache.spark.sql.functions.col)
         snap.repartitionByRange(targetFiles, cs: _*).sortWithinPartitions(cs: _*)
       }
-    val (physical, physPartCols, stampIds) =
-      mappedWriteProjection(state, tablePath, reshaped)
-    val files = writeDataFiles(physical, tablePath, physPartCols,
-      stampFieldIds = stampIds)
+    val (physical, physPartCols) = mappedWriteProjection(state, tablePath, reshaped)
+    val files = writeDataFiles(physical, tablePath, physPartCols)
     val now = System.currentTimeMillis()
     val lines =
       state.active.map(f =>
         s"""{"remove":{"path":${jsonStr(f.path)},"deletionTimestamp":$now,""" +
           s""""dataChange":false}}""") ++
-      files.map { case (rel, size, mtime, st) =>
-        addLine(rel, size, mtime, physPartCols, st, dataChange = false) }
+      files.map(f => addLineOf(f, physPartCols, dataChange = false))
     commit(spark, tablePath, state.version + 1, lines,
       ictNeeded = ictNeededOf(state), rebaseSafe = false, rebaseDisjoint = true,
       opInfo = Some(("OPTIMIZE", false)))
@@ -1087,8 +1006,14 @@ object DeltaTableWriter {
     * works; travel past the horizon fails loudly AT SCAN (the honest
     * contract the reader documents). Tombstones come from replaying
     * the remove actions still present in JSON commits; driver work is
-    * |remove actions|, deletion is |expired files|. Returns the
-    * deleted relative paths.
+    * |actions| plus one listing of the table, deletion is |expired
+    * files|. Change-data files go past retention too, and so does
+    * every file under the table that no version names — the files a
+    * failed write's finished tasks landed, crashed staging — once
+    * its modification time is past retention (a file's hidden `.crc`
+    * sidecar goes with it). `_delta_log` and a mirrored Iceberg
+    * `metadata/` dir are never swept. Returns the deleted relative
+    * paths.
     */
   def vacuum(spark: SparkSession, tablePath: String, retentionMs: Long,
       nowMs: Long = System.currentTimeMillis()): Seq[String] = {
@@ -1096,13 +1021,31 @@ object DeltaTableWriter {
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val state = DeltaTableReader.snapshotState(spark, tablePath)
     val activePaths = state.active.map(f => decodePathPublic(f.path)).toSet
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val root = fs.makeQualified(new Path(tablePath))
+    val rootStr = root.toString.stripSuffix("/")
+    // every file a version names — data, change data, DV sidecars — as
+    // a qualified path
+    val named = scala.collection.mutable.Set.empty[String]
+    def name(p: String): Unit = {
+      val dec = decodePathPublic(p)
+      named += (if (dec.startsWith("/") || dec.contains("://")) fs.makeQualified(new Path(dec)).toString
+        else s"$rootStr/$dec")
+    }
+    def nameDv(dv: DeltaDv.Descriptor): Unit =
+      DeltaDv.sidecarPath(tablePath, dv).foreach(p => named += fs.makeQualified(new Path(p)).toString)
+    state.active.foreach { f => name(f.path); f.dv.foreach(nameDv) }
     val tombstones = scala.collection.mutable.Map.empty[String, Long]
     fs.listStatus(dir).map(_.getPath).filter(_.getName.endsWith(".json")).foreach { p =>
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.split('\n').filter(_.nonEmpty).foreach { line =>
+      readText(fs, p).split('\n').filter(_.nonEmpty).foreach { line =>
         val node = mapper.readTree(line)
+        Seq("add", "remove", "cdc").filter(node.has).foreach { k =>
+          val a = node.get(k)
+          name(a.get("path").asText())
+          Option(a.get("deletionVector")).filterNot(_.isNull).foreach(d => nameDv(DeltaDv.Descriptor(
+            d.get("storageType").asText(), d.get("pathOrInlineDv").asText(),
+            Option(d.get("offset")).filterNot(_.isNull).map(_.asLong()).getOrElse(0L),
+            d.get("sizeInBytes").asInt(), d.get("cardinality").asLong())))
+        }
         if (node.has("remove")) {
           val r = node.get("remove")
           val path = decodePathPublic(r.get("path").asText())
@@ -1124,23 +1067,14 @@ object DeltaTableWriter {
     // dataChange=false one-shots), so without this they accumulate
     // forever — Delta's own vacuum reclaims them past retention too,
     // aged by modification time (the cdc action carries no timestamp)
-    val cdcDir = new Path(tablePath, "_change_data")
+    val cdcDir = new Path(root, "_change_data")
     val doomedCdc =
       if (!fs.exists(cdcDir)) Nil
-      else {
-        val b = Seq.newBuilder[String]
-        def walk(d: Path, prefix: String): Unit =
-          fs.listStatus(d).foreach { st =>
-            if (st.isDirectory) walk(st.getPath, s"$prefix${st.getPath.getName}/")
-            else if (st.getModificationTime <= horizon) {
-              fs.delete(st.getPath, false): Unit
-              b += s"_change_data/$prefix${st.getPath.getName}"
-            }
-          }
-        walk(cdcDir, "")
-        b.result().sorted
-      }
-    doomed ++ doomedCdc
+      else FileLanding.sweepUnnamed(fs, cdcDir, _ => false, horizon + 1).map("_change_data/" + _)
+    val mirrored = fs.exists(new Path(root, "metadata/version-hint.text"))
+    val unnamed = FileLanding.sweepUnnamed(fs, root, named, horizon,
+      n => n == "_delta_log" || n == "_change_data" || (mirrored && n == "metadata"))
+    doomed ++ doomedCdc.sorted ++ unnamed.sorted
   }
 
   /** `add.path` decode, shared with the reader's resolution rule. */
@@ -1326,12 +1260,12 @@ object DeltaTableWriter {
     * column set (evolution lives in [[append]]'s mapped branch):
     * logical → declared physical names, parquet field ids stamped in
     * `id` mode. Unmapped tables pass through. Returns (physical df,
-    * physical partition columns, stampFieldIds).
+    * physical partition columns).
     */
   private def mappedWriteProjection(state: DeltaTableReader.Snapshot,
-      tablePath: String, df: DataFrame): (DataFrame, Seq[String], Boolean) = {
+      tablePath: String, df: DataFrame): (DataFrame, Seq[String]) = {
     val mode = state.configuration.getOrElse("delta.columnMapping.mode", "none")
-    if (mode != "name" && mode != "id") return (df, state.partitionColumns, false)
+    if (mode != "name" && mode != "id") return (df, state.partitionColumns)
     val declared = state.schemaJson
       .flatMap(js => scala.util.Try(org.apache.spark.sql.types.DataType.fromJson(js)).toOption)
       .collect { case st: org.apache.spark.sql.types.StructType => st }
@@ -1368,7 +1302,7 @@ object DeltaTableWriter {
         else org.apache.spark.sql.functions.col(c)
       base.as(physOf.getOrElse(c, c), md)
     }: _*)
-    (physical, state.partitionColumns.map(c => physOf.getOrElse(c, c)), stampIds)
+    (physical, state.partitionColumns.map(c => physOf.getOrElse(c, c)))
   }
 
   private def isMapped(state: DeltaTableReader.Snapshot): Boolean =
@@ -1588,13 +1522,10 @@ object DeltaTableWriter {
         }
       matchedDf.unpersist(): Unit
       distinctKeys.unpersist(): Unit
-      val (physical, physPartCols, stampIds) =
-        mappedWriteProjection(state, tablePath, aligned)
-      val files = writeDataFiles(physical, tablePath, physPartCols,
-        stampFieldIds = stampIds)
+      val (physical, physPartCols) = mappedWriteProjection(state, tablePath, aligned)
+      val files = writeDataFiles(physical, tablePath, physPartCols)
       val v = commit(spark, tablePath, state.version + 1,
-        metaLines ++ cdcLines ++ dvLines ++ files.map { case (rel, size, mtime, st) =>
-          addLine(rel, size, mtime, physPartCols, st) },
+        metaLines ++ cdcLines ++ dvLines ++ files.map(addLineOf(_, physPartCols)),
         ictNeeded = ictNeededOf(state), rebaseSafe = false, rebaseDisjoint = true,
         opInfo = Some(("MERGE", false)), winnerMustBeBlind = true)
       maybeCheckpoint(spark, tablePath, v, checkpointInterval)
@@ -1842,17 +1773,14 @@ object DeltaTableWriter {
         base.as(physOf.getOrElse(c, c), md)
       }: _*)
       val physPartCols = state.partitionColumns.map(c => physOf.getOrElse(c, c))
-      val files = writeDataFiles(physical, tablePath, physPartCols,
-        stampFieldIds = stampIds)
+      val files = writeDataFiles(physical, tablePath, physPartCols)
       // an append CARRYING a metaData line (schema evolution) was
       // computed from this snapshot's schema/maxColumnId — a lost CAS
       // must not blindly re-land it over a concurrent evolution (last
       // metaData would win and colliding column ids could be minted),
       // so it rebases only over metaData-free disjoint winners
       val v = commit(spark, tablePath, state.version + 1,
-        metaLines ++ transaction.map(txnLine).toSeq ++
-          files.map { case (rel, size, mtime, st) =>
-            addLine(rel, size, mtime, physPartCols, st) },
+        metaLines ++ transaction.map(txnLine).toSeq ++ files.map(addLineOf(_, physPartCols)),
         ictNeeded = ictNeededOf(state),
         rebaseSafe = metaLines.isEmpty, rebaseDisjoint = metaLines.nonEmpty,
         opInfo = Some(("WRITE", metaLines.isEmpty)))
@@ -1872,10 +1800,7 @@ object DeltaTableWriter {
         // appends would mint overlapping ids — the domain-carrying
         // winner makes the rebase refuse, which is the point.
         var next = rowIdWatermarkOf(state, tablePath) + 1
-        val baseOf = files.map { case (rel, _, _, st) =>
-          val n = numRecordsOf(tablePath, rel, st)
-          val b = next; next += n; rel -> b
-        }.toMap
+        val baseOf = files.map { f => val b = next; next += f.rows; f.rel -> b }.toMap
         commit(spark, tablePath, state.version + 1, Nil,
           ictNeeded = ictNeededOf(state),
           rebaseSafe = false, rebaseDisjoint = true,
@@ -1883,15 +1808,13 @@ object DeltaTableWriter {
           linesFor = Some(ver =>
             metaLines ++ transaction.map(txnLine).toSeq ++
               Seq(rowTrackingDomainLine(next - 1)) ++
-              files.map { case (rel, size, mtime, st) =>
-                addLine(rel, size, mtime, state.partitionColumns, st,
-                  rowId = Some((baseOf(rel), ver))) }))
+              files.map(f => addLineOf(f, state.partitionColumns,
+                rowId = Some((baseOf(f.rel), ver))))))
       } else
         // same evolution-rebase rule as the mapped branch above
         commit(spark, tablePath, state.version + 1,
           metaLines ++ transaction.map(txnLine).toSeq ++
-            files.map { case (rel, size, mtime, st) =>
-              addLine(rel, size, mtime, state.partitionColumns, st) },
+            files.map(addLineOf(_, state.partitionColumns)),
           ictNeeded = ictNeededOf(state),
           rebaseSafe = metaLines.isEmpty, rebaseDisjoint = metaLines.nonEmpty,
           opInfo = Some(("WRITE", metaLines.isEmpty)))

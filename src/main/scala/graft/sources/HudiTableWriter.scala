@@ -1,16 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.Path
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
-import org.apache.spark.{Partitioner, TaskContext}
-import org.apache.spark.rdd.{RDD, ShuffledRDD}
 import org.apache.spark.sql.{Column, DataFrame, GraftBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.execution.datasources.{FileFormat, OutputWriterFactory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -36,16 +30,15 @@ import org.apache.spark.sql.types.StructType
   *
   * Scale shape: the data write is distributed; the commit is driver
   * metadata bounded by |files this commit|. Every write — insert,
-  * upsert, clustering, compaction — lands its base files through one
-  * task-side writer (`landGroups`): each write task creates its
-  * groups' files at their final paths through Spark's own parquet
-  * `OutputWriterFactory` and counts rows and bytes as it writes them,
-  * so there is no staging directory, rename or footer pass. Every
-  * write publishes through one exclusive create (`publish`). Instant
-  * collision (two writers in the same millisecond) is resolved by
-  * that exclusive create — an insert that loses bumps to the next
-  * instant and retries, the same instant-uniqueness Hudi's own
-  * timeline service enforces.
+  * upsert, clustering, compaction — lands its base files through the
+  * task-side landing every format shares ([[FileLanding]]): each
+  * write task creates its groups' files at their final paths and
+  * counts rows and bytes as it writes them, so there is no staging
+  * directory, rename or footer pass. Every write publishes through
+  * one exclusive create (`publish`). Instant collision (two writers in
+  * the same millisecond) is resolved by that exclusive create — an
+  * insert that loses bumps to the next instant and retries, the same
+  * instant-uniqueness Hudi's own timeline service enforces.
   *
   * Beyond inserts: [[upsert]] is the reference's own write operation
   * (COW file-group rewrite, carried rows keeping their stamps), and
@@ -231,79 +224,31 @@ object HudiTableWriter {
 
   /** Land `rows` as NEW file groups, one per (write task, table
     * partition): the files a plain parquet write of `rows` gives, with
-    * no added shuffle. `rows` must not be a projection of a local
-    * relation: the optimizer evaluates those on the driver, where
-    * `spark_partition_id()` is 0 for every row (see
-    * [[onWriteTasks]]). With no rows, a partitioned table lands nothing
-    * and an unpartitioned one lands one schema-only group, as Spark
-    * writes a schema-only part file for an empty unpartitioned write.
+    * no added shuffle ([[FileLanding.landPerTask]]). `rows` must keep
+    * its projections on the write tasks ([[FileLanding.onWriteTasks]]).
+    * With no rows, a partitioned table lands nothing and an
+    * unpartitioned one lands one schema-only group.
     */
   private def landTaskGroups(rows: DataFrame, tablePath: String, instant: String,
-      partitionBy: Seq[String]): Seq[WriteStat] = {
-    val grouped = rows
-      .withColumn("_g_fid", newGroupId(spark_partition_id(), partitionPathOf(partitionBy)))
-      .withColumn("_g_part", partitionDirOf(partitionBy))
-    // a task's rows may span table partitions: each group's rows are
-    // put together, as Spark's own partitioned write sorts them
-    val landed = landGroups(
-      if (partitionBy.isEmpty) grouped else grouped.sortWithinPartitions("_g_fid"),
-      tablePath, instant)
-    if (landed.nonEmpty || partitionBy.nonEmpty) landed
-    else {
-      val s = rows.sparkSession
-      import s.implicits._
-      // one id, from a one-row local relation the optimizer folds on the driver
-      val fid = Seq(0).toDF("b").select(newGroupId(col("b"), None)).head().getString(0)
-      Seq(landEmptyBase(s, rows.schema, tablePath, "", fid, instant))
-    }
-  }
+      partitionBy: Seq[String]): Seq[WriteStat] =
+    FileLanding.landPerTask(rows.withColumn("_g_part", partitionDirOf(partitionBy)), tablePath,
+      partitionBy.nonEmpty, basePathOf(instant),
+      group = Some(newGroupId(spark_partition_id(), partitionPathOf(partitionBy))))
+      .map(newGroupStat)
 
-  /** Land a schema-only base file as group `fid` — what a write of no
-    * rows commits. */
-  private def landEmptyBase(spark: SparkSession, schema: StructType,
-      tablePath: String, partition: String, fid: String, instant: String): WriteStat = {
-    val rel = baseFilePath(partition, fid, instant)
-    val (_, bytes) = BaseFileWriter(spark, schema)
-      .write(s"$tablePath/$rel", Iterator.empty, new TaskAttemptID("graft", 0, TaskType.MAP, 0, 0))
-    WriteStat(partition, fid, rel, 0L, 0L, bytes, "null")
-  }
+  /** Where a group's base file of `instant` lands. */
+  private def basePathOf(instant: String): FileLanding.PathOf =
+    (part, fid, _) => baseFilePath(part, fid, instant)
+
+  /** A landed base file's stat, as a new group's: no update writes, no
+    * previous commit. */
+  private def newGroupStat(f: FileLanding.Landed[Any]): WriteStat =
+    WriteStat(f.part, f.group, f.rel, f.rows, 0L, f.bytes, "null")
 
   /** A row's hive partition directory `c1=v1/c2=v2`, escaped the way
-    * Spark's partitioned write names it (null and empty values take
-    * `__HIVE_DEFAULT_PARTITION__`); "" when unpartitioned. */
+    * Spark's partitioned write names it; "" when unpartitioned. */
   private def partitionDirOf(partitionBy: Seq[String]): Column =
-    if (partitionBy.isEmpty) lit("")
-    else concat_ws("/", partitionBy.map { c =>
-      val dir = udf((v: String) => ExternalCatalogUtils.getPartitionPathString(c, v))
-      dir(col(c).cast("string"))
-    }: _*)
-
-  /** Land `df` as ONE parquet file at `dst`, replacing any file there:
-    * a `coalesce(1)` write staged beside the table, its part file
-    * renamed into place. Used for the metadata-table index files. */
-  private def landSingleFile(df: DataFrame, tablePath: String, dst: Path, what: String): Unit = {
-    val fs = dst.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-    val stage = new Path(tablePath, s".graft-single-${java.util.UUID.randomUUID()}")
-    df.coalesce(1).write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"$tablePath: $what staged nothing"))
-    fs.delete(dst, false)
-    if (!fs.rename(part, dst)) throw new IllegalStateException(
-      s"$tablePath: failed to land $what $dst")
-    fs.delete(stage, true)
-  }
-
-  /** `df`, with its projections kept on the write tasks: a local
-    * relation (driver-side rows) gets a coalesce to no fewer
-    * partitions than its local scan makes — no shuffle, the same
-    * tasks — which stops the optimizer from folding later projections
-    * into it on the driver. */
-  private def onWriteTasks(df: DataFrame): DataFrame = df.queryExecution.optimizedPlan match {
-    case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
-      df.coalesce(math.max(l.data.length, 1))
-    case _ => df
-  }
+    FileLanding.partitionDirOf(partitionBy.map(c => c -> col(c)))
 
   /** Write one insert commit: `df` lands as NEW file groups, one per
     * (write task, table partition), named per the Hudi base-file
@@ -317,7 +262,7 @@ object HudiTableWriter {
       extraMetadata: Map[String, String] = Map.empty): String = {
     val spark = df.sparkSession
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val input = onWriteTasks(df)
+    val input = FileLanding.onWriteTasks(df)
     var attempt = 0
     while (true) {
       val instant = instantNow(attempt.toLong)
@@ -738,10 +683,15 @@ object HudiTableWriter {
     * own parquet reader, built on the driver — the schema the new
     * slices are written with (the slice's columns first, then the
     * columns the batch adds), and the ordinals of the partition-scoped
-    * key columns in the slice rows and in the landed rows. */
+    * key columns in the slice rows and in the landed rows. A group it
+    * names lands merged ([[mergedSlice]]). */
   private[sources] final case class GroupRewrite(slices: Map[String, String],
       read: PartitionedFile => Iterator[InternalRow], sliceSchema: StructType,
-      schema: StructType, sliceKeys: Seq[Int], rowKeys: Seq[Int])
+      schema: StructType, sliceKeys: Seq[Int], rowKeys: Seq[Int]) extends FileLanding.GroupSource {
+    def rowsOf(group: String, rows: Iterator[InternalRow],
+        conf: org.apache.hadoop.conf.Configuration): Option[Iterator[InternalRow]] =
+      slices.get(group).map(mergedSlice(this, _, rows, conf))
+  }
 
   private[sources] object GroupRewrite {
     def apply(spark: SparkSession, tablePath: String, slices: Seq[HudiTableReader.SliceWrite],
@@ -753,71 +703,16 @@ object HudiTableWriter {
         sliceSchema, schema, keys.map(sliceSchema.fieldIndex), keys.map(schema.fieldIndex))
   }
 
-  /** Sends each row to the write task its key's first field names. */
-  private final case class TaskPartitioner(numPartitions: Int) extends Partitioner {
-    def getPartition(key: Any): Int = key.asInstanceOf[(Int, String)]._1
-  }
-
-  /** Writes base files through Spark's own parquet `OutputWriterFactory`
-    * — what `df.write.parquet` writes through, so a landed file has the
-    * footer Spark's own write of the same rows would give — set up once
-    * on the driver and shipped to the write tasks. */
-  private final class BaseFileWriter(factory: OutputWriterFactory,
-      conf: org.apache.spark.broadcast.Broadcast[DeltaDv.SerializableHadoopConf],
-      schema: StructType) extends Serializable {
-
-    def hadoopConf: org.apache.hadoop.conf.Configuration = conf.value.value
-
-    /** Write `rows` (of `schema`) as the file at `path`, created
-      * exclusively: a file already there fails the write and is left
-      * as it is. A write that fails after the create deletes its
-      * half-written file before it rethrows. Returns (rows, bytes). */
-    def write(path: String, rows: Iterator[InternalRow], attempt: TaskAttemptID): (Long, Long) = {
-      val p = new Path(path)
-      val fs = p.getFileSystem(hadoopConf)
-      val out = factory.newInstance(path, schema, new TaskAttemptContextImpl(hadoopConf, attempt))
-      var n = 0L
-      try {
-        rows.foreach { r => out.write(r); n += 1 }
-        out.close()
-      } catch {
-        case e: Throwable =>
-          try out.close() catch { case _: Throwable => }
-          fs.delete(p, false)
-          throw e
-      }
-      (n, fs.getFileStatus(p).getLen)
-    }
-  }
-
-  private object BaseFileWriter {
-    def apply(spark: SparkSession, schema: StructType): BaseFileWriter = {
-      val job = Job.getInstance(spark.sessionState.newHadoopConf())
-      val factory = new ParquetFileFormat().prepareWrite(spark, job, Map.empty, schema)
-      new BaseFileWriter(factory, spark.sparkContext.broadcast(
-        new DeltaDv.SerializableHadoopConf(job.getConfiguration)), schema)
-    }
-  }
-
-  /** Land `rows` as base files of `instant` — the way every base file
-    * with rows enters the table (a write of no rows lands a
-    * schema-only one, [[landEmptyBase]]). Each row carries its data
-    * columns, then its file group in `_g_fid` and the group's
-    * partition directory in `_g_part`; each group becomes one file,
-    * `<_g_part>/<fid>_0-0-0_<instant>.parquet`, written by one write
-    * task straight at that path through [[BaseFileWriter]], its rows
-    * and bytes counted as it is written.
-    *
-    * Placement: by default each group's rows must already sit
-    * together in one task of `rows` (the callers' repartitions and
-    * local sorts); with `steerTo` = n, `rows` also carries `_g_task`
-    * and only its rows shuffle, to that task of n, each task's rows
-    * sorted by group. A group that `rewrite` names is
-    * MERGED in its task: its rows (the batch) are written, then the
-    * group's current slice streams through, minus the rows whose
-    * partition-scoped key a batch row carries, null-filling the
-    * columns the slice lacks; every file is then written with the
-    * rewrite's schema, else with the data columns' own.
+  /** Land `rows` as base files of `instant` ([[FileLanding.land]]) —
+    * the way every base file with rows enters the table. Each row
+    * carries its data columns, then its file group in `_g_fid` and the
+    * group's partition directory in `_g_part`; each group becomes one
+    * file, `<_g_part>/<fid>_0-0-0_<instant>.parquet`, written by one
+    * write task straight at that path. With `steerTo` = n, `rows` also
+    * carries `_g_task` and only its rows shuffle, to that task of n. A
+    * group that `rewrite` names is MERGED in its task; every file is
+    * then written with the rewrite's schema, else with the data
+    * columns' own.
     *
     * Files are created exclusively, so a second writer on the same
     * instant fails instead of overwriting; a failed task deletes its
@@ -825,58 +720,12 @@ object HudiTableWriter {
     * debris the timeline never names. Every attempt of a task writes
     * the same paths (the write token is fixed), so a retry after an
     * attempt that died without cleaning up fails the write. Returns
-    * one stat per group — rows and bytes — as a new group's: no update
-    * writes, no previous commit.
+    * one stat per group — rows and bytes — as a new group's.
     */
   private[sources] def landGroups(rows: DataFrame, tablePath: String, instant: String,
-      rewrite: Option[GroupRewrite] = None, steerTo: Int = 0): Seq[WriteStat] = {
-    val spark = rows.sparkSession
-    val internal = Set("_g_fid", "_g_part", "_g_task")
-    val dataCols = rows.columns.filterNot(internal).toSeq
-    val placed = rows.select(dataCols.map(col) ++ Seq(col("_g_fid"), col("_g_part")) ++
-      (if (steerTo > 0) Seq(col("_g_task")) else Nil): _*)
-    val schema = rewrite.fold(StructType(placed.schema.fields.take(dataCols.size)))(_.schema)
-    val nData = dataCols.size
-    val writer = BaseFileWriter(spark, schema)
-    val qe = placed.queryExecution
-    val written = SQLExecution.withNewExecutionId(qe, Some(s"land Hudi base files $instant")) {
-      val input: RDD[InternalRow] =
-        if (steerTo == 0) qe.toRdd
-        else new ShuffledRDD[(Int, String), InternalRow, InternalRow](
-            qe.toRdd.map(r => ((r.getInt(nData + 2), r.getUTF8String(nData).toString), r.copy())),
-            TaskPartitioner(steerTo))
-          .setKeyOrdering(Ordering.by[(Int, String), String](_._2))
-          .values
-      spark.sparkContext.runJob(input, (ctx: TaskContext, it: Iterator[InternalRow]) => {
-        val attempt = new TaskAttemptID("graft", ctx.stageId(), TaskType.MAP,
-          ctx.partitionId(), ctx.attemptNumber())
-        val toData = UnsafeProjection.create(schema.fields.toIndexedSeq.zipWithIndex.map {
-          case (f, i) => BoundReference(i, f.dataType, nullable = true) })
-        val landed = Seq.newBuilder[(String, String, String, Long, Long)]
-        val rowsIn = it.buffered
-        while (rowsIn.hasNext) {
-          val fid = rowsIn.head.getUTF8String(nData).clone()
-          val part = rowsIn.head.getUTF8String(nData + 1).toString
-          val group = new Iterator[InternalRow] {
-            def hasNext: Boolean = rowsIn.hasNext && rowsIn.head.getUTF8String(nData) == fid
-            def next(): InternalRow = rowsIn.next()
-          }
-          val rel = baseFilePath(part, fid.toString, instant)
-          val path = s"$tablePath/$rel"
-          val (n, bytes) = rewrite.flatMap(rw => rw.slices.get(fid.toString).map(rw -> _)) match {
-            case None => writer.write(path, group.map(toData), attempt)
-            case Some((rw, slice)) => GraftBridge.countingTaskInput(writer.write(path,
-              mergedSlice(rw, slice, group, toData, writer.hadoopConf), attempt))
-          }
-          landed += ((part, fid.toString, rel, n, bytes))
-        }
-        landed.result()
-      })
-    }
-    written.toSeq.flatten.map { case (part, fid, rel, n, bytes) =>
-      WriteStat(part, fid, rel, n, 0L, bytes, "null")
-    }
-  }
+      rewrite: Option[GroupRewrite] = None, steerTo: Int = 0): Seq[WriteStat] =
+    FileLanding.land(rows, tablePath, basePathOf(instant), source = rewrite, steerTo = steerTo)
+      .map(newGroupStat)
 
   /** A touched group's new slice, in its write task: the group's batch
     * rows, then its current slice (`slice`) minus the rows whose
@@ -884,7 +733,7 @@ object HudiTableWriter {
     * slice lacks null-filled. Keys compare as a join on them does
     * (floating-point zeros and NaNs normalized). */
   private def mergedSlice(rw: GroupRewrite, slice: String, batch: Iterator[InternalRow],
-      toData: UnsafeProjection, conf: org.apache.hadoop.conf.Configuration): Iterator[InternalRow] = {
+      conf: org.apache.hadoop.conf.Configuration): Iterator[InternalRow] = {
     def keyOf(s: StructType, ordinals: Seq[Int]) = UnsafeProjection.create(ordinals.map(i =>
       GraftBridge.normalizeFloats(BoundReference(i, s(i).dataType, nullable = true))))
     val rowKey = keyOf(rw.schema, rw.rowKeys)
@@ -896,7 +745,7 @@ object HudiTableWriter {
     // the batch rows of a touched group matched a slice row in the
     // tagging join, so none carries a null key
     val replaced = new java.util.HashSet[UnsafeRow]()
-    batch.map { r => replaced.add(rowKey(r).copy()); toData(r) } ++ {
+    batch.map { r => replaced.add(rowKey(r).copy()); r } ++ {
       // opened once the batch rows are written and their keys known
       val path = new Path(slice)
       val len = path.getFileSystem(conf).getFileStatus(path).getLen
@@ -1347,8 +1196,8 @@ object HudiTableWriter {
       .map(HudiSchema.toAvroJson(_)).getOrElse("none")
     val sidecar = fs.create(new Path(dir, s"$head.schema"), true)
     try sidecar.write((sidecarBody + "\n").getBytes("UTF-8")) finally sidecar.close()
-    landSingleFile(spark.createDataFrame(rows.asJava, schema), tablePath,
-      new Path(dir, s"$head.parquet"), "files index")
+    FileLanding.landFile(spark.createDataFrame(rows.asJava, schema),
+      new Path(dir, s"$head.parquet")): Unit
     head
   }
 
@@ -1469,7 +1318,7 @@ object HudiTableWriter {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(hoodieDir(tablePath), "metadata/col_stats")
     fs.mkdirs(dir)
-    landSingleFile(stats, tablePath, new Path(dir, s"$head.parquet"), "col-stats index")
+    FileLanding.landFile(stats, new Path(dir, s"$head.parquet")): Unit
   }
 
   /** INCREMENTAL col-stats maintenance (hudi.apache.org: the metadata
@@ -1645,7 +1494,7 @@ object HudiTableWriter {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val dir = new Path(hoodieDir(tablePath), "metadata/bloom_filters")
     fs.mkdirs(dir)
-    landSingleFile(rows, tablePath, new Path(dir, s"$head.parquet"), "bloom index")
+    FileLanding.landFile(rows, new Path(dir, s"$head.parquet")): Unit
   }
 
   /** The slices an UPSERT's key-matching scan must read, through the
@@ -2003,8 +1852,9 @@ object HudiTableWriter {
     // every record tombstoned: an explicit EMPTY base still repoints
     // the slice and clears the group's logs
     val landedIds = landed.map(_.fileId).toSet
-    val empties = dirty.filterNot(g => landedIds(g.fileId)).map(g =>
-      landEmptyBase(spark, schema, tablePath, partitionOf(g.fileId), g.fileId, instant))
+    val empties = FileLanding.landEmpty(spark, schema, tablePath,
+      dirty.filterNot(g => landedIds(g.fileId)).map(g => partitionOf(g.fileId) -> g.fileId),
+      basePathOf(instant)).map(newGroupStat)
     val stats = (landed ++ empties).map(w => w.copy(prevCommit = prevOf(w.fileId)))
     if (!publish(spark, tablePath, instant, "commit", "COMPACT", stats))
       throw new IllegalStateException(

@@ -20,7 +20,7 @@ import IcebergTransforms.PartitionField
   *    entry's `partition` struct, which is what lets readers prune
   *    at the manifest level without touching data;
   *  - each commit writes ONE Avro manifest of `status=added` entries
-  *    (real per-file `record_count` read from the parquet footers,
+  *    (real per-file `record_count` counted as each file is written,
   *    per-entry `sequence_number` for v2 delete scoping), a manifest
   *    LIST that reuses every previous manifest plus the new one (the
   *    manifest-reuse shape real writers produce, what makes
@@ -33,7 +33,12 @@ import IcebergTransforms.PartitionField
   *    that lost re-reads and retries at N+1); `version-hint.text`
   *    re-points after the fact (advisory, as in the spec).
   *
-  * Scale shape: the data write is distributed; manifest/metadata
+  * Scale shape: the data write is distributed and lands through the
+  * task-side landing every format shares ([[FileLanding]]): each
+  * write task creates its files at their final paths and reads each
+  * footer it just wrote for the file's bounds, so no file is staged,
+  * renamed or reopened on the driver (a failed write's landed files
+  * are orphans [[removeOrphanFiles]] reclaims). Manifest/metadata
   * writes are driver metadata bounded by |files this commit| and
   * |snapshots|. Beyond appends: [[delete]] writes v2 position-delete
   * files (distributed, no driver bitmaps), [[upsert]] is the
@@ -148,11 +153,12 @@ object IcebergTableWriter {
   }
 
   /** Column min/max per FIELD ID from a landed file's footer row
-    * groups. Field ids follow this writer's schema convention
-    * (position + 1 over the table columns). Columns whose stats are
-    * absent in ANY row group record no bounds (conservative).
+    * groups, read by the write task that landed the file. Field ids
+    * follow this writer's schema convention (position + 1 over the
+    * table columns). Columns whose stats are absent in ANY row group
+    * record no bounds (conservative).
     */
-  private def footerBounds(footer: org.apache.parquet.hadoop.ParquetFileReader,
+  private[sources] def footerBounds(footer: org.apache.parquet.hadoop.ParquetFileReader,
       fieldIdOf: Map[String, Int]): (Map[Int, Array[Byte]], Map[Int, Array[Byte]]) = {
     import scala.jdk.CollectionConverters._
     val lower = scala.collection.mutable.Map.empty[Int, Any]
@@ -197,10 +203,12 @@ object IcebergTableWriter {
     if (v == "__HIVE_DEFAULT_PARTITION__") None else Some(v)
   }
 
-  /** Land `df` as data files. Partition columns stay IN the files
-    * (Iceberg-style): the stage write partitions on DUPLICATED
-    * `_p_<c>` columns, whose hive dirs carry the values into the
-    * manifest while the originals ride the data.
+  /** Land `df` as data files under `data/`, one per (write task,
+    * partition value) ([[FileLanding]]). Partition columns stay IN the
+    * files (Iceberg-style); each partition value is derived through
+    * its transform and carried to the manifest by the file's group.
+    * Each file carries parquet field ids, and its write task reads the
+    * footer it just wrote for the file's column bounds.
     */
   private def writeDataFiles(df: DataFrame, tablePath: String,
       pfields: Seq[PartitionField]): Seq[Landed] = {
@@ -209,33 +217,26 @@ object IcebergTableWriter {
     // existing columns keep their current ids, new ones take fresh
     // ids — so bounds resolve at read time even after evolution
     val fieldIds: Map[String, Int] = plannedFieldIds(spark, tablePath, df.schema)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val stage = new Path(tablePath, s".graft-stage-${java.util.UUID.randomUUID()}")
     // stamp PARQUET FIELD IDS into the landed files (what real
     // engines do): columns bind to ids, so a later RENAME is a pure
     // metadata commit and the reader's id resolution serves old files
     // under the new name
-    val fieldIdConfKey = "spark.sql.parquet.fieldId.write.enabled"
-    val priorFieldIdConf = spark.conf.getOption(fieldIdConfKey)
-    val withIds = df.select(df.columns.toIndexedSeq.map { c =>
+    val withIds = FileLanding.onWriteTasks(df).select(df.columns.toIndexedSeq.map { c =>
       val md = new org.apache.spark.sql.types.MetadataBuilder()
         .putLong("parquet.field.id", fieldIds(c).toLong).build()
       org.apache.spark.sql.functions.col(c).as(c, md)
     }: _*)
     // each partition value is DERIVED through its transform (identity
-    // passes the column through); source columns stay IN the data
-    // files, the duplicated _p_ columns only steer the hive staging
-    val staged = pfields.foldLeft(withIds)((acc, f) =>
-      acc.withColumn(s"_p_${f.resultName}",
-        IcebergTransforms.column(f, df.schema(f.sourceCol).dataType)))
-    val writer =
-      if (pfields.isEmpty) staged.write
-      // co-locate each partition value into ONE task before the hive
-      // staging: without this every task writes a file for every
-      // value it holds — task×|values| small files, superlinear file
-      // counts on days()/bucket() layouts (one shuffle buys one file
-      // per partition value per commit, the 100 TB-sane shape).
+    // passes the column through)
+    val values = pfields.map(f =>
+      f.resultName -> IcebergTransforms.column(f, df.schema(f.sourceCol).dataType))
+    val placed =
+      if (pfields.isEmpty) withIds
+      // co-locate each partition value into ONE task: without this
+      // every task writes a file for every value it holds —
+      // task×|values| small files, superlinear file counts on
+      // days()/bucket() layouts (one shuffle buys one file per
+      // partition value per commit, the 100 TB-sane shape).
       // EXPLICIT partition count: a keyed repartition without one is
       // fair game for AQE partition coalescing, which merges a small
       // commit into ONE task that then writes every partition value's
@@ -243,55 +244,26 @@ object IcebergTableWriter {
       // 0.5 s spread over session parallelism); the explicit count
       // keeps file-per-value (each value still hashes to exactly one
       // task) while the file writes run in parallel.
-      else staged.repartition(spark.sessionState.conf.numShufflePartitions,
-          pfields.map(f =>
-            org.apache.spark.sql.functions.col(s"_p_${f.resultName}")): _*)
-        .write.partitionBy(pfields.map(f => s"_p_${f.resultName}"): _*)
-    // the field-id stamping config is a SESSION setting — scope it to
-    // this write and restore the caller's value, so later parquet
-    // writes in the same session aren't silently id-stamped
-    spark.conf.set(fieldIdConfKey, "true")
-    try writer.parquet(stage.toString)
-    finally priorFieldIdConf match {
-      case Some(v) => spark.conf.set(fieldIdConfKey, v)
-      case None    => spark.conf.unset(fieldIdConfKey)
-    }
-    // collect staged parts first, then land + footer-read them in
-    // PARALLEL — serially this is O(|files|) driver round-trips, and
-    // a days()-partitioned append stages one file per day
-    val staged0 = Seq.newBuilder[(Path, Map[String, Option[String]])]
-    def walk(dir: Path, values: Map[String, Option[String]]): Unit =
-      fs.listStatus(dir).foreach { st =>
-        val name = st.getPath.getName
-        if (st.isDirectory) {
-          val i = name.indexOf('=')
-          val v =
-            if (i > 0 && name.startsWith("_p_"))
-              values + (name.substring(3, i) -> decodeHive(name.substring(i + 1)))
-            else values
-          walk(st.getPath, v)
-        } else if (name.endsWith(".parquet")) staged0 += ((st.getPath, values))
-      }
-    walk(stage, Map.empty)
-    import scala.collection.parallel.CollectionConverters._
-    val files = staged0.result().par.map { case (src, values) =>
-      val rel = s"data/${java.util.UUID.randomUUID()}.parquet"
-      val dst = new Path(tablePath, rel)
-      fs.mkdirs(dst.getParent)
-      if (!fs.rename(src, dst)) throw new IllegalStateException(
-        s"$tablePath: failed to land data file $rel")
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(dst, conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val (n, lo, hi) = try {
-        val b = footerBounds(r, fieldIds)
-        (r.getRecordCount, b._1, b._2)
-      } finally r.close()
-      Landed(rel, n, values, lo, hi)
-    }.seq
-    fs.delete(stage, true)
+      else withIds.repartition(spark.sessionState.conf.numShufflePartitions,
+        values.map(_._2): _*)
+    val files = FileLanding.landPerTask(
+      placed.withColumn("_g_part", FileLanding.partitionDirOf(values)), tablePath,
+      pfields.nonEmpty, (_, _, _) => s"data/${java.util.UUID.randomUUID()}.parquet",
+      Some { (conf: org.apache.hadoop.conf.Configuration, p: Path) =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        try footerBounds(r, fieldIds) finally r.close()
+      })
     if (files.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: the DataFrame wrote no data files (empty input?)")
-    files
+    files.map { f =>
+      val partition = f.part.split('/').toSeq.filter(_.nonEmpty).map { seg =>
+        val i = seg.indexOf('=')
+        seg.substring(0, i) -> decodeHive(seg.substring(i + 1))
+      }.toMap
+      val (lo, hi) = f.stats.getOrElse((Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]]))
+      Landed(f.rel, f.rows, partition, lo, hi)
+    }
   }
 
   /** One v3 DELETION-VECTOR manifest row: the puffin file, the blob
@@ -1494,18 +1466,8 @@ object IcebergTableWriter {
     }
     import scala.jdk.CollectionConverters._
     val rel = s"metadata/partition-stats-$currentId-${java.util.UUID.randomUUID()}.parquet"
-    val stage = new Path(tablePath, s".graft-pstats-${java.util.UUID.randomUUID()}")
-    spark.createDataFrame(rows.asJava, schema).coalesce(1).write.parquet(stage.toString)
-    val part = fs.listStatus(stage).map(_.getPath)
-      .find(_.getName.endsWith(".parquet"))
-      .getOrElse(throw new IllegalStateException(s"$tablePath: stats stage wrote nothing"))
-    val dst = new Path(tablePath, rel)
-    fs.mkdirs(dst.getParent)
-    fs.delete(dst, false)
-    if (!fs.rename(part, dst)) throw new IllegalStateException(
-      s"$tablePath: failed to land partition statistics at $rel")
-    fs.delete(stage, true)
-    val len = fs.getFileStatus(dst).getLen
+    val len = FileLanding.landFile(spark.createDataFrame(rows.asJava, schema),
+      new Path(tablePath, rel))
     // register under the usual metadata CAS; an entry for the SAME
     // snapshot replaces (a re-run refreshes, never duplicates)
     val m = new com.fasterxml.jackson.databind.ObjectMapper()
@@ -1553,10 +1515,11 @@ object IcebergTableWriter {
     * every file path those manifests name (any status: a deleted
     * entry's file may still serve an older snapshot), DV puffins,
     * registered partition-statistics files — and physically delete
-    * the unreferenced remainder older than `graceMs` (crashed stage
-    * dirs, failed-CAS leftovers). The grace period is what keeps a
-    * CONCURRENT writer's in-flight staging safe: never run with a
-    * grace shorter than the longest write you could be racing.
+    * the unreferenced remainder older than `graceMs` (the files a
+    * failed write's finished tasks landed, failed-CAS leftovers). The
+    * grace period is what keeps a CONCURRENT writer's in-flight files
+    * safe: never run with a grace shorter than the longest write you
+    * could be racing.
     * Driver work is O(|files in table dir| + |manifest entries|);
     * returns the deleted paths (table-relative).
     */
@@ -1599,36 +1562,7 @@ object IcebergTableWriter {
     Option(metaNode.get("partition-statistics")).filter(_.isArray).foreach(_.forEach { e =>
       Option(e.get("statistics-path")).foreach(p => referenced += qualify(p.asText()))
     })
-    val horizon = nowMs - graceMs
-    val deleted = Seq.newBuilder[String]
-    def walk(dir: Path): Unit = fs.listStatus(dir).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else {
-        val q = fs.makeQualified(st.getPath).toString
-        // a checksum sidecar lives and dies with its base file
-        val name = st.getPath.getName
-        val effective =
-          if (name.startsWith(".") && name.endsWith(".crc"))
-            fs.makeQualified(new Path(st.getPath.getParent,
-              name.stripPrefix(".").stripSuffix(".crc"))).toString
-          else q
-        if (!referenced.contains(effective) && st.getModificationTime < horizon) {
-          if (fs.delete(st.getPath, false))
-            deleted += q.stripPrefix(rootStr + "/")
-        }
-      }
-    }
-    walk(root)
-    // sweep directories the deletions emptied (crashed stage dirs)
-    def sweepEmpty(dir: Path): Boolean = {
-      val children = fs.listStatus(dir)
-      val keep = children.filterNot(st => st.isDirectory && sweepEmpty(st.getPath))
-      if (dir != root && keep.isEmpty && fs.makeQualified(dir).toString != rootStr) {
-        fs.delete(dir, false)
-      } else false
-    }
-    sweepEmpty(root): Unit
-    deleted.result()
+    FileLanding.sweepUnnamed(fs, root, referenced, nowMs - graceMs)
   }
 
   def expireSnapshots(spark: org.apache.spark.sql.SparkSession, tablePath: String,
@@ -1766,8 +1700,8 @@ object IcebergTableWriter {
       .sort("file_path", "pos")
     // land the delete file (one file — delete sets are small relative
     // to data; a huge delete should rewrite instead)
-    val (rel, n) = landSmallParquet(spark, tablePath, deletes, "position-delete",
-      emptyMsg = Some("predicate matched no live rows — nothing to delete"))
+    val (rel, n) = landDeleteShards(spark, tablePath, deletes, "position-delete",
+      emptyMsg = Some("predicate matched no live rows — nothing to delete")).head
     val schema = IcebergTableReader.snapshot(spark, tablePath).schema
     commitSnapshot(spark, tablePath, schema, declaredPartitionFields(spark, tablePath),
       Seq(Landed(rel, n, Map.empty)), content = 1, operation = "delete",
@@ -1952,52 +1886,26 @@ object IcebergTableWriter {
     */
   val MaxDeleteFileRows: Long = 4L * 1000 * 1000
 
-  /** Land delete-file parquet and return (relative path, footer row
-    * count) per landed shard. One coalesced file at or under
-    * `maxRows` expected rows; sharded `repartition` write past it.
-    * Refuses an empty frame.
+  /** Land delete-file parquet and return (relative path, row count)
+    * per landed shard. One coalesced file at or under `maxRows`
+    * expected rows; sharded `repartition` write past it; a task with
+    * no rows lands no file. Refuses an empty frame.
     */
   private def landDeleteShards(spark: org.apache.spark.sql.SparkSession,
       tablePath: String, df: DataFrame, what: String,
       emptyMsg: Option[String] = None,
       expectedRows: Option[Long] = None,
       maxRows: Long = MaxDeleteFileRows): Seq[(String, Long)] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val stage = new Path(tablePath, s".graft-del-${java.util.UUID.randomUUID()}")
     val shards = expectedRows.map(r => ((r + maxRows - 1) / maxRows).toInt).getOrElse(1)
-    val staged = if (shards <= 1) df.coalesce(1) else df.repartition(shards)
-    staged.write.parquet(stage.toString)
-    val parts = fs.listStatus(stage).map(_.getPath)
-      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-    if (parts.isEmpty) throw new IllegalStateException(
-      s"$tablePath: $what stage wrote nothing")
-    import scala.collection.parallel.CollectionConverters._
-    val landed = parts.toIndexedSeq.par.map { part =>
-      val rel = s"data/del-${java.util.UUID.randomUUID()}.parquet"
-      fs.mkdirs(new Path(tablePath, rel).getParent)
-      if (!fs.rename(part, new Path(tablePath, rel))) throw new IllegalStateException(
-        s"$tablePath: failed to land $what file $rel")
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        new Path(tablePath, rel), conf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      val n = try r.getRecordCount finally r.close()
-      (rel, n)
-    }.seq
-    fs.delete(stage, true)
-    val nonEmpty = landed.filter(_._2 > 0L)
-    landed.filter(_._2 == 0L)
-      .foreach { case (rel, _) => fs.delete(new Path(tablePath, rel), false): Unit }
-    if (nonEmpty.isEmpty) throw new IllegalArgumentException(
+    val placed = if (shards <= 1) df.coalesce(1) else df.repartition(shards)
+    val landed = FileLanding.land(
+      placed.withColumn("_g_fid", org.apache.spark.sql.functions.lit(""))
+        .withColumn("_g_part", org.apache.spark.sql.functions.lit("")),
+      tablePath, (_, _, _) => s"data/del-${java.util.UUID.randomUUID()}.parquet")
+    if (landed.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: " + emptyMsg.getOrElse(s"empty $what batch — nothing to write"))
-    nonEmpty
+    landed.map(f => (f.rel, f.rows))
   }
-
-  /** [[landDeleteShards]] for the single-file callers. */
-  private def landSmallParquet(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, df: DataFrame, what: String,
-      emptyMsg: Option[String] = None): (String, Long) =
-    landDeleteShards(spark, tablePath, df, what, emptyMsg).head
 
   /** UPSERT (merge) into an external Iceberg v2 table via EQUALITY
     * DELETES — the Flink-CDC write shape: the batch's key values land

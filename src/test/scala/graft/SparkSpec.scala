@@ -25,6 +25,9 @@ trait SparkSpec extends AnyFunSuite {
     rows.toDF("doc_id", "text")
   }
 
+  /** The Spark jobs `body` runs ([[JobBudget]]). */
+  def sparkJobs(body: => Unit): Int = JobBudget.of(spark)(body).jobs
+
   def tmpDir(prefix: String): String = {
     val d = java.nio.file.Files.createTempDirectory(prefix)
     d.toFile.deleteOnExit()

@@ -148,24 +148,9 @@ class PipelineSpecSuite extends SparkSpec {
     spark.read.parquet(s"$sfDir/customer.parquet").write.parquet(s"$dir/customer.parquet")
     assert(new java.io.File(s"$dir/orders.parquet").list().count(_.endsWith(".parquet")) >= 4)
     val df = graft.Queries.qReportUrgent.run(spark, dir)
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val stageTasks = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-      override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        stageTasks.add(e.stageInfo.numTasks): Unit
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      new ReportWriter(tmpDir("graft-report-jobs-out-")).write(df)
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    import scala.jdk.CollectionConverters._
-    assert(jobs.get() <= 2, s"${jobs.get()} Spark jobs for one report")
-    assert(stageTasks.asScala.max > 1, s"stage task counts ${stageTasks.asScala.toSeq}: the scan ran in one task")
+    val budget = graft.JobBudget.of(spark)(new ReportWriter(tmpDir("graft-report-jobs-out-")).write(df): Unit)
+    assert(budget.jobs <= 2, s"${budget.jobs} Spark jobs for one report")
+    assert(budget.stageTasks.max > 1, s"stage task counts ${budget.stageTasks}: the scan ran in one task")
   }
 
   test("email template renders the reference card with the download link") {

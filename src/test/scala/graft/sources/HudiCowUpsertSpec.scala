@@ -185,18 +185,7 @@ class HudiCowUpsertSpec extends SparkSpec {
     val table = tmpDir("hcow-jobs") + "/t"
     created(table, partitioned = false)
     val batch = batchDf(batchRows) // its schema inference is not the upsert's
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      HudiTableWriter.upsert(batch, table)
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    assert(jobs.get() <= 5, s"${jobs.get()} Spark jobs for one small upsert")
+    val jobs = sparkJobs(HudiTableWriter.upsert(batch, table): Unit)
+    assert(jobs <= 5, s"$jobs Spark jobs for one small upsert")
   }
 }

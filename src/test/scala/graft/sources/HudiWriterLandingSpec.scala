@@ -96,22 +96,6 @@ class HudiWriterLandingSpec extends SparkSpec {
     assert(active.distinct.size == active.size)
   }
 
-  private def sparkJobs(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet(): Unit
-    }
-    org.apache.spark.ListenerBusDrain(sc)
-    sc.addSparkListener(listener)
-    try {
-      body
-      org.apache.spark.ListenerBusDrain(sc)
-    } finally sc.removeSparkListener(listener)
-    jobs.get()
-  }
-
   test("timeline num_writes counts the rows each commit's files hold: insert, COW upsert, clustering") {
     val table = tmpDir("hland-tl-cow") + "/t"
     HudiTableWriter.create(rows(1, 201, 4), table, recordKeys = Seq("id"),
