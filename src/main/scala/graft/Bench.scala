@@ -1,28 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
-      // same rationale as GraftSession: the format readers pass live
-      // data files as root paths; the default threshold (32) turns
-      // every few-hundred-file snapshot read into a one-task-per-path
-      // distributed listing job of pure overhead on a local FS
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // Local iteration knobs (driver sets neither): SPARK_GRAFT_QUERIES
     // = comma-list subset; SPARK_GRAFT_REPS = best-of-N per query.
-    val subset = sys.env.get("SPARK_GRAFT_QUERIES").map(_.split(",").map(_.trim).toSet)
+    val subset = sys.env.get("SPARK_GRAFT_QUERIES")
+    val selected = Queries.select(subset)
+    val cpus = GraftSession.envCpus
+    val spark = GraftSession.local(cpus)
     // best-of-3 by default: single-shot timings roam ±5-10× under
     // transient host interference (GC, page cache, co-tenant load) —
     // measured as a contiguous "slow block" of queries that moves
@@ -31,7 +16,6 @@ object Bench {
     // round-10 driver run, all sub-3s queries). min-of-3 with
     // interleaved passes makes that coincidence a ~p³ event.
     val reps = sys.env.get("SPARK_GRAFT_REPS").map(_.toInt).getOrElse(3)
-    val selected = SparkEntry.queries.filter { case (n, _) => subset.forall(_.contains(n)) }
     // Untimed warm-up: JIT/codegen/classloader/parquet-reader costs land
     // here instead of on whichever query happens to run first.
     try {
@@ -110,15 +94,15 @@ object Bench {
     // warmup run outside the timers; every timed pass then measures
     // the same thing. Cost: one extra run of ~17 queries.
     for (name <- names if watchList.contains(name)) {
-      try { selected(name)(spark, sfDir).count(): Unit }
+      try { selected(name).run(spark, sfDir).count(): Unit }
       catch { case _: Throwable => () }
       hygiene()
     }
     for (_ <- 1 to reps) {
       for (name <- names) {
-        val fn = selected(name)
+        val q = selected(name)
         val t0 = System.nanoTime()
-        val t = try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+        val t = try { q.run(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
           catch { case e: Throwable => System.err.println(s"[bench] $name failed: $e"); -1.0 }
         timesByName(name) = t :: timesByName(name)
         if (t < 0 || t > HeavySec) hygiene()

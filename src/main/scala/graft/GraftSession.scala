@@ -2,15 +2,16 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Tuned SparkSession factory for graft.
+/** Tuned SparkSession factory for graft: every graft session is built
+  * here. `Verify`, `Bench` and the specs run on [[local]]; the
+  * benchmark harness calls [[builder]] with its own master.
   *
-  * Local testing runs `local[32]` in one JVM; the same conf keys are
-  * what we'd set cluster-side (AQE with skew-join handling, sane
-  * shuffle partitioning, UTC session time, generous broadcast
-  * threshold for dimension tables).
+  * The conf keys are what we'd set cluster-side (AQE with skew-join
+  * handling, sane shuffle partitioning, UTC session time, generous
+  * broadcast threshold for dimension tables).
   */
 object GraftSession {
-  def builder(master: String = "local[32]", shufflePartitions: Int = 32): SparkSession.Builder =
+  def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
@@ -36,8 +37,14 @@ object GraftSession {
       .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
       .config("spark.ui.enabled", "false")
 
-  def getOrCreate(): SparkSession = {
-    val spark = builder().getOrCreate()
+  /** `SPARK_GRAFT_CPUS` (default 4): the local cores of `Verify` and
+    * `Bench`. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The one-JVM session: `local[cpus]`, one shuffle partition per
+    * core, WARN logging. */
+  def local(cpus: Int): SparkSession = {
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }

@@ -571,10 +571,8 @@ object Dedup {
   }
 
   /** The refresh's write-side inputs: banded keys + shingle sets of
-    * one batch. Split out (package-visible) so the scale rehearsal
-    * can time the append and emit phases separately.
-    */
-  private[graft] def minhashBandBatch(batch: DataFrame, idCol: String, textCol: String,
+    * one batch. */
+  private def minhashBandBatch(batch: DataFrame, idCol: String, textCol: String,
       n: Int, numHashes: Int, bands: Int): (DataFrame, DataFrame) = {
     val docsH = batch.select(col(idCol).as("doc"), hashedShingles(col(textCol), n).as("hs"))
       .filter(size(col("hs")) > 0)
@@ -596,7 +594,7 @@ object Dedup {
     * per refresh — at 10× data that second scan was the single
     * largest slice of the fold premium.
     */
-  private[graft] def minhashIncEmit(spark: org.apache.spark.sql.SparkSession,
+  private def minhashIncEmit(spark: org.apache.spark.sql.SparkSession,
       statePath: String, banded: DataFrame, threshold: Double, upTo: Int): DataFrame = {
     import graft.sources.VersionedLog
     val allBands = VersionedLog.read(spark, statePath, "bands", Some(upTo)).get

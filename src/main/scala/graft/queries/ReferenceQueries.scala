@@ -2732,7 +2732,9 @@ trait ReferenceQueries extends QueryBase {
       val table = scratch("delta-skip") + "/t"
       val o = t(s, dir, "orders")
       DeltaTableWriter.create(o.repartitionByRange(8, col("o_orderkey")), table): Unit
-      val hi = 3000.0
+      // orders keys run 0 .. 1500·(sf/0.001) − 1, so a bound under
+      // 1500 cuts the file set at every scale the testdata ships
+      val hi = 1000.0
       val skipped = DeltaTableReader.snapshotSkipping(s, table, "o_orderkey", 0.0, hi)
       val full = DeltaTableReader.snapshot(s, table)
       require(skipped.inputFiles.length < full.inputFiles.length,
@@ -2756,7 +2758,7 @@ trait ReferenceQueries extends QueryBase {
       """SELECT o_orderpriority, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue
         |FROM orders
-        |WHERE o_orderkey <= 3000
+        |WHERE o_orderkey <= 1000
         |GROUP BY o_orderpriority""".stripMargin))
 
   /** #102n Delta ROW TRACKING (PROTOCOL.md: fresh `baseRowId` ranges
@@ -2863,7 +2865,8 @@ trait ReferenceQueries extends QueryBase {
       DeltaTableWriter.append(o.filter(pmod(col("o_orderkey"), lit(2)) === 1), table): Unit
       require(DeltaTableReader.clusteringColumns(s, table) == Seq(Seq("o_orderkey")),
         "the delta.clustering domain must declare the clustering column")
-      val hi = 2000.0
+      // under 1500: cuts at every testdata scale (see qDeltaSkipping)
+      val hi = 1000.0
       val skipped = DeltaTableReader.snapshotSkipping(s, table, "o_orderkey", 0.0, hi)
       val full = DeltaTableReader.snapshot(s, table)
       require(skipped.inputFiles.length < full.inputFiles.length,
@@ -2882,7 +2885,7 @@ trait ReferenceQueries extends QueryBase {
       """SELECT o_orderstatus, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue
         |FROM orders
-        |WHERE o_orderkey <= 2000
+        |WHERE o_orderkey <= 1000
         |GROUP BY o_orderstatus""".stripMargin))
 
   /** #106b Delta DV-DELETE writer
@@ -3688,7 +3691,8 @@ trait ReferenceQueries extends QueryBase {
       val table = scratch("iceberg-skip") + "/t"
       val o = t(s, dir, "orders")
       IcebergTableWriter.create(o.repartitionByRange(8, col("o_orderkey")), table): Unit
-      val hi = 3000.0
+      // under 1500: cuts at every testdata scale (see qDeltaSkipping)
+      val hi = 1000.0
       val full = IcebergTableReader.planFiles(s, table)
       val pruned = IcebergTableReader.planFilesSkipping(s, table, "o_orderkey", 0.0, hi)
       require(pruned.data.size < full.data.size,
@@ -3702,7 +3706,7 @@ trait ReferenceQueries extends QueryBase {
       """SELECT o_orderpriority, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue
         |FROM orders
-        |WHERE o_orderkey <= 3000
+        |WHERE o_orderkey <= 1000
         |GROUP BY o_orderpriority""".stripMargin))
 
   /** #104q Iceberg REMOVE ORPHAN FILES (Iceberg's maintenance
@@ -3834,7 +3838,8 @@ trait ReferenceQueries extends QueryBase {
       require(IcebergTableReader.sortOrder(s, table) ==
         Seq(("o_orderkey", "asc", "nulls-first")),
         "the declared sort order must round-trip through the metadata")
-      val hi = 2500.0
+      // under 1500: cuts at every testdata scale (see qDeltaSkipping)
+      val hi = 1000.0
       val full = IcebergTableReader.planFiles(s, table)
       val pruned = IcebergTableReader.planFilesSkipping(s, table, "o_orderkey", 0.0, hi)
       require(pruned.data.size < full.data.size,
@@ -3849,7 +3854,7 @@ trait ReferenceQueries extends QueryBase {
       """SELECT o_orderstatus, count(*) AS n,
         |  CAST(sum(CAST(o_totalprice AS DECIMAL(28,6))) AS DOUBLE) AS revenue
         |FROM orders
-        |WHERE o_orderkey <= 2500
+        |WHERE o_orderkey <= 1000
         |GROUP BY o_orderstatus""".stripMargin))
 
   /** #106d Delta RESTORE ([[graft.sources.DeltaTableWriter.restore]]):

@@ -7,11 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * sbt; building a session per spec would dominate test time).
   */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = GraftSession.builder(master = "local[4]", shufflePartitions = 4).getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 }
 
 trait SparkSpec extends AnyFunSuite {

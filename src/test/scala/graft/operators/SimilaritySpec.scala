@@ -309,6 +309,24 @@ class SimilaritySpec extends SparkSpec {
     assert(recall > 0.7, s"banded recall $recall vs exact ${exact.size} pairs")
   }
 
+  test("embeddingNearDupPairsLshAuto: tuned layout finds at least the fixed-layout pairs (verified output only)") {
+    val emb = graft.sources.TableLoader.table(spark, sfDir, "embeddings")
+    def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val exact = pairSet(Similarity.embeddingNearDupPairs(emb, 0.45))
+    val fixed = pairSet(Similarity.embeddingNearDupPairsLsh(emb, 0.45))
+    val auto = pairSet(Similarity.embeddingNearDupPairsLshAuto(emb, 0.45))
+    // both score candidates at the same threshold, so every emitted
+    // pair is true; the default layout (8 planes, sized for a 0.9
+    // threshold) collides a 0.45 pair far less often than the tuned
+    // one (fewer planes at this corpus size, tables solved for 0.95
+    // recall) -> superset
+    assert(auto.subsetOf(exact), s"LSH invented pairs: ${auto -- exact}")
+    assert(fixed.subsetOf(auto))
+    val recall = auto.size.toDouble / exact.size
+    assert(recall > 0.8, s"tuned recall $recall vs exact ${exact.size} pairs")
+  }
+
   test("embeddingNearDupPairsLsh: planted identical vectors always recalled") {
     // Identical vectors share every hyperplane sign, hence every
     // bucket in every table — recall of TRUE duplicates is 1.0 at any
