@@ -1021,7 +1021,7 @@ trait ReferenceQueries extends QueryBase {
         |GROUP BY o_orderpriority""".stripMargin))
 
   /** #103e External Hudi MOR INCREMENTAL read
-    * ([[graft.sources.HudiTableReader.morIncrementalSince]] — the
+    * ([[graft.sources.HudiTableReader.incrementalSince]] — the
     * reference's checkpointed consumer, template.py:226-281, pointed
     * at a MOR table): the real-time merge restricted to file groups
     * TOUCHED after the checkpoint (the %2=0 base group receiving log
@@ -2282,7 +2282,7 @@ trait ReferenceQueries extends QueryBase {
 
   /** #103j Hudi ARCHIVED-TIMELINE read
     * ([[graft.sources.HudiTableWriter.archiveTimeline]] +
-    * [[graft.sources.HudiTableReader.archivedEntries]]): the archival
+    * [[graft.sources.HudiTimeline.archivedEntries]]): the archival
     * service rotates all but the newest instants into
     * `.hoodie/archived` (Hudi-log-container archive files — the same
     * PUBLIC codec as MOR logs), after which the CREATE commit's file

@@ -59,7 +59,7 @@ object HudiMetadataTable {
     * replay path.
     */
   def filesListing(spark: SparkSession, tablePath: String,
-      timelineInstants: Set[String]): Option[(String, Map[String, Seq[(String, Long)]])] = {
+      onTimeline: Set[String]): Option[(String, Map[String, Seq[(String, Long)]])] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new Path(new Path(tablePath, ".hoodie"), "metadata/files")
     val fs = dir.getFileSystem(conf)
@@ -78,7 +78,7 @@ object HudiMetadataTable {
     // whose record lives in a dropped shard would silently vanish
     // from the listing, so one unreadable shard degrades the whole
     // answer to replay.
-    val shards = hfiles.filter { case (_, i, _) => timelineInstants.contains(i) }
+    val shards = hfiles.filter { case (_, i, _) => onTimeline.contains(i) }
       .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq.sortBy(_._3)
     if (shards.isEmpty) return None
     // the index point is the OLDEST shard instant: replaying the data
@@ -146,8 +146,9 @@ object HudiMetadataTable {
     import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
     import org.apache.avro.io.EncoderFactory
     val conf = spark.sparkContext.hadoopConfiguration
-    val groups = HudiTableReader.morGroups(spark, tablePath)
-    val head = HudiTableReader.latestInstant(spark, tablePath)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val groups = HudiTableReader.morGroups(tl)
+    val head = tl.head
     val fs = new Path(tablePath).getFileSystem(conf)
     // (partition, file name, size) for every live base + pending log
     val entries: Seq[(String, String, Long)] = groups.flatMap { g =>
@@ -207,7 +208,7 @@ object HudiMetadataTable {
     * its unpruned path.
     */
   def colStatsListing(spark: SparkSession, tablePath: String,
-      timelineInstants: Set[String]): Option[(String, Seq[ColStat])] = {
+      onTimeline: Set[String]): Option[(String, Seq[ColStat])] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new Path(new Path(tablePath, ".hoodie"), "metadata/column_stats")
     val fs = dir.getFileSystem(conf)
@@ -219,7 +220,7 @@ object HudiMetadataTable {
     // newest usable hfile per shard, ALL shards read (stats key by
     // immutable file NAMES, so a stale or partial shard set is only
     // ever conservative — fewer files pruned, never a wrong prune)
-    val shards = hfiles.filter { case (_, i, _) => timelineInstants.contains(i) }
+    val shards = hfiles.filter { case (_, i, _) => onTimeline.contains(i) }
       .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq.sortBy(_._3)
     if (shards.isEmpty) return None
     val instant = shards.map(_._2).min
@@ -279,7 +280,7 @@ object HudiMetadataTable {
     * callers keep their fallback).
     */
   def recordIndexProbe(spark: SparkSession, tablePath: String,
-      timelineInstants: Set[String],
+      onTimeline: Set[String],
       keyStrings: Seq[String]): Option[(String, Map[String, String])] = {
     val conf = spark.sparkContext.hadoopConfiguration
     val dir = new Path(new Path(tablePath, ".hoodie"), "metadata/record_index")
@@ -293,7 +294,7 @@ object HudiMetadataTable {
     // across several file groups); every shard is probed — a key
     // lives in exactly one, and a miss elsewhere costs one root-index
     // read
-    val shards = hfiles.filter { case (_, i, _) => timelineInstants.contains(i) }
+    val shards = hfiles.filter { case (_, i, _) => onTimeline.contains(i) }
       .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq
     if (shards.isEmpty) return None
     val out = scala.util.Try {

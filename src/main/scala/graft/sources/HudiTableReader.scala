@@ -1,9 +1,10 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
+
+import HudiTimeline.load
 
 /** READ-ONLY adapter for externally-written Apache Hudi COPY-ON-WRITE
   * tables — the reference's OWN entry point: template.py:207-217
@@ -47,10 +48,11 @@ import org.apache.spark.sql.functions._
   * through as plain scans — the same split Hudi's own realtime reader
   * makes. COW-only paths (point-in-time, incremental) keep refusing
   * MOR timelines; `readOptimized` stays the explicit stale opt-in.
+  *
+  * Every public entry point reads `.hoodie` once, through
+  * [[HudiTimeline.load]], and passes that value to its helpers.
   */
 object HudiTableReader {
-
-  private val mapper = new ObjectMapper()
 
   /** One file-group write from a commit's stats; `partition` is the
     * partitionToWriteStats key the write landed under ("" for
@@ -58,153 +60,12 @@ object HudiTableReader {
   final case class SliceWrite(instant: String, fileId: String, path: String,
       partition: String = "")
 
-  private[sources] def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def hoodieDir(tablePath: String): Path = new Path(tablePath, ".hoodie")
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  /** Completed instants, ascending (Hudi instant times are
-    * lexicographically ordered timestamps), tagged by kind:
-    * ordinary `commit`s, clustering `replacecommit`s and — when
-    * `allowMor` — MOR `deltacommit`s. ARCHIVED instants (rotated out
-    * of the active listing into `.hoodie/archived` by the timeline
-    * archival service) replay UNDER the active ones — their commit
-    * metadata rides the archive log files ([[archivedEntries]]), so
-    * file groups written only by archived instants stay visible.
-    */
-  private[sources] def timelineInstants(spark: SparkSession, tablePath: String,
-      allowMor: Boolean): Seq[(String, String)] = {
-    val dir = hoodieDir(tablePath)
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) throw new IllegalArgumentException(
-      s"$tablePath is not a Hudi table: no .hoodie directory")
-    val names = fs.listStatus(dir).toIndexedSeq.map(_.getPath.getName)
-    val archived = archivedEntries(fs, tablePath)
-    if (!allowMor) {
-      if (names.exists(_.endsWith(".deltacommit")) ||
-          archived.exists(_._2 == "deltacommit"))
-        throw new IllegalStateException(
-          s"$tablePath has deltacommit instants — a MERGE-ON-READ table; this COW-only " +
-            "path cannot merge log files (a plain scan would silently miss updates); " +
-            "use snapshot for the merged real-time view or readOptimized for the " +
-            "explicit base-files-only view")
-      // hoodie.properties declares the table type up front — a MOR table
-      // with no deltacommits YET would otherwise slip through and start
-      // silently missing updates on its first delta write
-      if (declaresMor(spark, tablePath))
-        throw new IllegalStateException(
-          s"$tablePath declares hoodie.table.type=MERGE_ON_READ — this COW-only path " +
-            "refuses (log files would be silently ignored); use snapshot for the merged " +
-            "real-time view or readOptimized for the explicit base-files-only view")
-    }
-    val live = names.filter(n => !n.contains(".requested") && !n.contains(".inflight"))
-    val active =
-      live.filter(_.endsWith(".commit")).map(n => (n.stripSuffix(".commit"), "commit")) ++
-        live.filter(_.endsWith(".replacecommit"))
-          .map(n => (n.stripSuffix(".replacecommit"), "replacecommit")) ++
-        (if (allowMor)
-          live.filter(_.endsWith(".deltacommit"))
-            .map(n => (n.stripSuffix(".deltacommit"), "deltacommit"))
-        else Nil)
-    val servedKinds = Set("commit", "replacecommit") ++
-      (if (allowMor) Set("deltacommit") else Set.empty[String])
-    val activeInstants = active.map(_._1).toSet
-    (archived.collect {
-      case (i, k, _) if servedKinds.contains(k) && !activeInstants.contains(i) => (i, k)
-    } ++ active).sortBy(_._1)
-  }
-
-  /** (instant, actionType, commit-metadata JSON) from the ARCHIVED
-    * timeline, oldest-first: each `.hoodie/archived/.commits_.archive.N`
-    * file is a Hudi log-format file ([[HudiLog]] — the PUBLIC
-    * container Hudi's own archival service writes) holding one Avro
-    * data block of (commitTime, actionType, metadata) entries. A
-    * corrupt or non-log archive file refuses loudly via the codec's
-    * own magic/torn-block checks — silently skipping one would make
-    * every read miss its file groups. Results are memoized per
-    * (table, archive-file signature): archives are immutable once
-    * rotated, and timeline replay calls this once per instant.
-    */
-  private val archivedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(String, String, String)]]()
-
-  private[sources] def archivedEntries(fs: FileSystem,
-      tablePath: String): Seq[(String, String, String)] = {
-    val arch = new Path(hoodieDir(tablePath), "archived")
-    if (!fs.exists(arch)) return Nil
-    val files = fs.listStatus(arch).filter(_.isFile)
-      .sortBy(_.getPath.getName).toIndexedSeq
-    if (files.isEmpty) return Nil
-    // name+length alone is NOT a content signature: a table DELETED
-    // and REBUILT at the same path (test reruns, scratch reuse) lands
-    // archives whose names AND lengths collide -- instants are
-    // fixed-width timestamps, fileIds fixed-width UUIDs -- and a stale
-    // hit would replay the OLD table's timeline over the new files.
-    // The modification time disambiguates rebuilds.
-    val sig = tablePath + "\u0000" +
-      files.map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
-        .mkString(",")
-    archivedCache.computeIfAbsent(sig, _ => {
-      val out = Seq.newBuilder[(String, String, String)]
-      files.foreach { f =>
-        val blocks = HudiLog.read(fs.getConf, f.getPath.toString)
-        blocks.foreach {
-          case HudiLog.DataBlock(_, schemaJson, records) =>
-            val schema = new org.apache.avro.Schema.Parser().parse(schemaJson)
-            val reader =
-              new org.apache.avro.generic.GenericDatumReader[
-                org.apache.avro.generic.GenericRecord](schema)
-            records.foreach { bytes =>
-              val dec = org.apache.avro.io.DecoderFactory.get()
-                .binaryDecoder(bytes, null)
-              val r = reader.read(null, dec)
-              out += ((String.valueOf(r.get("commitTime")),
-                String.valueOf(r.get("actionType")),
-                String.valueOf(r.get("metadata"))))
-            }
-          case other => throw new IllegalStateException(
-            s"$tablePath: archive file ${f.getPath.getName} carries a " +
-              s"${other.getClass.getSimpleName} — archived timelines hold Avro data " +
-              "blocks of instant metadata; refusing")
-        }
-      }
-      out.result().sortBy(_._1)
-    })
-  }
-
-  /** The commit-metadata JSON of one instant: the active timeline
-    * file when present, else the archived timeline (where the
-    * archival service moved it). Missing in both refuses.
-    */
-  private def instantMetaText(fs: FileSystem, tablePath: String,
-      instant: String, kind: String): String = {
-    val p = new Path(hoodieDir(tablePath), s"$instant.$kind")
-    if (fs.exists(p)) readText(fs, p)
-    else archivedEntries(fs, tablePath)
-      .collectFirst { case (i, k, meta) if i == instant && k == kind => meta }
-      .getOrElse(throw new IllegalStateException(
-        s"$tablePath: instant $instant.$kind is neither active nor archived — " +
-          "its writes cannot be replayed; refusing"))
-  }
-
-  private def declaresMor(spark: SparkSession, tablePath: String): Boolean = {
-    val props = new Path(hoodieDir(tablePath), "hoodie.properties")
-    val fs = fsOf(spark, props)
-    fs.exists(props) &&
-      readText(fs, props).linesIterator.exists(l =>
-        l.replace(" ", "").startsWith("hoodie.table.type=MERGE_ON_READ"))
-  }
-
-  /** Completed COW instants (`commit` / `replacecommit`), ascending.
-    * Refuses MOR timelines — their snapshot needs log-merge.
+  /** Completed COW instants (`commit` / `replacecommit`), ascending,
+    * archived ones included. Refuses MOR timelines — their snapshot
+    * needs log-merge.
     */
   def instants(spark: SparkSession, tablePath: String): Seq[(String, String)] =
-    timelineInstants(spark, tablePath, allowMor = false)
+    load(spark, tablePath).cow
 
   /** Completed ordinary-commit instants, ascending. */
   def commits(spark: SparkSession, tablePath: String): Seq[String] =
@@ -213,48 +74,7 @@ object HudiTableReader {
   /** The latest completed instant of ANY kind (deltacommits included)
     * — the head token a checkpointed consumer records. */
   def latestInstant(spark: SparkSession, tablePath: String): String =
-    timelineInstants(spark, tablePath, allowMor = true).lastOption.map(_._1)
-      .getOrElse(throw new IllegalArgumentException(
-        s"$tablePath: no completed instants in .hoodie"))
-
-  /** Every file-group write of one completed instant (`.commit` or
-    * `.replacecommit` meta file, per `kind`).
-    */
-  private[sources] def writesOf(fs: FileSystem, tablePath: String, instant: String,
-      kind: String = "commit"): Seq[SliceWrite] = {
-    val text = instantMetaText(fs, tablePath, instant, kind)
-    val node = mapper.readTree(text)
-    if (node == null || node.isMissingNode) throw new IllegalStateException(
-      s"$tablePath: $instant.$kind carries no commit metadata (empty/corrupt file) — " +
-        "its writes cannot be replayed; refusing rather than silently missing them")
-    val stats = node.get("partitionToWriteStats")
-    if (stats == null || !stats.isObject) Nil
-    else {
-      val b = Seq.newBuilder[SliceWrite]
-      stats.fields().forEachRemaining { e =>
-        e.getValue.forEach { (w: JsonNode) =>
-          b += SliceWrite(instant, w.get("fileId").asText(), w.get("path").asText(),
-            e.getKey)
-        }
-      }
-      b.result()
-    }
-  }
-
-  /** File-group ids a replacecommit REPLACED (clustering input groups
-    * — they stop existing at that instant).
-    */
-  private[sources] def replacedIdsOf(fs: FileSystem, tablePath: String, instant: String): Set[String] = {
-    val node = mapper.readTree(
-      instantMetaText(fs, tablePath, instant, "replacecommit"))
-    val rep = node.get("partitionToReplaceFileIds")
-    if (rep == null || !rep.isObject) Set.empty
-    else {
-      val b = Set.newBuilder[String]
-      rep.fields().forEachRemaining(e => e.getValue.forEach(id => b += id.asText()))
-      b.result()
-    }
-  }
+    load(spark, tablePath).head
 
   /** The latest file slice per LIVE file group at the latest instant —
     * the COW snapshot's file set. Replay in instant order: an ordinary
@@ -263,29 +83,26 @@ object HudiTableReader {
     * both would double every clustered row).
     */
   def activeSlices(spark: SparkSession, tablePath: String): Seq[SliceWrite] =
-    slicesUpTo(spark, tablePath, None)
+    activeSlices(load(spark, tablePath))
 
-  private def slicesUpTo(spark: SparkSession, tablePath: String,
-      upTo: Option[String]): Seq[SliceWrite] = {
-    val fs = fsOf(spark, hoodieDir(tablePath))
-    val timeline = instants(spark, tablePath)
-    val indexed =
-      if (upTo.isDefined) None
-      else filesIndexState(spark, tablePath, timeline)
-        .orElse(externalFilesIndexState(spark, tablePath, timeline))
+  private[sources] def activeSlices(tl: HudiTimeline): Seq[SliceWrite] = slicesUpTo(tl, None)
+
+  private def slicesUpTo(tl: HudiTimeline, upTo: Option[String]): Seq[SliceWrite] = {
+    val timeline = tl.cow
+    val indexed = if (upTo.isDefined) None else indexState(tl)
     val latest = scala.collection.mutable.LinkedHashMap.empty[String, SliceWrite]
     indexed.foreach(_._2.foreach(g => g.base.foreach(b => latest(g.fileId) = b)))
     val from = indexed.map(_._1)
     timeline
       .filter { case (i, _) => upTo.forall(i <= _) && from.forall(i > _) }
       .foreach { case (instant, kind) =>
-        if (kind == "replacecommit") replacedIdsOf(fs, tablePath, instant).foreach(latest.remove)
-        writesOf(fs, tablePath, instant, kind).foreach(w => latest(w.fileId) = w)
+        if (kind == "replacecommit") tl.replacedIds(instant).foreach(latest.remove)
+        tl.writes(instant, kind).foreach(w => latest(w.fileId) = w)
       }
     if (latest.isEmpty) throw new IllegalArgumentException(
       upTo match {
-        case Some(i) => s"$tablePath: no completed commits at or before instant $i"
-        case None => s"$tablePath: no completed commits in .hoodie"
+        case Some(i) => s"${tl.tablePath}: no completed commits at or before instant $i"
+        case None => s"${tl.tablePath}: no completed commits in .hoodie"
       })
     latest.values.toIndexedSeq
   }
@@ -304,61 +121,42 @@ object HudiTableReader {
     * which on a uniform table is already exact.
     */
   def declaredDataSchema(spark: SparkSession,
-      tablePath: String): Option[org.apache.spark.sql.types.StructType] = {
-    val fs = fsOf(spark, hoodieDir(tablePath))
-    val timeline = timelineInstants(spark, tablePath, allowMor = true)
-    // completed instants are immutable, so (table, timeline shape)
-    // keys the answer — non-evolved tables would otherwise re-read
-    // every commit JSON on every scan
-    val memoKey = (tablePath, timeline.lastOption.map(_._1).getOrElse(""), timeline.size)
-    schemaMemo.computeIfAbsent(memoKey, { _ =>
-      def schemaKeyOf(instant: String, kind: String): Option[String] =
-        // the walk is an ACCELERATION-ONLY authority (divergence
-        // detection; None → footer inference): a meta that cannot be
-        // read stamps nothing rather than killing the scan — planning
-        // correctness never passes through here, and with an external
-        // metadata-table index the pre-index metas are legitimately
-        // archivable/unreadable while the table stays fully servable
-        scala.util.Try {
-          val node = mapper.readTree(instantMetaText(fs, tablePath, instant, kind))
-          Option(node.get("extraMetadata")).flatMap(em => Option(em.get("schema")))
-            .map(_.asText())
-        }.toOption.flatten
-      // the FILES INDEX sidecar snapshots the authority as of the
-      // index instant — only post-index metas open (the same O(delta)
-      // planning contract the index gives file listing); an index
-      // without a sidecar (or off the timeline) falls back to the
-      // full newest-first walk
-      val idxDir = new Path(hoodieDir(tablePath), "metadata/files")
-      val onTimeline = timeline.map(_._1).toSet
-      val indexed: Option[(String, Option[String])] =
-        if (!fs.exists(idxDir)) None
-        else fs.listStatus(idxDir).map(_.getPath.getName)
-          .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-          .filter(onTimeline.contains).sorted.lastOption
-          .flatMap { pick =>
-            val sc = new Path(idxDir, s"$pick.schema")
-            if (!fs.exists(sc)) None
-            else Some((pick, readText(fs, sc).trim match {
-              case "none" | "" => None
-              case json => Some(json)
-            }))
-          }
-      // newest-first list of every stamped schema in the walked range
-      // (post-index commits + the sidecar's as-of-index authority, or
-      // the full timeline when no index serves)
-      val stamped: Seq[String] = indexed match {
-        case Some((pick, asOfIndex)) =>
-          timeline.reverseIterator.takeWhile(_._1 > pick)
-            .flatMap { case (i, k) => schemaKeyOf(i, k) }
-            .toSeq ++ asOfIndex.toSeq
-        case None =>
-          timeline.reverseIterator
-            .flatMap { case (i, k) => schemaKeyOf(i, k) }
-            .toSeq
+      tablePath: String): Option[org.apache.spark.sql.types.StructType] =
+    declaredDataSchema(load(spark, tablePath))
+
+  private[sources] def declaredDataSchema(
+      tl: HudiTimeline): Option[org.apache.spark.sql.types.StructType] = {
+    def schemaKeyOf(instant: String, kind: String): Option[String] =
+      // the walk is an ACCELERATION-ONLY authority (divergence
+      // detection; None → footer inference): a meta that cannot be
+      // read stamps nothing rather than killing the scan — planning
+      // correctness never passes through here, and with an external
+      // metadata-table index the pre-index metas are legitimately
+      // archivable/unreadable while the table stays fully servable
+      scala.util.Try {
+        Option(tl.commitJson(instant, kind).get("extraMetadata"))
+          .flatMap(em => Option(em.get("schema"))).map(_.asText())
+      }.toOption.flatten
+    // the FILES INDEX sidecar snapshots the authority as of the index
+    // instant — only post-index metas open (the same O(delta) planning
+    // contract the index gives file listing); an index without a
+    // sidecar falls back to the full newest-first walk
+    val indexed: Option[(String, Option[String])] = tl.newestGeneration("files")
+      .filter(pick => tl.entries("metadata/files").contains(s"$pick.schema"))
+      .map { pick =>
+        (pick, HudiTimeline.readText(tl.fs, new Path(tl.metadataDir("files"), s"$pick.schema"))
+          .trim match {
+          case "none" | "" => None
+          case json => Some(json)
+        })
       }
-      resolveDeclared(stamped)
-    })
+    // newest-first list of every stamped schema in the walked range
+    // (post-index commits + the sidecar's as-of-index authority, or
+    // the full timeline when no index serves)
+    val after = indexed.map(_._1)
+    val stamped = tl.instants.reverseIterator.takeWhile(i => after.forall(i._1 > _))
+      .flatMap { case (i, k) => schemaKeyOf(i, k) }.toSeq ++ indexed.flatMap(_._2)
+    resolveDeclared(stamped)
   }
 
   /** Resolution rule shared by the timeline walk: the newest stamped
@@ -386,9 +184,6 @@ object HudiTableReader {
     if (!graftAuthored && !diverged) None
     else scala.util.Try(HudiSchema.fromAvroJson(stamped.head)).toOption
   }
-
-  private val schemaMemo = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), Option[org.apache.spark.sql.types.StructType]]()
 
   /** The schema `spark.read.parquet(path)` infers, read from the one
     * footer on the driver: the same converter settings (binary as
@@ -425,22 +220,22 @@ object HudiTableReader {
     * and a fixed declared list would silently drop them from external
     * snapshots.
     */
-  private[sources] def scanSchema(spark: SparkSession, tablePath: String,
+  private[sources] def scanSchema(tl: HudiTimeline,
       slices: Seq[SliceWrite]): org.apache.spark.sql.types.StructType = {
     val newest = slices.maxBy(_.instant)
-    declaredDataSchema(spark, tablePath) match {
+    declaredDataSchema(tl) match {
       case Some(data) =>
         org.apache.spark.sql.types.StructType(
           data.fields.filterNot(_.name.startsWith("_hoodie_")) ++
-            footerSchema(spark, s"$tablePath/${newest.path}").fields
+            footerSchema(tl.spark, s"${tl.tablePath}/${newest.path}").fields
               .filter(_.name.startsWith("_hoodie_")))
-      case None => footerSchema(spark, s"$tablePath/${slices.head.path}")
+      case None => footerSchema(tl.spark, s"${tl.tablePath}/${slices.head.path}")
     }
   }
 
-  private def readPaths(spark: SparkSession, tablePath: String, slices: Seq[SliceWrite]): DataFrame =
-    spark.read.schema(scanSchema(spark, tablePath, slices))
-      .parquet(slices.map(s => s"$tablePath/${s.path}"): _*)
+  private def readPaths(tl: HudiTimeline, slices: Seq[SliceWrite]): DataFrame =
+    tl.spark.read.schema(scanSchema(tl, slices))
+      .parquet(slices.map(s => s"${tl.tablePath}/${s.path}"): _*)
 
   /** The TIMELINE as a DataFrame (Hudi's own `show commits`
     * inspection surface): one row per completed instant — instant,
@@ -453,9 +248,9 @@ object HudiTableReader {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     import scala.jdk.CollectionConverters._
-    val fs = fsOf(spark, hoodieDir(tablePath))
-    val rows = timelineInstants(spark, tablePath, allowMor = true).map { case (i, k) =>
-      val node = mapper.readTree(instantMetaText(fs, tablePath, i, k))
+    val tl = load(spark, tablePath)
+    val rows = tl.instants.map { case (i, k) =>
+      val node = tl.commitJson(i, k)
       val op = Option(node.get("operationType")).map(_.asText()).getOrElse("UNKNOWN")
       var writes = 0L; var updates = 0L; var bytes = 0L
       val stats = node.get("partitionToWriteStats")
@@ -480,13 +275,7 @@ object HudiTableReader {
   /** True when the timeline or hoodie.properties mark the table
     * MERGE-ON-READ (metadata listing only, no data I/O).
     */
-  def isMor(spark: SparkSession, tablePath: String): Boolean = {
-    val dir = hoodieDir(tablePath)
-    val fs = fsOf(spark, dir)
-    fs.exists(dir) &&
-      (declaresMor(spark, tablePath) ||
-        fs.listStatus(dir).exists(_.getPath.getName.endsWith(".deltacommit")))
-  }
+  def isMor(spark: SparkSession, tablePath: String): Boolean = load(spark, tablePath).isMor
 
   /** One file group at the head of the timeline: its latest base file
     * (absent for log-only groups) and the log files appended AFTER
@@ -505,30 +294,20 @@ object HudiTableReader {
     * whose instant is not on the timeline (rolled back, foreign) is
     * IGNORED — correctness never rides a stale shortcut.
     */
-  private[sources] def filesIndexState(spark: SparkSession, tablePath: String,
-      timeline: Seq[(String, String)]): Option[(String, Seq[GroupSlices])] = {
-    val dir = new Path(hoodieDir(tablePath), "metadata/files")
-    val fs = fsOf(spark, dir)
-    if (!fs.exists(dir)) return None
-    val instants = timeline.map(_._1).toSet
-    val usable = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-      .filter(instants.contains)
-    if (usable.isEmpty) return None
-    val pick = usable.max
-    val rows = spark.read.parquet(new Path(dir, s"$pick.parquet").toString)
-      .select("fileId", "partition", "baseInstant", "basePath", "logs").collect()
-    val groups = rows.toIndexedSeq.map { r =>
-      val fileId = r.getString(0)
-      val base =
-        if (r.isNullAt(2) || r.isNullAt(3)) None
-        else Some(SliceWrite(r.getString(2), fileId, r.getString(3), r.getString(1)))
-      val logs = r.getSeq[org.apache.spark.sql.Row](4)
-        .map(lr => (lr.getString(0), lr.getString(1)))
-      GroupSlices(fileId, base, logs)
+  private def filesIndexState(tl: HudiTimeline): Option[(String, Seq[GroupSlices])] =
+    tl.newestGeneration("files").map { pick =>
+      val rows = tl.spark.read.parquet(new Path(tl.metadataDir("files"), s"$pick.parquet").toString)
+        .select("fileId", "partition", "baseInstant", "basePath", "logs").collect()
+      (pick, rows.toIndexedSeq.map { r =>
+        val fileId = r.getString(0)
+        val base =
+          if (r.isNullAt(2) || r.isNullAt(3)) None
+          else Some(SliceWrite(r.getString(2), fileId, r.getString(3), r.getString(1)))
+        val logs = r.getSeq[org.apache.spark.sql.Row](4)
+          .map(lr => (lr.getString(0), lr.getString(1)))
+        GroupSlices(fileId, base, logs)
+      })
     }
-    Some((pick, groups))
-  }
 
   /** A REAL Hudi metadata table's `files` partition as a planning
     * start point — the external-table analog of [[filesIndexState]]
@@ -542,19 +321,21 @@ object HudiTableReader {
     * Unreadable/absent metadata degrades to None: the index
     * accelerates planning, it never gates a read.
     */
-  private[sources] def externalFilesIndexState(spark: SparkSession, tablePath: String,
-      timeline: Seq[(String, String)]): Option[(String, Seq[GroupSlices])] = {
-    val fs = fsOf(spark, hoodieDir(tablePath))
-    HudiMetadataTable.filesListing(spark, tablePath, timeline.map(_._1).toSet)
+  private def externalFilesIndexState(tl: HudiTimeline): Option[(String, Seq[GroupSlices])] =
+    HudiMetadataTable.filesListing(tl.spark, tl.tablePath, tl.onTimeline)
       .map { case (instant, listing) =>
         val groups = HudiMetadataTable.groupSlices(listing)
-        val replaced = timeline
+        val replaced = tl.instants
           .filter { case (i, k) => k == "replacecommit" && i <= instant }
-          .flatMap { case (i, _) => replacedIdsOf(fs, tablePath, i) }.toSet
+          .flatMap { case (i, _) => tl.replacedIds(i) }.toSet
         (instant,
           if (replaced.isEmpty) groups else groups.filterNot(g => replaced.contains(g.fileId)))
       }
-  }
+
+  /** The head-of-timeline planning start point: graft's parquet files
+    * index first, a REAL Hudi metadata table's `files` HFile otherwise. */
+  private def indexState(tl: HudiTimeline): Option[(String, Seq[GroupSlices])] =
+    filesIndexState(tl).orElse(externalFilesIndexState(tl))
 
   /** Replay the FULL timeline (commits, deltacommits, replacecommits)
     * into per-file-group state: a parquet write repoints the group's
@@ -562,26 +343,20 @@ object HudiTableReader {
     * compaction, or a deltacommit's first base file); a log-file write
     * appends to the group's pending logs; a clustering replacecommit
     * drops its replaced groups. Head-of-timeline plans (upTo = None)
-    * START from the newest files index when one exists — graft's
-    * parquet index first, a REAL Hudi metadata table's `files` HFile
-    * otherwise — and replay only the instants after it.
+    * START from the newest files index when one exists
+    * ([[indexState]]) and replay only the instants after it.
     */
-  private[sources] def morGroups(spark: SparkSession, tablePath: String,
+  private[sources] def morGroups(tl: HudiTimeline,
       upTo: Option[String] = None): Seq[GroupSlices] = {
-    val fs = fsOf(spark, hoodieDir(tablePath))
-    val timeline = timelineInstants(spark, tablePath, allowMor = true)
-    val indexed =
-      if (upTo.isDefined) None
-      else filesIndexState(spark, tablePath, timeline)
-        .orElse(externalFilesIndexState(spark, tablePath, timeline))
+    val indexed = if (upTo.isDefined) None else indexState(tl)
     val state = scala.collection.mutable.LinkedHashMap.empty[String, GroupSlices]
     indexed.foreach(_._2.foreach(g => state(g.fileId) = g))
     val from = indexed.map(_._1)
-    timeline
+    tl.instants
       .filter { case (i, _) => upTo.forall(i <= _) && from.forall(i > _) }
       .foreach { case (instant, kind) =>
-      if (kind == "replacecommit") replacedIdsOf(fs, tablePath, instant).foreach(state.remove)
-      writesOf(fs, tablePath, instant, kind).foreach { w =>
+      if (kind == "replacecommit") tl.replacedIds(instant).foreach(state.remove)
+      tl.writes(instant, kind).foreach { w =>
         if (w.path.endsWith(".parquet")) state(w.fileId) = GroupSlices(w.fileId, Some(w), Nil)
         else {
           val cur = state.getOrElse(w.fileId, GroupSlices(w.fileId, None, Nil))
@@ -590,8 +365,8 @@ object HudiTableReader {
       }
     }
     if (state.isEmpty) throw new IllegalArgumentException(upTo match {
-      case Some(i) => s"$tablePath: no completed instants at or before $i"
-      case None => s"$tablePath: no completed instants in .hoodie"
+      case Some(i) => s"${tl.tablePath}: no completed instants at or before $i"
+      case None => s"${tl.tablePath}: no completed instants in .hoodie"
     })
     state.values.toIndexedSeq
   }
@@ -717,22 +492,22 @@ object HudiTableReader {
     * exist, else from the first log data block's SCHEMA header (the
     * writer schema, driver-side metadata read of one small block).
     */
-  private[sources] def morSchema(spark: SparkSession, tablePath: String,
+  private[sources] def morSchema(tl: HudiTimeline,
       groups: Seq[GroupSlices]): org.apache.spark.sql.types.StructType = {
     val bases = groups.flatMap(_.base)
     if (bases.nonEmpty) {
       // an EVOLVED table resolves the declared commit-schema authority
       // (old bases and old log blocks null-fill the added columns);
       // never-evolved tables keep exact footer inference
-      scanSchema(spark, tablePath, bases)
+      scanSchema(tl, bases)
     } else {
-      val firstLog = groups.flatMap(g => g.logs.headOption.map(l => s"$tablePath/${l._2}"))
+      val firstLog = groups.flatMap(g => g.logs.headOption.map(l => s"${tl.tablePath}/${l._2}"))
         .headOption.getOrElse(throw new IllegalArgumentException(
-          s"$tablePath: MOR table has neither base files nor log files"))
-      val schemaJson = HudiLog.read(spark.sparkContext.hadoopConfiguration, firstLog)
+          s"${tl.tablePath}: MOR table has neither base files nor log files"))
+      val schemaJson = HudiLog.read(tl.spark.sparkContext.hadoopConfiguration, firstLog)
         .collectFirst { case HudiLog.DataBlock(_, js, _) => js }
         .getOrElse(throw new IllegalStateException(
-          s"$tablePath: first log file carries no data block to derive a schema from"))
+          s"${tl.tablePath}: first log file carries no data block to derive a schema from"))
       val avro = new org.apache.avro.Schema.Parser().parse(schemaJson)
       avroToStruct(avro)
     }
@@ -765,8 +540,10 @@ object HudiTableReader {
     * pending logs merged (latest per record key wins, tombstones
     * drop); groups with no pending logs stream through unshuffled.
     */
-  def realtime(spark: SparkSession, tablePath: String): DataFrame =
-    realtimeOf(spark, tablePath, morGroups(spark, tablePath))
+  def realtime(spark: SparkSession, tablePath: String): DataFrame = {
+    val tl = load(spark, tablePath)
+    realtimeOf(tl, morGroups(tl))
+  }
 
   /** POINT-IN-TIME real-time view of a MOR table: the timeline replay
     * cut at `asOfInstant` — each group serves its base as of the
@@ -774,26 +551,28 @@ object HudiTableReader {
     * later cleaned off disk fail loudly at scan time, the same
     * contract as the COW as-of.
     */
-  def realtimeAsOf(spark: SparkSession, tablePath: String, asOfInstant: String): DataFrame =
-    realtimeOf(spark, tablePath, morGroups(spark, tablePath, Some(asOfInstant)))
+  def realtimeAsOf(spark: SparkSession, tablePath: String, asOfInstant: String): DataFrame = {
+    val tl = load(spark, tablePath)
+    realtimeOf(tl, morGroups(tl, Some(asOfInstant)))
+  }
 
-  private def realtimeOf(spark: SparkSession, tablePath: String,
-      groups: Seq[GroupSlices]): DataFrame = {
+  private def realtimeOf(tl: HudiTimeline, groups: Seq[GroupSlices]): DataFrame = {
+    val tablePath = tl.tablePath
     val clean = groups.filter(_.logs.isEmpty).flatMap(_.base)
     val dirty = groups.filter(_.logs.nonEmpty)
     if (dirty.isEmpty) {
       if (clean.isEmpty) throw new IllegalArgumentException(
         s"$tablePath: no base files and no log files on the timeline")
-      return readPaths(spark, tablePath, clean)
+      return readPaths(tl, clean)
     }
-    val schema = morSchema(spark, tablePath, groups)
+    val schema = morSchema(tl, groups)
     if (!schema.fieldNames.contains("_hoodie_record_key"))
       throw new IllegalStateException(
         s"$tablePath: base files carry no _hoodie_record_key — the log merge has no " +
           "record identity to merge on; refusing (read readOptimized for base-only)")
-    val merged = mergeDirtyGroups(spark, tablePath, dirty, schema, keepFileId = false)
+    val merged = mergeDirtyGroups(tl.spark, tablePath, dirty, schema, keepFileId = false)
     if (clean.isEmpty) merged
-    else readPaths(spark, tablePath, clean).select(schema.fieldNames.toIndexedSeq.map(col): _*)
+    else readPaths(tl, clean).select(schema.fieldNames.toIndexedSeq.map(col): _*)
       .unionByName(merged)
   }
 
@@ -802,8 +581,11 @@ object HudiTableReader {
     * as Hudi's own snapshot query returns them).
     */
   def snapshot(spark: SparkSession, tablePath: String): DataFrame =
-    if (isMor(spark, tablePath)) realtime(spark, tablePath)
-    else readPaths(spark, tablePath, activeSlices(spark, tablePath))
+    snapshot(load(spark, tablePath))
+
+  private[sources] def snapshot(tl: HudiTimeline): DataFrame =
+    if (tl.isMor) realtimeOf(tl, morGroups(tl))
+    else readPaths(tl, activeSlices(tl))
 
   /** Partition-pruned COW snapshot: only file slices whose
     * partitionToWriteStats key passes `pruner` reach the scan —
@@ -814,12 +596,13 @@ object HudiTableReader {
     */
   def snapshotPruned(spark: SparkSession, tablePath: String,
       pruner: String => Boolean): DataFrame = {
-    if (isMor(spark, tablePath)) throw new IllegalArgumentException(
+    val tl = load(spark, tablePath)
+    if (tl.isMor) throw new IllegalArgumentException(
       s"$tablePath is MERGE-ON-READ — partition-pruned reads are the COW path")
-    val slices = activeSlices(spark, tablePath).filter(s0 => pruner(s0.partition))
+    val slices = activeSlices(tl).filter(s0 => pruner(s0.partition))
     if (slices.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: the partition pruner rejected every active slice")
-    readPaths(spark, tablePath, slices)
+    readPaths(tl, slices)
   }
 
   /** POINT-IN-TIME query (Hudi's `as.of.instant`): the table exactly
@@ -828,9 +611,11 @@ object HudiTableReader {
     * instant. Slices later cleaned off disk fail loudly at scan time
     * rather than silently serving a different state.
     */
-  def snapshotAsOf(spark: SparkSession, tablePath: String, asOfInstant: String): DataFrame =
-    if (isMor(spark, tablePath)) realtimeAsOf(spark, tablePath, asOfInstant)
-    else readPaths(spark, tablePath, slicesUpTo(spark, tablePath, Some(asOfInstant)))
+  def snapshotAsOf(spark: SparkSession, tablePath: String, asOfInstant: String): DataFrame = {
+    val tl = load(spark, tablePath)
+    if (tl.isMor) realtimeOf(tl, morGroups(tl, Some(asOfInstant)))
+    else readPaths(tl, slicesUpTo(tl, Some(asOfInstant)))
+  }
 
   /** READ-OPTIMIZED view of an external MERGE-ON-READ table — Hudi's
     * own `_ro` contract, as an EXPLICIT opt-in: the latest BASE
@@ -850,17 +635,17 @@ object HudiTableReader {
     * replacecommit drops its replaced groups.
     */
   def readOptimized(spark: SparkSession, tablePath: String): DataFrame = {
-    val fs = fsOf(spark, hoodieDir(tablePath))
+    val tl = load(spark, tablePath)
     val latest = scala.collection.mutable.LinkedHashMap.empty[String, SliceWrite]
-    timelineInstants(spark, tablePath, allowMor = true).foreach { case (instant, kind) =>
-      if (kind == "replacecommit") replacedIdsOf(fs, tablePath, instant).foreach(latest.remove)
-      writesOf(fs, tablePath, instant, kind)
+    tl.instants.foreach { case (instant, kind) =>
+      if (kind == "replacecommit") tl.replacedIds(instant).foreach(latest.remove)
+      tl.writes(instant, kind)
         .filter(_.path.endsWith(".parquet"))
         .foreach(w => latest(w.fileId) = w)
     }
     if (latest.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: no base files on the timeline (nothing compacted yet?)")
-    readPaths(spark, tablePath, latest.values.toIndexedSeq)
+    readPaths(tl, latest.values.toIndexedSeq)
   }
 
   /** Incremental pull on a MERGE-ON-READ table: the real-time merge
@@ -873,10 +658,10 @@ object HudiTableReader {
     * untouched since the checkpoint are NEVER scanned — the pull is
     * bounded by the touched groups' bytes.
     */
-  def morIncrementalSince(spark: SparkSession, tablePath: String,
-      sinceInstant: String): DataFrame = {
-    val groups = morGroups(spark, tablePath)
-    val timeline = timelineInstants(spark, tablePath, allowMor = true)
+  private def morIncrementalSince(tl: HudiTimeline, sinceInstant: String): DataFrame = {
+    val tablePath = tl.tablePath
+    val groups = morGroups(tl)
+    val timeline = tl.instants
     if (!timeline.exists(_._1 > sinceInstant))
       throw new IllegalArgumentException(
         s"$tablePath: no instants after $sinceInstant " +
@@ -886,7 +671,7 @@ object HudiTableReader {
     if (touched.isEmpty)
       throw new IllegalArgumentException(
         s"$tablePath: instants after $sinceInstant touched no file group")
-    val schema = morSchema(spark, tablePath, groups)
+    val schema = morSchema(tl, groups)
     if (!schema.fieldNames.contains("_hoodie_record_key"))
       throw new IllegalStateException(
         s"$tablePath: base files carry no _hoodie_record_key — the log merge has no " +
@@ -895,10 +680,10 @@ object HudiTableReader {
     val clean = touched.filter(_.logs.isEmpty).flatMap(_.base)
     val legs = Seq(
       if (dirty.nonEmpty)
-        Some(mergeDirtyGroups(spark, tablePath, dirty, schema, keepFileId = false))
+        Some(mergeDirtyGroups(tl.spark, tablePath, dirty, schema, keepFileId = false))
       else None,
       if (clean.nonEmpty)
-        Some(readPaths(spark, tablePath, clean)
+        Some(readPaths(tl, clean)
           .select(schema.fieldNames.toIndexedSeq.map(col): _*))
       else None).flatten
     legs.reduce(_ unionByName _)
@@ -907,19 +692,8 @@ object HudiTableReader {
 
   /** The operationType a commit meta file declares ("INSERT",
     * "UPSERT", "COMPACT", "CLUSTER", …; empty when absent). */
-  private def operationTypeOf(fs: FileSystem, tablePath: String,
-      instant: String, kind: String): String = {
-    val node = mapper.readTree(instantMetaText(fs, tablePath, instant, kind))
-    Option(node.get("operationType")).map(_.asText()).getOrElse("")
-  }
-
-  /** Instants with landed CDC images (`.hoodie/cdc/<instant>/` —
-    * [[HudiTableWriter]]'s hoodie.table.cdc.enabled obligation). */
-  private def cdcImageInstants(fs: FileSystem, tablePath: String): Set[String] = {
-    val root = new Path(hoodieDir(tablePath), "cdc")
-    if (!fs.exists(root)) Set.empty
-    else fs.listStatus(root).filter(_.isDirectory).map(_.getPath.getName).toSet
-  }
+  private def operationTypeOf(tl: HudiTimeline, instant: String, kind: String): String =
+    Option(tl.commitJson(instant, kind).get("operationType")).map(_.asText()).getOrElse("")
 
   /** CDC-grade incremental on a MERGE-ON-READ table — the change feed
     * of instants after `sinceInstant`: base files WRITTEN by a
@@ -940,24 +714,24 @@ object HudiTableReader {
     */
   def changeFeedSince(spark: SparkSession, tablePath: String,
       sinceInstant: String): DataFrame = {
-    val fs0 = fsOf(spark, hoodieDir(tablePath))
-    val cdcInstants = cdcImageInstants(fs0, tablePath)
-    if (!isMor(spark, tablePath)) {
+    val tl = load(spark, tablePath)
+    // instants with landed CDC images (`.hoodie/cdc/<instant>/` —
+    // [[HudiTableWriter]]'s hoodie.table.cdc.enabled obligation)
+    val cdcInstants = tl.entries("cdc").toSet
+    if (!tl.isMor) {
       // a COW feed exists ONLY through landed cdc images — without
       // hoodie.table.cdc.enabled the timeline has no pre/delete images
-      require(HudiTableWriter.cdcEnabledOf(spark, tablePath) || cdcInstants.nonEmpty,
+      require(HudiTableWriter.cdcEnabled(tl.properties) || cdcInstants.nonEmpty,
         s"$tablePath is COPY_ON_WRITE — its timeline carries no delete images for a CDC " +
           "feed; use incrementalSince for the upsert-exact post-image pull")
-      return cowChangeFeed(spark, tablePath, sinceInstant, cdcInstants)
+      return cowChangeFeed(tl, sinceInstant, cdcInstants)
     }
-    val fs = fsOf(spark, hoodieDir(tablePath))
-    val groups = morGroups(spark, tablePath)
-    val schema = morSchema(spark, tablePath, groups)
+    val groups = morGroups(tl)
+    val schema = morSchema(tl, groups)
     if (!schema.fieldNames.contains("_hoodie_record_key"))
       throw new IllegalStateException(
         s"$tablePath: no _hoodie_record_key — the feed has no record identity; refusing")
-    val range = timelineInstants(spark, tablePath, allowMor = true)
-      .filter { case (i, _) => i > sinceInstant }
+    val range = tl.instants.filter { case (i, _) => i > sinceInstant }
     if (range.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: no instants after $sinceInstant")
     val cols = schema.fieldNames.toIndexedSeq
@@ -965,7 +739,7 @@ object HudiTableReader {
     val legs = Seq.newBuilder[DataFrame]
     val logTasks = Seq.newBuilder[(String, String)] // (instant, absPath)
     range.foreach { case (instant, kind) =>
-      val op = operationTypeOf(fs, tablePath, instant, kind)
+      val op = operationTypeOf(tl, instant, kind)
       if (op != "COMPACT" && op != "CLUSTER") {
         if (cdcInstants.contains(instant)) {
           // hoodie.table.cdc.enabled precedence: the instant's landed
@@ -976,10 +750,10 @@ object HudiTableReader {
             .select((cols :+ "_change_type").map(col): _*)
             .withColumn("_commit_instant", lit(instant))
         } else {
-          val writes = writesOf(fs, tablePath, instant, kind)
+          val writes = tl.writes(instant, kind)
           val bases = writes.filter(_.path.endsWith(".parquet"))
           if (bases.nonEmpty)
-            legs += readPaths(spark, tablePath, bases)
+            legs += readPaths(tl, bases)
               .where(col("_hoodie_commit_time") === lit(instant))
               .select(cols.map(col): _*)
               .withColumn("_change_type", lit("upsert"))
@@ -1037,22 +811,21 @@ object HudiTableReader {
     * images predates cdc enablement and refuses loudly (its
     * pre-images are unrecoverable — COW rewrote the file groups).
     */
-  private def cowChangeFeed(spark: SparkSession, tablePath: String,
-      sinceInstant: String, cdcInstants: Set[String]): DataFrame = {
-    val fs = fsOf(spark, hoodieDir(tablePath))
-    val range = timelineInstants(spark, tablePath, allowMor = false)
-      .filter { case (i, _) => i > sinceInstant }
+  private def cowChangeFeed(tl: HudiTimeline, sinceInstant: String,
+      cdcInstants: Set[String]): DataFrame = {
+    val (spark, tablePath) = (tl.spark, tl.tablePath)
+    val range = tl.cow.filter { case (i, _) => i > sinceInstant }
     if (range.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: no instants after $sinceInstant")
     val legs = Seq.newBuilder[DataFrame]
     range.foreach { case (instant, kind) =>
-      val op = operationTypeOf(fs, tablePath, instant, kind)
+      val op = operationTypeOf(tl, instant, kind)
       if (op != "COMPACT" && op != "CLUSTER") {
         if (cdcInstants.contains(instant))
           legs += spark.read.parquet(s"$tablePath/.hoodie/cdc/$instant")
             .withColumn("_commit_instant", lit(instant))
         else if (op == "INSERT")
-          legs += readPaths(spark, tablePath, writesOf(fs, tablePath, instant, kind))
+          legs += readPaths(tl, tl.writes(instant, kind))
             .where(col("_hoodie_commit_time") === lit(instant))
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_instant", lit(instant))
@@ -1068,18 +841,6 @@ object HudiTableReader {
     parts.reduce(_.unionByName(_))
   }
 
-  /** Snapshot read with STATS-BASED FILE SKIPPING — the Hudi leg of
-    * the triad beside Delta add.stats and Iceberg manifest bounds:
-    * the newest `.hoodie/metadata/col_stats/<instant>.parquet` index
-    * ([[HudiTableWriter.writeColStatsIndex]]) records per-file
-    * min/max, and files whose recorded range provably misses
-    * `[lo, hi]` on `column` never reach the scan. Files ABSENT from
-    * the index (written after it, or never indexed) are
-    * conservatively KEPT — skipping prunes I/O, never semantics; an
-    * index whose instant left the timeline is ignored entirely.
-    * Rows still need the caller's residual filter (the cut is
-    * file-level). COW only, like the index.
-    */
   /** The file groups a POINT LOOKUP must scan for `keyValues`, plus
     * the scan itself: the record index maps each key to its file
     * group, and every group touched AFTER the index instant is added
@@ -1091,9 +852,14 @@ object HudiTableReader {
     */
   def pointLookupFiles(spark: SparkSession, tablePath: String,
       keyValues: Seq[Any], maxKeys: Int = 100000): Seq[SliceWrite] = {
-    val declared = pointLookupKey(spark, tablePath, keyValues, maxKeys)
-    val slices = activeSlices(spark, tablePath) // COW-only path
-    recordIndexFids(spark, tablePath, keyValues, declared) match {
+    val tl = load(spark, tablePath)
+    lookupFiles(tl, keyValues, pointLookupKey(tl, keyValues, maxKeys))
+  }
+
+  private def lookupFiles(tl: HudiTimeline, keyValues: Seq[Any],
+      declared: String): Seq[SliceWrite] = {
+    val slices = activeSlices(tl) // COW-only path
+    recordIndexFids(tl, keyValues, declared) match {
       case None => slices
       case Some((fids, touched)) =>
         val candidate = slices.filter(s0 =>
@@ -1105,18 +871,28 @@ object HudiTableReader {
     }
   }
 
-  private def pointLookupKey(spark: SparkSession, tablePath: String,
-      keyValues: Seq[Any], maxKeys: Int): String = {
+  private def pointLookupKey(tl: HudiTimeline, keyValues: Seq[Any], maxKeys: Int): String = {
     require(keyValues.nonEmpty && keyValues.size <= maxKeys,
-      s"$tablePath: point lookup takes 1..$maxKeys keys, got ${keyValues.size}")
-    val declared = HudiTableWriter.tableProperties(spark, tablePath)
-      .get("hoodie.table.recordkey.fields")
+      s"${tl.tablePath}: point lookup takes 1..$maxKeys keys, got ${keyValues.size}")
+    val declared = tl.properties.get("hoodie.table.recordkey.fields")
       .map(_.split(',').toIndexedSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
     require(declared.size == 1,
-      s"$tablePath: point lookup needs exactly one declared record key, " +
+      s"${tl.tablePath}: point lookup needs exactly one declared record key, " +
         s"got ${declared.mkString(",")}")
     declared.head
   }
+
+  /** The on-timeline DELTA generations of the record index after its
+    * base generation `base` ([[HudiTableWriter.refreshRecordIndex]]),
+    * ascending. */
+  private[sources] def recordIndexDeltas(tl: HudiTimeline, base: String): IndexedSeq[String] =
+    tl.entries("metadata/record_index").filter(_.endsWith(".delta"))
+      .map(_.stripSuffix(".delta"))
+      .filter(i => tl.onTimeline(i) && i > base).sorted.toIndexedSeq
+
+  /** The file groups written by the instants after `after`. */
+  private def touchedAfter(tl: HudiTimeline, after: String): Set[String] =
+    tl.instants.filter(_._1 > after).flatMap { case (i, k) => tl.writes(i, k).map(_.fileId) }.toSet
 
   /** (matched file-group ids, post-index touched ids) through the
     * newest usable record-index generation chain — None when no
@@ -1124,48 +900,9 @@ object HudiTableReader {
     * set). Works on COW and MOR timelines alike (deltacommits count
     * as touches).
     */
-  private def recordIndexFids(spark: SparkSession, tablePath: String,
-      keyValues: Seq[Any], declaredKey: String): Option[(Set[String], Set[String])] = {
-    val dir = new Path(hoodieDir(tablePath), "metadata/record_index")
-    val fs = fsOf(spark, dir)
-    val timeline = timelineInstants(spark, tablePath, allowMor = true)
-    val onTimeline = timeline.map(_._1).toSet
-    val gens =
-      if (!fs.exists(dir)) Array.empty[String]
-      else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
-    val fulls = gens.filter(g => !g.endsWith(".delta") && onTimeline.contains(g))
-    if (fulls.isEmpty) {
-      // no graft parquet generations: a REAL Hudi metadata table's
-      // record_index (HFile shards) answers instead — seeked, not
-      // scanned ([[HudiMetadataTable.recordIndexProbe]]), with the
-      // same matched+post-index-touched contract
-      val keyStrings = keyValues.flatMap(v => Seq(s"$declaredKey:$v", s"$v"))
-      return HudiMetadataTable.recordIndexProbe(spark, tablePath, onTimeline, keyStrings)
-        .map { case (idxInstant, bindings) =>
-          val touched = timeline.filter(_._1 > idxInstant).flatMap { case (i, k) =>
-            writesOf(fs, tablePath, i, k).map(_.fileId)
-          }.toSet
-          (bindings.values.toSet, touched)
-        }
-    }
-    val base = fulls.max
-    // DELTA generations after the base ([[HudiTableWriter
-    // .refreshRecordIndex]]): each re-enumerates the groups its
-    // commits touched and names them in a `_covered` sidecar. A delta
-    // missing its sidecar is incomplete — it AND everything after it
-    // are ignored (the touched-set fallback below covers their
-    // instants exactly as if the refresh never ran).
-    val deltaInstants = gens.filter(_.endsWith(".delta"))
-      .map(_.stripSuffix(".delta"))
-      .filter(i => onTimeline.contains(i) && i > base).sorted.toIndexedSeq
-    val coveredBy: IndexedSeq[(String, Set[String])] = deltaInstants
-      .takeWhile(i => fs.exists(new Path(dir, s"$i.delta/_covered")))
-      .map { i =>
-        val cov = readText(fs, new Path(dir, s"$i.delta/_covered"))
-          .linesIterator.map(_.trim).filter(_.nonEmpty).toSet
-        (i, cov)
-      }
-    val pick = (base +: coveredBy.map(_._1)).max
+  private def recordIndexFids(tl: HudiTimeline, keyValues: Seq[Any],
+      declaredKey: String): Option[(Set[String], Set[String])] = {
+    val dir = tl.metadataDir("record_index")
     // the index stores `_hoodie_record_key` VERBATIM. Graft stamps
     // Hudi's `field:value` form, but real SimpleKeyGenerator
     // single-key tables stamp the RAW value — probing only one form
@@ -1174,6 +911,32 @@ object HudiTableReader {
     // harmless (pointLookup's final key filter is exact), a missed
     // group is wrong.
     val keyStrings = keyValues.flatMap(v => Seq(s"$declaredKey:$v", s"$v"))
+    val base = tl.newestGeneration("record_index") match {
+      case Some(b) => b
+      case None =>
+        // no graft parquet generations: a REAL Hudi metadata table's
+        // record_index (HFile shards) answers instead — seeked, not
+        // scanned ([[HudiMetadataTable.recordIndexProbe]]), with the
+        // same matched+post-index-touched contract
+        return HudiMetadataTable.recordIndexProbe(tl.spark, tl.tablePath, tl.onTimeline,
+            keyStrings)
+          .map { case (idxInstant, bindings) =>
+            (bindings.values.toSet, touchedAfter(tl, idxInstant))
+          }
+    }
+    // DELTA generations after the base: each re-enumerates the groups
+    // its commits touched and names them in a `_covered` sidecar. A
+    // delta missing its sidecar is incomplete — it AND everything after
+    // it are ignored (the touched-set fallback below covers their
+    // instants exactly as if the refresh never ran).
+    val coveredBy: IndexedSeq[(String, Set[String])] = recordIndexDeltas(tl, base)
+      .takeWhile(i => tl.fs.exists(new Path(dir, s"$i.delta/_covered")))
+      .map { i =>
+        val cov = HudiTimeline.readText(tl.fs, new Path(dir, s"$i.delta/_covered"))
+          .linesIterator.map(_.trim).filter(_.nonEmpty).toSet
+        (i, cov)
+      }
+    val pick = (base +: coveredBy.map(_._1)).max
     // every generation is key-range-clustered, so each IN-filter
     // prunes to a couple of files via footer bounds; |keys| rows per
     // generation come back — newest binding per key wins, and a
@@ -1182,7 +945,7 @@ object HudiTableReader {
     val genPaths = (new Path(dir, base).toString, base) +:
       coveredBy.map { case (i, _) => (new Path(dir, s"$i.delta").toString, i) }
     val cand = genPaths.map { case (p, gen) =>
-      spark.read.parquet(p)
+      tl.spark.read.parquet(p)
         .where(col("key").isin(keyStrings: _*))
         .select(col("key"), col("fileId"), lit(gen).as("gen"))
     }.reduce(_.unionByName(_)).collect()
@@ -1194,10 +957,7 @@ object HudiTableReader {
     // groups written after the index head: new keys, rewritten
     // groups, clustering targets — all candidates on top of the
     // index's answer
-    val touched = timeline.filter(_._1 > pick).flatMap { case (i, k) =>
-      writesOf(fs, tablePath, i, k).map(_.fileId)
-    }.toSet
-    Some((fids, touched))
+    Some((fids, touchedAfter(tl, pick)))
   }
 
   /** Point lookup THROUGH the record index: scan only the matched +
@@ -1207,81 +967,90 @@ object HudiTableReader {
     * build never resurrect). */
   def pointLookup(spark: SparkSession, tablePath: String,
       keyValues: Seq[Any], maxKeys: Int = 100000): DataFrame = {
-    if (isMor(spark, tablePath)) {
-      val declared = pointLookupKey(spark, tablePath, keyValues, maxKeys)
-      val groups = morGroups(spark, tablePath)
-      val use = recordIndexFids(spark, tablePath, keyValues, declared) match {
-        case None => groups
-        case Some((fids, touched)) =>
-          val cand = groups.filter(g =>
-            fids.contains(g.fileId) || touched.contains(g.fileId))
-          if (cand.nonEmpty) cand else groups.take(1)
-      }
-      return realtimeOf(spark, tablePath, use)
-        .where(col(declared).isin(keyValues: _*))
-    }
-    val declared = pointLookupKey(spark, tablePath, keyValues, maxKeys)
-    val files = pointLookupFiles(spark, tablePath, keyValues, maxKeys)
-    readPaths(spark, tablePath, files)
-      .where(col(declared).isin(keyValues: _*))
+    val tl = load(spark, tablePath)
+    val declared = pointLookupKey(tl, keyValues, maxKeys)
+    val rows =
+      if (tl.isMor) {
+        val groups = morGroups(tl)
+        realtimeOf(tl, recordIndexFids(tl, keyValues, declared) match {
+          case None => groups
+          case Some((fids, touched)) =>
+            val cand = groups.filter(g =>
+              fids.contains(g.fileId) || touched.contains(g.fileId))
+            if (cand.nonEmpty) cand else groups.take(1)
+        })
+      } else readPaths(tl, lookupFiles(tl, keyValues, declared))
+    rows.where(col(declared).isin(keyValues: _*))
   }
 
+  /** Snapshot read with STATS-BASED FILE SKIPPING — the Hudi leg of
+    * the triad beside Delta add.stats and Iceberg manifest bounds:
+    * the newest `.hoodie/metadata/col_stats/<instant>.parquet` index
+    * ([[HudiTableWriter.writeColStatsIndex]]) records per-file
+    * min/max, and files whose recorded range provably misses
+    * `[lo, hi]` on `column` never reach the scan. Files ABSENT from
+    * the index (written after it, or never indexed) are
+    * conservatively KEPT — skipping prunes I/O, never semantics; an
+    * index whose instant left the timeline is ignored entirely.
+    * Rows still need the caller's residual filter (the cut is
+    * file-level). MOR tables prune by file group
+    * ([[morSnapshotSkipping]]).
+    */
   def snapshotSkipping(spark: SparkSession, tablePath: String,
-      column: String, lo: Double, hi: Double): DataFrame = {
-    if (isMor(spark, tablePath))
-      return morSnapshotSkipping(spark, tablePath, column, lo, hi)
-    val slices = activeSlices(spark, tablePath) // COW path
-    val dir = new Path(hoodieDir(tablePath), "metadata/col_stats")
-    val fs = fsOf(spark, dir)
-    // a REAL Hudi metadata table's column_stats partition prunes when
-    // graft's own parquet index is absent — file-name-keyed ranges,
-    // provable misses drop, files absent from the index (post-index
-    // writes, non-indexed columns) keep conservatively
-    def externalPrune(ss: Seq[SliceWrite]): Seq[SliceWrite] =
-      HudiMetadataTable.colStatsListing(spark, tablePath,
-        instants(spark, tablePath).map(_._1).toSet) match {
-        case None => ss
-        case Some((_, stats)) =>
-          val misses = stats.filter(_.column == column).flatMap(cs =>
-            for { mn <- cs.min; mx <- cs.max if mn > hi || mx < lo }
-              yield cs.fileName).toSet
-          ss.filterNot(s0 =>
-            misses.contains(s0.path.substring(s0.path.lastIndexOf('/') + 1)))
-      }
-    val kept =
-      if (!fs.exists(dir)) externalPrune(slices)
-      else {
-        val timeline = instants(spark, tablePath).map(_._1).toSet
-        val usable = fs.listStatus(dir).map(_.getPath.getName)
-          .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-          .filter(timeline.contains)
-        if (usable.isEmpty) externalPrune(slices)
-        else {
-          val idx = spark.read.parquet(new Path(dir, s"${usable.max}.parquet").toString)
-          val mnC = s"min_$column"; val mxC = s"max_$column"
-          if (!idx.columns.contains(mnC)) slices
-          else {
-            // (file → provably-misses) — |files| driver metadata
-            def num(v: Any): Option[Double] = v match {
-              case n: java.lang.Number => Some(n.doubleValue())
-              case _ => None
-            }
-            val misses = idx.select("_g_file", mnC, mxC).collect().flatMap { r =>
-              val out = for {
-                mn <- Option(r.get(1)).flatMap(num)
-                mx <- Option(r.get(2)).flatMap(num)
-              } yield mn > hi || mx < lo
-              out.filter(identity).map(_ => r.getString(0))
-            }.toSet
-            slices.filterNot(s0 => misses.contains(s0.path))
-          }
+      column: String, lo: Double, hi: Double): DataFrame =
+    snapshotSkipping(load(spark, tablePath), column, lo, hi)
+
+  private def snapshotSkipping(tl: HudiTimeline, column: String, lo: Double,
+      hi: Double): DataFrame = {
+    if (tl.isMor) return morSnapshotSkipping(tl, column, lo, hi)
+    val slices = activeSlices(tl) // COW path
+    val kept = colStatsMisses(tl, column, lo, hi) match {
+      case Some((_, misses)) => slices.filterNot(s0 => misses.contains(s0.path))
+      // a REAL Hudi metadata table's column_stats partition prunes when
+      // graft's own parquet index is absent — file-name-keyed ranges,
+      // provable misses drop, files absent from the index (post-index
+      // writes, non-indexed columns) keep conservatively
+      case None =>
+        HudiMetadataTable.colStatsListing(tl.spark, tl.tablePath, tl.onTimeline) match {
+          case None => slices
+          case Some((_, stats)) =>
+            val misses = stats.filter(_.column == column).flatMap(cs =>
+              for { mn <- cs.min; mx <- cs.max if mn > hi || mx < lo }
+                yield cs.fileName).toSet
+            slices.filterNot(s0 =>
+              misses.contains(s0.path.substring(s0.path.lastIndexOf('/') + 1)))
         }
-      }
+    }
     if (kept.isEmpty) throw new IllegalArgumentException(
-      s"$tablePath: every file provably misses [$lo, $hi] on $column — empty result " +
+      s"${tl.tablePath}: every file provably misses [$lo, $hi] on $column — empty result " +
         "(read the snapshot if you wanted the unfiltered table)")
-    readPaths(spark, tablePath, kept)
+    readPaths(tl, kept)
   }
+
+  /** The newest usable col-stats generation and the `_g_file` keys
+    * whose recorded range on `column` provably misses `[lo, hi]`
+    * (|files| driver metadata; none when the index does not carry
+    * the column). None without a usable index. */
+  private def colStatsMisses(tl: HudiTimeline, column: String, lo: Double,
+      hi: Double): Option[(String, Set[String])] =
+    tl.newestGeneration("col_stats").map { pick =>
+      val idx = tl.spark.read.parquet(new Path(tl.metadataDir("col_stats"), s"$pick.parquet").toString)
+      val mnC = s"min_$column"; val mxC = s"max_$column"
+      if (!idx.columns.contains(mnC)) (pick, Set.empty[String])
+      else {
+        def num(v: Any): Option[Double] = v match {
+          case n: java.lang.Number => Some(n.doubleValue())
+          case _ => None
+        }
+        (pick, idx.select("_g_file", mnC, mxC).collect().flatMap { r =>
+          val out = for {
+            mn <- Option(r.get(1)).flatMap(num)
+            mx <- Option(r.get(2)).flatMap(num)
+          } yield mn > hi || mx < lo
+          out.filter(identity).map(_ => r.getString(0))
+        }.toSet)
+      }
+    }
 
   /** MOR skipping: the prune unit is the file GROUP (the index rows
     * key `_g_file` by group id — [[HudiTableWriter.writeColStatsIndex]]'s
@@ -1290,47 +1059,21 @@ object HudiTableReader {
     * conservatively — their indexed range is stale (a log block may
     * have widened it), and pruning on stale stats would lose rows.
     */
-  private def morSnapshotSkipping(spark: SparkSession, tablePath: String,
-      column: String, lo: Double, hi: Double): DataFrame = {
-    val groups = morGroups(spark, tablePath)
-    val dir = new Path(hoodieDir(tablePath), "metadata/col_stats")
-    val fs = fsOf(spark, dir)
-    val kept =
-      if (!fs.exists(dir)) groups
-      else {
-        val onTimeline = timelineInstants(spark, tablePath, allowMor = true).map(_._1).toSet
-        val usable = fs.listStatus(dir).map(_.getPath.getName)
-          .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-          .filter(onTimeline.contains)
-        if (usable.isEmpty) groups
-        else {
-          val pick = usable.max
-          val idx = spark.read.parquet(new Path(dir, s"$pick.parquet").toString)
-          val mnC = s"min_$column"; val mxC = s"max_$column"
-          if (!idx.columns.contains(mnC)) groups
-          else {
-            def num(v: Any): Option[Double] = v match {
-              case n: java.lang.Number => Some(n.doubleValue())
-              case _ => None
-            }
-            val misses = idx.select("_g_file", mnC, mxC).collect().flatMap { r =>
-              val out = for {
-                mn <- Option(r.get(1)).flatMap(num)
-                mx <- Option(r.get(2)).flatMap(num)
-              } yield mn > hi || mx < lo
-              out.filter(identity).map(_ => r.getString(0))
-            }.toSet
-            groups.filter { g =>
-              val newest = (g.base.map(_.instant) ++ g.logs.map(_._1)).max
-              newest > pick || !misses.contains(g.fileId)
-            }
-          }
+  private def morSnapshotSkipping(tl: HudiTimeline, column: String, lo: Double,
+      hi: Double): DataFrame = {
+    val groups = morGroups(tl)
+    val kept = colStatsMisses(tl, column, lo, hi) match {
+      case None => groups
+      case Some((pick, misses)) =>
+        groups.filter { g =>
+          val newest = (g.base.map(_.instant) ++ g.logs.map(_._1)).max
+          newest > pick || !misses.contains(g.fileId)
         }
-      }
+    }
     if (kept.isEmpty) throw new IllegalArgumentException(
-      s"$tablePath: every group provably misses [$lo, $hi] on $column — empty result " +
+      s"${tl.tablePath}: every group provably misses [$lo, $hi] on $column — empty result " +
         "(read the snapshot if you wanted the unfiltered table)")
-    realtimeOf(spark, tablePath, kept)
+    realtimeOf(tl, kept)
   }
 
   /** The skipping plan's file count — what specs and queries prove
@@ -1338,8 +1081,9 @@ object HudiTableReader {
   def skippingPlanFiles(spark: SparkSession, tablePath: String,
       column: String, lo: Double, hi: Double): Int = {
     // same resolution as snapshotSkipping, counting instead of reading
-    val before = activeSlices(spark, tablePath).size
-    val df = snapshotSkipping(spark, tablePath, column, lo, hi)
+    val tl = load(spark, tablePath)
+    val before = activeSlices(tl).size
+    val df = snapshotSkipping(tl, column, lo, hi)
     math.min(before, df.inputFiles.length)
   }
 
@@ -1353,12 +1097,11 @@ object HudiTableReader {
     * checkpoint.
     */
   def incrementalSince(spark: SparkSession, tablePath: String, sinceInstant: String): DataFrame = {
-    if (isMor(spark, tablePath)) return morIncrementalSince(spark, tablePath, sinceInstant)
-    val fs = fsOf(spark, hoodieDir(tablePath))
-    // archived timelines refuse upstream in the instants listing —
-    // per-group pruning (and slice discovery itself) cannot be
-    // trusted once instants rotate out of the active listing
-    val timeline = instants(spark, tablePath)
+    val tl = load(spark, tablePath)
+    if (tl.isMor) return morIncrementalSince(tl, sinceInstant)
+    // archived instants replay like active ones, so a checkpoint
+    // older than the archival horizon still prunes to touched groups
+    val timeline = tl.cow
     val newer = timeline.collect { case (i, "commit") if i > sinceInstant => i }
     if (!timeline.exists(_._1 > sinceInstant))
       throw new IllegalArgumentException(
@@ -1375,14 +1118,14 @@ object HudiTableReader {
     // error.
     val clusteredAfter = timeline
       .exists(i => i._2 == "replacecommit" && i._1 > sinceInstant)
-    val active = activeSlices(spark, tablePath)
+    val active = activeSlices(tl)
     val slices =
       if (clusteredAfter || newer.isEmpty) active
       else {
-        val touched = newer.flatMap(i => writesOf(fs, tablePath, i).map(_.fileId)).toSet
+        val touched = newer.flatMap(i => tl.writes(i, "commit").map(_.fileId)).toSet
         active.filter(s => touched.contains(s.fileId))
       }
-    readPaths(spark, tablePath, slices)
+    readPaths(tl, slices)
       .filter(col("_hoodie_commit_time") > lit(sinceInstant))
   }
 }

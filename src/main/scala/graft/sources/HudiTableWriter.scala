@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import HudiTimeline.hoodieDir
+
 /** APPEND-ONLY writer for Apache Hudi COPY-ON-WRITE tables readable
   * by external engines — the graft counterpart of the reference's
   * table-producing job itself (generate_hudi_table.py:86-214 writes a
@@ -58,13 +60,14 @@ object HudiTableWriter {
     */
   val MaxBroadcastUpsertKeys: Long = 4L * 1000 * 1000
 
-  private def hoodieDir(tablePath: String): Path = new Path(tablePath, ".hoodie")
-
   /** True when hoodie.properties obliges data-changing writes to land
     * CDC images (hoodie.table.cdc.enabled — Hudi's RFC-51 table
     * property). */
   private[sources] def cdcEnabledOf(spark: SparkSession, tablePath: String): Boolean =
-    tableProperties(spark, tablePath).get("hoodie.table.cdc.enabled").contains("true")
+    cdcEnabled(HudiTimeline.properties(spark, tablePath))
+
+  private[sources] def cdcEnabled(props: Map[String, String]): Boolean =
+    props.get("hoodie.table.cdc.enabled").contains("true")
 
   /** Land one instant's CDC images — full rows (meta columns
     * included) tagged `_change_type` (update_preimage /
@@ -116,22 +119,6 @@ object HudiTableWriter {
     }
   }
 
-  /** Table properties from hoodie.properties, as key→value. */
-  private[sources] def tableProperties(spark: SparkSession, tablePath: String): Map[String, String] = {
-    val p = new Path(hoodieDir(tablePath), "hoodie.properties")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      text.linesIterator
-        .map(_.trim)
-        .filter(l => l.nonEmpty && !l.startsWith("#") && l.contains('='))
-        .map { l => val i = l.indexOf('='); l.substring(0, i).trim -> l.substring(i + 1).trim }
-        .toMap
-    }
-  }
-
   /** A comma-separated field list property (empty when absent). */
   private def listProperty(props: Map[String, String], key: String): Seq[String] =
     props.get(key).map(_.split(',').toIndexedSeq.map(_.trim).filter(_.nonEmpty))
@@ -139,7 +126,10 @@ object HudiTableWriter {
 
   /** The record-key fields the TABLE declares (empty = keyless). */
   def declaredRecordKeys(spark: SparkSession, tablePath: String): Seq[String] =
-    listProperty(tableProperties(spark, tablePath), "hoodie.table.recordkey.fields")
+    recordKeysOf(HudiTimeline.properties(spark, tablePath))
+
+  private def recordKeysOf(props: Map[String, String]): Seq[String] =
+    listProperty(props, "hoodie.table.recordkey.fields")
 
   /** Stamp the Hudi meta columns an external reader expects. */
   private def stamped(df: DataFrame, instant: String, recordKeys: Seq[String],
@@ -163,7 +153,10 @@ object HudiTableWriter {
 
   /** The partition fields the TABLE declares (empty = unpartitioned). */
   def declaredPartitionFields(spark: SparkSession, tablePath: String): Seq[String] =
-    listProperty(tableProperties(spark, tablePath), "hoodie.table.partition.fields")
+    partitionFieldsOf(HudiTimeline.properties(spark, tablePath))
+
+  private def partitionFieldsOf(props: Map[String, String]): Seq[String] =
+    listProperty(props, "hoodie.table.partition.fields")
 
   /** One written file's entry in a commit's `partitionToWriteStats`. */
   private[sources] final case class WriteStat(partition: String, fileId: String, path: String,
@@ -316,19 +309,19 @@ object HudiTableWriter {
     */
   def append(df: DataFrame, tablePath: String, recordKeys: Seq[String] = Nil,
       extraMetadata: Map[String, String] = Map.empty): String = {
-    val spark = df.sparkSession
-    val declared = declaredRecordKeys(spark, tablePath)
+    val tl = HudiTimeline.load(df.sparkSession, tablePath)
+    val declared = recordKeysOf(tl.properties)
     require(recordKeys.isEmpty || recordKeys == declared,
       s"$tablePath: append asserts record keys ${recordKeys.mkString(",")} but the table " +
         s"declares hoodie.table.recordkey.fields=${declared.mkString(",")} — the table " +
         "property wins; drop the argument or fix the expectation")
-    val evolved = evolutionOf(df, tablePath, HudiTableReader.snapshot(spark, tablePath).schema)
+    val evolved = evolutionOf(df, tablePath, HudiTableReader.snapshot(tl).schema)
     // MOR inserts land under deltacommits (Hudi's MOR write path —
     // an ordinary commit on a MOR timeline means compaction); the
     // partitioning comes from the TABLE's declaration, like the keys
-    val kind = if (HudiTableReader.isMor(spark, tablePath)) "deltacommit" else "commit"
+    val kind = if (tl.isMor) "deltacommit" else "commit"
     insertCommit(df, tablePath, declared, kind,
-      partitionBy = declaredPartitionFields(spark, tablePath),
+      partitionBy = partitionFieldsOf(tl.properties),
       extraMetadata = extraMetadata ++ evolved.map("schema" -> _))
   }
 
@@ -376,18 +369,15 @@ object HudiTableWriter {
     * slices were computed from a now-stale snapshot — publishing
     * would silently clobber the winner, so it refuses loudly instead
     * (Hudi itself requires a lock provider for full multi-writer; the
-    * residual check-to-create window is that provider's job).
+    * residual check-to-create window is that provider's job). It loads
+    * a fresh timeline: it exists to see the commits that landed after
+    * the upsert's own load.
     */
   private[sources] def validateNoConcurrentOverlap(spark: SparkSession, tablePath: String,
       plannedHead: String, ourFids: Set[String]): Unit = {
-    val fs = hoodieDir(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val interleaved = HudiTableReader
-      .timelineInstants(spark, tablePath, allowMor = false)
-      .filter(_._1 > plannedHead)
-    interleaved.find { case (i, k) =>
-      k == "replacecommit" ||
-        HudiTableReader.writesOf(fs, tablePath, i, k)
-          .exists(w => ourFids.contains(w.fileId))
+    val tl = HudiTimeline.load(spark, tablePath)
+    tl.cow.filter(_._1 > plannedHead).find { case (i, k) =>
+      k == "replacecommit" || tl.writes(i, k).exists(w => ourFids.contains(w.fileId))
     }.foreach { case (i, k) =>
       throw new java.util.ConcurrentModificationException(
         s"$tablePath: concurrent $k at instant $i touched file groups this upsert " +
@@ -416,14 +406,10 @@ object HudiTableWriter {
     * metadata, |completed instants|-bounded.
     */
   def lastBatchId(spark: SparkSession, tablePath: String, appId: String): Option[Long] = {
-    val fs = hoodieDir(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val ids = HudiTableReader.timelineInstants(spark, tablePath, allowMor = true)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val ids = tl.instants
       .flatMap { case (instant, kind) =>
-        val p = new Path(hoodieDir(tablePath), s"$instant.$kind")
-        val in = fs.open(p)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-        val extra = mapper.readTree(text).get("extraMetadata")
+        val extra = tl.commitJson(instant, kind).get("extraMetadata")
         if (extra == null || !extra.isObject) None
         else if (!Option(extra.get(SinkAppKey)).exists(_.asText() == appId)) None
         else Option(extra.get(SinkBatchKey))
@@ -490,12 +476,13 @@ object HudiTableWriter {
   def upsert(df: DataFrame, tablePath: String,
       maxBroadcastKeys: Long = MaxBroadcastUpsertKeys): String = {
     val spark = df.sparkSession
-    val props = tableProperties(spark, tablePath)
-    val keys = listProperty(props, "hoodie.table.recordkey.fields")
+    val tl = HudiTimeline.load(spark, tablePath)
+    val props = tl.properties
+    val keys = recordKeysOf(props)
     require(keys.nonEmpty,
       s"$tablePath: upsert routes by record key — the table declares none " +
         "(hoodie.table.recordkey.fields)")
-    val partitionBy = listProperty(props, "hoodie.table.partition.fields")
+    val partitionBy = partitionFieldsOf(props)
     val precombine = props.get("hoodie.table.precombine.field")
     // in-batch combine: latest-wins on the declared precombine field,
     // or loudly require key-uniqueness when the table declares none
@@ -521,12 +508,10 @@ object HudiTableWriter {
     // MERGE_ON_READ: the upsert is MOR's OWN write shape — one
     // deltacommit carrying log blocks for matched keys and new base
     // files for unseen keys (no base rewritten)
-    if (HudiTableReader.isMor(spark, tablePath)) {
+    if (tl.isMor) {
       // additive evolution against the real-time view's columns
-      val evolvedJson = evolutionOf(df, tablePath,
-        HudiTableReader.snapshot(spark, tablePath).schema)
-      return morUpsert(combined(), tablePath, keys, partitionBy, evolvedJson,
-        dupGate = dupGate)
+      val evolvedJson = evolutionOf(df, tablePath, HudiTableReader.snapshot(tl).schema)
+      return morUpsert(tl, combined(), keys, partitionBy, evolvedJson, dupGate = dupGate)
     }
     val instant = instantNow(0L)
     // BLOOM-INDEX PRUNE: groups whose per-file filter proves every
@@ -542,18 +527,17 @@ object HudiTableWriter {
       if (keys.size == 1)
         graftKeyProbe.unionAll(df.select(col(keys.head).cast("string").as("_g_probe")))
       else graftKeyProbe
-    // the timeline head this upsert is PLANNED against — captured
-    // BEFORE the slice listing so every instant that lands after
-    // planning (including between head-read and listing) falls on the
-    // `> plannedHead` side of the publish-time overlap validation
-    val plannedHead = HudiTableReader.latestInstant(spark, tablePath)
-    val slices = bloomPruneSlices(spark, tablePath,
-      HudiTableReader.activeSlices(spark, tablePath), probes)
+    // the timeline head this upsert is PLANNED against: the slices come
+    // from the same load, so every instant that lands after planning
+    // falls on the `> plannedHead` side of the publish-time overlap
+    // validation
+    val plannedHead = tl.head
+    val slices = bloomPruneSlices(tl, HudiTableReader.activeSlices(tl), probes)
     val sliceByFid = slices.map(s => s.fileId -> s).toMap
     // the ONE base scan: its schema resolves on the driver (declared
     // once the table evolved — old base files null-fill — else a
     // footer) and is also the table schema the evolution gate checks
-    val scanSchema = HudiTableReader.scanSchema(spark, tablePath, slices)
+    val scanSchema = HudiTableReader.scanSchema(tl, slices)
     // additive evolution: a batch ADDING columns commits the evolved
     // schema; carried rows null-fill below. Drops/retypes refuse.
     val evolvedJson = evolutionOf(df, tablePath, scanSchema)
@@ -801,11 +785,10 @@ object HudiTableWriter {
     * by |touched groups|; inserts land as new groups, one per (write
     * task, table partition), from one write with no added shuffle.
     */
-  private def morUpsert(deduped: DataFrame, tablePath: String, keys: Seq[String],
-      partitionBy: Seq[String], evolvedJson: Option[String] = None,
-      dupGate: Boolean = false): String = {
-    val spark = deduped.sparkSession
-    val groups = HudiTableReader.morGroups(spark, tablePath)
+  private def morUpsert(tl: HudiTimeline, deduped: DataFrame, keys: Seq[String],
+      partitionBy: Seq[String], evolvedJson: Option[String], dupGate: Boolean): String = {
+    val (spark, tablePath) = (tl.spark, tl.tablePath)
+    val groups = HudiTableReader.morGroups(tl)
     val instant = instantNow(0L)
     val stampedDf = stamped(deduped, instant, keys, partitionBy)
     val recSchema = stampedDf.schema
@@ -831,8 +814,8 @@ object HudiTableWriter {
       // view (one key-matched scan — the extra read Hudi's own cdc
       // supplemental logging pays too), landed BEFORE any log file
       // appends so the scan still sees the pre-write state
-      if (cdcEnabledOf(spark, tablePath)) {
-        val rt0 = HudiTableReader.snapshot(spark, tablePath)
+      if (cdcEnabled(tl.properties)) {
+        val rt0 = HudiTableReader.snapshot(tl)
         // an EVOLVING batch is wider than the pre-write view: the
         // pre-images null-fill the columns this very commit adds
         val rt = recSchema.fields.filterNot(f => rt0.columns.contains(f.name))
@@ -930,13 +913,14 @@ object HudiTableWriter {
     */
   def updateLog(df: DataFrame, tablePath: String): String = {
     val spark = df.sparkSession
-    val keys = declaredRecordKeys(spark, tablePath)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val keys = recordKeysOf(tl.properties)
     require(keys.nonEmpty, s"$tablePath: log routing needs declared record keys")
-    require(HudiTableReader.isMor(spark, tablePath),
+    require(tl.isMor,
       s"$tablePath is COPY_ON_WRITE — log appends are MOR machinery; use append()")
-    val groups = HudiTableReader.morGroups(spark, tablePath)
+    val groups = HudiTableReader.morGroups(tl)
     val instant = instantNow(0L)
-    val stampedDf = stamped(df, instant, keys, declaredPartitionFields(spark, tablePath))
+    val stampedDf = stamped(df, instant, keys, partitionFieldsOf(tl.properties))
     val recSchema = stampedDf.schema
     val avroJson = HudiLog.avroSchemaOf(recSchema).toString
     val routedBase = routeByKey(spark, tablePath,
@@ -956,11 +940,12 @@ object HudiTableWriter {
     */
   def deleteLog(df: DataFrame, tablePath: String): String = {
     val spark = df.sparkSession
-    val keys = declaredRecordKeys(spark, tablePath)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val keys = recordKeysOf(tl.properties)
     require(keys.nonEmpty, s"$tablePath: log routing needs declared record keys")
-    require(HudiTableReader.isMor(spark, tablePath),
+    require(tl.isMor,
       s"$tablePath is COPY_ON_WRITE — log deletes are MOR machinery")
-    val groups = HudiTableReader.morGroups(spark, tablePath)
+    val groups = HudiTableReader.morGroups(tl)
     val instant = instantNow(0L)
     val keyed = df.withColumn("_g_key",
       concat_ws(",", keys.map(k => concat(lit(s"$k:"), col(k).cast("string"))): _*))
@@ -968,8 +953,8 @@ object HudiTableWriter {
     // cdc obligation: a delete's image is the row it removes — the
     // PRE-image from the current real-time view, landed before any
     // tombstone block appends
-    if (cdcEnabledOf(spark, tablePath)) {
-      val rt = HudiTableReader.snapshot(spark, tablePath)
+    if (cdcEnabled(tl.properties)) {
+      val rt = HudiTableReader.snapshot(tl)
       val del = rt.join(broadcast(keyed.withColumnRenamed("_g_key", "_hoodie_record_key")),
           Seq("_hoodie_record_key"), "left_semi")
         .withColumn("_change_type", lit("delete"))
@@ -1057,8 +1042,9 @@ object HudiTableWriter {
     */
   def cluster(spark: SparkSession, tablePath: String, targetGroups: Int): String = {
     require(targetGroups >= 1, "targetGroups must be >= 1")
-    val partitionBy = declaredPartitionFields(spark, tablePath)
-    val groups = HudiTableReader.morGroups(spark, tablePath)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val partitionBy = partitionFieldsOf(tl.properties)
+    val groups = HudiTableReader.morGroups(tl)
     require(groups.forall(_.logs.isEmpty),
       s"$tablePath: file groups carry pending log files — compact before clustering")
     val slices = groups.flatMap(_.base)
@@ -1068,7 +1054,7 @@ object HudiTableWriter {
     // PER PARTITION on partitioned tables (Hudi's own clustering
     // plans per partition): a (partition, bucket) shuffle key gives
     // at most targetGroups write tasks per partition, one shuffle total
-    val raw = spark.read.schema(HudiTableReader.scanSchema(spark, tablePath, slices))
+    val raw = spark.read.schema(HudiTableReader.scanSchema(tl, slices))
       .parquet(slices.map(s0 => s"$tablePath/${s0.path}"): _*)
     val bucketed =
       if (partitionBy.isEmpty) raw.repartition(targetGroups)
@@ -1109,8 +1095,8 @@ object HudiTableWriter {
   def clean(spark: SparkSession, tablePath: String,
       retainLatestInstants: Int): Seq[String] = {
     require(retainLatestInstants >= 1, "must retain at least the latest instant")
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val timeline = HudiTableReader.timelineInstants(spark, tablePath, allowMor = true)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val timeline = tl.instants
     if (timeline.size <= retainLatestInstants) return Nil
     val horizon = timeline(timeline.size - retainLatestInstants)._1
     // full write history per file group, in replay order
@@ -1118,10 +1104,8 @@ object HudiTableWriter {
     val history = scala.collection.mutable.LinkedHashMap.empty[String, Vector[W]]
     val replacedAt = scala.collection.mutable.Map.empty[String, String]
     timeline.foreach { case (instant, kind) =>
-      if (kind == "replacecommit")
-        HudiTableReader.replacedIdsOf(fs, tablePath, instant)
-          .foreach(id => replacedAt(id) = instant)
-      HudiTableReader.writesOf(fs, tablePath, instant, kind).foreach { w =>
+      if (kind == "replacecommit") tl.replacedIds(instant).foreach(id => replacedAt(id) = instant)
+      tl.writes(instant, kind).foreach { w =>
         history(w.fileId) = history.getOrElse(w.fileId, Vector.empty) :+
           W(instant, w.path, w.path.endsWith(".parquet"))
       }
@@ -1145,7 +1129,7 @@ object HudiTableWriter {
     val deleted = doomed.result().distinct.sorted
     deleted.foreach { rel =>
       val f = new Path(tablePath, rel)
-      if (fs.exists(f)) { fs.delete(f, false): Unit }
+      if (tl.fs.exists(f)) { tl.fs.delete(f, false): Unit }
     }
     deleted
   }
@@ -1166,9 +1150,9 @@ object HudiTableWriter {
   def writeFilesIndex(spark: SparkSession, tablePath: String): String = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val groups = HudiTableReader.morGroups(spark, tablePath)
-    val head = HudiTableReader.latestInstant(spark, tablePath)
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val groups = HudiTableReader.morGroups(tl)
+    val head = tl.head
     val schema = StructType(Seq(
       StructField("fileId", StringType),
       StructField("partition", StringType),
@@ -1184,17 +1168,17 @@ object HudiTableWriter {
         g.logs.map { case (i, p) => Row(i, p) })
     }
     import scala.jdk.CollectionConverters._
-    val dir = new Path(hoodieDir(tablePath), "metadata/files")
-    fs.mkdirs(dir)
+    val dir = tl.metadataDir("files")
+    tl.fs.mkdirs(dir)
     // SCHEMA SIDECAR: the index also snapshots the commit-metadata
     // schema authority as of its instant, so post-index reads resolve
     // evolution without re-opening pre-index metas (the listing-free
     // planning contract covers schema resolution too). Landed BEFORE
     // the parquet — an index without its sidecar falls back to the
     // full walk, never to a wrong schema.
-    val sidecarBody = HudiTableReader.declaredDataSchema(spark, tablePath)
+    val sidecarBody = HudiTableReader.declaredDataSchema(tl)
       .map(HudiSchema.toAvroJson(_)).getOrElse("none")
-    val sidecar = fs.create(new Path(dir, s"$head.schema"), true)
+    val sidecar = tl.fs.create(new Path(dir, s"$head.schema"), true)
     try sidecar.write((sidecarBody + "\n").getBytes("UTF-8")) finally sidecar.close()
     FileLanding.landFile(spark.createDataFrame(rows.asJava, schema),
       new Path(dir, s"$head.parquet")): Unit
@@ -1218,27 +1202,25 @@ object HudiTableWriter {
   def writeColStatsIndex(spark: SparkSession, tablePath: String,
       columns: Seq[String]): String = {
     require(columns.nonEmpty, "writeColStatsIndex needs at least one column")
-    val head = HudiTableReader.latestInstant(spark, tablePath)
+    val tl = HudiTimeline.load(spark, tablePath)
     // MOR builds GROUP-GRAINED and LOG-AWARE: per-file stats would be
     // blind to log rows, so dirty groups' ranges come from the
     // realtime merge and the prune unit is the file GROUP (rows key
     // `_g_file` by the group id; the reader's MOR branch matches)
     val stats =
-      if (HudiTableReader.isMor(spark, tablePath))
-        morColStatsOf(spark, tablePath,
-          HudiTableReader.morGroups(spark, tablePath), columns)
-      else colStatsOf(spark, tablePath,
-        HudiTableReader.activeSlices(spark, tablePath), columns)
-    landColStats(spark, tablePath, stats, head)
-    head
+      if (tl.isMor) morColStatsOf(tl, HudiTableReader.morGroups(tl), columns)
+      else colStatsOf(spark, tablePath, HudiTableReader.activeSlices(tl), columns)
+    landColStats(spark, tablePath, stats, tl.head)
+    tl.head
   }
 
   /** Per-GROUP min/max over MOR `groups`, log-aware: log-free groups
     * scan their base; dirty groups aggregate the realtime merge.
     * Rows key `_g_file` by the GROUP id. */
-  private def morColStatsOf(spark: SparkSession, tablePath: String,
+  private def morColStatsOf(tl: HudiTimeline,
       groups: Seq[HudiTableReader.GroupSlices], columns: Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.{col => c, max => mx, min => mn}
+    val (spark, tablePath) = (tl.spark, tl.tablePath)
     val clean = groups.filter(_.logs.isEmpty)
     val dirty = groups.filter(_.logs.nonEmpty)
     val cleanStats = {
@@ -1248,7 +1230,7 @@ object HudiTableWriter {
       remapFileCol(spark, perFile, fidOf, "_g_file")
     }
     if (dirty.isEmpty) return cleanStats
-    val schema = HudiTableReader.morSchema(spark, tablePath, groups)
+    val schema = HudiTableReader.morSchema(tl, groups)
     columns.foreach(cn => require(schema.fieldNames.contains(cn),
       s"$tablePath: col-stats column $cn is not a table column"))
     val aggs = columns.flatMap(cn =>
@@ -1334,22 +1316,13 @@ object HudiTableWriter {
     * Returns the indexed head instant.
     */
   def refreshColStatsIndex(spark: SparkSession, tablePath: String): String = {
-    val mor = HudiTableReader.isMor(spark, tablePath)
-    val dir = new Path(hoodieDir(tablePath), "metadata/col_stats")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val onTimeline = HudiTableReader
-      .timelineInstants(spark, tablePath, allowMor = true).map(_._1).toSet
-    val usable =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-        .filter(onTimeline.contains).toSeq
-    require(usable.nonEmpty,
-      s"$tablePath: no col-stats index on the timeline to refresh — writeColStatsIndex first")
-    val pick = usable.max
-    val head = HudiTableReader.latestInstant(spark, tablePath)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val pick = tl.newestGeneration("col_stats").getOrElse(throw new IllegalArgumentException(
+      s"$tablePath: no col-stats index on the timeline to refresh — " +
+        "writeColStatsIndex first"))
+    val head = tl.head
     if (head == pick) return pick
-    val old = spark.read.parquet(new Path(dir, s"$pick.parquet").toString)
+    val old = spark.read.parquet(new Path(tl.metadataDir("col_stats"), s"$pick.parquet").toString)
     val columns = old.columns.toIndexedSeq
       .filter(_.startsWith("min_")).map(_.stripPrefix("min_"))
     // the old index's entry list is metadata-bounded driver work —
@@ -1357,21 +1330,21 @@ object HudiTableWriter {
     val known = old.select("_g_file").collect().map(_.getString(0)).toSet
     import org.apache.spark.sql.functions.{col => c}
     val (freshStats, allowed, current, freshKeys) =
-      if (mor) {
+      if (tl.isMor) {
         // a group with ANY activity after the index instant recomputes
         // through the log-aware merge; untouched groups carry forward
-        val groups = HudiTableReader.morGroups(spark, tablePath)
+        val groups = HudiTableReader.morGroups(tl)
         val fresh = groups.filter { g =>
           val newest = (g.base.map(_.instant) ++ g.logs.map(_._1)).max
           !known.contains(g.fileId) || newest > pick
         }
-        (morColStatsOf(spark, tablePath, fresh, columns),
+        (morColStatsOf(tl, fresh, columns),
           fresh.flatMap(_.base).map(b =>
             ScanPaths.normalizeDriver(s"$tablePath/${b.path}")).toSet,
           groups.map(_.fileId).toSet,
           fresh.map(_.fileId).toSet)
       } else {
-        val slices = HudiTableReader.activeSlices(spark, tablePath)
+        val slices = HudiTableReader.activeSlices(tl)
         val fresh = slices.filterNot(s0 => known.contains(s0.path))
         (colStatsOf(spark, tablePath, fresh, columns),
           fresh.map(s0 =>
@@ -1412,15 +1385,15 @@ object HudiTableWriter {
   def writeBloomIndex(spark: SparkSession, tablePath: String,
       m: Int = 1 << 16): String = {
     require(m >= 2, s"m must be >= 2, got $m")
-    require(!HudiTableReader.isMor(spark, tablePath),
+    val tl = HudiTimeline.load(spark, tablePath)
+    require(!tl.isMor,
       s"$tablePath: the bloom index is COW machinery — MOR log rows are invisible " +
         "to base-file keys; compact first")
-    require(declaredRecordKeys(spark, tablePath).nonEmpty,
+    require(recordKeysOf(tl.properties).nonEmpty,
       s"$tablePath: the bloom index filters record keys — the table declares none")
-    val slices = HudiTableReader.activeSlices(spark, tablePath)
-    val head = HudiTableReader.latestInstant(spark, tablePath)
-    landBloomIndex(spark, tablePath, bloomRowsOf(spark, tablePath, slices, m), head)
-    head
+    landBloomIndex(spark, tablePath,
+      bloomRowsOf(spark, tablePath, HudiTableReader.activeSlices(tl), m), tl.head)
+    tl.head
   }
 
   /** INCREMENTAL bloom-index maintenance: per-file filters over
@@ -1430,25 +1403,17 @@ object HudiTableWriter {
     * indexed head instant.
     */
   def refreshBloomIndex(spark: SparkSession, tablePath: String): String = {
-    require(!HudiTableReader.isMor(spark, tablePath),
-      s"$tablePath: the bloom index is COW machinery; compact first")
-    val dir = new Path(hoodieDir(tablePath), "metadata/bloom_filters")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val onTimeline = HudiTableReader.instants(spark, tablePath).map(_._1).toSet
-    val usable =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).map(_.getPath.getName)
-        .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-        .filter(onTimeline.contains).toSeq
-    require(usable.nonEmpty,
-      s"$tablePath: no bloom index on the timeline to refresh — writeBloomIndex first")
-    val pick = usable.max
-    val head = HudiTableReader.latestInstant(spark, tablePath)
+    val tl = HudiTimeline.load(spark, tablePath)
+    require(!tl.isMor, s"$tablePath: the bloom index is COW machinery; compact first")
+    val pick = tl.newestGeneration("bloom_filters").getOrElse(throw new IllegalArgumentException(
+      s"$tablePath: no bloom index on the timeline to refresh — " +
+        "writeBloomIndex first"))
+    val head = tl.head
     if (head == pick) return pick
-    val old = spark.read.parquet(new Path(dir, s"$pick.parquet").toString)
+    val old = spark.read.parquet(new Path(tl.metadataDir("bloom_filters"), s"$pick.parquet").toString)
     val mIdx = old.select("m").limit(1).collect()
       .headOption.map(_.getLong(0).toInt).getOrElse(1 << 16)
-    val slices = HudiTableReader.activeSlices(spark, tablePath)
+    val slices = HudiTableReader.activeSlices(tl)
     val known = old.select("_g_file").collect().map(_.getString(0)).toSet
     val currentPaths = slices.map(_.path).toSet
     val fresh = slices.filterNot(s0 => known.contains(s0.path))
@@ -1507,19 +1472,15 @@ object HudiTableWriter {
     * forms — a superset of buckets can only widen the scan, never
     * miss an update). All-pruned returns one schema-keeping slice.
     */
-  private[sources] def bloomPruneSlices(spark: SparkSession, tablePath: String,
+  private[sources] def bloomPruneSlices(tl: HudiTimeline,
       slices: Seq[HudiTableReader.SliceWrite],
       probes: DataFrame): Seq[HudiTableReader.SliceWrite] = {
     import org.apache.spark.sql.functions.{col => c, _}
-    val dir = new Path(hoodieDir(tablePath), "metadata/bloom_filters")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return slices
-    val onTimeline = HudiTableReader.instants(spark, tablePath).map(_._1).toSet
-    val usable = fs.listStatus(dir).map(_.getPath.getName)
-      .filter(_.endsWith(".parquet")).map(_.stripSuffix(".parquet"))
-      .filter(onTimeline.contains).toSeq
-    if (usable.isEmpty) return slices
-    val idx = spark.read.parquet(new Path(dir, s"${usable.max}.parquet").toString)
+    val pick = tl.newestGeneration("bloom_filters") match {
+      case Some(p) => p
+      case None => return slices
+    }
+    val idx = tl.spark.read.parquet(new Path(tl.metadataDir("bloom_filters"), s"$pick.parquet").toString)
     val mRow = idx.select("m").limit(1).collect().headOption
     if (mRow.isEmpty) return slices
     val mIdx = mRow.get.getLong(0)
@@ -1549,22 +1510,24 @@ object HudiTableWriter {
     * compact-first migration. Returns the indexed instant.
     */
   def writeRecordIndex(spark: SparkSession, tablePath: String,
-      indexFiles: Int = 0): String = {
-    val keys = declaredRecordKeys(spark, tablePath)
-    require(keys.nonEmpty,
+      indexFiles: Int = 0): String =
+    writeRecordIndex(HudiTimeline.load(spark, tablePath), indexFiles)
+
+  private def writeRecordIndex(tl: HudiTimeline, indexFiles: Int): String = {
+    val (spark, tablePath, fs) = (tl.spark, tl.tablePath, tl.fs)
+    require(recordKeysOf(tl.properties).nonEmpty,
       s"$tablePath: the record index maps record keys — the table declares none " +
         "(hoodie.table.recordkey.fields)")
-    val head = HudiTableReader.latestInstant(spark, tablePath)
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val head = tl.head
     import org.apache.spark.sql.functions.{col => c}
     // MOR builds LOG-AWARE: the realtime merge already resolves each
     // group's live keys (log inserts visible, tombstones dropped) and
     // threads the group id through — no compact-first migration
-    val isMor = HudiTableReader.isMor(spark, tablePath)
-    val morGroups = if (isMor) HudiTableReader.morGroups(spark, tablePath) else Nil
-    val cowSlices = if (isMor) Nil else HudiTableReader.activeSlices(spark, tablePath)
+    val isMor = tl.isMor
+    val morGroups = if (isMor) HudiTableReader.morGroups(tl) else Nil
+    val cowSlices = if (isMor) Nil else HudiTableReader.activeSlices(tl)
     val entries =
-      if (isMor) morRecordEntriesOf(spark, tablePath, morGroups)
+      if (isMor) morRecordEntriesOf(tl, morGroups)
       else recordEntriesOf(spark, tablePath, cowSlices)
     // SCALE-ADAPTIVE file count (indexFiles = 0, the default): derive
     // the range-partition count from the table's base bytes — one
@@ -1583,7 +1546,7 @@ object HudiTableWriter {
           try fs.getFileStatus(p).getLen catch { case _: java.io.IOException => 0L }).sum
         math.max(1L, math.min(10000L, baseBytes / (256L * 1024 * 1024) + 1)).toInt
       }
-    val dir = new Path(hoodieDir(tablePath), "metadata/record_index")
+    val dir = tl.metadataDir("record_index")
     fs.mkdirs(dir)
     val stage = new Path(tablePath, s".graft-ridx-${java.util.UUID.randomUUID()}")
     // persist across the range-partitioner's SAMPLING pass + the
@@ -1612,14 +1575,15 @@ object HudiTableWriter {
     * through the realtime merge with the group id threaded — log
     * inserts index, tombstoned keys drop. The shuffle is bounded by
     * the DIRTY groups' bytes. */
-  private def morRecordEntriesOf(spark: SparkSession, tablePath: String,
+  private def morRecordEntriesOf(tl: HudiTimeline,
       groups: Seq[HudiTableReader.GroupSlices]): DataFrame = {
     import org.apache.spark.sql.functions.{col => c}
+    val (spark, tablePath) = (tl.spark, tl.tablePath)
     val clean = groups.filter(_.logs.isEmpty).flatMap(_.base)
     val dirty = groups.filter(_.logs.nonEmpty)
     val cleanE = recordEntriesOf(spark, tablePath, clean)
     if (dirty.isEmpty) return cleanE
-    val schema = HudiTableReader.morSchema(spark, tablePath, groups)
+    val schema = HudiTableReader.morSchema(tl, groups)
     require(schema.fieldNames.contains("_hoodie_record_key"),
       s"$tablePath: base/log schema carries no _hoodie_record_key — the log merge " +
         "has no record identity to index on")
@@ -1681,44 +1645,37 @@ object HudiTableWriter {
     */
   def refreshRecordIndex(spark: SparkSession, tablePath: String,
       maxDeltas: Int = 16): String = {
-    val mor = HudiTableReader.isMor(spark, tablePath)
-    val dir = new Path(hoodieDir(tablePath), "metadata/record_index")
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val timeline = HudiTableReader.timelineInstants(spark, tablePath, allowMor = true)
-    val onTimeline = timeline.map(_._1).toSet
-    val gens =
-      if (!fs.exists(dir)) Array.empty[String]
-      else fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName)
-    val fulls = gens.filter(g => !g.endsWith(".delta") && onTimeline.contains(g))
+    val tl = HudiTimeline.load(spark, tablePath)
+    val fs = tl.fs
     // nothing to fold into, or a chain long enough that lookups pay
     // |deltas| probes: (re)build the base
-    if (fulls.isEmpty) return writeRecordIndex(spark, tablePath)
-    val base = fulls.max
-    val deltas = gens.filter(_.endsWith(".delta")).map(_.stripSuffix(".delta"))
-      .filter(i => onTimeline.contains(i) && i > base).sorted.toIndexedSeq
-    if (deltas.size >= maxDeltas) return writeRecordIndex(spark, tablePath)
+    val base = tl.newestGeneration("record_index") match {
+      case Some(b) => b
+      case None => return writeRecordIndex(tl, 0)
+    }
+    val deltas = HudiTableReader.recordIndexDeltas(tl, base)
+    if (deltas.size >= maxDeltas) return writeRecordIndex(tl, 0)
     val idxHead = (base +: deltas).max
-    val newer = timeline.filter(_._1 > idxHead)
+    val newer = tl.instants.filter(_._1 > idxHead)
     if (newer.isEmpty) return idxHead
     val head = newer.map(_._1).max
     val covered: Set[String] = newer.flatMap { case (i, k) =>
-      HudiTableReader.writesOf(fs, tablePath, i, k).map(_.fileId) ++
-        (if (k == "replacecommit") HudiTableReader.replacedIdsOf(fs, tablePath, i)
-         else Set.empty[String])
+      tl.writes(i, k).map(_.fileId) ++
+        (if (k == "replacecommit") tl.replacedIds(i) else Set.empty[String])
     }.toSet
     // the fold re-enumerates ONLY the touched groups — on MOR through
     // the log-aware realtime merge of those groups (a deltacommit's
     // log append makes its whole group's binding set current again)
     val (entries, allowed, nCovered) =
-      if (mor) {
-        val groups = HudiTableReader.morGroups(spark, tablePath)
+      if (tl.isMor) {
+        val groups = HudiTableReader.morGroups(tl)
           .filter(g => covered.contains(g.fileId))
-        (morRecordEntriesOf(spark, tablePath, groups),
+        (morRecordEntriesOf(tl, groups),
           groups.flatMap(_.base).map(b =>
             ScanPaths.normalizeDriver(s"$tablePath/${b.path}")).toSet,
           groups.size)
       } else {
-        val slices = HudiTableReader.activeSlices(spark, tablePath)
+        val slices = HudiTableReader.activeSlices(tl)
           .filter(s0 => covered.contains(s0.fileId))
         (recordEntriesOf(spark, tablePath, slices),
           slices.map(s0 =>
@@ -1746,7 +1703,7 @@ object HudiTableWriter {
     val sidecar = fs.create(new Path(stage, "_covered"), true)
     try sidecar.write((covered.toSeq.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
     finally sidecar.close()
-    val dst = new Path(dir, s"$head.delta")
+    val dst = new Path(tl.metadataDir("record_index"), s"$head.delta")
     fs.delete(dst, true)
     if (!fs.rename(stage, dst)) throw new IllegalStateException(
       s"$tablePath: failed to land record-index delta $dst")
@@ -1762,7 +1719,7 @@ object HudiTableWriter {
     * log-file container ([[HudiLog]] — same codec as MOR logs, how
     * Hudi's own service writes archives) holding one Avro data block
     * of (commitTime, actionType, metadata) entries;
-    * [[HudiTableReader.archivedEntries]] replays them UNDER the
+    * [[HudiTimeline.archivedEntries]] replays them UNDER the
     * active timeline, so every read keeps seeing file groups written
     * only by archived instants. Crash-safe ordering: the archive
     * lands BEFORE active meta files are removed (a crash in between
@@ -1771,16 +1728,9 @@ object HudiTableWriter {
     */
   def archiveTimeline(spark: SparkSession, tablePath: String, keepLast: Int): Int = {
     require(keepLast >= 1, "keepLast must be >= 1 — the timeline head stays active")
-    val dir = hoodieDir(tablePath)
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName)
-      .filterNot(n => n.contains(".requested") || n.contains(".inflight"))
-    val completed = names.collect {
-      case n if n.endsWith(".replacecommit") => (n.stripSuffix(".replacecommit"), "replacecommit")
-      case n if n.endsWith(".deltacommit") => (n.stripSuffix(".deltacommit"), "deltacommit")
-      case n if n.endsWith(".commit") => (n.stripSuffix(".commit"), "commit")
-    }.sortBy(_._1).toIndexedSeq
-    val toArchive = completed.dropRight(keepLast)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val (dir, fs) = (hoodieDir(tablePath), tl.fs)
+    val toArchive = tl.active.dropRight(keepLast)
     if (toArchive.isEmpty) return 0
     val schemaJson =
       """{"type":"record","name":"archived_instant","fields":[""" +
@@ -1791,11 +1741,9 @@ object HudiTableWriter {
     val writer = new org.apache.avro.generic.GenericDatumWriter[
       org.apache.avro.generic.GenericRecord](schema)
     val records = toArchive.map { case (instant, kind) =>
-      val p = new Path(dir, s"$instant.$kind")
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
       val r = new org.apache.avro.generic.GenericData.Record(schema)
-      r.put("commitTime", instant); r.put("actionType", kind); r.put("metadata", text)
+      r.put("commitTime", instant); r.put("actionType", kind)
+      r.put("metadata", tl.metaText(instant, kind))
       val bos = new java.io.ByteArrayOutputStream()
       val enc = org.apache.avro.io.EncoderFactory.get().binaryEncoder(bos, null)
       writer.write(r, enc); enc.flush()
@@ -1803,8 +1751,7 @@ object HudiTableWriter {
     }
     val archDir = new Path(dir, "archived")
     fs.mkdirs(archDir)
-    val seqNo = fs.listStatus(archDir)
-      .count(_.getPath.getName.startsWith(".commits_.archive.")) + 1
+    val seqNo = tl.entries("archived").count(_.startsWith(".commits_.archive.")) + 1
     HudiLog.write(spark.sparkContext.hadoopConfiguration,
       new Path(archDir, s".commits_.archive.$seqNo").toString,
       Seq(HudiLog.DataBlock(toArchive.last._1, schemaJson, records)))
@@ -1827,11 +1774,12 @@ object HudiTableWriter {
     * by |dirty groups|. Returns the compaction instant.
     */
   def compact(spark: SparkSession, tablePath: String): String = {
-    val groups = HudiTableReader.morGroups(spark, tablePath)
+    val tl = HudiTimeline.load(spark, tablePath)
+    val groups = HudiTableReader.morGroups(tl)
     val dirty = groups.filter(_.logs.nonEmpty)
     if (dirty.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: nothing to compact — no file group carries pending log files")
-    val schema = HudiTableReader.morSchema(spark, tablePath, groups)
+    val schema = HudiTableReader.morSchema(tl, groups)
     val merged = HudiTableReader.mergeDirtyGroups(spark, tablePath, dirty, schema,
       keepFileId = true)
     val instant = instantNow(0L)

@@ -32,7 +32,7 @@ class HudiBloomIndexSpec extends SparkSpec {
     assert(all.size >= 3)
     // the probe set for keys living in ONE group must cut the scan
     val probes = Seq("id:42", "42").toDF("_g_probe")
-    val pruned = HudiTableWriter.bloomPruneSlices(spark, table, all, probes)
+    val pruned = HudiTableWriter.bloomPruneSlices(HudiTimeline.load(spark, table), all, probes)
     assert(pruned.size < all.size,
       s"bloom prune must cut the slice set (${pruned.size} of ${all.size})")
     // the upsert itself stays exact with the index present
@@ -57,7 +57,7 @@ class HudiBloomIndexSpec extends SparkSpec {
     val s = spark
     import s.implicits._
     val all = HudiTableReader.activeSlices(spark, table)
-    val keptForNew = HudiTableWriter.bloomPruneSlices(spark, table, all,
+    val keptForNew = HudiTableWriter.bloomPruneSlices(HudiTimeline.load(spark, table), all,
       Seq("id:120", "120").toDF("_g_probe"))
     val newPaths = all.filterNot(s0 => s0.instant == all.map(_.instant).min).map(_.path).toSet
     assert(newPaths.subsetOf(keptForNew.map(_.path).toSet),
@@ -65,7 +65,7 @@ class HudiBloomIndexSpec extends SparkSpec {
     // refresh folds the new files in; pruning then cuts them too when
     // the probe misses
     HudiTableWriter.refreshBloomIndex(spark, table): Unit
-    val afterRefresh = HudiTableWriter.bloomPruneSlices(spark, table, all,
+    val afterRefresh = HudiTableWriter.bloomPruneSlices(HudiTimeline.load(spark, table), all,
       Seq("id:42", "42").toDF("_g_probe"))
     assert(afterRefresh.size < all.size)
     assert(HudiTableWriter.refreshBloomIndex(spark, table) ==
@@ -93,7 +93,7 @@ class HudiBloomIndexSpec extends SparkSpec {
     import s.implicits._
     HudiTableWriter.writeBloomIndex(spark, bare): Unit
     val all = HudiTableReader.activeSlices(spark, bare)
-    val none = HudiTableWriter.bloomPruneSlices(spark, bare, all,
+    val none = HudiTableWriter.bloomPruneSlices(HudiTimeline.load(spark, bare), all,
       Seq("id:123456", "123456").toDF("_g_probe"))
     assert(none.size == 1)
   }

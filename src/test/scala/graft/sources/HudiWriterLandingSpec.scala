@@ -92,7 +92,7 @@ class HudiWriterLandingSpec extends SparkSpec {
     }
     assert(newIds.nonEmpty && newIds.forall(id => !id.contains('_') && id.nonEmpty))
     assert(newIds.distinct.size == newIds.size, s"a file-group id was minted twice: $newIds")
-    val active = HudiTableReader.morGroups(spark, table).map(_.fileId)
+    val active = HudiTableReader.morGroups(HudiTimeline.load(spark, table)).map(_.fileId)
     assert(active.distinct.size == active.size)
   }
 
@@ -265,7 +265,7 @@ class HudiWriterLandingSpec extends SparkSpec {
     // a COW upsert that adds a column: the rewritten slices hold carried
     // rows (a file scan, the new column null-filled) and batch rows
     val slices = HudiTableReader.activeSlices(spark, table)
-    val scan = HudiTableReader.scanSchema(spark, table, slices)
+    val scan = HudiTableReader.scanSchema(HudiTimeline.load(spark, table), slices)
     val batch = rows(295, 311, 2).withColumn("note", concat(lit("n"), col("id").cast("string")))
     val c2 = HudiTableWriter.upsert(batch, table)
     val outCols = scan.fieldNames.toSeq :+ "note"
@@ -290,8 +290,8 @@ class HudiWriterLandingSpec extends SparkSpec {
     import s.implicits._
     HudiTableWriter.deleteLog((1L to 20L).toDF("id"), mor): Unit
     HudiTableWriter.updateLog(rows(30, 33, 1).withColumn("v", lit(-1L)), mor): Unit
-    val groups = HudiTableReader.morGroups(spark, mor)
-    val morSchema = HudiTableReader.morSchema(spark, mor, groups)
+    val groups = HudiTableReader.morGroups(HudiTimeline.load(spark, mor))
+    val morSchema = HudiTableReader.morSchema(HudiTimeline.load(spark, mor), groups)
     val merged = sparkWritten(HudiTableReader.mergeDirtyGroups(spark, mor,
       groups.filter(_.logs.nonEmpty), morSchema, keepFileId = true).drop("_g_fid"))
     val empty = sparkWritten(spark.createDataFrame(
@@ -337,7 +337,7 @@ class HudiWriterLandingSpec extends SparkSpec {
     // four groups: ids 1-100, 101-200, 201-300, 301-400
     val c1 = HudiTableWriter.create(rows(1, 401, 4), table, recordKeys = Seq("id"))
     def state() = (
-      HudiTableReader.timelineInstants(spark, table, allowMor = true),
+      HudiTimeline.load(spark, table).instants,
       HudiTableReader.snapshot(spark, table).select("id", "v", "_hoodie_commit_time")
         .collect().map(_.toString).sorted.toSeq,
       HudiTableReader.incrementalSince(spark, table, "0").collect().map(_.toString).sorted.toSeq)

@@ -57,6 +57,19 @@ class LakehouseSinksSpec extends SparkSpec {
     assert(commits.count(_.contains(""""graft.sink.batch-id"""")) == 3)
   }
 
+  test("hudi sink: the watermark and replays survive timeline archival") {
+    val table = tmpDir("hsink-arch") + "/t"
+    assert(LakehouseSinks.appendBatchHudi(df(1 to 20), table, "app", 0L))
+    assert(LakehouseSinks.appendBatchHudi(df(21 to 30), table, "app", 1L))
+    assert(LakehouseSinks.appendBatchHudi(df(31 to 35), table, "app", 2L))
+    assert(HudiTableWriter.archiveTimeline(spark, table, keepLast = 1) == 2)
+    assert(HudiTableWriter.lastBatchId(spark, table, "app").contains(2L))
+    assert(!LakehouseSinks.appendBatchHudi(df(21 to 30), table, "app", 1L))
+    assert(LakehouseSinks.appendBatchHudi(df(36 to 40), table, "app", 3L))
+    assert(HudiTableWriter.lastBatchId(spark, table, "app").contains(3L))
+    assert(HudiTableReader.snapshot(spark, table).count() == 40L)
+  }
+
   test("streamEventsTo{Iceberg,Hudi}: a file-source drain lands every event exactly once") {
     val s = spark
     import s.implicits._
