@@ -16,11 +16,15 @@ object LoadMode {
 /** One source table.
   *
   * @param tableName  view name the transform SQL refers to
-  * @param path       parquet path of the table
+  * @param path       path of the table, in any layout
+  *                   [[graft.sources.TableLoader.detectFormat]] knows
   * @param mode       Full snapshot or Incremental-since-checkpoint
-  * @param commitColumn for Incremental: the monotone commit/event-time
-  *                     column that stands in for a lakehouse commit
-  *                     timestamp (reference: `_hoodie_commit_time`)
+  * @param commitColumn for Incremental on a plain parquet directory:
+  *                     the monotone commit/event-time column that
+  *                     stands in for a lakehouse commit timestamp
+  *                     (reference: `_hoodie_commit_time`); a Delta,
+  *                     Hudi, Iceberg or graft versioned table pulls by
+  *                     its own commit token instead
   */
 final case class SourceSpec(
     tableName: String,

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.sources.{CheckpointStore, IncrementalReader}
+import graft.sources.{CheckpointStore, IncrementalReader, TableLoader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The end-to-end report pipeline: load sources (FULL or INC) as temp
@@ -34,9 +34,13 @@ class ReportPipeline(
   }
 
   /** Register every source as a temp view (reference: template.py:300-317).
-    * Incremental checkpoints are NOT advanced here — they accumulate in
-    * `pendingCommits` until `commitPending()` (which `run` invokes after
-    * the report write succeeds).
+    * A FULL source is the table's snapshot through [[TableLoader.open]],
+    * whatever its layout. An INC source on a table format pulls since
+    * its stored commit token ([[TableLoader.pullIncremental]]); on a
+    * plain parquet directory it filters on its commit column
+    * ([[IncrementalReader.pull]]). Checkpoints are NOT advanced here —
+    * they accumulate in `pendingCommits` until `commitPending()` (which
+    * `run` invokes after the report write succeeds).
     */
   def loadSources(spec: PipelineSpec): Unit = this.synchronized {
     val commits = Seq.newBuilder[(String, String, String)]
@@ -46,13 +50,22 @@ class ReportPipeline(
       // incremental filter runs on the raw column (pushed to the scan)
       // BEFORE this normalization.
       val df: DataFrame = src.mode match {
-        case LoadMode.Full => spark.read.parquet(src.path)
+        case LoadMode.Full => TableLoader.open(spark, src.path)
+        case LoadMode.Incremental
+            if TableLoader.detectFormat(spark, src.path) != TableLoader.PlainParquet =>
+          TableLoader.pullIncremental(spark, src.path, src.tableName, store) match {
+            case Some((inc, token)) =>
+              commits += ((src.tableName, src.path, token))
+              inc
+            // not advanced past the checkpoint: an empty increment
+            case None => TableLoader.open(spark, src.path).limit(0)
+          }
         case LoadMode.Incremental =>
           val (inc, wm) = incremental.pull(src.tableName, src.path, src.commitColumn)
           wm.foreach(w => commits += ((src.tableName, src.path, w)))
           inc
       }
-      graft.sources.TableLoader.normalizeNanos(df, src.commitColumn)
+      TableLoader.normalizeNanos(df, src.commitColumn)
         .createOrReplaceTempView(src.tableName)
     }
     pending = commits.result()

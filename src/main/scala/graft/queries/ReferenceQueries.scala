@@ -2465,7 +2465,7 @@ trait ReferenceQueries extends QueryBase {
         |FROM orders WHERE o_orderkey % 2 = 1 GROUP BY o_orderpriority""".stripMargin))
 
   /** #22w Streaming ingestion INTO an external Delta table
-    * ([[graft.streaming.DeltaSink]]): each micro-batch appends with a
+    * ([[graft.streaming.TableSink]]): each micro-batch appends with a
     * protocol `txn {appId, version=batchId}` action, and a replayed
     * batch is skipped off the table's own transaction watermark —
     * exactly-once from the log itself, the mechanism Delta's own
@@ -2476,15 +2476,16 @@ trait ReferenceQueries extends QueryBase {
   val qStreamDeltaSink: QueryDef = QueryDef(
     run = (s, dir) => {
       import graft.sources.DeltaTableReader
-      import graft.streaming.DeltaSink
+      import graft.sources.TableLoader.DeltaFormat
+      import graft.streaming.TableSink
       val table = scratch("stream-delta-sink") + "/t"
       val appId = "graft-delta-sink"
       val src = graft.streaming.EventStream.streamableDir(s, s"$dir/events.parquet")
-      DeltaSink.streamEventsToDelta(s, src, table, appId,
+      TableSink.streamEvents(s, src, table, DeltaFormat, appId,
         queryName = "graft_delta_sink_" + java.util.UUID.randomUUID().toString.replace("-", ""))
       // at-least-once redelivery: replaying batch 0 must be a no-op
       val replayBatch = t(s, dir, "events").limit(10)
-      require(!DeltaSink.appendBatch(replayBatch, table, appId, batchId = 0L),
+      require(!TableSink.appendBatch(replayBatch, table, DeltaFormat, appId, batchId = 0L),
         "a replayed batch id at/below the txn watermark must not re-land")
       DeltaTableReader.snapshot(s, table)
         .groupBy(col("event_type"))
@@ -2497,7 +2498,7 @@ trait ReferenceQueries extends QueryBase {
         |FROM events GROUP BY event_type""".stripMargin))
 
   /** #22x Streaming ingestion INTO an external Iceberg table
-    * ([[graft.streaming.LakehouseSinks]]): each micro-batch appends a
+    * ([[graft.streaming.TableSink]]): each micro-batch appends a
     * snapshot whose SUMMARY carries (app-id, batch-id) — the
     * Flink-connector watermark pattern — and a replayed batch is
     * skipped off [[graft.sources.IcebergTableWriter.lastBatchId]].
@@ -2507,14 +2508,15 @@ trait ReferenceQueries extends QueryBase {
   val qStreamIcebergSink: QueryDef = QueryDef(
     run = (s, dir) => {
       import graft.sources.IcebergTableReader
-      import graft.streaming.LakehouseSinks
+      import graft.sources.TableLoader.IcebergFormat
+      import graft.streaming.TableSink
       val table = scratch("stream-ice-sink") + "/t"
       val appId = "graft-iceberg-sink"
       val src = graft.streaming.EventStream.streamableDir(s, s"$dir/events.parquet")
-      LakehouseSinks.streamEventsToIceberg(s, src, table, appId,
+      TableSink.streamEvents(s, src, table, IcebergFormat, appId,
         queryName = "graft_ice_sink_" + java.util.UUID.randomUUID().toString.replace("-", ""))
       val replayBatch = t(s, dir, "events").limit(10)
-      require(!LakehouseSinks.appendBatchIceberg(replayBatch, table, appId, batchId = 0L),
+      require(!TableSink.appendBatch(replayBatch, table, IcebergFormat, appId, batchId = 0L),
         "a replayed batch id at/below the summary watermark must not re-land")
       IcebergTableReader.snapshot(s, table)
         .groupBy(col("event_type"))
@@ -2526,23 +2528,25 @@ trait ReferenceQueries extends QueryBase {
         |  CAST(sum(CAST(value AS DECIMAL(28,6))) AS DOUBLE) AS sum_value
         |FROM events GROUP BY event_type""".stripMargin))
 
-  /** #22y Streaming ingestion INTO an external Hudi COW table: the
-    * watermark rides each commit's `extraMetadata` — Hudi's own
-    * deltastreamer checkpoint pattern — and replays no-op off
+  /** #22y Streaming ingestion INTO an external Hudi COW table
+    * ([[graft.streaming.TableSink]]): the watermark rides each
+    * commit's `extraMetadata` — Hudi's own deltastreamer checkpoint
+    * pattern — and replays no-op off
     * [[graft.sources.HudiTableWriter.lastBatchId]]. Replay proven
     * in-run; the oracle compares the final snapshot to the source.
     */
   val qStreamHudiSink: QueryDef = QueryDef(
     run = (s, dir) => {
       import graft.sources.HudiTableReader
-      import graft.streaming.LakehouseSinks
+      import graft.sources.TableLoader.HudiFormat
+      import graft.streaming.TableSink
       val table = scratch("stream-hudi-sink") + "/t"
       val appId = "graft-hudi-sink"
       val src = graft.streaming.EventStream.streamableDir(s, s"$dir/events.parquet")
-      LakehouseSinks.streamEventsToHudi(s, src, table, appId,
+      TableSink.streamEvents(s, src, table, HudiFormat, appId,
         queryName = "graft_hudi_sink_" + java.util.UUID.randomUUID().toString.replace("-", ""))
       val replayBatch = t(s, dir, "events").limit(10)
-      require(!LakehouseSinks.appendBatchHudi(replayBatch, table, appId, batchId = 0L),
+      require(!TableSink.appendBatch(replayBatch, table, HudiFormat, appId, batchId = 0L),
         "a replayed batch id at/below the extraMetadata watermark must not re-land")
       HudiTableReader.snapshot(s, table)
         .groupBy(col("event_type"))

@@ -997,11 +997,12 @@ object DeltaTableReader {
     * before touching the filesystem ('+' is a literal plus in a URI
     * path, so it is shielded from URLDecoder's form-decoding).
     */
-  private def decodePath(p: String): String =
+  private[sources] def decodePath(p: String): String =
     if (!p.contains('%')) p // fast path, nothing encoded
     else java.net.URLDecoder.decode(p.replace("+", "%2B"), "UTF-8")
 
-  private def abs(tablePath: String, rel: String): String = {
+  /** An `add.path`, decoded and absolute. */
+  private[sources] def abs(tablePath: String, rel: String): String = {
     val p = decodePath(rel)
     if (p.startsWith("/") || p.contains("://")) p else s"$tablePath/$p"
   }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import DeltaTableReader.decodePath
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -375,7 +376,7 @@ object DeltaTableWriter {
     lazy val ourRemoves: Set[String] =
       linesFor.map(_(fromVersion)).getOrElse(lines).iterator.map(mapper.readTree)
         .flatMap(n =>
-          Option(n.get("remove")).map(r => decodePathPublic(r.get("path").asText()))).toSet
+          Option(n.get("remove")).map(r => decodePath(r.get("path").asText()))).toSet
     // can our stale lines legally rebase OVER the commit that won
     // version v? yes iff it changed no metadata/protocol and touched
     // none of the files we remove
@@ -399,8 +400,8 @@ object DeltaTableWriter {
         if (!blindAffirmed) return false
       }
       val touched = nodes.iterator.flatMap { n =>
-        Option(n.get("add")).map(a => decodePathPublic(a.get("path").asText())) ++
-          Option(n.get("remove")).map(r => decodePathPublic(r.get("path").asText()))
+        Option(n.get("add")).map(a => decodePath(a.get("path").asText())) ++
+          Option(n.get("remove")).map(r => decodePath(r.get("path").asText()))
       }.toSet
       touched.intersect(ourRemoves).isEmpty
     }
@@ -789,7 +790,7 @@ object DeltaTableWriter {
         dm: Row = null) =
       Row(txn, add, md, proto, dm)
     val addRows = state.active.map { f =>
-      val st = fs.getFileStatus(new Path(tablePath, decodePathPublic(f.path)))
+      val st = fs.getFileStatus(new Path(tablePath, decodePath(f.path)))
       val dv = f.dv.map(d =>
         Row(d.storageType, d.pathOrInlineDv, d.offset, d.sizeInBytes, d.cardinality)).orNull
       // add.stats ride into the checkpoint VERBATIM (PROTOCOL.md's
@@ -1020,14 +1021,14 @@ object DeltaTableWriter {
     val dir = logDir(tablePath)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val state = DeltaTableReader.snapshotState(spark, tablePath)
-    val activePaths = state.active.map(f => decodePathPublic(f.path)).toSet
+    val activePaths = state.active.map(f => decodePath(f.path)).toSet
     val root = fs.makeQualified(new Path(tablePath))
     val rootStr = root.toString.stripSuffix("/")
     // every file a version names — data, change data, DV sidecars — as
     // a qualified path
     val named = scala.collection.mutable.Set.empty[String]
     def name(p: String): Unit = {
-      val dec = decodePathPublic(p)
+      val dec = decodePath(p)
       named += (if (dec.startsWith("/") || dec.contains("://")) fs.makeQualified(new Path(dec)).toString
         else s"$rootStr/$dec")
     }
@@ -1048,7 +1049,7 @@ object DeltaTableWriter {
         }
         if (node.has("remove")) {
           val r = node.get("remove")
-          val path = decodePathPublic(r.get("path").asText())
+          val path = decodePath(r.get("path").asText())
           val ts = Option(r.get("deletionTimestamp")).filterNot(_.isNull)
             .map(_.asLong()).getOrElse(0L)
           if (tombstones.get(path).forall(_ < ts)) tombstones(path) = ts
@@ -1076,11 +1077,6 @@ object DeltaTableWriter {
       n => n == "_delta_log" || n == "_change_data" || (mirrored && n == "metadata"))
     doomed ++ doomedCdc.sorted ++ unnamed.sorted
   }
-
-  /** `add.path` decode, shared with the reader's resolution rule. */
-  private def decodePathPublic(p: String): String =
-    if (!p.contains('%')) p
-    else java.net.URLDecoder.decode(p.replace("+", "%2B"), "UTF-8")
 
   private def maybeCheckpoint(spark: SparkSession, tablePath: String, version: Long,
       interval: Int): Unit =
@@ -1191,7 +1187,7 @@ object DeltaTableWriter {
   private def normActive(state: DeltaTableReader.Snapshot,
       tablePath: String): Map[String, DeltaTableReader.FileAction] =
     state.active.map { f =>
-      val p0 = decodePathPublic(f.path)
+      val p0 = decodePath(f.path)
       val absP = if (p0.startsWith("/") || p0.contains("://")) p0 else s"$tablePath/$p0"
       ScanPaths.normalizeDriver(absP) -> f
     }.toMap
@@ -1376,7 +1372,7 @@ object DeltaTableWriter {
         s"${jsonStr(k)}:${if (v == null) "null" else jsonStr(v)}"
       }.mkString(",")
     protoLine.toSeq ++ perFile.flatMap { case (fa, d) =>
-      val st = fs.getFileStatus(new Path(tablePath, decodePathPublic(fa.path)))
+      val st = fs.getFileStatus(new Path(tablePath, decodePath(fa.path)))
       // the re-add CARRIES the file's stats verbatim: a DV only masks
       // rows, so the recorded min/max stay conservative-valid and
       // skipping keeps pruning DV-deleted files (dropping them here
@@ -1568,7 +1564,7 @@ object DeltaTableWriter {
       s"$tablePath: already at the state of version $version — nothing to restore")
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     toReAdd.foreach { f =>
-      val p = new Path(tablePath, decodePathPublic(f.path))
+      val p = new Path(tablePath, decodePath(f.path))
       if (!fs.exists(p)) throw new IllegalStateException(
         s"$tablePath: restore to version $version needs ${f.path}, which was vacuumed " +
           "away — the restore cannot be served; refusing before committing anything")
@@ -1586,7 +1582,7 @@ object DeltaTableWriter {
         s"""{"remove":{"path":${jsonStr(f.path)},"deletionTimestamp":$nowMs,""" +
           s""""dataChange":true}}""") ++
       toReAdd.map { f =>
-        val st = fs.getFileStatus(new Path(tablePath, decodePathPublic(f.path)))
+        val st = fs.getFileStatus(new Path(tablePath, decodePath(f.path)))
         val dvJson = f.dv.map(d => s""","deletionVector":${DeltaDv.descriptorJson(d)}""")
           .getOrElse("")
         // re-activated files keep their stats — a restore re-points,

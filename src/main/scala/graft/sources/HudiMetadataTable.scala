@@ -52,34 +52,36 @@ object HudiMetadataTable {
   /** Log-file name grammar `.<fileId>_<baseInstant>.log.<version>_<token>`. */
   private val LogRe = "^\\.(.+)_([0-9]+)\\.log\\.([0-9]+)(_.*)?$".r
 
+  /** Per SHARD (file group — big tables hash a partition across
+    * several) of `.hoodie/metadata/<partition>`, the newest base HFile
+    * whose instant the data timeline actually committed, as (fileId,
+    * instant, name), from the timeline's own listing (string order;
+    * metadata-internal suffixed instants sort between their data
+    * instant and the next). Off-timeline indexes are leftovers and are
+    * ignored, same rule as the graft parquet index. Empty when there is
+    * no such partition.
+    */
+  private def newestShards(tl: HudiTimeline,
+      partition: String): Seq[(String, String, String)] =
+    tl.entries(s"metadata/$partition").flatMap {
+      case n @ BaseRe(fileId, _, instant, "hfile") if tl.onTimeline.contains(instant) =>
+        Some((fileId, instant, n))
+      case _ => None
+    }.groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq.sortBy(_._3)
+
   /** The `files` partition's listing as of its newest usable base
     * HFile: (index instant, partition path → (file name, size)).
     * None when there is no metadata table, no usable HFile, or the
     * HFile needs features [[HudiHFile]] refuses — callers keep their
     * replay path.
     */
-  def filesListing(spark: SparkSession, tablePath: String,
-      onTimeline: Set[String]): Option[(String, Map[String, Seq[(String, Long)]])] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(new Path(tablePath, ".hoodie"), "metadata/files")
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return None
-    val names = fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName)
-    val hfiles = names.flatMap {
-      case n @ BaseRe(fileId, _, instant, "hfile") => Some((fileId, instant, n))
-      case _ => None
-    }
-    // per SHARD (file group — big tables hash partitions across
-    // several), the newest hfile whose instant the data timeline
-    // actually committed (string order; metadata-internal suffixed
-    // instants sort between their data instant and the next).
-    // Off-timeline indexes are leftovers and are ignored, same rule
-    // as the graft parquet index. EVERY shard must read — a partition
-    // whose record lives in a dropped shard would silently vanish
-    // from the listing, so one unreadable shard degrades the whole
-    // answer to replay.
-    val shards = hfiles.filter { case (_, i, _) => onTimeline.contains(i) }
-      .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq.sortBy(_._3)
+  def filesListing(tl: HudiTimeline): Option[(String, Map[String, Seq[(String, Long)]])] = {
+    val (conf, tablePath) = (tl.spark.sparkContext.hadoopConfiguration, tl.tablePath)
+    val dir = tl.metadataDir("files")
+    // EVERY shard must read — a partition whose record lives in a
+    // dropped shard would silently vanish from the listing, so one
+    // unreadable shard degrades the whole answer to replay
+    val shards = newestShards(tl, "files")
     if (shards.isEmpty) return None
     // the index point is the OLDEST shard instant: replaying the data
     // timeline after it re-covers anything a newer shard knew
@@ -182,7 +184,7 @@ object HudiMetadataTable {
     val cells = (byPartition.map { case (p, fs0) =>
       record(p, 2, fs0.map(e => (e._2, e._3)).sortBy(_._1))
     } :+ record(AllPartitionsKey, 1, byPartition.map(_._1 -> 0L))).sortBy(_._1)
-    val dir = new Path(new Path(tablePath, ".hoodie"), "metadata/files")
+    val dir = tl.metadataDir("files")
     fs.mkdirs(dir)
     HudiHFile.write(conf, new Path(dir, s"files-0000_0-0-0_$head.hfile"), cells,
       Map(HudiHFile.SchemaKey -> RecordAvsc.getBytes(UTF_8)))
@@ -207,21 +209,13 @@ object HudiMetadataTable {
     * [[filesListing]]: anything unreadable → None, the reader keeps
     * its unpruned path.
     */
-  def colStatsListing(spark: SparkSession, tablePath: String,
-      onTimeline: Set[String]): Option[(String, Seq[ColStat])] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(new Path(tablePath, ".hoodie"), "metadata/column_stats")
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return None
-    val hfiles = fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName).flatMap {
-      case n @ BaseRe(fileId, _, instant, "hfile") => Some((fileId, instant, n))
-      case _ => None
-    }
-    // newest usable hfile per shard, ALL shards read (stats key by
-    // immutable file NAMES, so a stale or partial shard set is only
-    // ever conservative — fewer files pruned, never a wrong prune)
-    val shards = hfiles.filter { case (_, i, _) => onTimeline.contains(i) }
-      .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq.sortBy(_._3)
+  def colStatsListing(tl: HudiTimeline): Option[(String, Seq[ColStat])] = {
+    val (conf, tablePath) = (tl.spark.sparkContext.hadoopConfiguration, tl.tablePath)
+    val dir = tl.metadataDir("column_stats")
+    // ALL shards read (stats key by immutable file NAMES, so a stale
+    // or partial shard set is only ever conservative — fewer files
+    // pruned, never a wrong prune)
+    val shards = newestShards(tl, "column_stats")
     if (shards.isEmpty) return None
     val instant = shards.map(_._2).min
     val parsed = scala.util.Try {
@@ -279,23 +273,14 @@ object HudiMetadataTable {
     * fileId) or None (no metadata record index / unreadable —
     * callers keep their fallback).
     */
-  def recordIndexProbe(spark: SparkSession, tablePath: String,
-      onTimeline: Set[String],
+  def recordIndexProbe(tl: HudiTimeline,
       keyStrings: Seq[String]): Option[(String, Map[String, String])] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(new Path(tablePath, ".hoodie"), "metadata/record_index")
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) return None
-    val hfiles = fs.listStatus(dir).filter(_.isFile).map(_.getPath.getName).flatMap {
-      case n @ BaseRe(fileId, _, instant, "hfile") => Some((fileId, instant, n))
-      case _ => None
-    }
-    // newest usable base per SHARD (real record indexes hash keys
-    // across several file groups); every shard is probed — a key
-    // lives in exactly one, and a miss elsewhere costs one root-index
-    // read
-    val shards = hfiles.filter { case (_, i, _) => onTimeline.contains(i) }
-      .groupBy(_._1).map { case (_, vs) => vs.maxBy(_._2) }.toSeq
+    val (conf, tablePath) = (tl.spark.sparkContext.hadoopConfiguration, tl.tablePath)
+    val dir = tl.metadataDir("record_index")
+    // every shard is probed (real record indexes hash keys across
+    // several file groups) — a key lives in exactly one, and a miss
+    // elsewhere costs one root-index read
+    val shards = newestShards(tl, "record_index")
     if (shards.isEmpty) return None
     val out = scala.util.Try {
       val bindings = scala.collection.mutable.Map.empty[String, String]

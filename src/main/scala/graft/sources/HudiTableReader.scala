@@ -322,7 +322,7 @@ object HudiTableReader {
     * accelerates planning, it never gates a read.
     */
   private def externalFilesIndexState(tl: HudiTimeline): Option[(String, Seq[GroupSlices])] =
-    HudiMetadataTable.filesListing(tl.spark, tl.tablePath, tl.onTimeline)
+    HudiMetadataTable.filesListing(tl)
       .map { case (instant, listing) =>
         val groups = HudiMetadataTable.groupSlices(listing)
         val replaced = tl.instants
@@ -713,8 +713,10 @@ object HudiTableReader {
     * instant's written files/blocks.
     */
   def changeFeedSince(spark: SparkSession, tablePath: String,
-      sinceInstant: String): DataFrame = {
-    val tl = load(spark, tablePath)
+      sinceInstant: String): DataFrame = changeFeedSince(load(spark, tablePath), sinceInstant)
+
+  private[sources] def changeFeedSince(tl: HudiTimeline, sinceInstant: String): DataFrame = {
+    val (spark, tablePath) = (tl.spark, tl.tablePath)
     // instants with landed CDC images (`.hoodie/cdc/<instant>/` —
     // [[HudiTableWriter]]'s hoodie.table.cdc.enabled obligation)
     val cdcInstants = tl.entries("cdc").toSet
@@ -723,7 +725,8 @@ object HudiTableReader {
       // hoodie.table.cdc.enabled the timeline has no pre/delete images
       require(HudiTableWriter.cdcEnabled(tl.properties) || cdcInstants.nonEmpty,
         s"$tablePath is COPY_ON_WRITE — its timeline carries no delete images for a CDC " +
-          "feed; use incrementalSince for the upsert-exact post-image pull")
+          "feed; use incrementalSince (TableLoader.openIncremental) for the upsert-exact " +
+          "post-image pull, or enable hoodie.table.cdc.enabled to land pre/post images")
       return cowChangeFeed(tl, sinceInstant, cdcInstants)
     }
     val groups = morGroups(tl)
@@ -918,8 +921,7 @@ object HudiTableReader {
         // record_index (HFile shards) answers instead — seeked, not
         // scanned ([[HudiMetadataTable.recordIndexProbe]]), with the
         // same matched+post-index-touched contract
-        return HudiMetadataTable.recordIndexProbe(tl.spark, tl.tablePath, tl.onTimeline,
-            keyStrings)
+        return HudiMetadataTable.recordIndexProbe(tl, keyStrings)
           .map { case (idxInstant, bindings) =>
             (bindings.values.toSet, touchedAfter(tl, idxInstant))
           }
@@ -1011,7 +1013,7 @@ object HudiTableReader {
       // provable misses drop, files absent from the index (post-index
       // writes, non-indexed columns) keep conservatively
       case None =>
-        HudiMetadataTable.colStatsListing(tl.spark, tl.tablePath, tl.onTimeline) match {
+        HudiMetadataTable.colStatsListing(tl) match {
           case None => slices
           case Some((_, stats)) =>
             val misses = stats.filter(_.column == column).flatMap(cs =>
@@ -1096,8 +1098,11 @@ object HudiTableReader {
     * filter). Refuses loudly when nothing committed after the
     * checkpoint.
     */
-  def incrementalSince(spark: SparkSession, tablePath: String, sinceInstant: String): DataFrame = {
-    val tl = load(spark, tablePath)
+  def incrementalSince(spark: SparkSession, tablePath: String, sinceInstant: String): DataFrame =
+    incrementalSince(load(spark, tablePath), sinceInstant)
+
+  private[sources] def incrementalSince(tl: HudiTimeline, sinceInstant: String): DataFrame = {
+    val tablePath = tl.tablePath
     if (tl.isMor) return morIncrementalSince(tl, sinceInstant)
     // archived instants replay like active ones, so a checkpoint
     // older than the archival horizon still prunes to touched groups

@@ -63,9 +63,6 @@ object HudiTableWriter {
   /** True when hoodie.properties obliges data-changing writes to land
     * CDC images (hoodie.table.cdc.enabled — Hudi's RFC-51 table
     * property). */
-  private[sources] def cdcEnabledOf(spark: SparkSession, tablePath: String): Boolean =
-    cdcEnabled(HudiTimeline.properties(spark, tablePath))
-
   private[sources] def cdcEnabled(props: Map[String, String]): Boolean =
     props.get("hoodie.table.cdc.enabled").contains("true")
 
@@ -128,7 +125,7 @@ object HudiTableWriter {
   def declaredRecordKeys(spark: SparkSession, tablePath: String): Seq[String] =
     recordKeysOf(HudiTimeline.properties(spark, tablePath))
 
-  private def recordKeysOf(props: Map[String, String]): Seq[String] =
+  private[sources] def recordKeysOf(props: Map[String, String]): Seq[String] =
     listProperty(props, "hoodie.table.recordkey.fields")
 
   /** Stamp the Hudi meta columns an external reader expects. */
@@ -246,8 +243,9 @@ object HudiTableWriter {
   /** Write one insert commit: `df` lands as NEW file groups, one per
     * (write task, table partition), named per the Hudi base-file
     * convention, and the `.commit` (or, on MOR tables, `.deltacommit`)
-    * meta file publishes them — with the sink's `extraMetadata` when
-    * given. Returns the commit instant.
+    * meta file publishes them — with `extraMetadata` (a stream sink's
+    * watermark, an evolved schema) when given. Returns the commit
+    * instant.
     */
   private def insertCommit(df: DataFrame, tablePath: String,
       recordKeys: Seq[String], kind: String = "commit",
@@ -276,12 +274,14 @@ object HudiTableWriter {
   }
 
   /** Create a NEW Hudi COW table at `tablePath` from `df`; refuses an
-    * existing table (append to those). Returns the commit instant.
+    * existing table (append to those). A `transaction` (app id, batch
+    * id) rides the commit's `extraMetadata` as a stream sink's
+    * watermark ([[lastBatchId]]). Returns the commit instant.
     */
   def create(df: DataFrame, tablePath: String, tableName: String = "graft_table",
       recordKeys: Seq[String] = Nil, precombineField: Option[String] = None,
       partitionBy: Seq[String] = Nil,
-      extraMetadata: Map[String, String] = Map.empty,
+      transaction: Option[(String, Long)] = None,
       cdcEnabled: Boolean = false): String = {
     val spark = df.sparkSession
     val dir = hoodieDir(tablePath)
@@ -296,7 +296,7 @@ object HudiTableWriter {
     writeProperties(spark, tablePath, tableName, recordKeys, precombineField,
       partitionBy = partitionBy, cdcEnabled = cdcEnabled)
     insertCommit(df, tablePath, recordKeys, partitionBy = partitionBy,
-      extraMetadata = extraMetadata)
+      extraMetadata = TableLoader.sinkWatermark(transaction))
   }
 
   /** Append `df` as a new insert commit; columns must match the
@@ -305,10 +305,11 @@ object HudiTableWriter {
     * `hoodie.table.recordkey.fields` — never a per-call choice, so
     * every base file agrees on whether `_hoodie_record_key` exists.
     * A non-empty `recordKeys` argument is validation only: it must
-    * equal the declaration (callers asserting what they expect).
+    * equal the declaration (callers asserting what they expect). A
+    * `transaction` rides the commit as in [[create]].
     */
   def append(df: DataFrame, tablePath: String, recordKeys: Seq[String] = Nil,
-      extraMetadata: Map[String, String] = Map.empty): String = {
+      transaction: Option[(String, Long)] = None): String = {
     val tl = HudiTimeline.load(df.sparkSession, tablePath)
     val declared = recordKeysOf(tl.properties)
     require(recordKeys.isEmpty || recordKeys == declared,
@@ -322,7 +323,7 @@ object HudiTableWriter {
     val kind = if (tl.isMor) "deltacommit" else "commit"
     insertCommit(df, tablePath, declared, kind,
       partitionBy = partitionFieldsOf(tl.properties),
-      extraMetadata = extraMetadata ++ evolved.map("schema" -> _))
+      extraMetadata = TableLoader.sinkWatermark(transaction) ++ evolved.map("schema" -> _))
   }
 
   /** ADDITIVE SCHEMA EVOLUTION gate for a write batch against the
@@ -385,14 +386,6 @@ object HudiTableWriter {
     }
   }
 
-  /** Commit-metadata keys carrying a streaming sink's (appId,
-    * batchId) watermark — Hudi's own deltastreamer pattern (the
-    * checkpoint rides the commit's `extraMetadata`, atomic with the
-    * data it describes).
-    */
-  val SinkAppKey = "graft.sink.app-id"
-  val SinkBatchKey = "graft.sink.batch-id"
-
   private def extraMetadataJson(extra: Map[String, String]): String =
     if (extra.isEmpty) ""
     else {
@@ -402,8 +395,10 @@ object HudiTableWriter {
     }
 
   /** The highest batch id `appId` committed into the timeline's
-    * extraMetadata — the streaming sink's replay watermark. Driver
-    * metadata, |completed instants|-bounded.
+    * extraMetadata — the streaming sink's replay watermark, Hudi's own
+    * deltastreamer pattern (the checkpoint rides the commit, atomic
+    * with the data it describes). Driver metadata, |completed
+    * instants|-bounded.
     */
   def lastBatchId(spark: SparkSession, tablePath: String, appId: String): Option[Long] = {
     val tl = HudiTimeline.load(spark, tablePath)
@@ -411,8 +406,8 @@ object HudiTableWriter {
       .flatMap { case (instant, kind) =>
         val extra = tl.commitJson(instant, kind).get("extraMetadata")
         if (extra == null || !extra.isObject) None
-        else if (!Option(extra.get(SinkAppKey)).exists(_.asText() == appId)) None
-        else Option(extra.get(SinkBatchKey))
+        else if (!Option(extra.get(TableLoader.SinkAppKey)).exists(_.asText() == appId)) None
+        else Option(extra.get(TableLoader.SinkBatchKey))
           .flatMap(v => scala.util.Try(v.asText().toLong).toOption)
       }
     if (ids.isEmpty) None else Some(ids.max)
@@ -474,9 +469,14 @@ object HudiTableWriter {
     * Single-writer: a lost instant race throws.
     */
   def upsert(df: DataFrame, tablePath: String,
-      maxBroadcastKeys: Long = MaxBroadcastUpsertKeys): String = {
+      maxBroadcastKeys: Long = MaxBroadcastUpsertKeys): String =
+    upsert(HudiTimeline.load(df.sparkSession, tablePath), df, maxBroadcastKeys)
+
+  /** [[upsert]] against an already-loaded timeline. */
+  private[sources] def upsert(tl: HudiTimeline, df: DataFrame,
+      maxBroadcastKeys: Long): String = {
     val spark = df.sparkSession
-    val tl = HudiTimeline.load(spark, tablePath)
+    val tablePath = tl.tablePath
     val props = tl.properties
     val keys = recordKeysOf(props)
     require(keys.nonEmpty,

@@ -803,28 +803,11 @@ object IcebergTableWriter {
     require(!names.contains(to),
       s"$tablePath: column $to already exists — rename would collide")
     // post-rename reads resolve by PARQUET FIELD ID; a live data file
-    // without ids would silently serve NULLs under the new name —
-    // check every live footer (parallel driver metadata) and refuse
+    // without the renamed field's id would silently serve NULLs under
+    // the new name
     val renamedId = st.fields.find(_._2 == from).get._1
-    val plan = IcebergTableReader.planFiles(spark, tablePath)
-    val hconf = spark.sparkContext.hadoopConfiguration
-    def resolveAbs(rel: String): String =
-      if (rel.contains("://") || rel.startsWith("/")) rel else s"$tablePath/$rel"
-    import scala.collection.parallel.CollectionConverters._
-    val idless = plan.data.par.filter { rel =>
-      val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(resolveAbs(rel)), hconf)
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-      try {
-        import scala.jdk.CollectionConverters._
-        !r.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .exists(f => f.getId != null && f.getId.intValue() == renamedId)
-      } finally r.close()
-    }.seq
-    require(idless.isEmpty,
-      s"$tablePath: ${idless.size} live data file(s) carry no parquet field id for " +
-        s"column $from (e.g. ${idless.head}) — a rename would silently null it on " +
-        "those files; rewrite them first (rewriteDataFiles)")
+    requireLiveFieldIds(spark, tablePath, s"renaming column $from",
+      fields => !fields.exists(f => f.getId != null && f.getId.intValue() == renamedId))
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val newSid = st.maxSchemaId + 1
     val renamedFields = st.fields.map { case (id, name, raw) =>
@@ -874,33 +857,39 @@ object IcebergTableWriter {
         s""""fields":[${keptFields.mkString(",")}]}""", st.maxSchemaId + 1)
   }
 
-  /** Refuse unless EVERY live data file stamps parquet field ids on
-    * ALL its fields — the precondition for any evolution that makes
-    * reads id-resolved (rename, drop + re-add); a file without ids
-    * would silently serve nulls. Parallel footer check, driver
+  /** Refuse unless no live data file's top-level footer fields are
+    * `idless` — by default, unless EVERY live file stamps parquet field
+    * ids on ALL its fields: the precondition for any evolution that
+    * makes reads id-resolved (rename, drop + re-add); a file without
+    * ids would silently serve nulls. Parallel footer check, driver
     * metadata, |live files|-bounded.
     */
   private def requireLiveFieldIds(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, context: String): Unit = {
+      tablePath: String, context: String,
+      idless: Seq[org.apache.parquet.schema.Type] => Boolean = _.exists(_.getId == null)
+  ): Unit = {
     val plan = IcebergTableReader.planFiles(spark, tablePath)
     val hconf = spark.sparkContext.hadoopConfiguration
-    def resolveAbs(rel: String): String =
-      if (rel.contains("://") || rel.startsWith("/")) rel else s"$tablePath/$rel"
     import scala.collection.parallel.CollectionConverters._
-    val idless = plan.data.par.filter { rel =>
+    val offending = plan.data.par.filter { rel =>
       val in = org.apache.parquet.hadoop.util.HadoopInputFile
-        .fromPath(new Path(resolveAbs(rel)), hconf)
+        .fromPath(new Path(resolveAbs(tablePath, rel)), hconf)
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try {
         import scala.jdk.CollectionConverters._
-        r.getFooter.getFileMetaData.getSchema.getFields.asScala.exists(_.getId == null)
+        idless(r.getFooter.getFileMetaData.getSchema.getFields.asScala.toSeq)
       } finally r.close()
     }.seq
-    require(idless.isEmpty,
-      s"$tablePath: $context needs field-id resolution, but ${idless.size} live data " +
-        s"file(s) carry no parquet field ids (e.g. ${idless.headOption.getOrElse("")}) — " +
+    require(offending.isEmpty,
+      s"$tablePath: $context needs field-id resolution, but ${offending.size} live data " +
+        s"file(s) carry no parquet field ids (e.g. ${offending.headOption.getOrElse("")}) — " +
         "they would silently serve nulls; rewrite them first (rewriteDataFiles)")
   }
+
+  /** A manifest-recorded file path, absolute (relative ones resolve
+    * under the table). */
+  private def resolveAbs(tablePath: String, rel: String): String =
+    if (rel.contains("://") || rel.startsWith("/")) rel else s"$tablePath/$rel"
 
   /** Append a new current schema node to the metadata — the shared
     * CAS tail of the metadata-only evolution ops (rename, drop):
@@ -1212,7 +1201,7 @@ object IcebergTableWriter {
     // land range-clustered so the recorded bounds actually cut scans
     sortBy.foreach(c => require(df.columns.contains(c),
       s"sort column $c is not in the DataFrame"))
-    commit(df, tablePath, pfields, extraSummary = txnSummary(transaction),
+    commit(df, tablePath, pfields, extraSummary = TableLoader.sinkWatermark(transaction),
       sortBy = sortBy)
   }
 
@@ -1257,34 +1246,23 @@ object IcebergTableWriter {
       else Nil // partial sorting must not stamp the FULL order's id
     commit(df.select((existing.columns.toSeq ++ extras)
         .map(org.apache.spark.sql.functions.col): _*),
-      tablePath, pfields, extraSummary = txnSummary(transaction),
+      tablePath, pfields, extraSummary = TableLoader.sinkWatermark(transaction),
       sortBy = sortBy)
   }
 
-  /** Snapshot-summary keys carrying a streaming sink's (appId,
-    * batchId) watermark — the Flink-connector pattern (checkpoint id
-    * in the snapshot summary), giving exactly-once from the TABLE's
-    * own metadata. Preserved verbatim across later commits (snapshot
-    * records re-serialize with their summaries).
-    */
-  val SinkAppKey = "graft.sink.app-id"
-  val SinkBatchKey = "graft.sink.batch-id"
-
-  private def txnSummary(transaction: Option[(String, Long)]): Map[String, String] =
-    transaction.map { case (appId, batchId) =>
-      Map(SinkAppKey -> appId, SinkBatchKey -> batchId.toString)
-    }.getOrElse(Map.empty)
-
   /** The highest batch id `appId` has committed into the table's
     * snapshot summaries, if any — the replay watermark the streaming
-    * sink probes. Driver metadata, |snapshots|-bounded.
+    * sink probes, the Flink-connector pattern (checkpoint id in the
+    * snapshot summary, [[TableLoader.SinkAppKey]]). Summaries are
+    * preserved verbatim across later commits (snapshot records
+    * re-serialize with them). Driver metadata, |snapshots|-bounded.
     */
   def lastBatchId(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       appId: String): Option[Long] = {
     val (snaps, _) = IcebergTableReader.snapshotLog(spark, tablePath)
     val ids = snaps.flatMap { s =>
-      if (s.summary.get(SinkAppKey).contains(appId))
-        s.summary.get(SinkBatchKey).flatMap(v => scala.util.Try(v.toLong).toOption)
+      if (s.summary.get(TableLoader.SinkAppKey).contains(appId))
+        s.summary.get(TableLoader.SinkBatchKey).flatMap(v => scala.util.Try(v.toLong).toOption)
       else None
     }
     if (ids.isEmpty) None else Some(ids.max)
@@ -1669,24 +1647,22 @@ object IcebergTableWriter {
         "them would need composed delete semantics this writer does not implement; refusing")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path(tablePath).getFileSystem(conf)
-    def resolveAbs(rel: String): String =
-      if (rel.contains("://") || rel.startsWith("/")) rel else s"$tablePath/$rel"
     // live rows with their physical identity
-    val keyed0 = spark.read.parquet(plan.data.map(resolveAbs): _*)
+    val keyed0 = spark.read.parquet(plan.data.map(resolveAbs(tablePath, _)): _*)
       .withColumn("_g_file", ScanPaths.normalizeScan(
         org.apache.spark.sql.functions.col("_metadata.file_path")))
       .withColumn("_g_pos", org.apache.spark.sql.functions.col("_metadata.row_index"))
     val keyed =
       if (plan.positionDeletes.isEmpty) keyed0
       else {
-        val existing = spark.read.parquet(plan.positionDeletes.map(resolveAbs): _*)
+        val existing = spark.read.parquet(plan.positionDeletes.map(resolveAbs(tablePath, _)): _*)
           .select(ScanPaths.normalizeMetaColumn(col("file_path"), tablePath).as("_g_file"),
             col("pos").cast("long").as("_g_pos"))
         keyed0.join(existing, Seq("_g_file", "_g_pos"), "left_anti")
       }
     // map scan paths back to the manifest-recorded relative paths
     val relRows = plan.data.map(rel => org.apache.spark.sql.Row(
-      ScanPaths.normalizeDriver(resolveAbs(rel)), rel))
+      ScanPaths.normalizeDriver(resolveAbs(tablePath, rel)), rel))
     import scala.jdk.CollectionConverters._
     val relDf = spark.createDataFrame(relRows.asJava,
       org.apache.spark.sql.types.StructType(Seq(
@@ -1745,15 +1721,13 @@ object IcebergTableWriter {
       s"$tablePath: table carries equality-delete files — deletion-vectoring on top of " +
         "them would need composed delete semantics this writer does not implement; refusing")
     val conf = spark.sparkContext.hadoopConfiguration
-    def resolveAbs(rel: String): String =
-      if (rel.contains("://") || rel.startsWith("/")) rel else s"$tablePath/$rel"
     // live rows = data minus every existing delete shape
-    val keyed0 = spark.read.parquet(plan.data.map(resolveAbs): _*)
+    val keyed0 = spark.read.parquet(plan.data.map(resolveAbs(tablePath, _)): _*)
       .withColumn("_g_file", ScanPaths.normalizeScan(col("_metadata.file_path")))
       .withColumn("_g_pos", col("_metadata.row_index").cast("long"))
     val posPrior: Option[org.apache.spark.sql.DataFrame] =
       if (plan.positionDeletes.isEmpty) None
-      else Some(spark.read.parquet(plan.positionDeletes.map(resolveAbs): _*)
+      else Some(spark.read.parquet(plan.positionDeletes.map(resolveAbs(tablePath, _)): _*)
         .select(ScanPaths.normalizeMetaColumn(col("file_path"), tablePath).as("_g_file"),
           col("pos").cast("long").as("_g_pos")))
     val dvPrior: Option[org.apache.spark.sql.DataFrame] =
@@ -1801,7 +1775,7 @@ object IcebergTableWriter {
     // normalized scan path → the manifest-recorded relative path (the
     // form referenced_data_file must take so readers re-resolve it)
     val relByNorm = plan.data
-      .map(rel => ScanPaths.normalizeDriver(resolveAbs(rel)) -> rel).toMap
+      .map(rel => ScanPaths.normalizeDriver(resolveAbs(tablePath, rel)) -> rel).toMap
     val blobRels = blobs.map { case (norm, bytes, n) =>
       (relByNorm.getOrElse(norm, throw new IllegalStateException(
         s"$tablePath: matched file $norm is not in the plan — racing writer?")),
@@ -1837,7 +1811,7 @@ object IcebergTableWriter {
             require(otherE.isEmpty,
               s"$tablePath: manifest $mp mixes DV and non-DV delete entries; refusing")
             val kept = dvE.filterNot(e => e.referencedDataFile.exists(r =>
-              supersededNorm.contains(ScanPaths.normalizeDriver(resolveAbs(r)))))
+              supersededNorm.contains(ScanPaths.normalizeDriver(resolveAbs(tablePath, r)))))
             if (kept.size == dvE.size) Some(m)
             else if (kept.isEmpty) None // every DV superseded: drop the manifest
             else {

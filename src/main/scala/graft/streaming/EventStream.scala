@@ -43,8 +43,9 @@ object EventStream {
     }
 
   /** The shared streaming source for the events table: the schema is
-    * read from the files' own parquet footers (a batch-read schema
-    * probe — cheap: footers only, no row groups), then the stream is
+    * read from the files' own parquet footers (the cached batch-read
+    * schema probe [[graft.sources.TableLoader.probedSchema]] — cheap:
+    * footers only, no row groups), then the stream is
     * opened with exactly that schema and `ts` normalized by physical
     * type above. Every streaming entry point goes through here, so a
     * testdata re-encode (nanos-long ↔ micros-timestamp) changes
@@ -52,35 +53,11 @@ object EventStream {
     */
   def eventSource(spark: SparkSession, path: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    val schema = probedSchema(spark, path)
+    val schema = graft.sources.TableLoader.probedSchema(spark, path)
     val reader = spark.readStream.schema(schema)
     val withOpt = maxFilesPerTrigger
       .fold(reader)(n => reader.option("maxFilesPerTrigger", n.toString))
     normalizeEventTs(withOpt.parquet(path))
-  }
-
-  /** The footer schema probe, cached per (path, content fingerprint):
-    * each stream construction used to pay one batch `spark.read
-    * .parquet` job just to learn the schema — a fixed per-stream cost
-    * the r9 bench flagged (+37% on q_stream_dedup). One directory
-    * LISTING (no footer I/O) fingerprints the content, so a rewritten
-    * or grown path re-probes while repeat constructions over the same
-    * bytes hit the cache. The dual-encoding contract is untouched:
-    * the schema still always comes from the files' own footers.
-    */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private def probedSchema(spark: SparkSession, path: String): org.apache.spark.sql.types.StructType = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val st = fs.getFileStatus(p)
-    val statuses = if (st.isDirectory) fs.listStatus(p).toSeq else Seq(st)
-    val fp = statuses
-      .map(s => s"${s.getPath.getName}@${s.getModificationTime}:${s.getLen}")
-      .sorted.mkString(";")
-    schemaCache.computeIfAbsent(s"$path|$fp", _ => spark.read.parquet(path).schema)
   }
 
   /** Hourly per-type counts/sums over a parquet directory consumed as

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import graft.sources.{HudiTableReader, HudiTableWriter}
 import org.apache.spark.sql.functions._
 
 import java.time.Instant
@@ -158,6 +159,39 @@ class PipelineSpecSuite extends SparkSpec {
     assert(html.contains("""<a href="file:///tmp/r.csv""""))
     assert(html.contains("Download Report"))
     assert(html.contains("Thank you for using our service"))
+  }
+
+  test("ReportPipeline: a Hudi COW FULL source serves the snapshot, not every file slice") {
+    val s = spark
+    import s.implicits._
+    val t = tmpDir("pipe-hudi") + "/t"
+    HudiTableWriter.create((1 to 40).map(i => (i.toLong, i * 2L)).toDF("id", "v"), t,
+      recordKeys = Seq("id")): Unit
+    HudiTableWriter.upsert((1 to 10).map(i => (i.toLong, -1L)).toDF("id", "v"), t): Unit
+    val pipeline = new ReportPipeline(spark, tmpDir("pipe-hudi-cp"))
+    val full = pipeline.transform(PipelineSpec(Seq(SourceSpec("orders_h", t)),
+      TransformSpec("SELECT id, v FROM orders_h")))
+    assert(full.count() == HudiTableReader.snapshot(spark, t).count())
+    assert(full.where(col("v") === -1L).count() == 10L)
+  }
+
+  test("ReportPipeline: an INC source on a Hudi table pulls by commit token") {
+    val s = spark
+    import s.implicits._
+    val t = tmpDir("pipe-hudi-inc") + "/t"
+    HudiTableWriter.create((1 to 40).map(i => (i.toLong, i * 2L)).toDF("id", "v"), t,
+      recordKeys = Seq("id")): Unit
+    val pipeline = new ReportPipeline(spark, tmpDir("pipe-hudi-inc-cp"))
+    val spec = PipelineSpec(Seq(SourceSpec("orders_h", t, LoadMode.Incremental)),
+      TransformSpec("SELECT id, v FROM orders_h"))
+    assert(pipeline.transform(spec).count() == 40L, "the first pull bootstraps the snapshot")
+    pipeline.commitPending()
+    HudiTableWriter.upsert((1 to 10).map(i => (i.toLong, -1L)).toDF("id", "v"), t): Unit
+    val inc = pipeline.transform(spec)
+    assert(inc.count() == 10L && inc.where(col("v") === -1L).count() == 10L)
+    assert(pipeline.pendingCommits.map(_._3) == Seq(HudiTableReader.latestInstant(spark, t)))
+    pipeline.commitPending()
+    assert(pipeline.transform(spec).count() == 0L, "nothing past the committed token")
   }
 
   test("ReportPipeline.run: FULL + INC sources -> SQL -> CSV -> email + topic") {

@@ -113,17 +113,17 @@ class DeltaTableWriterSpec extends SparkSpec {
     val table = tmpDir("dwr-txn") + "/t"
     assert(DeltaTableReader.lastTransactionVersion(spark, table, "app").isEmpty,
       "no table yet = no watermark")
-    assert(graft.streaming.DeltaSink.appendBatch(df(1 to 20), table, "app", 0L))
-    assert(graft.streaming.DeltaSink.appendBatch(df(21 to 30), table, "app", 1L))
+    assert(graft.streaming.TableSink.appendBatch(df(1 to 20), table, TableLoader.DeltaFormat, "app", 0L))
+    assert(graft.streaming.TableSink.appendBatch(df(21 to 30), table, TableLoader.DeltaFormat, "app", 1L))
     assert(DeltaTableReader.lastTransactionVersion(spark, table, "app").contains(1L))
     assert(DeltaTableReader.lastTransactionVersion(spark, table, "other").isEmpty,
       "watermarks are per appId")
     // at-least-once redelivery of both batches: no-ops, table unchanged
-    assert(!graft.streaming.DeltaSink.appendBatch(df(1 to 20), table, "app", 0L))
-    assert(!graft.streaming.DeltaSink.appendBatch(df(21 to 30), table, "app", 1L))
+    assert(!graft.streaming.TableSink.appendBatch(df(1 to 20), table, TableLoader.DeltaFormat, "app", 0L))
+    assert(!graft.streaming.TableSink.appendBatch(df(21 to 30), table, TableLoader.DeltaFormat, "app", 1L))
     assert(DeltaTableReader.snapshot(spark, table).count() == 30L)
     // a NEW batch still lands after replays
-    assert(graft.streaming.DeltaSink.appendBatch(df(31 to 35), table, "app", 2L))
+    assert(graft.streaming.TableSink.appendBatch(df(31 to 35), table, TableLoader.DeltaFormat, "app", 2L))
     assert(DeltaTableReader.snapshot(spark, table).count() == 35L)
   }
 
@@ -404,7 +404,7 @@ class DeltaTableWriterSpec extends SparkSpec {
     val table = tmpDir("dwr-mpckpt") + "/t"
     DeltaTableWriter.create(df(1 to 40), table): Unit
     DeltaTableWriter.append(df(41 to 60), table): Unit
-    graft.streaming.DeltaSink.appendBatch(df(61 to 70), table, "app", 0L)
+    graft.streaming.TableSink.appendBatch(df(61 to 70), table, TableLoader.DeltaFormat, "app", 0L)
     // tiny partRows forces the multi-part form
     DeltaTableWriter.writeCheckpoint(spark, table, partRows = 3): Unit
     val logFiles = new java.io.File(s"$table/_delta_log").listFiles().map(_.getName)

@@ -150,8 +150,7 @@ class HudiHFileSpec extends SparkSpec {
     val victim = new java.io.File(table).listFiles()
       .filter(_.getName.endsWith(s"_$c2.parquet")).map(_.getName).head
     buildFilesHFile(table, c2, dropFiles = Set(victim))
-    val listing = HudiMetadataTable.filesListing(spark, table,
-      HudiTableReader.instants(spark, table).map(_._1).toSet)
+    val listing = HudiMetadataTable.filesListing(HudiTimeline.load(spark, table))
     assert(listing.isDefined)
     val files = listing.get._2.values.flatten.map(_._1).toSet
     assert(!files.contains(victim), "a deleted entry must not list")
@@ -340,8 +339,7 @@ class HudiHFileSpec extends SparkSpec {
     HudiTableWriter.create(df(1 to 10), table, recordKeys = Seq("id")): Unit
     // an instant the timeline never committed: a leftover — ignored
     buildFilesHFile(table, "99999999999999")
-    assert(HudiMetadataTable.filesListing(spark, table,
-      HudiTableReader.instants(spark, table).map(_._1).toSet).isEmpty)
+    assert(HudiMetadataTable.filesListing(HudiTimeline.load(spark, table)).isEmpty)
     assert(HudiTableReader.snapshot(spark, table).count() == 10L)
     // garbage bytes under a valid on-timeline name: filesListing
     // degrades to None (the index accelerates, never gates)
@@ -350,8 +348,7 @@ class HudiHFileSpec extends SparkSpec {
     bad.getParentFile.mkdirs()
     java.nio.file.Files.write(bad.toPath,
       Array.fill[Byte](8192)(42)): Unit
-    assert(HudiMetadataTable.filesListing(spark, table,
-      HudiTableReader.instants(spark, table).map(_._1).toSet).isEmpty)
+    assert(HudiMetadataTable.filesListing(HudiTimeline.load(spark, table)).isEmpty)
     assert(HudiTableReader.snapshot(spark, table).count() == 10L)
   }
 }

@@ -52,4 +52,30 @@ class HudiTimelineReadsSpec extends SparkSpec {
       assert(pullOpens.nonEmpty && pullOpens.values.forall(_ == 1), pullOpens)
     }
   }
+
+  test("TableLoader on a COW table: a checkpointed pull and an upsert each load .hoodie once") {
+    val t = cowTable(5)
+    val hoodie = s"$t/.hoodie"
+    val store = new CheckpointStore(tmpDir("htl-reads-cp"), spark.sparkContext.hadoopConfiguration)
+    TableLoader.commitToken(t, "orders", store, HudiTableReader.commits(spark, t)(2))
+
+    var pulled = 0L
+    var token = ""
+    val pull = FsCalls.of(spark) {
+      val Some((inc, head)) = TableLoader.pullIncremental(spark, t, "orders", store): @unchecked
+      pulled = inc.count()
+      token = head
+    }
+    assert(pulled > 0L && token == HudiTableReader.latestInstant(spark, t))
+    assert(pull.count("listStatus", hoodie) == 1, pull.calls.filter(_._2 == hoodie))
+    assert(pull.count("open", s"$hoodie/hoodie.properties") == 1)
+    // no metadata directory: the timeline's own listing says so
+    assert(pull.count("getFileStatus", s"$hoodie/metadata/files") == 0)
+
+    // the dispatch's key check reads the writer's own load; the
+    // optimistic-concurrency reload at publish stays
+    val upsert = FsCalls.of(spark)(TableLoader.upsert(rows(3, 8, 99L), t, Seq("id")): Unit)
+    assert(upsert.count("open", s"$hoodie/hoodie.properties") <= 2,
+      upsert.calls.filter(_._2.startsWith(hoodie)))
+  }
 }

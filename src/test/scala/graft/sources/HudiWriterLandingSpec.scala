@@ -1,7 +1,7 @@
 package graft.sources
 
 import graft.SparkSpec
-import graft.streaming.LakehouseSinks
+import graft.streaming.TableSink
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -187,14 +187,14 @@ class HudiWriterLandingSpec extends SparkSpec {
   test("an empty micro-batch into an unpartitioned table commits one schema-only group") {
     val table = tmpDir("hland-empty-sink") + "/t"
     val batch = rows(1, 31, 2).drop("region")
-    assert(LakehouseSinks.appendBatchHudi(batch, table, "app", 0L))
-    assert(LakehouseSinks.appendBatchHudi(batch.limit(0), table, "app", 1L))
+    assert(TableSink.appendBatch(batch, table, TableLoader.HudiFormat, "app", 0L))
+    assert(TableSink.appendBatch(batch.limit(0), table, TableLoader.HudiFormat, "app", 1L))
     assert(HudiTableWriter.lastBatchId(spark, table, "app").contains(1L))
     assert(HudiTableReader.snapshot(spark, table).count() == 30L)
     val last = HudiTableReader.latestInstant(spark, table)
     val writes = writesOf(table, last, "commit")
     assert(writes.size == 1 && footerCount(s"$table/${writes.head._2}") == 0L)
-    assert(!LakehouseSinks.appendBatchHudi(batch.limit(0), table, "app", 1L), "a replay no-ops")
+    assert(!TableSink.appendBatch(batch.limit(0), table, TableLoader.HudiFormat, "app", 1L), "a replay no-ops")
     checkTimeline(table, Seq("INSERT", "INSERT"))
   }
 
