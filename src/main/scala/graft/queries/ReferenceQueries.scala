@@ -1122,6 +1122,12 @@ trait ReferenceQueries extends QueryBase {
     r
   }
 
+  /** Publish fixture metadata version `version` ([[graft.sources.IcebergMetadata.publish]]). */
+  private def iceMetadata(s: SparkSession, table: String, version: Long, json: String): Unit =
+    require(graft.sources.IcebergMetadata.publish(
+      new org.apache.hadoop.fs.Path(table).getFileSystem(s.sparkContext.hadoopConfiguration),
+      table, version, json), s"$table: fixture metadata v$version already exists")
+
   private def iceListRec(manifestPath: String, addedBy: Long): org.apache.avro.generic.GenericRecord = {
     val r = new org.apache.avro.generic.GenericData.Record(iceListSchema)
     r.put("manifest_path", manifestPath); r.put("manifest_length", 1024L)
@@ -1158,15 +1164,11 @@ trait ReferenceQueries extends QueryBase {
       Seq(iceListRec("metadata/m1.avro", 1L)))
     iceWriteAvro(s"$table/metadata/snap-2.avro", iceListSchema, Seq(
       iceListRec("metadata/m1.avro", 1L), iceListRec("metadata/m2.avro", 2L)))
-    val w = new java.io.PrintWriter(new java.io.File(s"$table/metadata", "v2.metadata.json"), "UTF-8")
-    try w.println(
+    iceMetadata(s, table, 2,
       s"""{"format-version":2,"table-uuid":"fixture","location":"$table","current-snapshot-id":2,""" +
         """"snapshots":[""" +
         """{"snapshot-id":1,"timestamp-ms":1700000000000,"summary":{"operation":"append"},"manifest-list":"metadata/snap-1.avro"},""" +
         """{"snapshot-id":2,"parent-snapshot-id":1,"timestamp-ms":1700000001000,"summary":{"operation":"append"},"manifest-list":"metadata/snap-2.avro"}]}""")
-    finally w.close()
-    val h = new java.io.PrintWriter(new java.io.File(s"$table/metadata", "version-hint.text"), "UTF-8")
-    try h.println("2") finally h.close()
     table
   }
 
@@ -1208,16 +1210,12 @@ trait ReferenceQueries extends QueryBase {
           r.put("content", 1)
           r
         }))
-      val w = new java.io.PrintWriter(new java.io.File(s"$table/metadata", "v3.metadata.json"), "UTF-8")
-      try w.println(
+      iceMetadata(s, table, 3,
         s"""{"format-version":2,"table-uuid":"fixture","location":"$table","current-snapshot-id":3,""" +
           """"snapshots":[""" +
           """{"snapshot-id":1,"timestamp-ms":1700000000000,"summary":{"operation":"append"},"manifest-list":"metadata/snap-1.avro"},""" +
           """{"snapshot-id":2,"parent-snapshot-id":1,"timestamp-ms":1700000001000,"summary":{"operation":"append"},"manifest-list":"metadata/snap-2.avro"},""" +
           """{"snapshot-id":3,"parent-snapshot-id":2,"timestamp-ms":1700000002000,"summary":{"operation":"delete"},"manifest-list":"metadata/snap-3.avro"}]}""")
-      finally w.close()
-      val h = new java.io.PrintWriter(new java.io.File(s"$table/metadata", "version-hint.text"), "UTF-8")
-      try h.println("3") finally h.close()
       graft.sources.IcebergTableReader.snapshot(s, table)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("revenue"))
@@ -1309,19 +1307,13 @@ trait ReferenceQueries extends QueryBase {
         }
         s"""{"id":${i + 1},"name":"$c","required":false,"type":"$tpe"}"""
       }.mkString(",")
-      val w = new java.io.PrintWriter(
-        new java.io.File(s"$table/metadata", "v3.metadata.json"), "UTF-8")
-      try w.println(
+      iceMetadata(s, table, 3,
         s"""{"format-version":2,"table-uuid":"fixture","location":"$table",""" +
           s""""schemas":[{"schema-id":0,"type":"struct","fields":[$schemaFields]}],""" +
           s""""current-schema-id":0,"current-snapshot-id":3,"snapshots":[""" +
           """{"snapshot-id":1,"timestamp-ms":1700000000000,"summary":{"operation":"append"},"manifest-list":"metadata/snap-3.avro"},""" +
           """{"snapshot-id":2,"parent-snapshot-id":1,"timestamp-ms":1700000001000,"summary":{"operation":"overwrite"},"manifest-list":"metadata/snap-3.avro"},""" +
           """{"snapshot-id":3,"parent-snapshot-id":2,"timestamp-ms":1700000002000,"summary":{"operation":"append"},"manifest-list":"metadata/snap-3.avro"}]}""")
-      finally w.close()
-      val h = new java.io.PrintWriter(
-        new java.io.File(s"$table/metadata", "version-hint.text"), "UTF-8")
-      try h.println("3") finally h.close()
       graft.sources.IcebergTableReader.snapshot(s, table)
         .groupBy(col("o_orderpriority"))
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("revenue"))
@@ -2194,7 +2186,7 @@ trait ReferenceQueries extends QueryBase {
         |GROUP BY o_orderpriority""".stripMargin))
 
   /** #104 External Iceberg table SNAPSHOT read
-    * ([[graft.sources.IcebergTableReader]]): version-hint → metadata
+    * ([[graft.sources.IcebergTableReader]]): current metadata
     * JSON → the current snapshot's Avro manifest list → live data
     * files, read as one distributed scan — the third leg of the
     * existing-lakehouse-table interop surface (template.py:207-217).

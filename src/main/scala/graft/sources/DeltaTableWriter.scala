@@ -1072,7 +1072,7 @@ object DeltaTableWriter {
     val doomedCdc =
       if (!fs.exists(cdcDir)) Nil
       else FileLanding.sweepUnnamed(fs, cdcDir, _ => false, horizon + 1).map("_change_data/" + _)
-    val mirrored = fs.exists(new Path(root, "metadata/version-hint.text"))
+    val mirrored = IcebergMetadata.present(fs, root)
     val unnamed = FileLanding.sweepUnnamed(fs, root, named, horizon,
       n => n == "_delta_log" || n == "_change_data" || (mirrored && n == "metadata"))
     doomed ++ doomedCdc.sorted ++ unnamed.sorted

@@ -1,10 +1,9 @@
 package graft.sources
 
-import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -14,9 +13,9 @@ import org.apache.spark.sql.functions._
   * [[DeltaTableReader]] and [[HudiTableReader]]), implemented from
   * the PUBLIC Iceberg table spec (iceberg.apache.org/spec):
   *
-  *  - `metadata/version-hint.text` names the current
-  *    `vN.metadata.json`; the metadata JSON carries the snapshot log
-  *    (`snapshots`: id, parent, operation summary, manifest-list);
+  *  - one [[IcebergMetadata]] value per operation holds the current
+  *    metadata JSON: the snapshot log (`snapshots`: id, parent,
+  *    operation summary, manifest-list), schemas, specs and refs;
   *  - a snapshot's MANIFEST LIST is a small Avro file of manifest
   *    paths (+ `added_snapshot_id`, and in v2 a `content` field
   *    separating data from delete manifests);
@@ -50,8 +49,6 @@ import org.apache.spark.sql.functions._
   */
 object IcebergTableReader {
 
-  private val mapper = new ObjectMapper()
-
   final case class SnapshotInfo(
       id: Long,
       parentId: Option[Long],
@@ -60,151 +57,15 @@ object IcebergTableReader {
       timestampMs: Long = 0L,
       summary: Map[String, String] = Map.empty) // extra keys beyond operation
 
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-  }
-
-  /** Resolve the current metadata JSON: version-hint.text when
-    * present, else the highest-numbered `v*.metadata.json`.
-    */
-  private def currentMetadataPath(fs: FileSystem, tablePath: String): Path = {
-    val metaDir = new Path(tablePath, "metadata")
-    if (!fs.exists(metaDir)) throw new IllegalArgumentException(
-      s"$tablePath is not an Iceberg table: no metadata directory")
-    val hint = new Path(metaDir, "version-hint.text")
-    if (fs.exists(hint)) new Path(metaDir, s"v${readText(fs, hint).trim}.metadata.json")
-    else {
-      val candidates = fs.listStatus(metaDir).toIndexedSeq
-        .map(_.getPath.getName)
-        .filter(n => n.endsWith(".metadata.json"))
-      if (candidates.isEmpty) throw new IllegalArgumentException(
-        s"$tablePath: no *.metadata.json under metadata/")
-      // NUMERIC max, not lexicographic: unpadded `v9.metadata.json`
-      // sorts above `v10.metadata.json` as a string, which would
-      // silently serve a stale snapshot past version 9. Both public
-      // filesystem-catalog names carry the version as a number —
-      // `vN.metadata.json` and the zero-padded `NNNNN-<uuid>` form.
-      def numericVersion(name: String): Option[Long] = {
-        val base = name.stripSuffix(".metadata.json")
-        if (base.startsWith("v") && base.length > 1 && base.drop(1).forall(_.isDigit))
-          Some(base.drop(1).toLong)
-        else {
-          val digits = base.takeWhile(_.isDigit)
-          if (digits.nonEmpty && base.lift(digits.length).contains('-')) Some(digits.toLong)
-          else None
-        }
-      }
-      val numbered = candidates.flatMap(n => numericVersion(n).map(v => (v, n)))
-      val pick =
-        if (numbered.size == candidates.size) numbered.maxBy(_._1)._2
-        else candidates.max // unknown naming scheme: fall back, stated in spec
-      new Path(metaDir, pick)
-    }
-  }
-
   /** The snapshot log from the current metadata JSON, oldest first,
     * plus the current snapshot id.
     */
-  def snapshotLog(spark: SparkSession, tablePath: String): (Seq[SnapshotInfo], Long) = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val meta = mapper.readTree(readText(fs, currentMetadataPath(fs, tablePath)))
-    val currentId = Option(meta.get("current-snapshot-id")).map(_.asLong()).getOrElse(
-      throw new IllegalArgumentException(s"$tablePath: metadata has no current-snapshot-id"))
-    if (currentId < 0) throw new IllegalArgumentException(
-      s"$tablePath: table has no current snapshot (empty table)")
-    val snaps = Seq.newBuilder[SnapshotInfo]
-    val arr = meta.get("snapshots")
-    if (arr != null && arr.isArray) arr.forEach { s =>
-      val extra = Map.newBuilder[String, String]
-      Option(s.get("summary")).foreach(sm => sm.fields().forEachRemaining { e =>
-        if (e.getKey != "operation") extra += (e.getKey -> e.getValue.asText())
-      })
-      snaps += SnapshotInfo(
-        id = s.get("snapshot-id").asLong(),
-        parentId = Option(s.get("parent-snapshot-id")).map(_.asLong()),
-        operation = Option(s.get("summary")).flatMap(x => Option(x.get("operation")))
-          .map(_.asText()).getOrElse("append"),
-        manifestList = s.get("manifest-list").asText(),
-        timestampMs = Option(s.get("timestamp-ms")).map(_.asLong()).getOrElse(0L),
-        summary = extra.result())
-    }
-    (snaps.result(), currentId)
-  }
+  def snapshotLog(spark: SparkSession, tablePath: String): (Seq[SnapshotInfo], Long) =
+    IcebergMetadata.load(spark, tablePath).snapshotLog
 
-  /** Field-id → name map from the metadata JSON's schema(s) — what
-    * resolves equality-delete `equality_ids` to column names. Reads
-    * the current schema (`schemas` + `current-schema-id`, or the
-    * legacy single `schema`).
-    */
-  /** The CURRENT schema node: `schemas[current-schema-id]` (falling
-    * back to the first entry, then the legacy v1 `schema` field) —
-    * shared by name AND type resolution so bound decoding reads at
-    * the same width the names resolve against after evolution.
-    */
-  private def currentSchemaNode(
-      meta: com.fasterxml.jackson.databind.JsonNode): com.fasterxml.jackson.databind.JsonNode = {
-    val schemas = meta.get("schemas")
-    if (schemas != null && schemas.isArray) {
-      val currentId = Option(meta.get("current-schema-id")).map(_.asInt())
-      var pick: com.fasterxml.jackson.databind.JsonNode = null
-      schemas.forEach { s =>
-        if (pick == null ||
-          currentId.exists(id => Option(s.get("schema-id")).exists(_.asInt() == id)))
-          pick = s
-      }
-      pick
-    } else meta.get("schema")
-  }
-
-  private[sources] def schemaFieldNames(spark: SparkSession, tablePath: String): Map[Int, String] = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val meta = mapper.readTree(readText(fs, currentMetadataPath(fs, tablePath)))
-    val schemaNode = currentSchemaNode(meta)
-    if (schemaNode == null) Map.empty
-    else {
-      val b = Map.newBuilder[Int, String]
-      val fields = schemaNode.get("fields")
-      if (fields != null && fields.isArray)
-        fields.forEach(f => b += (f.get("id").asInt() -> f.get("name").asText()))
-      b.result()
-    }
-  }
-
-  /** The table's DEFAULT sort order as (column, direction, null-order)
-    * triples (spec "Sort Orders": `sort-orders` +
-    * `default-sort-order-id`; source-ids resolve against the current
-    * schema). Empty for unsorted tables (order 0), tables predating
-    * the field, and non-identity transforms (this writer re-sorts
-    * appends only on identity orders — sorting is advisory).
-    */
-  def sortOrder(spark: SparkSession, tablePath: String): Seq[(String, String, String)] = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val meta = mapper.readTree(readText(fs, currentMetadataPath(fs, tablePath)))
-    val orders = meta.get("sort-orders")
-    if (orders == null || !orders.isArray) return Nil
-    val defaultId = Option(meta.get("default-sort-order-id")).map(_.asInt()).getOrElse(0)
-    var fields: com.fasterxml.jackson.databind.JsonNode = null
-    orders.forEach { o =>
-      if (Option(o.get("order-id")).exists(_.asInt() == defaultId)) fields = o.get("fields")
-    }
-    if (fields == null || !fields.isArray) return Nil
-    val names = schemaFieldNames(spark, tablePath)
-    val b = Seq.newBuilder[(String, String, String)]
-    var resolvable = true
-    fields.forEach { f =>
-      val transform = Option(f.get("transform")).map(_.asText()).getOrElse("identity")
-      val name = Option(f.get("source-id")).map(_.asInt()).flatMap(names.get)
-      if (transform != "identity" || name.isEmpty) resolvable = false
-      else b += ((name.get,
-        Option(f.get("direction")).map(_.asText()).getOrElse("asc"),
-        Option(f.get("null-order")).map(_.asText()).getOrElse("nulls-first")))
-    }
-    if (resolvable) b.result() else Nil
-  }
+  /** The table's DEFAULT sort order ([[IcebergMetadata.sortOrder]]). */
+  def sortOrder(spark: SparkSession, tablePath: String): Seq[(String, String, String)] =
+    IcebergMetadata.load(spark, tablePath).sortOrder
 
   /** The CURRENT snapshot's registered PARTITION STATISTICS file as a
     * DataFrame in the spec's schema (partition struct + per-partition
@@ -215,20 +76,9 @@ object IcebergTableReader {
     * `IcebergTableWriter.writePartitionStats` first.
     */
   def partitionStats(spark: SparkSession, tablePath: String): org.apache.spark.sql.DataFrame = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val meta = mapper.readTree(readText(fs, currentMetadataPath(fs, tablePath)))
-    val currentId = Option(meta.get("current-snapshot-id")).map(_.asLong())
-      .getOrElse(throw new IllegalArgumentException(
-        s"$tablePath: no current snapshot"))
-    val arr = meta.get("partition-statistics")
-    val path = Option(arr).filter(_.isArray).flatMap { a =>
-      var found: Option[String] = None
-      a.forEach { e =>
-        if (Option(e.get("snapshot-id")).exists(_.asLong() == currentId))
-          found = Option(e.get("statistics-path")).map(_.asText())
-      }
-      found
-    }.getOrElse(throw new IllegalStateException(
+    val m = IcebergMetadata.load(spark, tablePath)
+    val currentId = m.currentSnapshotId
+    val path = m.partitionStatsPath(currentId).getOrElse(throw new IllegalStateException(
       s"$tablePath: no partition statistics registered for snapshot $currentId — " +
         "run IcebergTableWriter.writePartitionStats (stale stats for an older " +
         "snapshot never serve silently)"))
@@ -364,40 +214,10 @@ object IcebergTableReader {
       case (p, added, content, listSeq) => (p, added.getOrElse(0L), content, listSeq)
     }
 
-  /** Numeric version of the current metadata file (hint value when
-    * present, else the discovered numeric max) — the writer's next
-    * version is this + 1.
-    */
-  private[sources] def currentMetadataVersion(spark: SparkSession, tablePath: String): Long = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val name = currentMetadataPath(fs, tablePath).getName.stripSuffix(".metadata.json")
-    if (name.startsWith("v") && name.drop(1).forall(_.isDigit)) name.drop(1).toLong
-    else {
-      val digits = name.takeWhile(_.isDigit)
-      if (digits.nonEmpty) digits.toLong
-      else throw new IllegalStateException(
-        s"$tablePath: cannot parse a numeric version out of $name.metadata.json")
-    }
-  }
-
-  /** The current metadata's declared `format-version` (2 when the
-    * field is absent — v1 tables read fine under v2 rules here). */
-  private[sources] def currentFormatVersion(spark: SparkSession, tablePath: String): Int = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val meta = mapper.readTree(readText(fs, currentMetadataPath(fs, tablePath)))
-    Option(meta.get("format-version")).map(_.asInt()).getOrElse(2)
-  }
-
   /** Expand the plan's deletion vectors for the WRITER's live-row
     * computation — same executor-side decode as the read path. */
   private[sources] def dvPositionsOf(spark: SparkSession, tablePath: String,
       dvs: Seq[DvRef]): DataFrame = dvPositionsDf(spark, tablePath, dvs)
-
-  private def currentSnapshot(spark: SparkSession, tablePath: String): SnapshotInfo = {
-    val (snaps, currentId) = snapshotLog(spark, tablePath)
-    snaps.find(_.id == currentId).getOrElse(throw new IllegalArgumentException(
-      s"$tablePath: current-snapshot-id $currentId not in the snapshot list"))
-  }
 
   /** One EQUALITY-delete file (content=2): its equality columns
     * (resolved from field ids) and the sequence number that scopes
@@ -425,7 +245,11 @@ object IcebergTableReader {
       deletionVectors: Seq[DvRef] = Nil)
 
   def planFiles(spark: SparkSession, tablePath: String): PlanFiles =
-    planFilesOf(spark, tablePath, currentSnapshot(spark, tablePath))
+    planFiles(spark, IcebergMetadata.load(spark, tablePath))
+
+  /** The live file plan of `m`'s current snapshot. */
+  private[sources] def planFiles(spark: SparkSession, m: IcebergMetadata): PlanFiles =
+    planFilesOf(spark, m, m.currentSnapshot)
 
   /** [[planFiles]] with identity-partition pruning: entries whose
     * recorded partition values fail `pruner` never reach the scan —
@@ -434,17 +258,22 @@ object IcebergTableReader {
     */
   def planFilesPruned(spark: SparkSession, tablePath: String,
       pruner: Map[String, String] => Boolean): PlanFiles =
-    planFilesOf(spark, tablePath, currentSnapshot(spark, tablePath), pruner)
+    prunedPlan(spark, IcebergMetadata.load(spark, tablePath), pruner)
 
-  private def planFilesOf(spark: SparkSession, tablePath: String,
+  private def prunedPlan(spark: SparkSession, m: IcebergMetadata,
+      pruner: Map[String, String] => Boolean): PlanFiles =
+    planFilesOf(spark, m, m.currentSnapshot, pruner)
+
+  private def planFilesOf(spark: SparkSession, m: IcebergMetadata,
       snap: SnapshotInfo, pruner: Map[String, String] => Boolean = _ => true): PlanFiles = {
+    val tablePath = m.tablePath
     val manifests = manifestsOf(spark, resolve(tablePath, snap.manifestList))
     val data = Seq.newBuilder[(String, Option[Long])]
     val posDeletes = Seq.newBuilder[String]
     val dvRefs = Seq.newBuilder[DvRef]
     val eqDeletes = Seq.newBuilder[EqDelete]
     val boundsB = Map.newBuilder[String, (Map[Int, Array[Byte]], Map[Int, Array[Byte]])]
-    lazy val idToName = schemaFieldNames(spark, tablePath)
+    val idToName = m.fieldNames
     manifests.foreach { case (mpath, _, mcontent, mseq) =>
       manifestEntries(spark, resolve(tablePath, mpath)).foreach { e0 =>
         // SEQUENCE-NUMBER INHERITANCE (spec): an ADDED entry (status=1)
@@ -515,24 +344,6 @@ object IcebergTableReader {
       dvRefs.result().distinct)
   }
 
-  /** Field-id → Iceberg type name from the metadata schema — what
-    * decodes manifest bound bytes. */
-  private def schemaFieldTypes(spark: SparkSession, tablePath: String): Map[Int, String] = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val meta = mapper.readTree(readText(fs, currentMetadataPath(fs, tablePath)))
-    val schemaNode = currentSchemaNode(meta)
-    if (schemaNode == null) Map.empty
-    else {
-      val b = Map.newBuilder[Int, String]
-      val fields = schemaNode.get("fields")
-      if (fields != null && fields.isArray) fields.forEach { f =>
-        if (f.get("type") != null && f.get("type").isTextual)
-          b += (f.get("id").asInt() -> f.get("type").asText())
-      }
-      b.result()
-    }
-  }
-
   /** Iceberg single-value DEserialization for the numeric bound
     * types the skipping compare handles; None = not comparable
     * (readers keep the file conservatively). */
@@ -554,13 +365,15 @@ object IcebergTableReader {
     * prunes I/O, never semantics. Metadata-only, before any data I/O.
     */
   def planFilesSkipping(spark: SparkSession, tablePath: String,
+      column: String, lo: Double, hi: Double): PlanFiles =
+    skippingPlan(spark, IcebergMetadata.load(spark, tablePath), column, lo, hi)
+
+  private def skippingPlan(spark: SparkSession, m: IcebergMetadata,
       column: String, lo: Double, hi: Double): PlanFiles = {
-    val plan = planFiles(spark, tablePath)
-    val nameToId = schemaFieldNames(spark, tablePath).map(_.swap)
-    val fid = nameToId.getOrElse(column, throw new IllegalArgumentException(
-      s"$tablePath: skipping column $column is not a declared table column"))
-    val types = schemaFieldTypes(spark, tablePath)
-    val tpe = types.getOrElse(fid, "")
+    val plan = planFiles(spark, m)
+    val fid = m.fieldNames.map(_.swap).getOrElse(column, throw new IllegalArgumentException(
+      s"${m.tablePath}: skipping column $column is not a declared table column"))
+    val tpe = m.fieldTypes.getOrElse(fid, "")
     val kept = plan.data.filter { f =>
       plan.bounds.get(f) match {
         case None => true
@@ -579,8 +392,10 @@ object IcebergTableReader {
     * the anti joins are |delete rows|-bounded either way).
     */
   def snapshotSkipping(spark: SparkSession, tablePath: String,
-      column: String, lo: Double, hi: Double): DataFrame =
-    readPlan(spark, tablePath, planFilesSkipping(spark, tablePath, column, lo, hi))
+      column: String, lo: Double, hi: Double): DataFrame = {
+    val m = IcebergMetadata.load(spark, tablePath)
+    readPlan(spark, m, skippingPlan(spark, m, column, lo, hi))
+  }
 
   /** Live data files of the current snapshot. Refuses when the
     * snapshot carries row-level deletes — callers of the bare file
@@ -611,15 +426,21 @@ object IcebergTableReader {
     * delete files are themselves read as one distributed scan.
     */
   def snapshot(spark: SparkSession, tablePath: String): DataFrame =
-    readPlan(spark, tablePath, planFiles(spark, tablePath))
+    snapshot(spark, IcebergMetadata.load(spark, tablePath))
+
+  /** [[snapshot]] of `m`'s current snapshot. */
+  private[sources] def snapshot(spark: SparkSession, m: IcebergMetadata): DataFrame =
+    readPlan(spark, m, planFiles(spark, m))
 
   /** Snapshot read with identity-partition pruning — only data files
     * whose partition values pass `pruner` are scanned (proven by the
     * plan's input-file set, not just row counts).
     */
   def snapshotPruned(spark: SparkSession, tablePath: String,
-      pruner: Map[String, String] => Boolean): DataFrame =
-    readPlan(spark, tablePath, planFilesPruned(spark, tablePath, pruner))
+      pruner: Map[String, String] => Boolean): DataFrame = {
+    val m = IcebergMetadata.load(spark, tablePath)
+    readPlan(spark, m, prunedPlan(spark, m, pruner))
+  }
 
   /** The partition-spec fields the current metadata declares —
     * transforms included ([[IcebergTransforms]]); what the
@@ -627,7 +448,7 @@ object IcebergTableReader {
     */
   def partitionSpecFields(spark: SparkSession,
       tablePath: String): Seq[IcebergTransforms.PartitionField] =
-    IcebergTableWriter.declaredPartitionFields(spark, tablePath)
+    IcebergMetadata.load(spark, tablePath).partitionFields
 
   /** Pruner for `column BETWEEN lo AND hi` THROUGH the table's
     * declared partition transforms — the inverse half of transform
@@ -646,8 +467,11 @@ object IcebergTableReader {
     * metadata-only before any data I/O, Iceberg's own planning move.
     */
   def snapshotPrunedRange(spark: SparkSession, tablePath: String, column: String,
-      lo: Any, hi: Any): DataFrame =
-    snapshotPruned(spark, tablePath, transformPruner(spark, tablePath, column, lo, hi))
+      lo: Any, hi: Any): DataFrame = {
+    val m = IcebergMetadata.load(spark, tablePath)
+    readPlan(spark, m, prunedPlan(spark, m,
+      IcebergTransforms.prunerFor(m.partitionFields, column, lo, hi)))
+  }
 
   /** TIMESTAMP AS OF: the latest snapshot whose `timestamp-ms` is at
     * or before `timestampMs` — pure snapshot-log metadata, Iceberg's
@@ -672,7 +496,8 @@ object IcebergTableReader {
     import scala.jdk.CollectionConverters._
     def mk(rows: Seq[Row], schema: StructType) =
       spark.createDataFrame(rows.asJava, schema)
-    lazy val (snaps, currentId) = snapshotLog(spark, tablePath)
+    lazy val m = IcebergMetadata.load(spark, tablePath)
+    lazy val (snaps, currentId) = m.snapshotLog
     name match {
       case "snapshots" =>
         mk(snaps.map(s => Row(new java.sql.Timestamp(s.timestampMs), s.id,
@@ -700,16 +525,14 @@ object IcebergTableReader {
             StructField("parent_id", LongType),
             StructField("is_current_ancestor", BooleanType))))
       case "refs" =>
-        mk(refs(spark, tablePath).toSeq.sortBy(_._1).map { case (n, (id, t)) =>
+        mk(m.refs.toSeq.sortBy(_._1).map { case (n, (id, t)) =>
             Row(n, t, id) },
           StructType(Seq(
             StructField("name", StringType),
             StructField("type", StringType),
             StructField("snapshot_id", LongType))))
       case "manifests" =>
-        val current = snaps.find(_.id == currentId).getOrElse(
-          throw new IllegalArgumentException(s"$tablePath: no current snapshot"))
-        mk(manifestListEntries(spark, tablePath, current.manifestList)
+        mk(manifestListEntries(spark, tablePath, m.currentSnapshot.manifestList)
             .map { case (p, added, content, seq) =>
               Row(resolve(tablePath, p), content, added,
                 seq.map(java.lang.Long.valueOf).orNull) },
@@ -719,9 +542,7 @@ object IcebergTableReader {
             StructField("added_snapshot_id", LongType),
             StructField("sequence_number", LongType))))
       case "files" =>
-        val current = snaps.find(_.id == currentId).getOrElse(
-          throw new IllegalArgumentException(s"$tablePath: no current snapshot"))
-        val rows = manifestListEntries(spark, tablePath, current.manifestList)
+        val rows = manifestListEntries(spark, tablePath, m.currentSnapshot.manifestList)
           .flatMap { case (mp, _, content, _) =>
             manifestEntriesPublic(spark, tablePath, mp)
               .filter(_.status != 2) // deleted entries are not live
@@ -736,11 +557,9 @@ object IcebergTableReader {
             StructField("record_count", LongType),
             StructField("partition", MapType(StringType, StringType)))))
       case "partitions" =>
-        val current = snaps.find(_.id == currentId).getOrElse(
-          throw new IllegalArgumentException(s"$tablePath: no current snapshot"))
         val agg = scala.collection.mutable.LinkedHashMap
           .empty[Map[String, String], (Long, Long)]
-        manifestListEntries(spark, tablePath, current.manifestList)
+        manifestListEntries(spark, tablePath, m.currentSnapshot.manifestList)
           .filter(_._3 == 0).foreach { case (mp, _, _, _) =>
             manifestEntriesPublic(spark, tablePath, mp)
               .filter(e => e.status != 2 && e.content == 0).foreach { e =>
@@ -759,42 +578,29 @@ object IcebergTableReader {
     }
   }
 
-  def refs(spark: SparkSession, tablePath: String): Map[String, (Long, String)] = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val meta = mapper.readTree(readText(fs, currentMetadataPath(fs, tablePath)))
-    val node = meta.get("refs")
-    if (node == null || !node.isObject) Map.empty
-    else {
-      val b = Map.newBuilder[String, (Long, String)]
-      node.fields().forEachRemaining { e =>
-        val sid = Option(e.getValue.get("snapshot-id")).map(_.asLong())
-        val tpe = Option(e.getValue.get("type")).map(_.asText()).getOrElse("branch")
-        sid.foreach(id => b += (e.getKey -> ((id, tpe))))
-      }
-      b.result()
-    }
-  }
+  def refs(spark: SparkSession, tablePath: String): Map[String, (Long, String)] =
+    IcebergMetadata.load(spark, tablePath).refs
 
   /** Read the snapshot a named ref (branch or tag) points at —
     * `VERSION AS OF 'name'`, Iceberg's ref-based time travel. Unknown
     * names refuse with the declared ref list.
     */
   def snapshotAsOfRef(spark: SparkSession, tablePath: String, name: String): DataFrame = {
-    val all = refs(spark, tablePath)
-    val (sid, _) = all.getOrElse(name, throw new IllegalArgumentException(
+    val m = IcebergMetadata.load(spark, tablePath)
+    val (sid, _) = m.refs.getOrElse(name, throw new IllegalArgumentException(
       s"$tablePath: no ref named '$name' (declared: " +
-        s"${if (all.isEmpty) "none" else all.keys.toSeq.sorted.mkString(", ")})"))
-    snapshotAsOf(spark, tablePath, sid)
+        s"${if (m.refs.isEmpty) "none" else m.refs.keys.toSeq.sorted.mkString(", ")})"))
+    asOf(spark, m, sid)
   }
 
   def snapshotAsOfTimestamp(spark: SparkSession, tablePath: String,
       timestampMs: Long): DataFrame = {
-    val (snaps, _) = snapshotLog(spark, tablePath)
-    val eligible = snaps.filter(_.timestampMs <= timestampMs)
+    val m = IcebergMetadata.load(spark, tablePath)
+    val eligible = m.snapshots.filter(_.timestampMs <= timestampMs)
     if (eligible.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: no snapshot at or before timestamp $timestampMs " +
-        s"(earliest: ${snaps.map(_.timestampMs).minOption.getOrElse(-1L)})")
-    snapshotAsOf(spark, tablePath, eligible.maxBy(_.timestampMs).id)
+        s"(earliest: ${m.snapshots.map(_.timestampMs).minOption.getOrElse(-1L)})")
+    asOf(spark, m, eligible.maxBy(_.timestampMs).id)
   }
 
   /** SNAPSHOT AS OF: read any snapshot still in the metadata's log by
@@ -802,147 +608,26 @@ object IcebergTableReader {
     * file inventory of that snapshot, so no replay is needed. An id
     * not in the log refuses (expired by snapshot cleanup).
     */
-  def snapshotAsOf(spark: SparkSession, tablePath: String, snapshotId: Long): DataFrame = {
-    val (snaps, _) = snapshotLog(spark, tablePath)
-    val snap = snaps.find(_.id == snapshotId).getOrElse(throw new IllegalArgumentException(
-      s"$tablePath: snapshot $snapshotId is not in the metadata log " +
+  def snapshotAsOf(spark: SparkSession, tablePath: String, snapshotId: Long): DataFrame =
+    asOf(spark, IcebergMetadata.load(spark, tablePath), snapshotId)
+
+  private def asOf(spark: SparkSession, m: IcebergMetadata, snapshotId: Long): DataFrame = {
+    val snap = m.snapshots.find(_.id == snapshotId).getOrElse(throw new IllegalArgumentException(
+      s"${m.tablePath}: snapshot $snapshotId is not in the metadata log " +
         "(expired by snapshot cleanup?)"))
-    readPlan(spark, tablePath, planFilesOf(spark, tablePath, snap))
+    readPlan(spark, m, planFilesOf(spark, m, snap))
   }
 
-  /** Spark type for an Iceberg primitive type name — the subset the
-    * declared-schema scan handles. None = fall back to footer
-    * inference. Decimals parse their declared precision/scale (the
-    * spec's `decimal(P, S)` form, space optional).
-    */
-  /** The spec's `decimal(P, S)` primitive form (space optional) —
-    * shared with the writer's promotion check so the two sides can
-    * never drift on what parses as a decimal. */
-  private[sources] val DecimalRe = """decimal\(\s*(\d+)\s*,\s*(\d+)\s*\)""".r
-  private def sparkTypeOf(t: String): Option[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    t match {
-      case "long" => Some(LongType)
-      case "int" => Some(IntegerType)
-      case "double" => Some(DoubleType)
-      case "float" => Some(FloatType)
-      case "boolean" => Some(BooleanType)
-      case "string" => Some(StringType)
-      case "binary" => Some(BinaryType)
-      case "date" => Some(DateType)
-      case "timestamptz" => Some(TimestampType)
-      case "timestamp" => Some(TimestampNTZType)
-      case DecimalRe(p, s) => Some(DecimalType(p.toInt, s.toInt))
-      case _ => None
-    }
-  }
-
-  /** The CURRENT schema as a Spark StructType (fields in schema
-    * order, all nullable), when every declared type maps — what lets
-    * the scan NULL-FILL columns added by schema evolution in files
-    * written before it (footer inference would make the scanned
-    * schema depend on which file Spark samples).
-    */
-  /** True when the schema HISTORY diverges ids from names — either a
-    * field id mapped to more than one name (a RENAME: pre-rename
-    * files carry the old parquet name) or a name mapped to more than
-    * one id (a DROP + RE-ADD: old files carry a SAME-NAMED column
-    * whose bytes belong to the dropped field and must NOT leak into
-    * the new one). Either way a name-keyed scan is wrong and field-id
-    * resolution (the spec's actual rule) is the only safe read.
-    */
-  private def hasRenamedColumns(meta: com.fasterxml.jackson.databind.JsonNode): Boolean = {
-    val schemas = meta.get("schemas")
-    if (schemas == null || !schemas.isArray) return false
-    val seenById = scala.collection.mutable.Map.empty[Int, String]
-    val seenByName = scala.collection.mutable.Map.empty[String, Int]
-    var diverged = false
-    schemas.forEach { sn =>
-      val fs0 = sn.get("fields")
-      if (fs0 != null && fs0.isArray) fs0.forEach { f =>
-        val id = f.get("id").asInt(); val n = f.get("name").asText()
-        if (seenById.getOrElse(id, n) != n) diverged = true
-        if (seenByName.getOrElse(n, id) != id) diverged = true
-        seenById(id) = n
-        seenByName(n) = id
-      }
-    }
-    diverged
-  }
-
+  /** [[IcebergMetadata.declaredSparkSchema]]; renamed tables resolve
+    * columns by FIELD ID (the spec's rule — engines stamp parquet field
+    * ids), so the session flag turns id matching on, exactly the Delta
+    * columnMapping=id machinery. */
   private def declaredSparkSchema(spark: SparkSession,
-      tablePath: String): Option[org.apache.spark.sql.types.StructType] = {
-    val fs = fsOf(spark, new Path(tablePath))
-    val meta = mapper.readTree(readText(fs, currentMetadataPath(fs, tablePath)))
-    val schemaNode = currentSchemaNode(meta)
-    if (schemaNode == null) return None
-    val fields = schemaNode.get("fields")
-    if (fields == null || !fields.isArray) return None
-    // renamed tables resolve columns by FIELD ID (the spec's rule —
-    // engines stamp parquet field ids); the requested schema carries
-    // parquet.field.id metadata and the session flag turns id
-    // matching on, exactly the Delta columnMapping=id machinery
-    val byId = hasRenamedColumns(meta)
-    if (byId && spark.conf.getOption("spark.sql.parquet.fieldId.read.enabled")
+      m: IcebergMetadata): Option[org.apache.spark.sql.types.StructType] = {
+    if (m.hasRenamedColumns && spark.conf.getOption("spark.sql.parquet.fieldId.read.enabled")
         .forall(_ != "true"))
       spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-    // recursive type mapping: primitives by name, nested struct/list/
-    // map through the spec's object form. Nested columns resolve by
-    // NAME — a rename-affected table (byId) keeps its inner fields
-    // un-id-stamped in graft-landed files, so nested there falls back
-    // rather than mis-resolving
-    def typeOfNode(tNode: com.fasterxml.jackson.databind.JsonNode)
-        : Option[org.apache.spark.sql.types.DataType] = {
-      import org.apache.spark.sql.types._
-      if (tNode == null) None
-      else if (tNode.isTextual) sparkTypeOf(tNode.asText())
-      else if (!tNode.isObject) None
-      else Option(tNode.get("type")).map(_.asText()).flatMap {
-        case "struct" =>
-          val fns = tNode.get("fields")
-          if (fns == null || !fns.isArray) None
-          else {
-            val inner = Seq.newBuilder[StructField]
-            var innerOk = true
-            fns.forEach { f =>
-              typeOfNode(f.get("type")) match {
-                case Some(dt) =>
-                  inner += StructField(f.get("name").asText(), dt, nullable = true)
-                case None => innerOk = false
-              }
-            }
-            val got = inner.result()
-            if (innerOk && got.nonEmpty) Some(StructType(got)) else None
-          }
-        case "list" =>
-          typeOfNode(tNode.get("element")).map(ArrayType(_, containsNull = true))
-        case "map" =>
-          for {
-            k <- typeOfNode(tNode.get("key"))
-            v <- typeOfNode(tNode.get("value"))
-          } yield MapType(k, v, valueContainsNull = true)
-        case _ => None
-      }
-    }
-    val b = Seq.newBuilder[org.apache.spark.sql.types.StructField]
-    var ok = true
-    fields.forEach { f =>
-      val tNode = f.get("type")
-      val nested = tNode != null && !tNode.isTextual
-      if (byId && nested) ok = false // inner ids un-stamped: no id resolution
-      else typeOfNode(tNode) match {
-        case Some(dt) =>
-          val md =
-            if (!byId) org.apache.spark.sql.types.Metadata.empty
-            else new org.apache.spark.sql.types.MetadataBuilder()
-              .putLong("parquet.field.id", f.get("id").asLong()).build()
-          b += org.apache.spark.sql.types.StructField(f.get("name").asText(), dt,
-            nullable = true, md)
-        case None => ok = false
-      }
-    }
-    val st = b.result()
-    if (ok && st.nonEmpty) Some(org.apache.spark.sql.types.StructType(st)) else None
+    m.declaredSparkSchema
   }
 
   /** Expand v3 deletion vectors into a (`_g_file`, `_g_pos`) frame —
@@ -966,10 +651,11 @@ object IcebergTableReader {
       .toDF("_g_file", "_g_pos")
   }
 
-  private def readPlan(spark: SparkSession, tablePath: String, plan: PlanFiles): DataFrame = {
+  private def readPlan(spark: SparkSession, m: IcebergMetadata, plan: PlanFiles): DataFrame = {
+    val tablePath = m.tablePath
     if (plan.data.isEmpty) throw new IllegalArgumentException(
       s"$tablePath: current snapshot has no live data files")
-    val base = declaredSparkSchema(spark, tablePath) match {
+    val base = declaredSparkSchema(spark, m) match {
       case Some(st) =>
         spark.read.schema(st).parquet(plan.data.map(resolve(tablePath, _)): _*)
       case None => spark.read.parquet(plan.data.map(resolve(tablePath, _)): _*)
@@ -1052,7 +738,8 @@ object IcebergTableReader {
     * still advances.
     */
   def incrementalSince(spark: SparkSession, tablePath: String, sinceSnapshotId: Long): DataFrame = {
-    val range = chainSince(spark, tablePath, sinceSnapshotId)
+    val m = IcebergMetadata.load(spark, tablePath)
+    val range = chainSince(m, sinceSnapshotId)
     range.find(s => s.operation != "append" && s.operation != "replace").foreach { s =>
       throw new AppendScopedRangeException(
         s"$tablePath: snapshot ${s.id} is '${s.operation}', not an append — " +
@@ -1081,7 +768,7 @@ object IcebergTableReader {
       // checkpoint: an empty pull, NOT an error — shaped like the
       // table so downstream unions/schemas keep working
       if (range.exists(_.operation == "replace"))
-        return snapshot(spark, tablePath).where(lit(false))
+        return snapshot(spark, m).where(lit(false))
           .withColumn("_snapshot_id", lit(null).cast("long"))
       throw new IllegalArgumentException(
         s"$tablePath: snapshots after $sinceSnapshotId added no data files")
@@ -1091,7 +778,7 @@ object IcebergTableReader {
     // and files written before a TYPE PROMOTION widen at scan — a
     // footer-inferred pull would serve the narrow physical type and
     // type-wobble across pulls as the consumer's checkpoint advances
-    val reader = declaredSparkSchema(spark, tablePath) match {
+    val reader = declaredSparkSchema(spark, m) match {
       case Some(st) => spark.read.schema(st)
       case None => spark.read
     }
@@ -1105,9 +792,9 @@ object IcebergTableReader {
     * that is not an ancestor of the current snapshot (the table
     * history was rewritten under the consumer) and an empty range.
     */
-  private def chainSince(spark: SparkSession, tablePath: String,
-      sinceSnapshotId: Long): Seq[SnapshotInfo] = {
-    val (snaps, currentId) = snapshotLog(spark, tablePath)
+  private def chainSince(m: IcebergMetadata, sinceSnapshotId: Long): Seq[SnapshotInfo] = {
+    val tablePath = m.tablePath
+    val (snaps, currentId) = m.snapshotLog
     val byId = snaps.map(s => s.id -> s).toMap
     val chain = Seq.newBuilder[SnapshotInfo]
     var cursor: Option[Long] = Some(currentId)
@@ -1159,8 +846,8 @@ object IcebergTableReader {
   def changeFeedSince(spark: SparkSession, tablePath: String,
       sinceSnapshotId: Long): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, col, lit}
-    val range = chainSince(spark, tablePath, sinceSnapshotId)
-    lazy val idToName = schemaFieldNames(spark, tablePath)
+    val m = IcebergMetadata.load(spark, tablePath)
+    val range = chainSince(m, sinceSnapshotId)
     val pieces = Seq.newBuilder[DataFrame]
     range.foreach { s =>
       if (s.operation != "replace") {
@@ -1181,11 +868,10 @@ object IcebergTableReader {
           val parent = s.parentId.getOrElse(throw new IllegalStateException(
             s"$tablePath: snapshot ${s.id} adds deletion vectors but has no parent — " +
               "their pre-images are undefined; refusing"))
-          val (allSnaps, _) = snapshotLog(spark, tablePath)
-          val parentSnap = allSnaps.find(_.id == parent).getOrElse(
+          val parentSnap = m.snapshots.find(_.id == parent).getOrElse(
             throw new IllegalStateException(
               s"$tablePath: parent snapshot $parent missing from the log"))
-          val prevPlan = planFilesOf(spark, tablePath, parentSnap)
+          val prevPlan = planFilesOf(spark, m, parentSnap)
           val newDvs = dvAdded.map(e => DvRef(e.filePath, e.contentOffset.get,
             e.contentSize.get, e.referencedDataFile.getOrElse(
               throw new IllegalStateException(
@@ -1227,7 +913,7 @@ object IcebergTableReader {
             .withColumn("_snapshot_id", lit(s.id))
         if (eqFiles.nonEmpty) {
           eqFiles.map(_.equalityIds).distinct.foreach { ids =>
-            ids.foreach(id => if (!idToName.contains(id)) throw new IllegalStateException(
+            ids.foreach(id => if (!m.fieldNames.contains(id)) throw new IllegalStateException(
               s"$tablePath: equality-delete in snapshot ${s.id} names field id $id, " +
                 "which the table schema does not declare; refusing"))
           }

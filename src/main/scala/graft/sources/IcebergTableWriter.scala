@@ -6,6 +6,7 @@ import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
+import IcebergMetadata.SchemaState
 import IcebergTransforms.PartitionField
 
 /** APPEND-ONLY writer for Apache Iceberg v2 tables readable by
@@ -28,10 +29,10 @@ import IcebergTransforms.PartitionField
   *    `vN.metadata.json` carrying the snapshot log with parent links,
   *    the table `schemas` (field ids — what equality deletes resolve
   *    against) and the identity `partition-specs`;
-  *  - commit publication is an exclusive-create CAS on
-  *    `vN.metadata.json` — the filesystem-catalog protocol (the racer
-  *    that lost re-reads and retries at N+1); `version-hint.text`
-  *    re-points after the fact (advisory, as in the spec).
+  *  - commit publication is [[IcebergMetadata.commit]], an
+  *    exclusive-create CAS on `vN.metadata.json` — the
+  *    filesystem-catalog protocol (the racer that lost reloads and
+  *    retries at N+1).
   *
   * Scale shape: the data write is distributed and lands through the
   * task-side landing every format shares ([[FileLanding]]): each
@@ -53,6 +54,8 @@ import IcebergTransforms.PartitionField
 object IcebergTableWriter {
 
   val MaxCommitAttempts: Int = 20
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
   private val listSchema: Schema = new Schema.Parser().parse(
     """{"type":"record","name":"manifest_file","fields":[
@@ -210,13 +213,13 @@ object IcebergTableWriter {
     * Each file carries parquet field ids, and its write task reads the
     * footer it just wrote for the file's column bounds.
     */
-  private def writeDataFiles(df: DataFrame, tablePath: String,
+  private def writeDataFiles(df: DataFrame, m: IcebergMetadata,
       pfields: Seq[PartitionField]): Seq[Landed] = {
-    val spark = df.sparkSession
+    val (spark, tablePath) = (df.sparkSession, m.tablePath)
     // field ids must match what the metadata commit will declare —
     // existing columns keep their current ids, new ones take fresh
     // ids — so bounds resolve at read time even after evolution
-    val fieldIds: Map[String, Int] = plannedFieldIds(spark, tablePath, df.schema)
+    val fieldIds: Map[String, Int] = plannedFieldIds(m, df.schema)
     // stamp PARQUET FIELD IDS into the landed files (what real
     // engines do): columns bind to ids, so a later RENAME is a pure
     // metadata commit and the reader's id resolution serves old files
@@ -460,112 +463,6 @@ object IcebergTableWriter {
       s""""current-schema-id":0"""
   }
 
-  /** The existing metadata's schema machinery: every schema node
-    * verbatim (JSON text), the current schema's (id, name) fields in
-    * order with their raw field JSON, and the global max field/schema
-    * ids — what additive evolution appends against.
-    */
-  private final case class SchemaState(schemaNodesJson: Seq[String], currentSchemaId: Int,
-      fields: Seq[(Int, String, String)], maxFieldId: Int, maxSchemaId: Int) {
-    def nameToId: Map[String, Int] = fields.map(f => f._2 -> f._1).toMap
-  }
-
-  private def schemaStateOf(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): Option[SchemaState] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return None
-    val in = fs.open(hint)
-    val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-    val metaPath = new Path(tablePath, s"metadata/v$v.metadata.json")
-    if (!fs.exists(metaPath)) return None
-    val in2 = fs.open(metaPath)
-    val text = try scala.io.Source.fromInputStream(in2, "UTF-8").mkString finally in2.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-    val schemas = node.get("schemas")
-    if (schemas == null || !schemas.isArray || schemas.isEmpty) return None
-    val currentId = Option(node.get("current-schema-id")).map(_.asInt()).getOrElse(0)
-    var cur: com.fasterxml.jackson.databind.JsonNode = null
-    var maxSid = 0
-    var maxFid = 0
-    val nodes = Seq.newBuilder[String]
-    schemas.forEach { sn =>
-      nodes += sn.toString
-      val sid = Option(sn.get("schema-id")).map(_.asInt()).getOrElse(0)
-      if (sid > maxSid) maxSid = sid
-      if (sid == currentId || cur == null) cur = sn
-      // every field id counts toward the max — INNER ids too (struct
-      // fields / list element-id / map key-id+value-id ride nested
-      // type objects), or evolution would mint a colliding id
-      def walkIds(x: com.fasterxml.jackson.databind.JsonNode): Unit = {
-        if (x.isObject) x.fields().forEachRemaining { e =>
-          val k = e.getKey
-          if ((k == "id" || k == "element-id" || k == "key-id" || k == "value-id") &&
-              e.getValue.isNumber) {
-            val id = e.getValue.asInt(); if (id > maxFid) maxFid = id
-          }
-          walkIds(e.getValue)
-        }
-        else if (x.isArray) x.forEach(walkIds(_))
-      }
-      walkIds(sn)
-    }
-    val fields = Seq.newBuilder[(Int, String, String)]
-    val cf = cur.get("fields")
-    if (cf != null && cf.isArray) cf.forEach { f =>
-      fields += ((f.get("id").asInt(), f.get("name").asText(), f.toString))
-    }
-    Some(SchemaState(nodes.result(), currentId, fields.result(), maxFid, maxSid))
-  }
-
-  /** The current metadata's raw `sort-orders` nodes + the default
-    * order id; None when the table (or the metadata field — older
-    * graft tables) does not exist. Nodes carry through commits
-    * VERBATIM, like schema nodes and refs.
-    */
-  private def sortOrdersStateOf(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): Option[(Seq[String], Int)] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return None
-    val in = fs.open(hint)
-    val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-    val metaPath = new Path(tablePath, s"metadata/v$v.metadata.json")
-    if (!fs.exists(metaPath)) return None
-    val in2 = fs.open(metaPath)
-    val text = try scala.io.Source.fromInputStream(in2, "UTF-8").mkString finally in2.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-    val orders = node.get("sort-orders")
-    if (orders == null || !orders.isArray || orders.isEmpty) return None
-    val nodes = Seq.newBuilder[String]
-    orders.forEach(o => nodes += o.toString)
-    Some((nodes.result(),
-      Option(node.get("default-sort-order-id")).map(_.asInt()).getOrElse(0)))
-  }
-
-  /** The current metadata's raw `partition-statistics` entries —
-    * carried through commits VERBATIM like refs and sort orders
-    * (entries persist until their snapshots expire; dropping them
-    * would orphan every census the moment the table moves on). */
-  private def partitionStatsNodesOf(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): Seq[String] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hint = new Path(tablePath, "metadata/version-hint.text")
-    if (!fs.exists(hint)) return Nil
-    val in = fs.open(hint)
-    val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-    val metaPath = new Path(tablePath, s"metadata/v$v.metadata.json")
-    if (!fs.exists(metaPath)) return Nil
-    val in2 = fs.open(metaPath)
-    val text = try scala.io.Source.fromInputStream(in2, "UTF-8").mkString finally in2.close()
-    val arr = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-      .get("partition-statistics")
-    if (arr == null || !arr.isArray) return Nil
-    val b = Seq.newBuilder[String]
-    arr.forEach(e => b += e.toString)
-    b.result()
-  }
-
   /** Resolve a commit's sort-order metadata (iceberg.apache.org spec
     * "Sort Orders": table metadata declares `sort-orders` +
     * `default-sort-order-id`; data files record which declared order
@@ -575,23 +472,21 @@ object IcebergTableWriter {
     * fields or appends a fresh node past the max order-id and makes
     * it the default. Returns (nodes, default-id, id-to-stamp).
     */
-  private def resolveSortOrders(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, exists: Boolean,
+  private def resolveSortOrders(m: IcebergMetadata,
       schema: org.apache.spark.sql.types.StructType,
       sortedBy: Seq[String]): (Seq[String], Int, Option[Int]) = {
-    val prior = if (exists) sortOrdersStateOf(spark, tablePath) else None
+    val prior = m.sortOrders
     // order-id 0 is the spec's reserved "unsorted" order
     val baseNodes = prior.map(_._1).getOrElse(Seq("""{"order-id":0,"fields":[]}"""))
     val baseDefault = prior.map(_._2).getOrElse(0)
     if (sortedBy.isEmpty) return (baseNodes, baseDefault, None)
-    val ids = plannedFieldIds(spark, tablePath, schema)
+    val ids = plannedFieldIds(m, schema)
     val wantFields = sortedBy.map { c =>
       val sid = ids.getOrElse(c, throw new IllegalArgumentException(
-        s"$tablePath: sort column $c is not in the commit schema"))
+        s"${m.tablePath}: sort column $c is not in the commit schema"))
       s"""{"transform":"identity","source-id":$sid,"direction":"asc",""" +
         """"null-order":"nulls-first"}"""
     }
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val wantJson = mapper.readTree(s"[${wantFields.mkString(",")}]")
     val existing = baseNodes.flatMap { raw =>
       val n = mapper.readTree(raw)
@@ -630,9 +525,9 @@ object IcebergTableWriter {
     * table numbers by position. Shared by the data write (bounds key
     * on these ids) and the metadata commit — the two must agree.
     */
-  private def plannedFieldIds(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  private def plannedFieldIds(m: IcebergMetadata,
       schema: org.apache.spark.sql.types.StructType): Map[String, Int] =
-    schemaStateOf(spark, tablePath) match {
+    m.schemaState match {
       case None =>
         schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap
       case Some(st) =>
@@ -677,7 +572,7 @@ object IcebergTableWriter {
   /** Promotion on the metadata's OWN primitive type strings (decimal
     * grammar shared with the reader — [[IcebergTableReader.DecimalRe]]). */
   private def legalJsonPromotion(decl: String, tgt: String): Boolean = {
-    val Dec = IcebergTableReader.DecimalRe
+    val Dec = IcebergMetadata.DecimalRe
     (decl, tgt) match {
       case ("int", "long") => true
       case ("float", "double") => true
@@ -696,7 +591,6 @@ object IcebergTableWriter {
   private def promotedFieldNodes(st: SchemaState,
       schema: org.apache.spark.sql.types.StructType): (Seq[String], Boolean) = {
     var any = false
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val nodes = st.fields.map { case (id, name, raw) =>
       val tgt = schema.find(_.name == name).flatMap(f =>
         scala.util.Try(icebergTypeOf(f.dataType)).toOption)
@@ -715,14 +609,11 @@ object IcebergTableWriter {
     (nodes, any)
   }
 
-  private def schemasBlockFor(spark: org.apache.spark.sql.SparkSession, tablePath: String,
-      exists: Boolean,
-      schema: org.apache.spark.sql.types.StructType): (String, Map[String, Int]) = {
-    def fresh = (schemasJson(schema),
-      schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap)
-    if (!exists) return fresh
-    schemaStateOf(spark, tablePath) match {
-      case None => fresh
+  private def schemasBlockFor(spark: org.apache.spark.sql.SparkSession, m: IcebergMetadata,
+      schema: org.apache.spark.sql.types.StructType): (String, Map[String, Int]) =
+    m.schemaState match {
+      case None => (schemasJson(schema),
+        schema.fieldNames.zipWithIndex.map { case (n, i) => n -> (i + 1) }.toMap)
       case Some(st) =>
         val curNames = st.fields.map(_._2)
         if (schema.fieldNames.toSet == curNames.toSet) {
@@ -743,29 +634,22 @@ object IcebergTableWriter {
         } else {
           val missing = curNames.toSet -- schema.fieldNames.toSet
           if (missing.nonEmpty) throw new IllegalStateException(
-            s"$tablePath: commit schema lacks declared column(s) " +
+            s"${m.tablePath}: commit schema lacks declared column(s) " +
               s"${missing.toSeq.sorted.mkString(",")} — additive evolution only")
-          val ids = plannedFieldIds(spark, tablePath, schema)
+          val ids = plannedFieldIds(m, schema)
           val extras = schema.fields.filterNot(f => curNames.contains(f.name))
           // RE-ADDING a name a PAST schema used (drop + re-add) makes
           // reads id-resolved — old files carry a same-named column
           // whose bytes belong to the dropped field; any live file
           // WITHOUT parquet field ids would then null out entirely
-          val historyNames = {
-            val m = new com.fasterxml.jackson.databind.ObjectMapper()
-            st.schemaNodesJson.flatMap { sj =>
-              val fs0 = m.readTree(sj).get("fields")
-              if (fs0 == null || !fs0.isArray) Nil
-              else {
-                val b = Seq.newBuilder[String]
-                fs0.forEach(f => b += f.get("name").asText())
-                b.result()
-              }
-            }.toSet
-          }
+          val historyNames = st.schemaNodesJson.flatMap { sj =>
+            val b = Seq.newBuilder[String]
+            mapper.readTree(sj).path("fields").forEach(f => b += f.get("name").asText())
+            b.result()
+          }.toSet
           val reused = extras.map(_.name).filter(n =>
             historyNames.contains(n) && !curNames.contains(n))
-          if (reused.nonEmpty) requireLiveFieldIds(spark, tablePath,
+          if (reused.nonEmpty) requireLiveFieldIds(spark, m,
             s"re-adding previously-dropped column(s) ${reused.mkString(",")}")
           // existing fields carry over with any legal promotions
           // applied (extras + promotion may ride one commit)
@@ -780,7 +664,6 @@ object IcebergTableWriter {
             s""""current-schema-id":$newSid""", ids)
         }
     }
-  }
 
   /** RENAME a column — a METADATA-ONLY commit, no snapshot, no data
     * move (iceberg.apache.org spec Schema Evolution: names may change
@@ -796,8 +679,9 @@ object IcebergTableWriter {
   def renameColumn(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       from: String, to: String): Unit = {
     require(from != to, "rename to the same name is a no-op — refusing to commit one")
-    val st = schemaStateOf(spark, tablePath).getOrElse(throw new IllegalArgumentException(
-      s"$tablePath is not an Iceberg table (no metadata)"))
+    val m = IcebergMetadata.load(spark, tablePath)
+    val st = m.schemaState.getOrElse(throw new IllegalArgumentException(
+      s"$tablePath declares no schemas"))
     val names = st.fields.map(_._2)
     require(names.contains(from), s"$tablePath: no column named $from to rename")
     require(!names.contains(to),
@@ -806,22 +690,13 @@ object IcebergTableWriter {
     // without the renamed field's id would silently serve NULLs under
     // the new name
     val renamedId = st.fields.find(_._2 == from).get._1
-    requireLiveFieldIds(spark, tablePath, s"renaming column $from",
+    requireLiveFieldIds(spark, m, s"renaming column $from",
       fields => !fields.exists(f => f.getId != null && f.getId.intValue() == renamedId))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val newSid = st.maxSchemaId + 1
-    val renamedFields = st.fields.map { case (id, name, raw) =>
+    commitSchemaNode(spark, m)(_.map { case (_, name, raw) =>
       if (name != from) raw
-      else {
-        val f = mapper.readTree(raw).asInstanceOf[
-          com.fasterxml.jackson.databind.node.ObjectNode]
-        f.put("name", to)
-        f.toString
-      }
-    }
-    commitSchemaNode(spark, tablePath,
-      s"""{"schema-id":$newSid,"type":"struct",""" +
-        s""""fields":[${renamedFields.mkString(",")}]}""", newSid)
+      else mapper.readTree(raw).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        .put("name", to).toString
+    })
   }
 
   /** DROP a column — like [[renameColumn]] a METADATA-ONLY commit
@@ -836,25 +711,22 @@ object IcebergTableWriter {
     */
   def dropColumn(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       column: String): Unit = {
-    val st = schemaStateOf(spark, tablePath).getOrElse(throw new IllegalArgumentException(
-      s"$tablePath is not an Iceberg table (no metadata)"))
+    val m = IcebergMetadata.load(spark, tablePath)
+    val st = m.schemaState.getOrElse(throw new IllegalArgumentException(
+      s"$tablePath declares no schemas"))
     val names = st.fields.map(_._2)
     require(names.contains(column), s"$tablePath: no column named $column to drop")
     require(names.size > 1, s"$tablePath: cannot drop the only column")
     val droppedId = st.fields.find(_._2 == column).get._1
-    declaredPartitionFields(spark, tablePath).foreach(pf =>
+    m.partitionFields.foreach(pf =>
       require(pf.sourceCol != column,
         s"$tablePath: column $column is a partition-spec source — dropping it would " +
           "orphan the spec; refusing"))
-    val plan = IcebergTableReader.planFiles(spark, tablePath)
-    plan.equalityDeletes.foreach(eq =>
+    IcebergTableReader.planFiles(spark, m).equalityDeletes.foreach(eq =>
       require(!eq.equalityColumns.contains(column),
         s"$tablePath: live equality-delete file ${eq.path} keys on $column — dropping " +
           "it would break delete scoping; compact the deletes away first"))
-    val keptFields = st.fields.collect { case (id, name, raw) if id != droppedId => raw }
-    commitSchemaNode(spark, tablePath,
-      s"""{"schema-id":${st.maxSchemaId + 1},"type":"struct",""" +
-        s""""fields":[${keptFields.mkString(",")}]}""", st.maxSchemaId + 1)
+    commitSchemaNode(spark, m)(_.collect { case (id, _, raw) if id != droppedId => raw })
   }
 
   /** Refuse unless no live data file's top-level footer fields are
@@ -865,10 +737,10 @@ object IcebergTableWriter {
     * metadata, |live files|-bounded.
     */
   private def requireLiveFieldIds(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, context: String,
+      m: IcebergMetadata, context: String,
       idless: Seq[org.apache.parquet.schema.Type] => Boolean = _.exists(_.getId == null)
   ): Unit = {
-    val plan = IcebergTableReader.planFiles(spark, tablePath)
+    val (tablePath, plan) = (m.tablePath, IcebergTableReader.planFiles(spark, m))
     val hconf = spark.sparkContext.hadoopConfiguration
     import scala.collection.parallel.CollectionConverters._
     val offending = plan.data.par.filter { rel =>
@@ -891,43 +763,23 @@ object IcebergTableWriter {
   private def resolveAbs(tablePath: String, rel: String): String =
     if (rel.contains("://") || rel.startsWith("/")) rel else s"$tablePath/$rel"
 
-  /** Append a new current schema node to the metadata — the shared
-    * CAS tail of the metadata-only evolution ops (rename, drop):
-    * parse-mutate-rewrite so snapshots/refs/specs/sequence numbers
-    * carry over untouched. */
-  private def commitSchemaNode(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String, newNode: String, newSid: Int): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val v = IcebergTableReader.currentMetadataVersion(spark, tablePath)
-      val metaPath = new Path(tablePath, s"metadata/v$v.metadata.json")
-      val in = fs.open(metaPath)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      val root = mapper.readTree(text).asInstanceOf[
-        com.fasterxml.jackson.databind.node.ObjectNode]
-      val schemas = root.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas")
-      schemas.add(mapper.readTree(newNode))
-      root.put("current-schema-id", newSid)
-      val vNew = v + 1
-      val dst = new Path(tablePath, s"metadata/v$vNew.metadata.json")
-      val created = try {
-        val out = fs.create(dst, false) // exclusive-create CAS
-        try out.write((root.toString + "\n").getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-      if (created) {
-        val hint = fs.create(new Path(tablePath, "metadata/version-hint.text"), true)
-        try hint.write(s"$vNew\n".getBytes("UTF-8")) finally hint.close()
-        return
-      }
-      attempt += 1
-    }
-    throw new IllegalStateException(
-      s"$tablePath: lost the metadata CAS $MaxCommitAttempts times")
-  }
+  /** Append a new current schema node — the current fields passed
+    * through `fields` (raw field JSON in, raw field JSON out) — and make
+    * it current: the shared commit of the metadata-only evolution ops
+    * (rename, drop), a parse-mutate-rewrite so snapshots/refs/specs/
+    * sequence numbers carry over untouched. */
+  private def commitSchemaNode(spark: org.apache.spark.sql.SparkSession, m: IcebergMetadata)(
+      fields: Seq[(Int, String, String)] => Seq[String]): Unit =
+    IcebergMetadata.commit(spark, m) { cur =>
+      val st = cur.schemaState.getOrElse(throw new IllegalStateException(
+        s"${cur.tablePath}: the metadata lost its schemas"))
+      val newSid = st.maxSchemaId + 1
+      val root = cur.tree
+      root.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("schemas")
+        .add(mapper.readTree(s"""{"schema-id":$newSid,"type":"struct",""" +
+          s""""fields":[${fields(st.fields).mkString(",")}]}"""))
+      root.put("current-schema-id", newSid).toString
+    }: Unit
 
   private def specJson(idOf: Map[String, Int],
       pfields: Seq[PartitionField]): String = {
@@ -941,59 +793,20 @@ object IcebergTableWriter {
     s""""partition-specs":[{"spec-id":0,"fields":[$fields]}],"default-spec-id":0"""
   }
 
-  /** The partition-spec fields the CURRENT metadata declares —
-    * transforms parsed from the spec's own strings (`identity`,
-    * `bucket[N]`, `truncate[W]`, `year`/`month`/`day`/`hour`; an
-    * unknown transform like `void` refuses loudly), source columns
-    * resolved by source-id against the current schema.
-    */
-  private[sources] def declaredPartitionFields(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String): Seq[PartitionField] = {
-    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(tablePath, "metadata")
-    if (!fs.exists(metaDir)) return Nil
-    val hint = new Path(metaDir, "version-hint.text")
-    if (!fs.exists(hint)) return Nil
-    val in = fs.open(hint)
-    val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-    val metaPath = new Path(metaDir, s"v$v.metadata.json")
-    if (!fs.exists(metaPath)) return Nil
-    val in2 = fs.open(metaPath)
-    val text = try scala.io.Source.fromInputStream(in2, "UTF-8").mkString finally in2.close()
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
-    val specs = node.get("partition-specs")
-    if (specs == null || !specs.isArray || specs.isEmpty) Nil
-    else {
-      lazy val idToName = IcebergTableReader.schemaFieldNames(spark, tablePath)
-      val b = Seq.newBuilder[PartitionField]
-      val fields = specs.get(0).get("fields")
-      if (fields != null && fields.isArray) fields.forEach { f =>
-        val transform = IcebergTransforms.parseSpecString(
-          Option(f.get("transform")).map(_.asText()).getOrElse("identity"))
-        val name = f.get("name").asText()
-        val source = Option(f.get("source-id")).map(_.asInt())
-          .flatMap(idToName.get)
-          .getOrElse(name) // legacy specs without source-id: identity naming
-        b += PartitionField(name, source, transform)
-      }
-      b.result()
-    }
-  }
-
   /** The declared partition RESULT names (compat view). */
   private[sources] def declaredPartitionBy(spark: org.apache.spark.sql.SparkSession,
       tablePath: String): Seq[String] =
-    declaredPartitionFields(spark, tablePath).map(_.resultName)
+    IcebergMetadata.load(spark, tablePath).partitionFields.map(_.resultName)
 
   /** One commit: new manifest + manifest list (previous manifests
     * reused) + vN metadata under the exclusive-create CAS. Returns
     * the new snapshot id.
     */
-  private def commit(df: DataFrame, tablePath: String, pfields: Seq[PartitionField],
+  private def commit(df: DataFrame, m: IcebergMetadata, pfields: Seq[PartitionField],
       extraSummary: Map[String, String] = Map.empty,
       sortBy: Seq[String] = Nil): Long = {
-    val files = writeDataFiles(sortFrame(df, sortBy), tablePath, pfields)
-    commitSnapshot(df.sparkSession, tablePath, df.schema, pfields, files,
+    val files = writeDataFiles(sortFrame(df, sortBy), m, pfields)
+    commitSnapshot(df.sparkSession, m, df.schema, pfields, files,
       content = 0, operation = "append", extraSummary = extraSummary,
       sortedBy = sortBy)
   }
@@ -1004,16 +817,15 @@ object IcebergTableWriter {
     * AND operations — a rewritten operation would let incremental
     * readers silently cross a delete snapshot.
     */
-  private def commitSnapshot(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+  private def commitSnapshot(spark: org.apache.spark.sql.SparkSession, m: IcebergMetadata,
       schema: org.apache.spark.sql.types.StructType, pfields: Seq[PartitionField],
       files: Seq[Landed], content: Int, operation: String,
       reuseManifests: Boolean = true,
       extraSummary: Map[String, String] = Map.empty,
-      plannedAgainst: Option[Long] = None,
       sortedBy: Seq[String] = Nil): Long =
-    commitSnapshotGroups(spark, tablePath, schema, pfields,
+    commitSnapshotGroups(spark, m, schema, pfields,
       Seq(ManifestGroup(files, content)), operation, reuseManifests, extraSummary,
-      plannedAgainst = plannedAgainst, sortedBy = sortedBy)
+      sortedBy = sortedBy)
 
   /** One new manifest's worth of files: `entryContent` is the spec's
     * data_file.content (0=data, 1=position deletes, 2=equality
@@ -1025,10 +837,12 @@ object IcebergTableWriter {
   /** [[commitSnapshot]] generalized to SEVERAL new manifests in ONE
     * snapshot — what an upsert needs (a data manifest plus an
     * equality-delete manifest, same sequence number, so the delete
-    * scopes to strictly-older files and the new rows survive).
+    * scopes to strictly-older files and the new rows survive). `m` is
+    * the value the op planned against: the first attempt builds on it,
+    * a lost CAS reloads and rebases.
     */
   private[sources] def commitSnapshotGroups(spark: org.apache.spark.sql.SparkSession,
-      tablePath: String,
+      m: IcebergMetadata,
       schema: org.apache.spark.sql.types.StructType, pfields: Seq[PartitionField],
       groups: Seq[ManifestGroup], operation: String,
       reuseManifests: Boolean = true,
@@ -1041,61 +855,39 @@ object IcebergTableWriter {
       extraManifests: (Long, Long) => Seq[(String, Int)] = (_, _) => Nil,
       transformBase: Seq[(String, Long, Int, Option[Long])] =>
         Seq[(String, Long, Int, Option[Long])] = identity,
-      plannedAgainst: Option[Long] = None,
       // columns the content-0 groups' files were WRITTEN sorted by
       // (identity asc): resolves/mints the declared sort order, makes
       // it the default, and stamps data_file.sort_order_id
       sortedBy: Seq[String] = Nil): Long = {
+    val tablePath = m.tablePath
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    var attempt = 0
-    // the snapshot this commit was PLANNED against (captured on the
-    // first attempt): a lost CAS re-reads and rebases, but commits
-    // whose content was computed from the planned state — deletes,
-    // rewrites, overwrites — may only rebase over interleaved
+    // the snapshots the op was PLANNED against: a lost CAS rebases,
+    // but commits whose content was computed from the planned state —
+    // deletes, rewrites, overwrites — may only rebase over interleaved
     // APPENDS (Iceberg's own OCC validation: appends never conflict;
     // anything else may have removed or re-deleted the rows this
     // commit's manifests were computed from)
-    var plannedParent: Option[Option[Long]] =
-      plannedAgainst.map(id => Some(id): Option[Long])
-    while (attempt < MaxCommitAttempts) {
-      // re-read the current state each attempt (CAS loser rebases)
-      val exists = fs.exists(new Path(tablePath, "metadata")) &&
-        fs.listStatus(new Path(tablePath, "metadata"))
-          .exists(_.getPath.getName.endsWith(".metadata.json"))
-      val (prevSnapsJson, prevManifests, prevVersion, parentId, seq) =
-        if (!exists)
-          (Seq.empty[String], Seq.empty[(String, Long, Int, Option[Long])], 0L, None, 1L)
+    val planned = m.snapshots.map(_.id).toSet
+    var newId = 0L
+    IcebergMetadata.commit(spark, m) { cur =>
+      val (prevSnaps, prevManifests, parentId) =
+        if (!cur.exists) (Nil, Nil, None)
         else {
-          val (snaps, currentId) = IcebergTableReader.snapshotLog(spark, tablePath)
-          val current = snaps.find(_.id == currentId).get
-          plannedParent match {
-            case None => plannedParent = Some(Some(currentId))
-            case Some(planned) if operation != "append" =>
-              val base = planned.getOrElse(0L)
-              val conflicting = snaps.filter(s => s.id > base)
-                .filterNot(_.operation == "append")
-              if (conflicting.nonEmpty) throw new java.util.ConcurrentModificationException(
-                s"$tablePath: a concurrent ${conflicting.head.operation} snapshot " +
-                  s"${conflicting.head.id} landed after this $operation was planned " +
-                  s"against snapshot $base — its manifests may be stale; re-read the " +
-                  "table and retry the operation")
-            case _ => ()
-          }
-          val manifests = IcebergTableReader.manifestListEntries(spark, tablePath,
-            current.manifestList)
-          val version = IcebergTableReader.currentMetadataVersion(spark, tablePath)
-          // snapshot records re-serialize with ids/parents/lists AND
-          // original timestamps preserved — TIMESTAMP AS OF resolves
-          // off them, so a re-stamp would silently rewrite history
-          (snaps.map(s => snapshotJson(s.id, s.parentId, s.id, s.manifestList,
-              s.timestampMs, s.operation, s.summary)),
-            manifests, version, Some(currentId), currentId + 1L)
+          val current = cur.currentSnapshot
+          if (operation != "append") cur.snapshots
+            .find(s => !planned.contains(s.id) && s.operation != "append").foreach { c =>
+              throw new java.util.ConcurrentModificationException(
+                s"$tablePath: a concurrent ${c.operation} snapshot ${c.id} landed after " +
+                  s"this $operation was planned against snapshot " +
+                  s"${if (m.exists) m.currentSnapshotId else 0L} — its manifests may be " +
+                  "stale; re-read the table and retry the operation")
+            }
+          (cur.snapshots, IcebergTableReader.manifestListEntries(spark, tablePath,
+            current.manifestList), Some(current.id))
         }
-      if (plannedParent.isEmpty) plannedParent = Some(parentId)
-      val newId = parentId.getOrElse(0L) + 1L
-      val (sortNodes, defaultSortId, stampSortId) =
-        resolveSortOrders(spark, tablePath, exists, schema, sortedBy)
+      newId = parentId.getOrElse(0L) + 1L
+      val seq = newId // sequence numbers follow snapshot ids
+      val (sortNodes, defaultSortId, stampSortId) = resolveSortOrders(cur, schema, sortedBy)
       val newManifests = groups.map { g =>
         val rel = manifestOf(conf, tablePath, newId, seq, g.files, pfields,
           g.entryContent, g.equalityIds,
@@ -1128,54 +920,37 @@ object IcebergTableWriter {
       val stdSummary = Map(
         "added-data-files" -> dataGroups.map(_.files.size).sum.toString,
         "added-records" -> dataGroups.flatMap(_.files).map(_.count).sum.toString)
-      val snapsJson = (prevSnapsJson :+
+      val snapsJson = (prevSnaps.map(s => snapshotJson(s.id, s.parentId, s.id, s.manifestList,
+          s.timestampMs, s.operation, s.summary)) :+
         snapshotJson(newId, parentId, seq, listRel, System.currentTimeMillis(), operation,
           stdSummary ++ extraSummary))
         .mkString(",")
       // refs carry forward VERBATIM (tags keep pointing at their
       // snapshots); the main branch advances to the new snapshot —
       // Iceberg's own ref semantics
-      val prevRefs = if (exists) IcebergTableReader.refs(spark, tablePath)
-        else Map.empty[String, (Long, String)]
-      val refsJson = (prevRefs + ("main" -> ((newId, "branch"))))
+      val refsJson = (cur.refs + ("main" -> ((newId, "branch"))))
         .toSeq.sortBy(_._1)
         .map { case (n, (id, t)) =>
           val nq = n.replace("\\", "\\\\").replace("\"", "\\\"")
           s""""$nq":{"snapshot-id":$id,"type":"$t"}"""
         }.mkString(",")
-      val (schemasPart, fieldIdOf) = schemasBlockFor(spark, tablePath, exists, schema)
+      val (schemasPart, fieldIdOf) = schemasBlockFor(spark, cur, schema)
       // the format-version never regresses: once a table carries v3
       // artifacts (deletion vectors) every later commit keeps v3
-      val formatVersion = math.max(minFormatVersion,
-        if (exists) IcebergTableReader.currentFormatVersion(spark, tablePath) else 2)
-      val pstatsNodes = partitionStatsNodesOf(spark, tablePath)
+      val formatVersion = math.max(minFormatVersion, cur.formatVersion)
+      val pstatsNodes = cur.partitionStatsNodes
       val pstatsPart =
         if (pstatsNodes.isEmpty) ""
         else s""""partition-statistics":[${pstatsNodes.mkString(",")}],"""
-      val metaJson =
-        s"""{"format-version":$formatVersion,"table-uuid":"graft","location":"$tablePath",""" +
-          s"""$schemasPart,${specJson(fieldIdOf, pfields)},""" +
-          s""""sort-orders":[${sortNodes.mkString(",")}],""" +
-          s""""default-sort-order-id":$defaultSortId,""" +
-          pstatsPart +
-          s""""last-sequence-number":$seq,"refs":{$refsJson},""" +
-          s""""current-snapshot-id":$newId,"snapshots":[$snapsJson]}"""
-      val vNew = prevVersion + 1
-      val metaPath = new Path(tablePath, s"metadata/v$vNew.metadata.json")
-      val created = try {
-        val out = fs.create(metaPath, false) // exclusive-create CAS
-        try out.write((metaJson + "\n").getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-      if (created) {
-        val hint = fs.create(new Path(tablePath, "metadata/version-hint.text"), true)
-        try hint.write(s"$vNew\n".getBytes("UTF-8")) finally hint.close()
-        return newId
-      }
-      attempt += 1
+      s"""{"format-version":$formatVersion,"table-uuid":"graft","location":"$tablePath",""" +
+        s"""$schemasPart,${specJson(fieldIdOf, pfields)},""" +
+        s""""sort-orders":[${sortNodes.mkString(",")}],""" +
+        s""""default-sort-order-id":$defaultSortId,""" +
+        pstatsPart +
+        s""""last-sequence-number":$seq,"refs":{$refsJson},""" +
+        s""""current-snapshot-id":$newId,"snapshots":[$snapsJson]}"""
     }
-    throw new IllegalStateException(
-      s"$tablePath: lost the metadata CAS $MaxCommitAttempts times")
+    newId
   }
 
   /** Create a NEW Iceberg table at `tablePath` (identity-partitioned
@@ -1185,11 +960,8 @@ object IcebergTableWriter {
   def create(df: DataFrame, tablePath: String, partitionBy: Seq[String] = Nil,
       transaction: Option[(String, Long)] = None,
       sortBy: Seq[String] = Nil): Long = {
-    val fs = new Path(tablePath).getFileSystem(
-      df.sparkSession.sparkContext.hadoopConfiguration)
-    val metaDir = new Path(tablePath, "metadata")
-    if (fs.exists(metaDir) &&
-        fs.listStatus(metaDir).exists(_.getPath.getName.endsWith(".metadata.json")))
+    val m = IcebergMetadata.loadOrEmpty(df.sparkSession, tablePath)
+    if (m.exists)
       throw new IllegalArgumentException(s"$tablePath is already an Iceberg table — use append")
     // each entry is a transform spec: a bare column = identity;
     // bucket(N, c) / truncate(W, c) / years|months|days|hours(c) are
@@ -1201,7 +973,7 @@ object IcebergTableWriter {
     // land range-clustered so the recorded bounds actually cut scans
     sortBy.foreach(c => require(df.columns.contains(c),
       s"sort column $c is not in the DataFrame"))
-    commit(df, tablePath, pfields, extraSummary = TableLoader.sinkWatermark(transaction),
+    commit(df, m, pfields, extraSummary = TableLoader.sinkWatermark(transaction),
       sortBy = sortBy)
   }
 
@@ -1211,7 +983,8 @@ object IcebergTableWriter {
     */
   def append(df: DataFrame, tablePath: String,
       transaction: Option[(String, Long)] = None): Long = {
-    val existing = IcebergTableReader.snapshot(df.sparkSession, tablePath)
+    val m = IcebergMetadata.load(df.sparkSession, tablePath)
+    val existing = IcebergTableReader.snapshot(df.sparkSession, m)
     val missing = existing.columns.toSet -- df.columns.toSet
     require(missing.isEmpty,
       s"$tablePath: appended columns ${df.columns.sorted.mkString(",")} lack declared " +
@@ -1233,12 +1006,11 @@ object IcebergTableWriter {
           "and the spec's legal promotions (int→long, float→double, decimal " +
           "precision widening) are metadata commits; other changes are rewrites")
     }
-    val pfields = declaredPartitionFields(df.sparkSession, tablePath)
     // a table declaring a default SORT ORDER gets its appends written
-    // under it (identity asc orders only — [[IcebergTableReader
+    // under it (identity asc orders only — [[IcebergMetadata
     // .sortOrder]] answers empty otherwise, and an unsorted append to
     // a sorted table is spec-legal, just unstamped)
-    val order = IcebergTableReader.sortOrder(df.sparkSession, tablePath)
+    val order = m.sortOrder
     val sortBy =
       if (order.nonEmpty && order.forall { case (c, d, _) =>
           d == "asc" && df.columns.contains(c) })
@@ -1246,7 +1018,7 @@ object IcebergTableWriter {
       else Nil // partial sorting must not stamp the FULL order's id
     commit(df.select((existing.columns.toSeq ++ extras)
         .map(org.apache.spark.sql.functions.col): _*),
-      tablePath, pfields, extraSummary = TableLoader.sinkWatermark(transaction),
+      m, m.partitionFields, extraSummary = TableLoader.sinkWatermark(transaction),
       sortBy = sortBy)
   }
 
@@ -1259,8 +1031,7 @@ object IcebergTableWriter {
     */
   def lastBatchId(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       appId: String): Option[Long] = {
-    val (snaps, _) = IcebergTableReader.snapshotLog(spark, tablePath)
-    val ids = snaps.flatMap { s =>
+    val ids = IcebergMetadata.load(spark, tablePath).snapshots.flatMap { s =>
       if (s.summary.get(TableLoader.SinkAppKey).contains(appId))
         s.summary.get(TableLoader.SinkBatchKey).flatMap(v => scala.util.Try(v.toLong).toOption)
       else None
@@ -1280,14 +1051,14 @@ object IcebergTableWriter {
   def rewriteDataFiles(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       targetFiles: Int): Long = {
     require(targetFiles >= 1, "targetFiles must be >= 1")
-    val snap = IcebergTableReader.snapshot(spark, tablePath) // deletes applied
-    val pfields = declaredPartitionFields(spark, tablePath)
+    val m = IcebergMetadata.load(spark, tablePath)
+    val snap = IcebergTableReader.snapshot(spark, m) // deletes applied
     // a table declaring a default SORT ORDER gets its rewrite written
     // under it (Iceberg's own rewrite-data-files sorts by the table
     // order) — the service RESTORES the clustered layout that
     // unsorted upserts/appends diluted, and the rewritten files stamp
     // the order id
-    val order = IcebergTableReader.sortOrder(spark, tablePath)
+    val order = m.sortOrder
     val sortBy =
       if (order.nonEmpty && order.forall { case (c, d, _) =>
           d == "asc" && snap.columns.contains(c) })
@@ -1299,8 +1070,8 @@ object IcebergTableWriter {
         val cs = sortBy.map(org.apache.spark.sql.functions.col)
         snap.repartitionByRange(targetFiles, cs: _*).sortWithinPartitions(cs: _*)
       }
-    val files = writeDataFiles(reshaped, tablePath, pfields)
-    commitSnapshot(spark, tablePath, snap.schema, pfields, files,
+    val files = writeDataFiles(reshaped, m, m.partitionFields)
+    commitSnapshot(spark, m, snap.schema, m.partitionFields, files,
       content = 0, operation = "replace", reuseManifests = false,
       sortedBy = sortBy)
   }
@@ -1327,39 +1098,16 @@ object IcebergTableWriter {
       name: String, snapshotId: Long, refType: String = "tag"): Unit = {
     require(refType == "tag" || refType == "branch",
       s"ref type must be 'tag' or 'branch', got $refType")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val (snaps, _) = IcebergTableReader.snapshotLog(spark, tablePath)
-    require(snaps.exists(_.id == snapshotId),
-      s"$tablePath: snapshot $snapshotId is not in the metadata log — a ref cannot " +
-        "point outside history")
-    val version = IcebergTableReader.currentMetadataVersion(spark, tablePath)
-    val metaPath = new Path(tablePath, s"metadata/v$version.metadata.json")
-    val in = fs.open(metaPath)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = m.readTree(text)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val refsNode =
-      if (root.has("refs") && root.get("refs").isObject)
-        root.get("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      else { val n = m.createObjectNode(); root.replace("refs", n); n }
-    val entry = m.createObjectNode()
-    entry.put("snapshot-id", snapshotId): Unit
-    entry.put("type", refType): Unit
-    refsNode.replace(name, entry): Unit
-    val vNew = version + 1
-    val newMeta = new Path(tablePath, s"metadata/v$vNew.metadata.json")
-    val created = try {
-      val out = fs.create(newMeta, false)
-      try out.write((m.writeValueAsString(root) + "\n").getBytes("UTF-8"))
-      finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
-    if (!created) throw new IllegalStateException(
-      s"$tablePath: metadata v$vNew already taken — re-run setRef after the racer's commit")
-    val hint = fs.create(new Path(tablePath, "metadata/version-hint.text"), true)
-    try hint.write(s"$vNew\n".getBytes("UTF-8")) finally hint.close()
+    IcebergMetadata.commit(spark, IcebergMetadata.load(spark, tablePath)) { cur =>
+      require(cur.snapshots.exists(_.id == snapshotId),
+        s"$tablePath: snapshot $snapshotId is not in the metadata log — a ref cannot " +
+          "point outside history")
+      val root = cur.tree
+      if (!root.path("refs").isObject) root.putObject("refs")
+      root.get("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        .putObject(name).put("snapshot-id", snapshotId).put("type", refType)
+      root.toString
+    }: Unit
   }
 
   /** PARTITION STATISTICS (iceberg.apache.org spec "Partition
@@ -1380,14 +1128,13 @@ object IcebergTableWriter {
       tablePath: String): String = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val pfields = declaredPartitionFields(spark, tablePath)
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = IcebergMetadata.load(spark, tablePath)
+    val pfields = m.partitionFields
     require(pfields.nonEmpty,
       s"$tablePath: partition statistics need a partitioned table")
-    val (snaps, currentId) = IcebergTableReader.snapshotLog(spark, tablePath)
-    val current = snaps.find(_.id == currentId).getOrElse(
-      throw new IllegalStateException(s"$tablePath: current snapshot missing"))
+    val current = m.currentSnapshot
+    val currentId = current.id
     val manifests = IcebergTableReader.manifestListEntries(spark, tablePath,
       current.manifestList)
     final case class Census(var drc: Long = 0L, var dfc: Int = 0, var bytes: Long = 0L,
@@ -1448,15 +1195,8 @@ object IcebergTableWriter {
       new Path(tablePath, rel))
     // register under the usual metadata CAS; an entry for the SAME
     // snapshot replaces (a re-run refreshes, never duplicates)
-    val m = new com.fasterxml.jackson.databind.ObjectMapper()
-    var attempt = 0
-    while (attempt < MaxCommitAttempts) {
-      val v = IcebergTableReader.currentMetadataVersion(spark, tablePath)
-      val metaPath = new Path(tablePath, s"metadata/v$v.metadata.json")
-      val in = fs.open(metaPath)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val root = m.readTree(text)
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    IcebergMetadata.commit(spark, m) { cur =>
+      val root = cur.tree
       val arr = root.withArray[com.fasterxml.jackson.databind.node.ArrayNode](
         "partition-statistics")
       var i = 0
@@ -1464,26 +1204,11 @@ object IcebergTableWriter {
         if (Option(arr.get(i).get("snapshot-id")).exists(_.asLong() == currentId))
           { arr.remove(i): Unit } else i += 1
       }
-      val entry = m.createObjectNode()
-      entry.put("snapshot-id", currentId)
-      entry.put("statistics-path", rel)
-      entry.put("file-size-in-bytes", len)
-      arr.add(entry)
-      val dstMeta = new Path(tablePath, s"metadata/v${v + 1}.metadata.json")
-      val created = try {
-        val out = fs.create(dstMeta, false) // exclusive-create CAS
-        try out.write((root.toString + "\n").getBytes("UTF-8")) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-      if (created) {
-        val hint = fs.create(new Path(tablePath, "metadata/version-hint.text"), true)
-        try hint.write(s"${v + 1}\n".getBytes("UTF-8")) finally hint.close()
-        return rel
-      }
-      attempt += 1
+      arr.addObject().put("snapshot-id", currentId).put("statistics-path", rel)
+        .put("file-size-in-bytes", len)
+      root.toString
     }
-    throw new IllegalStateException(
-      s"$tablePath: lost the metadata CAS $MaxCommitAttempts times registering stats")
+    rel
   }
 
   /** REMOVE ORPHAN FILES (Iceberg's own maintenance procedure): walk
@@ -1515,14 +1240,12 @@ object IcebergTableWriter {
     val referenced = scala.collection.mutable.Set.empty[String]
     // the metadata tree itself: every version JSON + the hint (expiry
     // owns metadata retention, not orphan removal)
-    val metaDir = new Path(root, "metadata")
-    fs.listStatus(metaDir).foreach { st =>
-      val n = st.getPath.getName
-      if (n.endsWith(".metadata.json") || n == "version-hint.text")
+    fs.listStatus(new Path(root, "metadata")).foreach { st =>
+      if (IcebergMetadata.isMetadataFile(st.getPath.getName))
         referenced += fs.makeQualified(st.getPath).toString
     }
-    val (snaps, _) = IcebergTableReader.snapshotLog(spark, tablePath)
-    snaps.foreach { s0 =>
+    val m = IcebergMetadata.load(spark, tablePath)
+    m.snapshots.foreach { s0 =>
       referenced += qualify(s0.manifestList)
       IcebergTableReader.manifestListEntries(spark, tablePath, s0.manifestList)
         .foreach { case (mp, _, _, _) =>
@@ -1532,36 +1255,44 @@ object IcebergTableWriter {
         }
     }
     // registered statistics files
-    val metaNode = new com.fasterxml.jackson.databind.ObjectMapper().readTree {
-      val v = IcebergTableReader.currentMetadataVersion(spark, tablePath)
-      val in = fs.open(new Path(root, s"metadata/v$v.metadata.json"))
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    }
-    Option(metaNode.get("partition-statistics")).filter(_.isArray).foreach(_.forEach { e =>
-      Option(e.get("statistics-path")).foreach(p => referenced += qualify(p.asText()))
-    })
+    m.partitionStatsNodes.foreach(e =>
+      Option(e.get("statistics-path")).foreach(p => referenced += qualify(p.asText())))
     FileLanding.sweepUnnamed(fs, root, referenced, nowMs - graceMs)
   }
 
   def expireSnapshots(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       keepLast: Int): Seq[Long] = {
     require(keepLast >= 1, "must retain at least the current snapshot")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
-    val (snaps, currentId) = IcebergTableReader.snapshotLog(spark, tablePath)
-    if (snaps.size <= keepLast) return Nil
-    val retained = snaps.takeRight(keepLast)
-    require(retained.exists(_.id == currentId),
-      s"$tablePath: the current snapshot must be inside the retention window")
-    val expired = snaps.dropRight(keepLast)
-    // a TAGGED (or branched) snapshot cannot expire — refs pin
-    // history, Iceberg's own retention rule
-    val pinned = IcebergTableReader.refs(spark, tablePath)
-      .filter { case (n, (id, _)) => n != "main" && expired.exists(_.id == id) }
-    require(pinned.isEmpty,
-      s"$tablePath: refs ${pinned.keys.toSeq.sorted.mkString(", ")} pin snapshot(s) " +
-        s"${pinned.values.map(_._1).toSeq.distinct.sorted.mkString(", ")} inside the " +
-        "expiry window — drop the refs first or widen retention")
+    val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val m = IcebergMetadata.load(spark, tablePath)
+    if (m.snapshots.size <= keepLast) return Nil
+    // (retained, expired) of one value's snapshot log
+    def window(cur: IcebergMetadata)
+        : (Seq[IcebergTableReader.SnapshotInfo], Seq[IcebergTableReader.SnapshotInfo]) = {
+      val (snaps, currentId) = cur.snapshotLog
+      val (expired, retained) = snaps.splitAt(snaps.size - keepLast)
+      require(retained.exists(_.id == currentId),
+        s"$tablePath: the current snapshot must be inside the retention window")
+      // a TAGGED (or branched) snapshot cannot expire — refs pin
+      // history, Iceberg's own retention rule
+      val pinned = cur.refs
+        .filter { case (n, (id, _)) => n != "main" && expired.exists(_.id == id) }
+      require(pinned.isEmpty,
+        s"$tablePath: refs ${pinned.keys.toSeq.sorted.mkString(", ")} pin snapshot(s) " +
+          s"${pinned.values.map(_._1).toSeq.distinct.sorted.mkString(", ")} inside the " +
+          "expiry window — drop the refs first or widen retention")
+      (retained, expired)
+    }
+    // metadata rewrite: same tree, snapshots filtered to the retained
+    val (retained, expired) = window(IcebergMetadata.commit(spark, m) { cur =>
+      val keepIds = window(cur)._1.map(_.id).toSet
+      val root = cur.tree
+      val kept = mapper.createArrayNode()
+      root.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
+        .forEach(n => if (keepIds.contains(n.get("snapshot-id").asLong())) { kept.add(n); () })
+      root.replace("snapshots", kept)
+      root.toString
+    })
     def inventory(ss: Seq[IcebergTableReader.SnapshotInfo])
         : (Set[String], Set[String], Set[String]) = { // (lists, manifests, files)
       val lists = ss.map(_.manifestList).toSet
@@ -1580,36 +1311,9 @@ object IcebergTableWriter {
     }
     val (rl, rm, rd) = inventory(retained)
     val (el, em, ed) = inventory(expired)
-    // metadata rewrite: same tree, snapshots filtered to the retained
-    val version = IcebergTableReader.currentMetadataVersion(spark, tablePath)
-    val metaPath = new Path(tablePath, s"metadata/v$version.metadata.json")
-    val in = fs.open(metaPath)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.readTree(text)
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val keepIds = retained.map(_.id).toSet
-    val arr = root.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots")
-    val kept = mapper.createArrayNode()
-    arr.forEach(n => if (keepIds.contains(n.get("snapshot-id").asLong())) { kept.add(n); () })
-    root.replace("snapshots", kept): Unit
-    val vNew = version + 1
-    val newMeta = new Path(tablePath, s"metadata/v$vNew.metadata.json")
-    val created = try {
-      val out = fs.create(newMeta, false) // same CAS as commits
-      try out.write((mapper.writeValueAsString(root) + "\n").getBytes("UTF-8"))
-      finally out.close()
-      true
-    } catch { case _: java.io.IOException => false }
-    if (!created) throw new IllegalStateException(
-      s"$tablePath: metadata v$vNew already taken — re-run expiry after the racer's commit")
-    val hint = fs.create(new Path(tablePath, "metadata/version-hint.text"), true)
-    try hint.write(s"$vNew\n".getBytes("UTF-8")) finally hint.close()
     // orphan removal: only what NO retained snapshot reaches
-    def resolveRel(p: String): Path =
-      if (p.contains("://") || p.startsWith("/")) new Path(p) else new Path(tablePath, p)
     ((el -- rl) ++ (em -- rm) ++ (ed -- rd)).toSeq.sorted.foreach { p =>
-      val f = resolveRel(p)
+      val f = new Path(resolveAbs(tablePath, p))
       if (fs.exists(f)) { fs.delete(f, false): Unit }
     }
     expired.map(_.id)
@@ -1632,21 +1336,18 @@ object IcebergTableWriter {
   def delete(spark: org.apache.spark.sql.SparkSession, tablePath: String,
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
+    // the value this delete is computed against — a racing
+    // non-append between here and the commit CAS must refuse
+    val m = IcebergMetadata.load(spark, tablePath)
     // the v3 spec FORBIDS position-delete files: once the table's
     // format-version reached 3 (a deleteDv ran), route row deletes
     // through the DV writer instead of landing a shape external v3
     // readers must reject
-    if (IcebergTableReader.currentFormatVersion(spark, tablePath) >= 3)
-      return deleteDv(spark, tablePath, predicate)
-    // the snapshot this delete is computed against — a racing
-    // non-append between here and the commit CAS must refuse
-    val plannedId = IcebergTableReader.snapshotLog(spark, tablePath)._2
-    val plan = IcebergTableReader.planFiles(spark, tablePath)
+    if (m.formatVersion >= 3) return deleteDv(spark, m, predicate)
+    val plan = IcebergTableReader.planFiles(spark, m)
     require(plan.equalityDeletes.isEmpty,
       s"$tablePath: table carries equality-delete files — position-deleting on top of " +
         "them would need composed delete semantics this writer does not implement; refusing")
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(tablePath).getFileSystem(conf)
     // live rows with their physical identity
     val keyed0 = spark.read.parquet(plan.data.map(resolveAbs(tablePath, _)): _*)
       .withColumn("_g_file", ScanPaths.normalizeScan(
@@ -1678,10 +1379,8 @@ object IcebergTableWriter {
     // to data; a huge delete should rewrite instead)
     val (rel, n) = landDeleteShards(spark, tablePath, deletes, "position-delete",
       emptyMsg = Some("predicate matched no live rows — nothing to delete")).head
-    val schema = IcebergTableReader.snapshot(spark, tablePath).schema
-    commitSnapshot(spark, tablePath, schema, declaredPartitionFields(spark, tablePath),
-      Seq(Landed(rel, n, Map.empty)), content = 1, operation = "delete",
-      plannedAgainst = Some(plannedId))
+    commitSnapshot(spark, m, IcebergTableReader.snapshot(spark, m).schema, m.partitionFields,
+      Seq(Landed(rel, n, Map.empty)), content = 1, operation = "delete")
   }
 
   /** Driver-side cap on the COMPRESSED deletion-vector bytes a
@@ -1712,11 +1411,15 @@ object IcebergTableWriter {
     * [[delete]]. Returns the new snapshot id.
     */
   def deleteDv(spark: org.apache.spark.sql.SparkSession, tablePath: String,
+      predicate: org.apache.spark.sql.Column): Long =
+    deleteDv(spark, IcebergMetadata.load(spark, tablePath), predicate)
+
+  private def deleteDv(spark: org.apache.spark.sql.SparkSession, m: IcebergMetadata,
       predicate: org.apache.spark.sql.Column): Long = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.Encoders
-    val plannedId = IcebergTableReader.snapshotLog(spark, tablePath)._2
-    val plan = IcebergTableReader.planFiles(spark, tablePath)
+    val tablePath = m.tablePath
+    val plan = IcebergTableReader.planFiles(spark, m)
     require(plan.equalityDeletes.isEmpty,
       s"$tablePath: table carries equality-delete files — deletion-vectoring on top of " +
         "them would need composed delete semantics this writer does not implement; refusing")
@@ -1782,10 +1485,8 @@ object IcebergTableWriter {
         bytes, n)
     }
     val supersededNorm: Set[String] = blobs.map(_._1).toSet
-    val schema = IcebergTableReader.snapshot(spark, tablePath).schema
-    commitSnapshotGroups(spark, tablePath, schema,
-      declaredPartitionFields(spark, tablePath), groups = Nil, operation = "delete",
-      plannedAgainst = Some(plannedId),
+    commitSnapshotGroups(spark, m, IcebergTableReader.snapshot(spark, m).schema,
+      m.partitionFields, groups = Nil, operation = "delete",
       minFormatVersion = 3,
       extraManifests = (newId, seq) => {
         val puffinRel = s"data/dv-$newId-${java.util.UUID.randomUUID()}.puffin"
@@ -1847,7 +1548,7 @@ object IcebergTableWriter {
     require(files.nonEmpty, s"$tablePath: nothing to publish — empty file set")
     files.foreach { case (p, _) => require(p.startsWith("/") || p.contains("://"),
       s"$tablePath: publishMetadataOnly takes ABSOLUTE data-file paths, got $p") }
-    commitSnapshotGroups(spark, tablePath, schema, Nil,
+    commitSnapshotGroups(spark, IcebergMetadata.loadOrEmpty(spark, tablePath), schema, Nil,
       Seq(ManifestGroup(files.map { case (p, n) => Landed(p, n, Map.empty) },
         entryContent = 0)),
       operation = "replace", reuseManifests = false)
@@ -1905,9 +1606,9 @@ object IcebergTableWriter {
     import org.apache.spark.sql.functions.col
     val spark = df.sparkSession
     require(keys.nonEmpty, s"$tablePath: upsert needs at least one equality-key column")
-    val idToName = IcebergTableReader.schemaFieldNames(spark, tablePath)
-    val nameToId = idToName.map(_.swap)
-    val tableCols0 = idToName.toSeq.sortBy(_._1).map(_._2)
+    val m = IcebergMetadata.load(spark, tablePath)
+    val nameToId = m.fieldNames.map(_.swap)
+    val tableCols0 = m.fieldNames.toSeq.sortBy(_._1).map(_._2)
     val missingCols = tableCols0.toSet -- df.columns.toSet
     require(missingCols.isEmpty,
       s"$tablePath: upsert columns ${df.columns.sorted.mkString(",")} lack declared " +
@@ -1916,8 +1617,7 @@ object IcebergTableWriter {
     val tableCols = tableCols0 ++ df.columns.filterNot(tableCols0.contains)
     val eqIds = keys.map(k => nameToId.getOrElse(k, throw new IllegalArgumentException(
       s"$tablePath: upsert key $k is not a declared table column")))
-    val plan = IcebergTableReader.planFiles(spark, tablePath)
-    plan.equalityDeletes.headOption.foreach { d =>
+    IcebergTableReader.planFiles(spark, m).equalityDeletes.headOption.foreach { d =>
       require(d.equalityColumns.toSet == keys.toSet,
         s"$tablePath: existing equality deletes key on ${d.equalityColumns.mkString(",")} " +
           s"but this upsert keys on ${keys.mkString(",")} — mixed key shapes in one " +
@@ -1934,11 +1634,8 @@ object IcebergTableWriter {
       val delShards = landDeleteShards(spark, tablePath,
         aligned.select(keys.map(col): _*), "equality-delete",
         expectedRows = Some(nRows), maxRows = maxDeleteFileRows)
-      val pfields = declaredPartitionFields(spark, tablePath)
-      val files = writeDataFiles(aligned, tablePath, pfields)
-      val schema = org.apache.spark.sql.types.StructType(
-        aligned.schema.fields)
-      commitSnapshotGroups(spark, tablePath, schema, pfields,
+      val files = writeDataFiles(aligned, m, m.partitionFields)
+      commitSnapshotGroups(spark, m, aligned.schema, m.partitionFields,
         Seq(ManifestGroup(files, entryContent = 0),
           ManifestGroup(delShards.map { case (rel, n) => Landed(rel, n, Map.empty) },
             entryContent = 2, equalityIds = eqIds)),

@@ -375,9 +375,7 @@ object TableLoader {
     def exists(child: String) = fs.exists(new org.apache.hadoop.fs.Path(p, child))
     if (exists("_delta_log")) DeltaFormat
     else if (exists(".hoodie")) HudiFormat
-    else if (exists("metadata") &&
-        fs.listStatus(new org.apache.hadoop.fs.Path(p, "metadata"))
-          .exists(_.getPath.getName.endsWith(".metadata.json"))) IcebergFormat
+    else if (IcebergMetadata.present(fs, p)) IcebergFormat
     else if (fs.exists(p) && fs.listStatus(p).exists(st =>
         st.isDirectory && st.getPath.getName.matches("v\\d{8}"))) GraftVersioned
     else PlainParquet

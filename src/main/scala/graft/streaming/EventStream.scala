@@ -345,7 +345,10 @@ object EventStream {
       }
     }
 
-  private final case class SessAcc(startUs: Long, lastUs: Long, n: Long, cents: Long)
+  // not private: the ListState encoder's generated code calls the
+  // accessors, which Janino refuses on a private class (each batch then
+  // fell back to interpreted evaluation after a failed compile)
+  final case class SessAcc(startUs: Long, lastUs: Long, n: Long, cents: Long)
   final case class SessionOut(user_id: Long, session_start: java.sql.Timestamp,
       session_end: java.sql.Timestamp, n_events: Long, sum_cents: Long)
 

@@ -139,7 +139,7 @@ class DeltaIcebergLandingSpec extends SparkSpec {
       col(c).as(c, new MetadataBuilder().putLong("parquet.field.id", i + 1L).build())
     }.toIndexedSeq: _*)
     val expected = sparkWritten(withIds, fieldIds = true)
-    val fieldIds = IcebergTableReader.schemaFieldNames(spark, table).map(_.swap)
+    val fieldIds = IcebergMetadata.load(spark, table).fieldNames.map(_.swap)
     val (snaps, current) = IcebergTableReader.snapshotLog(spark, table)
     val entries = IcebergTableReader.manifestListEntries(spark, table,
       snaps.find(_.id == current).get.manifestList).flatMap { case (mp, _, _, _) =>

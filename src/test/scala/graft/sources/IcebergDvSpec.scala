@@ -26,19 +26,19 @@ class IcebergDvSpec extends SparkSpec {
     IcebergTableWriter.create(df(1 to 60), table): Unit
     IcebergTableWriter.append(df(61 to 100), table): Unit
     val before = IcebergTableReader.planFiles(spark, table)
-    assert(IcebergTableReader.currentFormatVersion(spark, table) == 2)
+    assert(IcebergMetadata.load(spark, table).formatVersion == 2)
     IcebergTableWriter.deleteDv(spark, table, col("id") % 10 === 0): Unit
     val plan = IcebergTableReader.planFiles(spark, table)
     assert(plan.data.toSet == before.data.toSet, "no data file rewritten or dropped")
     assert(plan.deletionVectors.nonEmpty && plan.positionDeletes.isEmpty)
-    assert(IcebergTableReader.currentFormatVersion(spark, table) == 3,
+    assert(IcebergMetadata.load(spark, table).formatVersion == 3,
       "a DV commit must declare format-version 3")
     val snap = IcebergTableReader.snapshot(spark, table)
     assert(snap.count() == 90L)
     assert(snap.where(col("id") % 10 === 0).count() == 0L)
     // an unrelated append keeps v3 (no version regression)
     IcebergTableWriter.append(df(101 to 110), table): Unit
-    assert(IcebergTableReader.currentFormatVersion(spark, table) == 3)
+    assert(IcebergMetadata.load(spark, table).formatVersion == 3)
     assert(IcebergTableReader.snapshot(spark, table).count() == 100L)
     // puffin file: footer parses, blob metadata carries the spec's
     // required DV properties
@@ -107,7 +107,7 @@ class IcebergDvSpec extends SparkSpec {
     assert(pos.nonEmpty)
     // delete() on the now-v3 table AUTO-VECTORIZES — no v2 shape can
     // ever land again
-    assert(IcebergTableReader.currentFormatVersion(spark, table) == 3)
+    assert(IcebergMetadata.load(spark, table).formatVersion == 3)
     IcebergTableWriter.delete(spark, table, col("id") === 3L): Unit
     val plan2 = IcebergTableReader.planFiles(spark, table)
     assert(plan2.positionDeletes.isEmpty,

@@ -169,4 +169,21 @@ class IcebergTableWriterSpec extends SparkSpec {
     assert(pruned.inputFiles.length == prunedPlan.data.size,
       "the scan must touch exactly the pruned file set")
   }
+
+  test("an append to a table without version-hint.text keeps its partition spec, field ids and sort order") {
+    val s = spark
+    import s.implicits._
+    def rows(r: Range) = r.map(i => (i.toLong, s"p${i % 2}", i * 2L)).toDF("id", "p", "v")
+    val table = tmpDir("iwr-hintless") + "/t"
+    IcebergTableWriter.create(rows(1 to 40), table, partitionBy = Seq("p"), sortBy = Seq("id")): Unit
+    val idsBefore = IcebergMetadata.load(spark, table).fieldNames
+    // the hint is advisory: without it the highest-numbered metadata is current
+    Seq("version-hint.text", ".version-hint.text.crc").foreach(n =>
+      assert(new java.io.File(s"$table/metadata", n).delete(), n))
+    IcebergTableWriter.append(rows(41 to 50), table): Unit
+    assert(IcebergTableWriter.declaredPartitionBy(spark, table) == Seq("p"))
+    assert(IcebergMetadata.load(spark, table).fieldNames == idsBefore)
+    assert(IcebergTableReader.sortOrder(spark, table) == Seq(("id", "asc", "nulls-first")))
+    assert(IcebergTableReader.snapshot(spark, table).count() == 50L)
+  }
 }

@@ -88,7 +88,7 @@ class SchemaEvolutionSpec extends SparkSpec {
   test("iceberg append: schemas node appends with preserved ids; old rows null-fill") {
     val table = tmpDir("sev-ice") + "/t"
     IcebergTableWriter.create(df(1 to 40), table, partitionBy = Seq("grp")): Unit
-    val idsBefore = IcebergTableReader.schemaFieldNames(spark, table)
+    val idsBefore = IcebergMetadata.load(spark, table).fieldNames
     IcebergTableWriter.append(dfWide(41 to 60), table): Unit
     val snap = IcebergTableReader.snapshot(spark, table)
     assert(snap.columns.toSet == Set("id", "grp", "v", "tag"))
@@ -97,7 +97,7 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(snap.where(col("id") === 50L).head().getAs[String]("tag") == "tag50")
     // existing field ids preserved verbatim; the new column got a
     // fresh id past the old max
-    val idsAfter = IcebergTableReader.schemaFieldNames(spark, table)
+    val idsAfter = IcebergMetadata.load(spark, table).fieldNames
     idsBefore.foreach { case (id, n) => assert(idsAfter.get(id).contains(n)) }
     val tagId = idsAfter.collectFirst { case (id, "tag") => id }.get
     assert(tagId > idsBefore.keys.max)

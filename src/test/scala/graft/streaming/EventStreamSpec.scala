@@ -97,6 +97,29 @@ class EventStreamSpec extends SparkSpec {
       "the two state APIs must emit identical append-mode sessions")
   }
 
+  test("timer sessionization's generated code compiles (no CodeGenerator error)") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("codegen-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLoggerName == "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator" &&
+            e.getLevel.isMoreSpecificThan(Level.ERROR))
+          errors.add(e.getMessage.getFormattedMessage): Unit
+    }
+    appender.start()
+    // on the root logger: an appender added to the CodeGenerator logger
+    // itself saw none of its events
+    val logger = LogManager.getRootLogger.asInstanceOf[Logger]
+    logger.addAppender(appender)
+    try assert(EventStream.runSessionsTimerToBatch(spark, s"$sfDir/events.parquet",
+      queryName = "spec_sessions_codegen").count() > 0)
+    finally { logger.removeAppender(appender); appender.stop() }
+    assert(errors.isEmpty, s"${errors.size} CodeGenerator errors, first: ${errors.peek()}")
+  }
+
   test("streaming hourly agg equals the batch equivalent") {
     val streamed = EventStream.runToBatch(spark, s"$sfDir/events.parquet", queryName = "spec_stream")
     val batch = graft.sources.TableLoader.table(spark, sfDir, "events")
